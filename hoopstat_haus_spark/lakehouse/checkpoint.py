@@ -9,12 +9,16 @@ engine's equivalent: each maintenance job gets
 
     intent:  {unit, state=running, input_files}
     done:    {unit, state=done, input_files, output_files,
-              rows, tokens, duration_s}
+              rows, tokens, duration_s, output_stats}
 
-A resumed job (same job_id) skips ``done`` units, reusing their staged
-outputs, and re-runs ``running`` units from scratch after discarding
-their orphaned staging files. Because the snapshot commit happens once,
-at the end, a crash at ANY point leaves readers on the old snapshot.
+``output_stats`` holds the manifest entries of ``output_files``, as
+computed by the job that wrote them, so a commit (first or resumed)
+never re-reads outputs for stats. A resumed job (same job_id) reuses a
+``done`` unit's outputs when its ``input_files`` are still the unit's
+planned inputs, and re-runs every other unit from scratch after
+discarding its orphaned staging files. Because the snapshot commit
+happens once, at the end, a crash at ANY point leaves readers on the
+old snapshot.
 """
 
 from __future__ import annotations
@@ -69,24 +73,22 @@ class JobCheckpoint:
         rows: int,
         tokens: int,
         duration_s: float,
-        output_stats: list[dict] | None = None,
+        output_stats: list[dict],
     ) -> None:
-        rec = {
-            "job_id": self.job_id,
-            "unit": unit,
-            "state": "done",
-            "input_files": input_files,
-            "output_files": output_files,
-            "rows": rows,
-            "tokens": tokens,
-            "duration_s": round(duration_s, 3),
-        }
-        if output_stats is not None:
-            # per-file manifest entries computed INSIDE the unit job so
-            # the final commit needs no stats scan (and a resumed job
-            # reuses them instead of re-reading finished units' output)
-            rec["output_stats"] = output_stats
-        self._write(unit, rec)
+        self._write(
+            unit,
+            {
+                "job_id": self.job_id,
+                "unit": unit,
+                "state": "done",
+                "input_files": input_files,
+                "output_files": output_files,
+                "rows": rows,
+                "tokens": tokens,
+                "duration_s": round(duration_s, 3),
+                "output_stats": output_stats,
+            },
+        )
 
     def completed_units(self) -> dict[str, dict]:
         out = {}

@@ -15,7 +15,9 @@ execution engine it never had, scaled for a 1000-executor cluster:
 - **Executor** (:func:`compact_partition`): per `source` partition, ONE
   wide transform: column-pruned read of the victim files → JVM-side
   xxhash64 + Arrow Z-key kernel → ``repartitionByRange(n_out, _zkey)``
-  → ``sortWithinPartitions(_zkey)`` → parquet write. Range partitioning
+  → ``sortWithinPartitions(_zkey)`` → parquet write through the one
+  fused writer every data write shares (``manifest.write_data_files``:
+  files and their manifest stats in the same job). Range partitioning
   samples the key distribution, so output files get balanced bytes and
   DISJOINT Z-ranges — that disjointness is what makes manifest zmin/zmax
   pruning effective. AQE handles residual skew.
@@ -31,14 +33,12 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
-import time
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from hoopstat_haus_spark.lakehouse import manifest as mf
 from hoopstat_haus_spark.lakehouse.zorder import with_zkey
 
 _ROUTE_REPS_CACHE: dict[int, list[int]] = {}
@@ -291,89 +291,6 @@ def plan_unit_bounds(
     return out
 
 
-_STATS_DDL = (
-    "pid int, file_name string, row_count long, token_count long, "
-    "min_doc_id string, max_doc_id string, min_n_tok int, max_n_tok int, "
-    "zmin long, zmax long, zq array<long>"
-)
-
-
-def _write_sorted_with_stats(
-    df, staging: str, codec: str | None, codec_level: int | None
-) -> list[dict]:
-    """Write each partition of ``df`` (already routed + zkey-sorted) to
-    ONE parquet file under ``staging`` AND compute that file's manifest
-    stats in the same pass — one Spark job where the old path ran two
-    (JVM parquet write, then a column-pruned RE-READ of every output
-    file for ``manifest.compute_file_stats``).
-
-    Each task streams its partition's Arrow batches into a pyarrow
-    ParquetWriter (same zstd codec/level as the JVM writer) while
-    folding row/token counts, doc_id/n_tok/zkey min-max and the zq
-    sample, and emits ONE stats row. The stats definition is
-    bit-identical to :func:`manifest.compute_file_stats` (same sample
-    predicate — computed JVM-side as a flag column — same ascending
-    sort, same grid truncation, same tiny-file full-keys fallback);
-    ``test_checkpointed_stats_match_recomputation`` pins the parity.
-
-    Task-retry safe without a commit protocol: file names carry a fresh
-    uuid per attempt and only files named in COLLECTED stats rows are
-    renamed out of staging; a failed attempt's partial file dies with
-    the staging dir."""
-    from hoopstat_haus_spark.lakehouse.manifest import ZQ_GRID, ZQ_SAMPLE_MOD
-
-    flag = F.pmod(F.xxhash64("doc_id", F.lit(13)), F.lit(ZQ_SAMPLE_MOD)) == 0
-    wide = df.withColumn("_zs_flag", flag)
-
-    def write_partition(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        from hoopstat_haus_spark.lakehouse.manifest import FileStatsAcc
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        name = f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.parquet"
-        writer = None
-        acc = FileStatsAcc()
-        for batch in batches:
-            cols = batch.schema.names
-            zk = batch.column(cols.index("_zkey")).to_numpy(zero_copy_only=False)
-            fl = batch.column(cols.index("_zs_flag")).to_numpy(zero_copy_only=False).astype(bool)
-            data = batch.drop_columns(["_zs_flag"])
-            if writer is None:
-                writer = pq.ParquetWriter(
-                    os.path.join(staging, name),
-                    data.schema,
-                    compression=codec or "none",
-                    compression_level=codec_level,
-                )
-            writer.write_batch(data)
-            acc.add(batch, zk, fl)
-        if writer is None:  # empty route partition: no file, no stats row
-            return
-        writer.close()
-        stats = acc.finalize(clustered=True)
-        yield pa.RecordBatch.from_pydict(
-            {
-                "pid": pa.array([pid], pa.int32()),
-                "file_name": pa.array([name], pa.string()),
-                "row_count": pa.array([stats["row_count"]], pa.int64()),
-                "token_count": pa.array([stats["token_count"]], pa.int64()),
-                "min_doc_id": pa.array([stats["min_doc_id"]], pa.string()),
-                "max_doc_id": pa.array([stats["max_doc_id"]], pa.string()),
-                "min_n_tok": pa.array([stats["min_n_tok"]], pa.int32()),
-                "max_n_tok": pa.array([stats["max_n_tok"]], pa.int32()),
-                "zmin": pa.array([stats["zmin"]], pa.int64()),
-                "zmax": pa.array([stats["zmax"]], pa.int64()),
-                "zq": pa.array([stats["zq"]], pa.list_(pa.int64())),
-            }
-        )
-
-    return [r.asDict() for r in wide.mapInArrow(write_partition, _STATS_DDL).collect()]
-
-
 def compact_partition(
     spark: SparkSession,
     table_path: str,
@@ -388,13 +305,16 @@ def compact_partition(
     bounds: list[int] | None = None,
 ) -> tuple[list[str], list[dict]]:
     """Rewrite one partition's victim files; returns (new relative
-    paths, their manifest stats entries). Stats are computed INSIDE the
-    rewrite job (:func:`_write_sorted_with_stats`) — no post-rewrite
-    stats scan ever re-reads the output.
+    paths, their manifest stats entries).
 
-    Staging-then-rename keeps the partition directory consistent: readers
-    resolve files through the manifest, so in-flight staged files are
-    invisible until the final snapshot commit.
+    The routed, ``_zkey``-sorted frame goes through the one data writer
+    (:func:`manifest.write_data_files`) with ``source`` as a literal:
+    each task holds one source, so it writes exactly one file, in its
+    sorted order, and its stats come back from the SAME job. Outputs are
+    staged under ``.staging/<job_id>/<partition>`` and renamed to
+    deterministic ``compact-<job_id>-NNNNN.parquet`` names; readers
+    resolve files through the manifest, so they are invisible until the
+    final snapshot commit.
 
     ``read_ddl`` (the table schema + _zkey) makes mixed-schema rewrites
     safe: files predating an evolved column read it as NULL instead of
@@ -464,49 +384,15 @@ def compact_partition(
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    staging = os.path.join(table_path, ".staging", job_id, partition)
-    if os.path.exists(staging):
-        shutil.rmtree(staging)  # discard partial output from a crashed run
-    os.makedirs(staging, exist_ok=True)
-    from hoopstat_haus_spark.lakehouse.manifest import parquet_codec_conf
-
-    codec, level = parquet_codec_conf(spark)
-    stats_rows = _write_sorted_with_stats(df, staging, codec, level)
-
-    from hoopstat_haus_spark.lakehouse.manifest import _escape_partition_value
-
-    part_dirname = f"source={_escape_partition_value(partition)}"
-    part_dir = os.path.join(data_dir, part_dirname)
-    os.makedirs(part_dir, exist_ok=True)
-    new_rel: list[str] = []
-    entries: list[dict] = []
-    zq_curve = curve  # stored _zkey + sketch were written with this run's curve
-    for seq, r in enumerate(sorted(stats_rows, key=lambda x: x["pid"])):
-        final = f"compact-{job_id}-{seq:05d}.parquet"
-        os.replace(os.path.join(staging, r["file_name"]), os.path.join(part_dir, final))
-        rel = f"data/{part_dirname}/{final}"
-        new_rel.append(rel)
-        entries.append(
-            {
-                "partition": partition,
-                "row_count": r["row_count"],
-                "token_count": r["token_count"],
-                "min_doc_id": r["min_doc_id"],
-                "max_doc_id": r["max_doc_id"],
-                "min_n_tok": r["min_n_tok"],
-                "max_n_tok": r["max_n_tok"],
-                "zmin": r["zmin"],
-                "zmax": r["zmax"],
-                "zq": [int(z) for z in r["zq"]] or None,
-                "file_path": rel,
-                "file_bytes": os.path.getsize(os.path.join(part_dir, final)),
-                "zq_curve": zq_curve,
-            }
-        )
-    # remove only THIS unit's staging dir — other units of the job may
-    # still be writing under .staging/<job_id>/ concurrently
-    shutil.rmtree(staging, ignore_errors=True)
-    return new_rel, entries
+    # only THIS unit's staging dir is cleared and removed — other units
+    # of the job may still be writing under .staging/<job_id>/
+    return mf.write_data_files(
+        df.withColumn("source", F.lit(partition)),
+        table_path,
+        os.path.join(table_path, ".staging", job_id, partition),
+        f"compact-{job_id}",
+        curve=curve,
+    )
 
 
 def estimate_parquet_bytes(row_count: int, avg_tokens: float) -> int:

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
 from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
+from hoopstat_haus_spark.lakehouse.health import records_failure
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
@@ -60,18 +61,8 @@ def delete_where(
     """
     job_id = job_id or f"delete-{uuid.uuid4().hex[:10]}"
     metrics = JobMetrics(job=job_id)
-    try:
+    with records_failure(table.path, metrics, "delete"):
         return _delete_run(table, condition, job_id, sources, curve, metrics)
-    except Exception as exc:
-        # failed deletes must reach the health rollup, like merge/compact
-        from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-        metrics.finish()
-        try:
-            record_job_metrics(table.path, metrics, "delete", status="failed", error=repr(exc)[:500])
-        except OSError:
-            pass  # a full/read-only disk must not mask the root cause
-        raise
 
 
 def find_touched_files(
@@ -221,6 +212,7 @@ def _delete_run(
         rows=metrics.rows,
         tokens=metrics.tokens,
         duration_s=time.time() - t0,
+        output_stats=fresh,
     )
 
     # ---- commit: new shards only for touched partitions ---------------

@@ -79,18 +79,13 @@ def collect_garbage(
     # only by expired snapshots are never opened at all: their data
     # files are either shared with a retained shard (already reachable)
     # or garbage the directory walk finds without any manifest help.
-    seen_shards: set[str] = set()
     for sid in log.list_ids():
         snap = log.get(sid)
         reachable_manifests.add(snap.manifest)
         for rec in mf.read_manifest_list(table_path, snap.manifest):
-            path = rec.get("path")
-            if path is not None:
-                reachable_manifests.add(path)
-                if path in seen_shards:
-                    continue
-                seen_shards.add(path)
-            # legacy monolith records carry entries inline (path None)
+            if rec["path"] in reachable_manifests:
+                continue  # shard already read for another snapshot
+            reachable_manifests.add(rec["path"])
             for e in mf.read_shard(table_path, rec):
                 reachable_data.add(e["file_path"])
     reachable_data |= _checkpoint_protected(table_path)

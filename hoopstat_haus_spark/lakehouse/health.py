@@ -26,6 +26,7 @@ import json
 import os
 import time
 import uuid
+from contextlib import contextmanager
 
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 
@@ -68,6 +69,28 @@ def record_job_metrics(
     with open(path, "w") as f:
         json.dump(rec, f, indent=1)
     return path
+
+
+@contextmanager
+def records_failure(table_path: str, metrics: JobMetrics, operation: str):
+    """Record a ``status='failed'`` job record for ``operation`` when the
+    body raises, then re-raise. Without failure records DEGRADED/OUTAGE
+    are unreachable: a stage crashing for days would still read
+    OPERATIONAL from its last old success. The record's ``error`` is the
+    exception's class and message (``repr`` of a Spark
+    ``AnalysisException`` carries no message). An ``OSError`` while
+    recording (full or read-only disk) is swallowed so it cannot mask
+    the root cause."""
+    try:
+        yield
+    except Exception as exc:
+        metrics.finish()
+        error = f"{type(exc).__name__}: {exc}"[:500]
+        try:
+            record_job_metrics(table_path, metrics, operation, status="failed", error=error)
+        except OSError:
+            pass
+        raise
 
 
 def read_job_records(table_path: str) -> list[dict]:

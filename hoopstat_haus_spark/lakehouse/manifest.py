@@ -1,4 +1,4 @@
-"""Manifest: per-file stats, rebuilt in one column-pruned DataFrame pass.
+"""Manifest: per-file stats, computed by the one fused data writer.
 
 The reference keeps a summary manifest of per-entity file counts/sizes
 (``apps/bronze-ingestion/app/bronze_summary.py:161-286``) and a JSON
@@ -16,10 +16,12 @@ Manifest row schema:
     zmin / zmax  long     (Z-order key range; -1 when file is unclustered)
     file_bytes   long
 
-Scale note: the stats pass reads ONLY (doc_id, n_tok, _zkey) — column
-pruning keeps it to a few % of table bytes because `tokens` (the payload)
-is never scanned. The groupBy key is ``input_file_name()`` so partial
-aggregation happens map-side per file; the shuffle is (files × 1 row).
+Every data write (create, append, merge, DML, WAP, compaction) goes
+through :func:`write_data_files`: ONE job writes the files and folds
+their stats (:func:`write_partitioned_with_stats`), then the files are
+renamed out of staging. :func:`compute_file_stats`, a column-pruned
+re-read of written files, is the parity oracle the tests pin the
+writer's stats against; no production path calls it.
 
 Layout (Iceberg manifest-list design; reference ancestor ADR-024's JSON
 catalog): a snapshot points at a LIST file (`_manifests/list-*.json`,
@@ -34,6 +36,7 @@ shards the list says can matter.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
@@ -100,6 +103,11 @@ def compute_file_stats(
     """One distributed pass: per-file row/token counts + min/max stats +
     a {ZQ_GRID}-quantile Z-key sketch (``zq``) tagged with its curve
     (``zq_curve``).
+
+    The parity oracle: no production path calls this (every write
+    computes its stats in :func:`write_partitioned_with_stats`); tests
+    compare the writer's manifest entries against this re-read of the
+    written files, so the stats definition below is the reference.
 
     ``curve`` names the space-filling curve the files' STORED ``_zkey``
     was written with (the writing job knows it); the tag is what lets
@@ -221,13 +229,14 @@ _PARTITIONED_STATS_DDL = (
     "max_n_tok int, zmin long, zmax long, zq array<long>"
 )
 
-# fused-writer buffering: flush a source's accumulated batches as one
-# row group at this many rows (~64 MB at the ~1 KB/row token payload),
-# and flush everything when the task's total buffer crosses the cap
-# (~128 MB/task worst case on top of the in-flight Arrow batch — the
-# Python worker has no spill mechanism, so the bound must be explicit)
-_FLUSH_ROWS_PER_SOURCE = 64_000
-_FLUSH_ROWS_TOTAL = 128_000
+# fused-writer buffering, in Arrow bytes (``RecordBatch.nbytes``): flush
+# a source's accumulated batches as one row group once they reach the
+# per-source cap, and flush everything when the task's total buffer
+# crosses the task cap (128 MB/task worst case on top of the in-flight
+# Arrow batch, whatever the row width — the Python worker has no spill
+# mechanism, so the bound must be explicit)
+_FLUSH_BYTES_PER_SOURCE = 64 << 20
+_FLUSH_BYTES_TOTAL = 128 << 20
 
 
 def parquet_codec_conf(spark: SparkSession) -> tuple[str | None, int | None]:
@@ -257,11 +266,10 @@ def parquet_codec_conf(spark: SparkSession) -> tuple[str | None, int | None]:
 
 
 class FileStatsAcc:
-    """THE per-file manifest-stats accumulator shared by every fused
-    writer — one implementation of the stats definition so it cannot
-    drift between the write paths and :func:`compute_file_stats`
-    (which pins it): fold Arrow batches with :meth:`add`, read the
-    final stat fields from :meth:`finalize`.
+    """THE per-file manifest-stats accumulator of the fused writer —
+    one implementation of the stats definition, pinned against
+    :func:`compute_file_stats`: fold Arrow batches with :meth:`add`,
+    read the final stat fields from :meth:`finalize`.
 
     ``zk`` is the file's z-key source values (stored ``_zkey`` for
     clustered output, derived Morton key for unclustered input),
@@ -321,28 +329,34 @@ class FileStatsAcc:
 def write_partitioned_with_stats(
     df: DataFrame, staging: str, codec: str | None, codec_level: int | None
 ) -> list[dict]:
-    """Write ``df`` partitioned by ``source`` under ``staging`` AND
-    compute every output file's manifest stats in the SAME job — the
-    fused form of ``partitionBy('source').parquet(...)`` followed by
-    :func:`compute_file_stats`, which re-read every written file.
+    """THE data writer: write ``df`` partitioned by ``source`` under
+    ``staging`` AND compute every output file's manifest stats in the
+    SAME job. Every data write goes through it (create, append, merge,
+    DML, WAP and compaction, via :func:`write_data_files`); no job
+    re-reads its own output for stats.
 
     Each task splits its Arrow batches by ``source`` and streams them
     into one pyarrow ParquetWriter per source (same zstd codec/level as
-    the JVM writer; batches accumulate to row groups of up to
-    {_FLUSH_ROWS_PER_SOURCE} rows), folding the stats accumulators
-    batch-wise. Stats are bit-identical to :func:`compute_file_stats`:
-    same JVM-computed zq sample flag, ascending sort, grid truncation
-    and tiny-file full-keys fallback; clustered inputs (``_zkey``
-    column present) sketch the stored key and record real zmin/zmax,
+    the JVM writer), folding the stats accumulators batch-wise. A batch
+    holding a single source value (every compaction batch: a compaction
+    task holds one routed, ``_zkey``-sorted source) is used whole, with
+    no filter copy, so in-file row order is the input order. Buffered
+    batches flush as one row group at ``_FLUSH_BYTES_PER_SOURCE`` Arrow
+    bytes per source, and every source flushes once the task holds
+    ``_FLUSH_BYTES_TOTAL``: memory stays bounded whatever the row width.
+
+    Stats are bit-identical to :func:`compute_file_stats`: same
+    JVM-computed zq sample flag, ascending sort, grid truncation and
+    tiny-file full-keys fallback; clustered inputs (``_zkey`` column
+    present) sketch the stored key and record real zmin/zmax,
     unclustered inputs sketch the DERIVED Morton key (computed JVM-side
     as a helper column, dropped from the file) with zmin = zmax = -1.
 
     Returns one dict per written file: ``partition`` (raw value),
     ``dir`` (escaped ``source=...`` dir under staging), ``file_name``,
-    ``pid`` and the stat fields. The caller renames files out of
-    staging and attaches ``file_path``/``file_bytes``/``zq_curve``.
-    Task-retry safe: names carry a fresh uuid per attempt and only
-    files named in collected rows are renamed."""
+    ``pid`` and the stat fields. Task-retry safe: names carry a fresh
+    uuid per attempt and only files named in collected rows are
+    renamed out of staging."""
     import uuid as _uuid
 
     has_zkey = ZKEY_COL in df.columns
@@ -355,7 +369,7 @@ def write_partitioned_with_stats(
             "_zq_src", zkey_expr_zorder(F.col("n_tok"), F.xxhash64(F.col("doc_id")), 0, 4096)
         )
     zsrc_col = ZKEY_COL if has_zkey else "_zq_src"
-    helper_cols = ["_zs_flag"] + ([] if has_zkey else ["_zq_src"])
+    drop = ["source", "_zs_flag"] + ([] if has_zkey else ["_zq_src"])
 
     def write_task(batches):
         import pyarrow as pa
@@ -384,18 +398,23 @@ def write_partitioned_with_stats(
                     compression_level=codec_level,
                 )
             st["writer"].write_table(tbl)
-            total_buffered -= st["buf_rows"]
-            st["buf"], st["buf_rows"] = [], 0
+            total_buffered -= st["buf_bytes"]
+            st["buf"], st["buf_bytes"] = [], 0
 
         for batch in batches:
             cols = batch.schema.names
-            src_idx = cols.index("source")
+            src = batch.column(cols.index("source"))
             zk = batch.column(cols.index(zsrc_col)).to_numpy(zero_copy_only=False)
             fl = batch.column(cols.index("_zs_flag")).to_numpy(zero_copy_only=False).astype(bool)
-            drop = ["source", *helper_cols]
-            for val in pc.unique(batch.column(src_idx)).to_pylist():
-                mask = pc.equal(batch.column(src_idx), val)
-                sub = batch.filter(mask)
+            vals = pc.unique(src).to_pylist()
+            for val in vals:
+                if len(vals) == 1:
+                    sub, sub_zk, sub_fl = batch, zk, fl
+                else:
+                    mask = pc.equal(src, val)
+                    sub = batch.filter(mask)
+                    m = mask.to_numpy(zero_copy_only=False).astype(bool)
+                    sub_zk, sub_fl = zk[m], fl[m]
                 st = state.get(val)
                 if st is None:
                     d = f"source={_escape_partition_value(val)}"
@@ -406,17 +425,17 @@ def write_partitioned_with_stats(
                         "path": os.path.join(staging, d, name),
                         "writer": None,
                         "buf": [],
-                        "buf_rows": 0,
+                        "buf_bytes": 0,
                         "acc": FileStatsAcc(),
                     }
-                st["buf"].append(sub.drop_columns(drop))
-                st["buf_rows"] += sub.num_rows
-                total_buffered += sub.num_rows
-                m = mask.to_numpy(zero_copy_only=False).astype(bool)
-                st["acc"].add(sub, zk[m], fl[m])
-                if st["buf_rows"] >= _FLUSH_ROWS_PER_SOURCE:
+                data = sub.drop_columns(drop)
+                st["buf"].append(data)
+                st["buf_bytes"] += data.nbytes
+                total_buffered += data.nbytes
+                st["acc"].add(sub, sub_zk, sub_fl)
+                if st["buf_bytes"] >= _FLUSH_BYTES_PER_SOURCE:
                     flush(st)
-            if total_buffered >= _FLUSH_ROWS_TOTAL:
+            if total_buffered >= _FLUSH_BYTES_TOTAL:
                 for st in state.values():
                     flush(st)
 
@@ -464,6 +483,46 @@ def write_partitioned_with_stats(
     return [r.asDict() for r in wide.mapInArrow(write_task, _PARTITIONED_STATS_DDL).collect()]
 
 
+def write_data_files(
+    df: DataFrame, table_path: str, staging: str, prefix: str, curve: str = "zorder"
+) -> tuple[list[str], list[dict]]:
+    """Write ``df`` (with a ``source`` column) through
+    :func:`write_partitioned_with_stats` into ``staging``, then rename
+    each file to ``data/source=<s>/{prefix}-{seq:05d}.parquet``.
+    Returns (new table-relative paths, their manifest entries).
+
+    The one staged-rename step of every data write. Staged files are
+    invisible to readers (they resolve files through a snapshot's
+    manifest) until the caller commits the entries. ``staging`` is
+    cleared first, so a crashed attempt's partial output is discarded,
+    and removed at the end. ``curve`` names the curve a stored
+    ``_zkey`` was computed with; unclustered input is tagged
+    ``zorder``, the curve of the derived key it sketches."""
+    if os.path.exists(staging):
+        shutil.rmtree(staging)
+    os.makedirs(staging, exist_ok=True)
+    codec, level = parquet_codec_conf(df.sparkSession)
+    rows = write_partitioned_with_stats(df, staging, codec, level)
+    zq_curve = curve if ZKEY_COL in df.columns else "zorder"
+    new_rel: list[str] = []
+    entries: list[dict] = []
+    seq: dict[str, int] = {}
+    for r in sorted(rows, key=lambda x: (x["dir"], x["pid"], x["file_name"])):
+        d = r["dir"]
+        seq[d] = seq.get(d, -1) + 1
+        rel = f"data/{d}/{prefix}-{seq[d]:05d}.parquet"
+        dst = os.path.join(table_path, rel)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.replace(os.path.join(staging, d, r["file_name"]), dst)
+        new_rel.append(rel)
+        e = {k: v for k, v in r.items() if k not in ("pid", "dir", "file_name")}
+        e["zq"] = [int(z) for z in r["zq"]] or None
+        e.update(file_path=rel, file_bytes=os.path.getsize(dst), zq_curve=zq_curve)
+        entries.append(e)
+    shutil.rmtree(staging, ignore_errors=True)
+    return new_rel, entries
+
+
 _MANIFEST_FIELDS = [
     ("file_path", pa.string()),
     ("partition", pa.string()),
@@ -485,11 +544,6 @@ _MANIFEST_FIELDS = [
     ("zq_curve", pa.string()),
 ]
 MANIFEST_ARROW_SCHEMA = pa.schema(_MANIFEST_FIELDS)
-MANIFEST_DDL = (
-    "file_path string, partition string, row_count long, token_count long, "
-    "min_doc_id string, max_doc_id string, min_n_tok int, max_n_tok int, "
-    "zmin long, zmax long, file_bytes long, zq array<long>, zq_curve string"
-)
 
 
 # --------------------------------------------------------------- shards
@@ -501,14 +555,6 @@ MANIFEST_DDL = (
 # MERGE into 1 of 10^4 partitions writes one shard + one small list, not
 # an O(all-files) monolith. Planning reads only the shards it needs,
 # guided by the list's exact per-shard aggregates.
-#
-# Back-compat: manifests written before sharding are a single parquet
-# (`manifest-*.parquet`); readers detect them by extension and read them
-# whole, and the first commit on top converts the table to shards.
-
-
-def is_manifest_list(rel_path: str) -> bool:
-    return rel_path.endswith(".json")
 
 
 def shard_record(partition: str, rel_path: str, entries: list[dict]) -> dict:
@@ -559,30 +605,22 @@ def _write_list(table_path: str, records: list[dict]) -> str:
 
 
 def read_manifest_list(table_path: str, rel_path: str) -> list[dict]:
-    """Shard records of a list manifest. For a LEGACY monolithic
-    manifest, synthesizes in-memory records (``path`` None, ``entries``
-    attached) so callers get one uniform shape; the next commit's
-    :func:`update_manifest` converts those to real shards."""
+    """Shard records of a manifest list. Any other manifest rel (e.g. a
+    monolithic ``manifest-*.parquet`` from before sharding) raises."""
     import json
 
-    if is_manifest_list(rel_path):
-        with open(os.path.join(table_path, rel_path)) as f:
-            return json.load(f)["shards"]
-    by_part: dict[str, list[dict]] = {}
-    for e in pq.read_table(os.path.join(table_path, rel_path)).to_pylist():
-        by_part.setdefault(e["partition"], []).append(e)
-    out = []
-    for part, entries in sorted(by_part.items()):
-        rec = shard_record(part, None, entries)
-        rec["entries"] = entries
-        out.append(rec)
-    return out
+    name = os.path.basename(rel_path)
+    if not (name.startswith("list-") and name.endswith(".json")):
+        raise ValueError(
+            f"unsupported manifest format: {rel_path!r} is not a manifest list "
+            "(_manifests/list-*.json); monolithic manifests are no longer readable"
+        )
+    with open(os.path.join(table_path, rel_path)) as f:
+        return json.load(f)["shards"]
 
 
 def read_shard(table_path: str, record: dict) -> list[dict]:
-    """Entries of one shard record (legacy records carry them inline)."""
-    if record.get("path") is None:
-        return record["entries"]
+    """Entries of one shard record."""
     return pq.read_table(os.path.join(table_path, record["path"])).to_pylist()
 
 
@@ -596,19 +634,12 @@ def diff_partition_entries(table_path: str, old_manifest: str, new_manifest: str
     A partition carried by reference (identical immutable shard path on
     both sides) is skipped without opening the shard parquet, so the
     walk costs O(changed partitions). Entries are the full per-file
-    dicts; ``[]`` marks a side where the partition is absent. Legacy
-    monolithic manifests (path None records) compare at entry level —
-    their synthesized records never alias, so they are always opened."""
+    dicts; ``[]`` marks a side where the partition is absent."""
     old_recs = {r["partition"]: r for r in read_manifest_list(table_path, old_manifest)}
     new_recs = {r["partition"]: r for r in read_manifest_list(table_path, new_manifest)}
     for part in sorted(set(old_recs) | set(new_recs)):
         o, n = old_recs.get(part), new_recs.get(part)
-        if (
-            o is not None
-            and n is not None
-            and o.get("path") is not None
-            and o["path"] == n.get("path")
-        ):
+        if o is not None and n is not None and o["path"] == n["path"]:
             continue  # same immutable shard → byte-identical partition
         yield (
             part,
@@ -627,16 +658,14 @@ def update_manifest(
     empty list drops the partition), carry every other shard by
     reference, and write the new list. Returns (list rel, records).
     O(touched partitions) writes + O(partitions) list I/O — never
-    O(all files). A legacy monolithic base converts fully on this
-    commit (its synthesized records carry entries inline)."""
+    O(all files)."""
     records: list[dict] = []
     if base_rel is not None:
-        for rec in read_manifest_list(table_path, base_rel):
-            if rec["partition"] in changed:
-                continue
-            if rec.get("path") is None:  # legacy: materialize as a shard
-                rec = _write_shard(table_path, rec["partition"], rec["entries"])
-            records.append(rec)
+        records = [
+            rec
+            for rec in read_manifest_list(table_path, base_rel)
+            if rec["partition"] not in changed
+        ]
     for part, entries in sorted(changed.items()):
         if entries:
             records.append(_write_shard(table_path, part, entries))
@@ -666,33 +695,15 @@ def write_manifest(table_path: str, entries: list[dict]) -> str:
 def manifest_files(table_path: str, rel_path: str) -> list[str]:
     """Every metadata file a manifest rel reaches (itself + its shards)
     — the GC reachability set for manifests."""
-    if not is_manifest_list(rel_path):
-        return [rel_path]
-    return [rel_path] + [
-        r["path"] for r in read_manifest_list(table_path, rel_path) if r.get("path")
-    ]
+    return [rel_path] + [r["path"] for r in read_manifest_list(table_path, rel_path)]
 
 
 def read_manifest(table_path: str, rel_path: str) -> list[dict]:
-    """ALL entries of a manifest (list or legacy monolithic). O(files) —
-    planners should prefer read_manifest_list + read_shard on the
-    partitions they actually touch."""
-    if is_manifest_list(rel_path):
-        out: list[dict] = []
-        for rec in read_manifest_list(table_path, rel_path):
-            out.extend(read_shard(table_path, rec))
-        return out
-    return pq.read_table(os.path.join(table_path, rel_path)).to_pylist()
+    """ALL entries of a manifest. O(files) — planners should prefer
+    read_manifest_list + read_shard on the partitions they actually
+    touch."""
+    out: list[dict] = []
+    for rec in read_manifest_list(table_path, rel_path):
+        out.extend(read_shard(table_path, rec))
+    return out
 
-
-def manifest_df(spark: SparkSession, table_path: str, rel_path: str) -> DataFrame:
-    if is_manifest_list(rel_path):
-        paths = [
-            os.path.join(table_path, r["path"])
-            for r in read_manifest_list(table_path, rel_path)
-            if r.get("path")
-        ]
-        if not paths:  # empty table: 0 shards
-            return spark.createDataFrame([], schema=MANIFEST_DDL)
-        return spark.read.parquet(*paths)
-    return spark.read.parquet(os.path.join(table_path, rel_path))

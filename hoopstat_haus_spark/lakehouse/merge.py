@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
 from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
+from hoopstat_haus_spark.lakehouse.health import records_failure
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
@@ -108,19 +109,8 @@ def merge_into(
         )
     job_id = job_id or f"merge-{uuid.uuid4().hex[:10]}"
     metrics = JobMetrics(job=job_id)
-    try:
+    with records_failure(table.path, metrics, "merge"):
         return _merge_run(table, updates, job_id, curve, metrics, summary_extra)
-    except Exception as exc:
-        # failed merges must reach the health rollup (DEGRADED/OUTAGE are
-        # unreachable if only successes ever record)
-        from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-        metrics.finish()
-        try:
-            record_job_metrics(table.path, metrics, "merge", status="failed", error=repr(exc)[:500])
-        except OSError:
-            pass  # a full/read-only disk must not mask the root cause
-        raise
 
 
 def _merge_run(
@@ -309,6 +299,7 @@ def _merge_apply(
         rows=metrics.rows,
         tokens=metrics.tokens,
         duration_s=time.time() - t0,
+        output_stats=fresh,
     )
     # new shards only for partitions that actually changed (a rewritten
     # file or a fresh output); everything else rides by reference

@@ -8,9 +8,6 @@ Layout (SURVEY.md §7.2):
     <path>/_snapshots/v<N>.json + current     snapshot log (snapshots.py)
     <path>/_checkpoints/<job_id>/*.json       lineage (checkpoint.py)
 
-    (pre-sharding tables: _manifests/manifest-*.parquet monoliths are
-    still readable; the first commit converts them to shards)
-
 Readers always resolve data files THROUGH a snapshot's manifest — never
 by listing directories — which is what makes commits atomic and scans
 snapshot-isolated (reference analog: downstream only reacts to the
@@ -34,7 +31,6 @@ and Spark unions the scans (filters/pruning push into every branch).
 from __future__ import annotations
 
 import os
-import shutil
 import time
 import uuid
 
@@ -50,6 +46,7 @@ from hoopstat_haus_spark.lakehouse.compaction import (
     plan_compaction,
     plan_unit_bounds,
 )
+from hoopstat_haus_spark.lakehouse.health import records_failure
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.schema import TableSchema, evolved, read_schema, write_schema
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot, SnapshotLog
@@ -111,61 +108,23 @@ class TokenLakeTable:
     def _write_files(
         self, df: DataFrame, prefix: str, repartition_n: int | None, curve: str = "zorder"
     ) -> tuple[list[str], list[dict]]:
-        """Stage a source-partitioned write, then rename files into the
-        table's data dirs. Returns (new table-relative paths, their
-        manifest stats entries).
-
-        The write goes through ``manifest.write_partitioned_with_stats``:
-        ONE job writes the files AND computes their manifest stats,
-        replacing the old partitionBy write plus a column-pruned re-read
-        of every new file for ``compute_file_stats`` — every write path
-        (create/append/merge/DML/WAP) drops a full stats job and its
-        stage boundaries. ``curve`` names the curve a stored ``_zkey``
-        was computed with (ignored for unclustered input, which sketches
-        the derived Morton key exactly like ``compute_file_stats``)."""
+        """Write ``df`` through the one data writer
+        (``manifest.write_data_files``): ONE job writes the
+        source-partitioned files AND computes their manifest stats, then
+        the files are renamed from staging into the table's data dirs.
+        Returns (new table-relative paths, their manifest stats entries).
+        ``curve`` names the curve a stored ``_zkey`` was computed with
+        (ignored for unclustered input, which sketches the derived
+        Morton key exactly like ``compute_file_stats``)."""
         job = f"{prefix}-{uuid.uuid4().hex[:10]}"
-        staging = os.path.join(self.path, ".staging", job)
         out = df
         if repartition_n:
             out = out.repartition(repartition_n)
         keep = set(self.schema_def().names()) | {mf.ZKEY_COL}
         out = out.select(*[c for c in out.columns if c in keep])
-        os.makedirs(staging, exist_ok=True)
-        codec, level = mf.parquet_codec_conf(self.spark)
-        zq_curve = curve if mf.ZKEY_COL in out.columns else "zorder"
-        rows = mf.write_partitioned_with_stats(out, staging, codec, level)
-        new_rel: list[str] = []
-        entries: list[dict] = []
-        seq: dict[str, int] = {}
-        for r in sorted(rows, key=lambda x: (x["dir"], x["pid"], x["file_name"])):
-            d = r["dir"]
-            s = seq.get(d, 0)
-            seq[d] = s + 1
-            part_dir = os.path.join(self.data_dir, d)
-            os.makedirs(part_dir, exist_ok=True)
-            final = f"{job}-{s:05d}.parquet"
-            os.replace(os.path.join(staging, d, r["file_name"]), os.path.join(part_dir, final))
-            rel = f"data/{d}/{final}"
-            new_rel.append(rel)
-            entries.append(
-                {
-                    "partition": r["partition"],
-                    "row_count": r["row_count"],
-                    "token_count": r["token_count"],
-                    "min_doc_id": r["min_doc_id"],
-                    "max_doc_id": r["max_doc_id"],
-                    "min_n_tok": r["min_n_tok"],
-                    "max_n_tok": r["max_n_tok"],
-                    "zmin": r["zmin"],
-                    "zmax": r["zmax"],
-                    "zq": [int(z) for z in r["zq"]] or None,
-                    "file_path": rel,
-                    "file_bytes": os.path.getsize(os.path.join(part_dir, final)),
-                    "zq_curve": zq_curve,
-                }
-            )
-        shutil.rmtree(staging, ignore_errors=True)
-        return new_rel, entries
+        return mf.write_data_files(
+            out, self.path, os.path.join(self.path, ".staging", job), job, curve=curve
+        )
 
     @classmethod
     def create(
@@ -431,27 +390,13 @@ class TokenLakeTable:
         policy = policy or CompactionPolicy()
         job_id = job_id or f"compact-{uuid.uuid4().hex[:10]}"
         metrics = JobMetrics(job=job_id)
-        try:
+        # a crash stays resumable (checkpoint intact); only the metrics
+        # record marks the failure
+        with records_failure(self.path, metrics, "compact"):
             return self._compact_run(
                 policy, curve, strategy, job_id, max_concurrent_units, metrics, sources,
                 curve_by_source,
             )
-        except Exception as exc:
-            # crashed maintenance must surface in the health rollup:
-            # without a 'failed' record, DEGRADED/OUTAGE are unreachable
-            # and a stage crashing for days still reads OPERATIONAL from
-            # its last old success. The job stays resumable (checkpoint
-            # intact); only the metrics record marks the failure.
-            from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-            metrics.finish()
-            try:
-                record_job_metrics(
-                    self.path, metrics, "compact", status="failed", error=repr(exc)[:500]
-                )
-            except OSError:
-                pass  # a full/read-only disk must not mask the root cause
-            raise
 
     def _compact_run(
         self,
@@ -465,10 +410,6 @@ class TokenLakeTable:
         curve_by_source: dict[str, str] | None = None,
     ) -> tuple[Snapshot | None, JobMetrics]:
         cb = curve_by_source or {}
-
-        def unit_curve(part: str) -> str:
-            return cb.get(part, curve)
-
         head = self.log.current()
         records = mf.read_manifest_list(self.path, head.manifest)
         # Exact shard-level prefilter mirroring plan_compaction's
@@ -500,7 +441,6 @@ class TokenLakeTable:
         new_files: list[str] = []
         pending: list[tuple[str, list[dict]]] = []
         fresh: list[dict] = []  # per-file stats, computed inside units
-        stale_stat_units: list[tuple[str, list[str]]] = []  # resumed pre-stats checkpoints
         for part, groups in plans.items():
             inputs = [f for g in groups for f in g.files]
             rewritten.update(f["file_path"] for f in inputs)
@@ -509,12 +449,14 @@ class TokenLakeTable:
             metrics.rows += sum(f["row_count"] for f in inputs)
             metrics.tokens += sum(f["token_count"] for f in inputs)
             metrics.partitions += 1
-            if part in done:
+            # reuse a finished unit only if it rewrote exactly the inputs
+            # planned against THIS head: a commit since the crash (e.g. a
+            # DELETE) changes them, and stale outputs would resurrect the
+            # rows it removed. A re-run overwrites the stale outputs under
+            # the same deterministic names.
+            if part in done and set(done[part]["input_files"]) == {f["file_path"] for f in inputs}:
                 new_files.extend(done[part]["output_files"])
-                if done[part].get("output_stats") is not None:
-                    fresh.extend(done[part]["output_stats"])
-                else:
-                    stale_stat_units.append((part, done[part]["output_files"]))
+                fresh.extend(done[part]["output_stats"])
             else:
                 pending.append((part, inputs))
 
@@ -538,10 +480,10 @@ class TokenLakeTable:
             t0 = time.time()
             ckpt.intent(part, in_paths)
             # stats come back from the SAME job that writes the files
-            # (compaction._write_sorted_with_stats): one job per unit
-            # instead of write + a column-pruned re-read of the output —
-            # fewer stage boundaries (the serial tail costs 4x in N->4N
-            # scaling) and ~GB-scale less read I/O per cycle
+            # (the fused writer): one job per unit instead of write + a
+            # column-pruned re-read of the output — fewer stage
+            # boundaries (the serial tail costs 4x in N->4N scaling) and
+            # ~GB-scale less read I/O per cycle
             out, stats = compact_partition(
                 self.spark,
                 self.path,
@@ -550,7 +492,7 @@ class TokenLakeTable:
                 sum(f["file_bytes"] for f in inputs),
                 policy,
                 job_id,
-                curve=unit_curve(part),
+                curve=cb.get(part, curve),
                 strategy=strategy,
                 read_ddl=read_ddl,
                 bounds=unit_bounds.get(part),
@@ -608,12 +550,6 @@ class TokenLakeTable:
                 self.spark.conf.set(conf_key, prev)
                 self.spark.conf.set(aqe_key, prev_aqe)
 
-        if stale_stat_units:  # resumed units checkpointed before stats existed
-            by_curve: dict[str, list[str]] = {}
-            for part, files in stale_stat_units:
-                by_curve.setdefault(unit_curve(part), []).extend(files)
-            for c, files in sorted(by_curve.items()):
-                fresh.extend(mf.compute_file_stats(self.spark, self.path, files, curve=c))
         metrics.files_out = len(fresh)
         metrics.bytes_out = sum(e["file_bytes"] for e in fresh)
         fresh_by_part: dict[str, list[dict]] = {}

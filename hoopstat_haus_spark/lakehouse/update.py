@@ -45,6 +45,7 @@ from hoopstat_haus_spark.lakehouse.delete import (
     find_touched_files,
     read_touched,
 )
+from hoopstat_haus_spark.lakehouse.health import records_failure
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
@@ -71,17 +72,8 @@ def update_where(
     """
     job_id = job_id or f"update-{uuid.uuid4().hex[:10]}"
     metrics = JobMetrics(job=job_id)
-    try:
+    with records_failure(table.path, metrics, "update"):
         return _update_run(table, condition, assignments, job_id, sources, curve, metrics)
-    except Exception as exc:
-        from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-        metrics.finish()
-        try:
-            record_job_metrics(table.path, metrics, "update", status="failed", error=repr(exc)[:500])
-        except OSError:
-            pass  # a full/read-only disk must not mask the root cause
-        raise
 
 
 def _update_run(
@@ -163,6 +155,7 @@ def _update_run(
         rows=metrics.rows,
         tokens=metrics.tokens,
         duration_s=time.time() - t0,
+        output_stats=fresh,
     )
 
     # ---- commit (shared with DELETE) ------------------------------------

@@ -1,6 +1,7 @@
 """Pipeline-health aggregation — reference health-aggregator semantics
 (operational / degraded / outage, most-recent-run rules)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import CompactionPolicy, TokenLakeTable
@@ -61,27 +62,41 @@ def test_empty_table_reports_outage(tmp_path):
     assert report["jobs_seen"] == 0
 
 
-def test_crashed_merge_records_failed_and_degrades(spark, tmp_table_dir):
-    """A merge that raises mid-flight must leave a status='failed' record
-    (advisor finding: without it, DEGRADED/OUTAGE were unreachable from
-    engine-run jobs)."""
-    import pytest
-
+@pytest.mark.parametrize("op", ["compact", "merge", "delete", "update"])
+def test_crashed_op_records_failed_and_degrades(spark, tmp_table_dir, op):
+    """A maintenance op that raises mid-flight must leave a
+    status='failed' record (advisor finding: without it, DEGRADED/OUTAGE
+    were unreachable from engine-run jobs). Each op succeeds once first,
+    so its failure reads as DEGRADED."""
     t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 2000), repartition_n=2)
     t.compact(POLICY)
-    ok = (
-        t.scan().limit(5)
-        .select("doc_id", F.expr("transform(tokens, x -> cast(x + 1 as int))").alias("tokens"),
-                "n_tok", "source")
-    )
-    merge_into(t, ok)  # one success so the failure reads as DEGRADED
-    dup = ok.limit(1).unionByName(ok.limit(1))  # duplicate keys → reject
-    with pytest.raises(ValueError, match="duplicate"):
-        merge_into(t, dup)
-    recs = [r for r in read_job_records(t.path) if r["operation"] == "merge"]
-    assert recs[-1]["status"] == "failed"
-    assert "duplicate" in (recs[-1].get("error") or "")
-    assert health_report(t.path)["stages"]["merge"]["status"] == DEGRADED
+    doc = t.scan().first()["doc_id"]
+    if op == "compact":
+        # fresh small files give the planner a unit; the unit raises
+        more = synthetic(spark, 300).withColumn("doc_id", F.concat(F.lit("x-"), "doc_id"))
+        t.append(more, repartition_n=4)
+        fail, match = (lambda: t.compact(POLICY, strategy="bogus")), "unknown strategy"
+    elif op == "merge":
+        ok = (
+            t.scan().limit(5)
+            .select("doc_id", F.expr("transform(tokens, x -> cast(x + 1 as int))").alias("tokens"),
+                    "n_tok", "source")
+        )
+        merge_into(t, ok)
+        dup = ok.limit(1).unionByName(ok.limit(1))  # duplicate keys → reject
+        fail, match = (lambda: merge_into(t, dup)), "duplicate"
+    elif op == "delete":
+        t.delete_where(F.col("doc_id") == doc)
+        fail, match = (lambda: t.delete_where("no_such_col = 1")), "no_such_col"
+    else:
+        t.update_where(F.col("doc_id") == doc, {"n_tok": "n_tok + 0"})
+        fail, match = (lambda: t.update_where("n_tok > 0", {"doc_id": "'x'"})), "identity"
+    with pytest.raises(Exception, match=match):
+        fail()
+    recs = [r for r in read_job_records(t.path) if r["operation"] == op]
+    assert [r["status"] for r in recs][-2:] == ["success", "failed"]
+    assert match in (recs[-1].get("error") or "")
+    assert health_report(t.path)["stages"][op]["status"] == DEGRADED
 
 
 def test_stale_success_degrades_with_freshness_rule(spark, tmp_table_dir):

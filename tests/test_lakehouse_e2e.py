@@ -174,9 +174,7 @@ def test_resume_skips_completed_units(spark, tmp_table_dir):
     out, _stats = compact_partition(
         spark, t.path, part, in_paths, sum(f["file_bytes"] for f in inputs), POLICY, "job-x"
     )
-    # checkpoint WITHOUT output_stats: exercises the stale-checkpoint
-    # resume path (stats recomputed by the resuming run)
-    ck.done(part, in_paths, out, rows=1, tokens=1, duration_s=0.0)
+    ck.done(part, in_paths, out, rows=1, tokens=1, duration_s=0.0, output_stats=_stats)
     assert t.log.current_id() == 1  # crash left readers untouched
 
     snap, metrics = t.compact(POLICY, job_id="job-x")
@@ -184,6 +182,41 @@ def test_resume_skips_completed_units(spark, tmp_table_dir):
     now_files = {e["file_path"] for e in t.manifest_entries()}
     assert set(out) <= now_files, "resume must reuse the completed unit's outputs"
     assert sig_rows(t) == pre
+
+
+def test_resume_reruns_unit_whose_inputs_changed(spark, tmp_table_dir):
+    """A unit checkpointed ``done`` before a crash is reused only while
+    its inputs are still the ones planned against the head: a DELETE
+    committed between the crash and the resume changes them, and
+    reusing the stale outputs would resurrect the deleted rows."""
+    from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
+    from hoopstat_haus_spark.lakehouse.compaction import compact_partition, plan_compaction
+
+    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 4000), repartition_n=8)
+    plans = plan_compaction(t.manifest_entries(), POLICY)
+    part = sorted(plans)[0]
+    inputs = [f for g in plans[part] for f in g.files]
+    in_paths = [f["file_path"] for f in inputs]
+
+    # crash after one unit finished: checkpointed done, nothing committed
+    ck = JobCheckpoint(t.path, "job-z")
+    ck.intent(part, in_paths)
+    out, stats = compact_partition(
+        spark, t.path, part, in_paths, sum(f["file_bytes"] for f in inputs), POLICY, "job-z"
+    )
+    ck.done(part, in_paths, out, rows=1, tokens=1, duration_s=0.0, output_stats=stats)
+
+    victims = [
+        r["doc_id"] for r in t.scan(sources=[part]).select("doc_id").orderBy("doc_id").limit(5).collect()
+    ]
+    t.delete_where(F.col("doc_id").isin(victims))
+    expected = sig_rows(t)
+    assert len(expected) == 3995
+
+    snap, _metrics = t.compact(POLICY, job_id="job-z")
+    assert snap is not None
+    assert t.scan().count() == 3995, "resume resurrected deleted rows"
+    assert sig_rows(t) == expected
 
 
 def test_checkpointed_stats_match_recomputation(spark, tmp_path_factory):

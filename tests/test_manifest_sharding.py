@@ -3,8 +3,9 @@
 The O(all-files)-per-commit monolith is gone: commits write new shards
 ONLY for touched partitions and carry the rest by reference in a small
 JSON list (one record per partition, exact aggregates). These tests pin
-the carry-by-reference behavior, GC reachability through the list, and
-the legacy monolithic-manifest read/convert path.
+the carry-by-reference behavior, GC reachability through the list, the
+refusal of the removed monolithic-manifest format, and the fused
+writer's stats parity and memory bound.
 """
 
 import os
@@ -12,6 +13,7 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import CompactionPolicy, TokenLakeTable
@@ -179,36 +181,22 @@ def test_gc_opens_each_distinct_shard_once(spark, tmp_table_dir, monkeypatch):
     assert not report["removed_data_files"], "all data reachable"
 
 
-def test_legacy_monolithic_manifest_reads_and_converts(spark, tmp_table_dir):
-    """A pre-sharding snapshot (single manifest parquet) must stay
-    readable — scan, pinned scan, manifest_entries — and the first
-    commit on top converts every partition to a real shard."""
-    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 5000), repartition_n=4)
+def test_non_list_manifest_is_rejected(spark, tmp_table_dir):
+    """Only manifest lists are readable. A snapshot pointing at a
+    monolithic manifest parquet (the pre-sharding format) fails loudly,
+    naming the unsupported format, instead of being read."""
+    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 500), repartition_n=2)
     entries = t.manifest_entries()
-    pre = _sig(t)
     rel = f"_manifests/manifest-{uuid.uuid4().hex[:12]}.parquet"
     cols = {name: [e.get(name) for e in entries] for name, _ in mf._MANIFEST_FIELDS}
     pq.write_table(
         pa.Table.from_pydict(cols, schema=mf.MANIFEST_ARROW_SCHEMA),
         os.path.join(t.path, rel),
     )
-    legacy_snap = t.log.commit(rel, "legacy", {"schema_version": 1})
-    assert not mf.is_manifest_list(t.log.current().manifest)
-    assert _sig(t) == pre
-    assert len(t.manifest_entries()) == len(entries)
-
-    # targeted compact: planned partition gets fresh shards, every OTHER
-    # legacy partition converts to a real shard on this commit
-    target = sorted({e["partition"] for e in entries})[0]
-    snap, _ = t.compact(POL, sources=[target])
-    assert snap is not None
-    assert mf.is_manifest_list(t.log.current().manifest)
-    after = _records(t)
-    assert set(after) == {e["partition"] for e in entries}
-    assert all(r["path"] is not None for r in after.values())
-    assert _sig(t) == pre
-    # pinned read of the legacy snapshot still works
-    assert _sig(t, snapshot_id=legacy_snap.snapshot_id) == pre
+    t.log.commit(rel, "legacy", {"schema_version": 1})
+    for read in (t.scan, t.manifest_entries, lambda: mf.manifest_files(t.path, rel)):
+        with pytest.raises(ValueError, match="unsupported manifest format"):
+            read()
 
 
 def test_scan_prunes_at_shard_level(spark, tmp_table_dir):
@@ -336,3 +324,31 @@ def test_fused_write_stats_multibatch_parity(spark, tmp_table_dir):
     assert len(fresh) == len(entries)
     for e in fresh:
         assert entries[e["file_path"]] == e
+
+
+def test_fused_writer_flushes_wide_rows_by_bytes(spark, tmp_table_dir):
+    """The writer's buffer cap counts Arrow bytes, not rows: ~10 KB rows
+    (10x the ~1 KB synthetic payload) arriving in small Arrow batches
+    must leave the Python worker, which cannot spill, as row groups of
+    at most the per-source cap, not buffer 64k rows (~640 MB) per
+    source. Checked through the written file's row-group metadata."""
+    n_rows, n_tok, batch_rows = 8000, 2500, 250  # ~80 MB, one task, one source
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(batch_rows))
+    try:
+        df = spark.range(0, n_rows, 1, 1).select(
+            F.format_string("doc-%08d", "id").alias("doc_id"),
+            F.sequence(F.lit(0), F.lit(n_tok - 1)).alias("tokens"),
+            F.lit(n_tok).alias("n_tok"),
+            F.lit("web").alias("source"),
+        )
+        t = TokenLakeTable.create(spark, tmp_table_dir, df)
+    finally:
+        spark.conf.set(key, prev)
+    (entry,) = t.manifest_entries()
+    assert entry["row_count"] == n_rows
+    md = pq.ParquetFile(os.path.join(t.path, entry["file_path"])).metadata
+    assert md.num_row_groups >= 2, "the whole file was buffered as one row group"
+    cap_rows = mf._FLUSH_BYTES_PER_SOURCE // (4 * n_tok) + batch_rows
+    assert max(md.row_group(i).num_rows for i in range(md.num_row_groups)) <= cap_rows

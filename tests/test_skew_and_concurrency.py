@@ -104,7 +104,10 @@ def test_gc_spares_checkpointed_outputs_and_live_staging(spark, tmp_table_dir):
     with open(os.path.join(t.path, out_rel), "wb") as f:
         f.write(b"staged-output")
     ckpt = JobCheckpoint(t.path, "crashjob")
-    ckpt.done("web", ["data/source=web/whatever.parquet"], [out_rel], rows=1, tokens=1, duration_s=0.1)
+    ckpt.done(
+        "web", ["data/source=web/whatever.parquet"], [out_rel], rows=1, tokens=1, duration_s=0.1,
+        output_stats=[],
+    )
     staging_dir = os.path.join(t.path, ".staging", "crashjob", "web")
     os.makedirs(staging_dir)
     with open(os.path.join(staging_dir, "part-0.parquet"), "wb") as f:
