@@ -35,13 +35,11 @@ one-row-per-key table invariant makes every added row an insert).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, read_touched
 
 CHANGE_COL = "_change"
 
@@ -101,15 +99,6 @@ def table_changes(
     if not added and not removed:
         return table.spark.createDataFrame([], schema=empty_ddl)
 
-    def read_rows(paths: list[str]) -> DataFrame:
-        df = (
-            table.spark.read.option("basePath", table.data_dir)
-            .schema(schema.ddl(extra=((mf.ZKEY_COL, "long"),)))
-            .parquet(*[os.path.join(table.path, p) for p in paths])
-            .drop(mf.ZKEY_COL)
-        )
-        return schema.apply_defaults(df)
-
     def labeled(df: DataFrame, kinds: F.Column) -> DataFrame:
         return df.select(*names, kinds.alias(CHANGE_COL))
 
@@ -118,16 +107,17 @@ def table_changes(
     # an existing key (the table would hold the key twice), so every
     # added row is an insert — and symmetrically for pure removals.
     if not removed:
-        return labeled(read_rows(added), F.lit("insert"))
+        return labeled(read_touched(table, schema, added), F.lit("insert"))
     if not added:
-        return labeled(read_rows(removed), F.lit("delete"))
+        return labeled(read_touched(table, schema, removed), F.lit("delete"))
 
     sig = F.md5(F.to_json(F.struct(*[F.col(c) for c in value_names])))
 
     def skinny(paths: list[str], tag: str) -> DataFrame:
         # signature in the scan projection: the classify join below
         # shuffles (doc_id, source, sig) — the payload never enters it
-        return read_rows(paths).select("doc_id", "source", sig.alias(f"{tag}_sig"))
+        rows = read_touched(table, schema, paths)
+        return rows.select("doc_id", "source", sig.alias(f"{tag}_sig"))
 
     is_del = F.col("n_sig").isNull()
     is_ins = F.col("o_sig").isNull()
@@ -161,7 +151,7 @@ def table_changes(
         keys = keyed.filter(F.col(CHANGE_COL).isin(wanted))
         if n_keys <= BROADCAST_KEYS_MAX:
             keys = F.broadcast(keys)
-        out = read_rows(paths).join(keys, ["doc_id", "source"], "inner")
+        out = read_touched(table, schema, paths).join(keys, ["doc_id", "source"], "inner")
         kinds = F.col(CHANGE_COL)
         for src_k, dst_k in relabel.items():
             kinds = F.when(F.col(CHANGE_COL) == src_k, F.lit(dst_k)).otherwise(kinds)

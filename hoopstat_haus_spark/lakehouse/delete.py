@@ -6,7 +6,7 @@ write-back ``:425-458``) — generalized here from key-addressed patches to
 arbitrary-predicate row DML with Iceberg semantics: ``DELETE FROM``
 removes rows where the predicate is TRUE (NULL/FALSE rows survive);
 ``UPDATE SET`` rewrites matching rows in place (see update.py, which
-shares this module's find/commit halves).
+shares this module's find pass and ``rewrite_touched``).
 
 Scale design (two passes, both bounded by the predicate):
 
@@ -19,8 +19,9 @@ Scale design (two passes, both bounded by the predicate):
 2. *Rewrite* — only touched files are read in full; survivors
    (``NOT coalesce(pred, false)``) are re-clustered and written back.
    Untouched files — in touched partitions and elsewhere — are carried
-   into the new manifest by reference, so manifest I/O is O(touched
-   partitions) like every other commit.
+   into the new manifest by reference: the commit is
+   ``table.commit_rewrite``, the one file-set commit every writer uses,
+   so manifest I/O is O(touched partitions).
 
 A delete that matches nothing commits nothing (returns ``(None,
 metrics)``): readers keep the current snapshot, no empty rewrite churn.
@@ -28,11 +29,11 @@ metrics)``): readers keep the current snapshot, no empty rewrite churn.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
+from typing import Callable
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
@@ -40,7 +41,7 @@ from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
 from hoopstat_haus_spark.lakehouse.health import records_failure
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite, read_touched
 from hoopstat_haus_spark.lakehouse.zorder import with_zkey
 
 
@@ -132,76 +133,31 @@ def find_touched_files(
     return head, matched_rows, cand, shard_entries
 
 
-def read_touched(table: TokenLakeTable, schema, cand_paths: list[str]):
-    """Full-row read of exactly the touched files, defaults applied."""
-    df = (
-        table.spark.read.option("basePath", table.data_dir)
-        .schema(schema.ddl(extra=((mf.ZKEY_COL, "long"),)))
-        .parquet(*[os.path.join(table.path, p) for p in cand_paths])
-        .drop(mf.ZKEY_COL)
-    )
-    return schema.apply_defaults(df)
-
-
-def commit_rewrite(
+def rewrite_touched(
     table: TokenLakeTable,
+    op: str,
     head: Snapshot,
-    schema,
     cand: list[dict],
     shard_entries: dict[str, list[dict]],
-    fresh: list[dict],
-    operation: str,
-    summary: dict,
-) -> Snapshot:
-    """Shared commit half: drop the rewritten files, add the fresh ones,
-    write new shards ONLY for touched partitions (others carried by
-    reference), commit with optimistic concurrency."""
-    dropped = {e["file_path"] for e in cand}
-    fresh_by_part: dict[str, list[dict]] = {}
-    for e in fresh:
-        fresh_by_part.setdefault(e["partition"], []).append(e)
-    changed_parts = {e["partition"] for e in cand} | set(fresh_by_part)
-    changed = {
-        part: [e for e in shard_entries.get(part, []) if e["file_path"] not in dropped]
-        + fresh_by_part.get(part, [])
-        for part in changed_parts
-    }
-    rel, new_records = mf.update_manifest(table.path, head.manifest, changed)
-    # full post-state aggregates (files/rows/tokens/bytes/partitions),
-    # like every other commit kind — history() and trend tooling read
-    # them; the caller's op-specific keys layer on top
-    summary = {**mf.summary_from_records(new_records), **summary}
-    summary["schema_version"] = schema.version
-    return table.log.commit(rel, operation, summary, expected_parent=head.snapshot_id)
-
-
-def _delete_run(
-    table: TokenLakeTable,
-    condition: Column | str,
-    job_id: str,
-    sources: list[str] | None,
+    transform: Callable[[DataFrame], DataFrame],
     curve: str,
     metrics: JobMetrics,
-) -> tuple[Snapshot | None, JobMetrics]:
-    spark = table.spark
-    pred = F.expr(condition) if isinstance(condition, str) else condition
-    schema = table.schema_def()
-
-    # ---- pass 1: find touched files (column-pruned, predicate pushed) --
-    head, matched_rows, cand, shard_entries = find_touched_files(table, pred, sources, metrics)
-    if not cand:
-        return None, metrics.finish()
+    summary: dict,
+) -> tuple[Snapshot, JobMetrics]:
+    """Pass 2 + commit (shared by DELETE/UPDATE): read exactly the
+    touched files, ``transform`` their rows (DELETE filters, UPDATE
+    projects), re-cluster, write, checkpoint, then commit the swap of
+    ``cand`` for the fresh files and record the job. ``summary`` holds
+    the op's own keys; the file counts are appended here. ``metrics.job``
+    is the job id (checkpoint dir and output-file prefix)."""
     cand_paths = [e["file_path"] for e in cand]
-
-    # ---- pass 2: rewrite only touched files ---------------------------
-    ckpt = JobCheckpoint(table.path, job_id)
+    ckpt = JobCheckpoint(table.path, metrics.job)
     ckpt.intent("rewrite", cand_paths)
     t0 = time.time()
-    target = read_touched(table, schema, cand_paths)
-    survivors = target.filter(~F.coalesce(pred, F.lit(False)))
-    survivors = with_zkey(survivors, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
+    out = transform(read_touched(table, table.schema_def(), cand_paths))
+    out = with_zkey(out, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
     new_files, fresh = table._write_files(
-        survivors, f"delete-{job_id}", repartition_n=None, curve=curve
+        out, f"{op}-{metrics.job}", repartition_n=None, curve=curve
     )
     metrics.files_out = len(fresh)
     metrics.bytes_out = sum(e["file_bytes"] for e in fresh)
@@ -214,25 +170,42 @@ def _delete_run(
         duration_s=time.time() - t0,
         output_stats=fresh,
     )
-
-    # ---- commit: new shards only for touched partitions ---------------
     snap = commit_rewrite(
         table,
         head,
-        schema,
+        op,
         cand,
-        shard_entries,
         fresh,
-        "delete",
-        {
-            "job_id": job_id,
-            "matched_rows": matched_rows,
-            "rewritten_files": len(cand_paths),
-            "new_files": len(fresh),
-        },
+        {**summary, "rewritten_files": len(cand_paths), "new_files": len(fresh)},
+        shards=shard_entries,
     )
     metrics.finish()
     from hoopstat_haus_spark.lakehouse.health import record_job_metrics
 
-    record_job_metrics(table.path, metrics, "delete", snapshot_id=snap.snapshot_id)
+    record_job_metrics(table.path, metrics, op, snapshot_id=snap.snapshot_id)
     return snap, metrics
+
+
+def _delete_run(
+    table: TokenLakeTable,
+    condition: Column | str,
+    job_id: str,
+    sources: list[str] | None,
+    curve: str,
+    metrics: JobMetrics,
+) -> tuple[Snapshot | None, JobMetrics]:
+    pred = F.expr(condition) if isinstance(condition, str) else condition
+    head, matched_rows, cand, shard_entries = find_touched_files(table, pred, sources, metrics)
+    if not cand:
+        return None, metrics.finish()
+    return rewrite_touched(
+        table,
+        "delete",
+        head,
+        cand,
+        shard_entries,
+        lambda rows: rows.filter(~F.coalesce(pred, F.lit(False))),
+        curve,
+        metrics,
+        {"job_id": job_id, "matched_rows": matched_rows},
+    )

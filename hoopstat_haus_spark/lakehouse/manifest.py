@@ -27,10 +27,11 @@ Layout (Iceberg manifest-list design; reference ancestor ADR-024's JSON
 catalog): a snapshot points at a LIST file (`_manifests/list-*.json`,
 one record per partition with exact aggregates) which points at
 per-partition SHARD parquets (`_manifests/shard-*.parquet`, one row per
-data file). Commits rewrite only touched partitions' shards; at ~10^6
-files / 10^4 partitions a single-partition MERGE writes KBs of
-metadata, not an O(all-files) monolith, and planners read only the
-shards the list says can matter.
+data file). Commits (``table.commit_rewrite`` → :func:`update_manifest`)
+rewrite only touched partitions' shards; at ~10^6 files / 10^4
+partitions a single-partition MERGE writes KBs of metadata, not an
+O(all-files) monolith, and planners read only the shards the list says
+can matter.
 """
 
 from __future__ import annotations
@@ -653,10 +654,11 @@ def update_manifest(
     base_rel: str | None,
     changed: dict[str, list[dict]],
 ) -> tuple[str, list[dict]]:
-    """Commit-side manifest update: write NEW shards for the partitions
-    in ``changed`` (mapping partition → its full new entry list; an
-    empty list drops the partition), carry every other shard by
-    reference, and write the new list. Returns (list rel, records).
+    """The manifest half of ``table.commit_rewrite`` (its only caller):
+    write NEW shards for the partitions in ``changed`` (mapping
+    partition → its full new entry list; an empty list drops the
+    partition), carry every other shard by reference, and write the new
+    list. Returns (list rel, records).
     O(touched partitions) writes + O(partitions) list I/O — never
     O(all files)."""
     records: list[dict] = []
@@ -680,16 +682,6 @@ def summary_from_records(records: list[dict]) -> dict:
         "bytes": int(sum(r["file_bytes"] for r in records)),
         "partitions": len(records),
     }
-
-
-def write_manifest(table_path: str, entries: list[dict]) -> str:
-    """Full manifest write (create / whole-table rewrite): shard every
-    partition + write the list; returns the LIST's table-relative path."""
-    by_part: dict[str, list[dict]] = {}
-    for e in entries:
-        by_part.setdefault(e["partition"], []).append(e)
-    rel, _records = update_manifest(table_path, None, by_part)
-    return rel
 
 
 def manifest_files(table_path: str, rel_path: str) -> list[str]:

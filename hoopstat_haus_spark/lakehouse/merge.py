@@ -21,7 +21,6 @@ carried into the new manifest by reference.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 
@@ -33,7 +32,7 @@ from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
 from hoopstat_haus_spark.lakehouse.health import records_failure
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite, read_touched
 from hoopstat_haus_spark.lakehouse.zorder import with_zkey
 
 OP_COL = "_op"  # optional in updates: 'upsert' (default) | 'delete'
@@ -216,13 +215,7 @@ def _merge_apply(
     ckpt.intent("rewrite", cand_paths)
     t0 = time.time()
     if cand_paths:
-        target = (
-            table.spark.read.option("basePath", table.data_dir)
-            .schema(schema.ddl(extra=((mf.ZKEY_COL, "long"),)))
-            .parquet(*[os.path.join(table.path, p) for p in cand_paths])
-            .drop(mf.ZKEY_COL)
-        )
-        t = target.alias("t")
+        t = read_touched(table, schema, cand_paths).alias("t")
         joined = t.join(F.broadcast(u), ["doc_id", "source"], "left_outer")
         survivors = joined.filter(
             (F.col(f"u.{OP_COL}").isNull()) | (F.col(f"u.{OP_COL}") != "delete")
@@ -302,33 +295,24 @@ def _merge_apply(
         output_stats=fresh,
     )
     # new shards only for partitions that actually changed (a rewritten
-    # file or a fresh output); everything else rides by reference
-    dropped = set(cand_paths)
-    fresh_by_part: dict[str, list[dict]] = {}
-    for e in fresh:
-        fresh_by_part.setdefault(e["partition"], []).append(e)
-    changed_parts = {e["partition"] for e in cand} | set(fresh_by_part)
-    changed = {
-        part: [e for e in shard_entries.get(part, []) if e["file_path"] not in dropped]
-        + fresh_by_part.get(part, [])
-        for part in changed_parts
-    }
-    rel, new_records = mf.update_manifest(table.path, head.manifest, changed)
-    snap = table.log.commit(
-        rel,
+    # file or a fresh output); everything else rides by reference.
+    # summary_extra overlap with the commit's own keys is rejected at
+    # entry, so history() never sees clobbered aggregates
+    snap = commit_rewrite(
+        table,
+        head,
         "merge",
+        cand,
+        fresh,
         {
-            # full table aggregates, same as append/compact/DML commits —
-            # history() and other metadata readers must not see files=0
-            # on merge snapshots (summary_extra overlap rejected at entry)
-            **mf.summary_from_records(new_records),
             "job_id": job_id,
             "rewritten_files": len(cand_paths),
             "new_files": len(fresh),
-            "schema_version": schema.version,
             **(summary_extra or {}),
         },
-        expected_parent=head.snapshot_id,
+        # a feed partition new to the table starts empty: every touched
+        # partition is in shards, so the commit re-reads no manifest
+        shards={p: [] for p in feed_parts} | shard_entries,
     )
     metrics.finish()
     from hoopstat_haus_spark.lakehouse.health import record_job_metrics

@@ -13,6 +13,12 @@ by listing directories — which is what makes commits atomic and scans
 snapshot-isolated (reference analog: downstream only reacts to the
 silver-ready marker, ``meta/adr/ADR-028:33-38``).
 
+``commit_rewrite`` (module level) is THE file-set commit: create,
+append, compact, merge, delete, update and WAP publish all drop/add
+manifest entries and swap the snapshot pointer through it. Only the
+metadata-only commits (``evolve_schema``, ``rollback``) reuse an
+existing manifest and call ``SnapshotLog.commit`` directly.
+
 Scale bound — scan path list: a full-table ``scan()`` materializes every
 surviving file path driver-side into one ``parquet(*paths)`` call. At the
 target 10^6-file scale that is ~10^8 bytes of path strings — the same
@@ -50,7 +56,6 @@ from hoopstat_haus_spark.lakehouse.health import records_failure
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.schema import TableSchema, evolved, read_schema, write_schema
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot, SnapshotLog
-from hoopstat_haus_spark.lakehouse.zorder import with_zkey
 
 DATA_COLUMNS = ["doc_id", "tokens", "n_tok", "source"]  # base (schema v1)
 
@@ -80,12 +85,16 @@ class TokenLakeTable:
         default (schema.py module docstring)."""
         head = self.log.current()
         new_schema = evolved(self.schema_def(), add_fields)
+        # table aggregates only: copying head.summary would stamp the
+        # head op's own keys (job_id, wap_ref, stream_id…) on this
+        # snapshot, and exactly-once lookups would then find it
+        summary = mf.summary_from_records(mf.read_manifest_list(self.path, head.manifest))
         schema_file = write_schema(self.path, new_schema)
         try:
             return self.log.commit(
                 head.manifest,
                 "schema",
-                {**head.summary, "schema_version": new_schema.version},
+                {**summary, "schema_version": new_schema.version},
                 expected_parent=head.snapshot_id,
             )
         except Exception:
@@ -142,12 +151,8 @@ class TokenLakeTable:
             raise ValueError(f"table already exists at {path}")
         os.makedirs(t.data_dir, exist_ok=True)
         _new_files, entries = t._write_files(df, "append", repartition_n)
-        rel = mf.write_manifest(t.path, entries)
-        t.log.commit(rel, "append", t._stamp(_summary(entries)))
+        commit_rewrite(t, None, "append", [], entries, {})
         return t
-
-    def _stamp(self, summary: dict) -> dict:
-        return {**summary, "schema_version": self.schema_def().version}
 
     def append(self, df: DataFrame, repartition_n: int | None = None) -> Snapshot:
         """Append a batch. Manifest cost is O(touched partitions): only
@@ -155,21 +160,7 @@ class TokenLakeTable:
         the table is carried by reference in the new manifest list."""
         head = self.log.current()
         _new_files, fresh = self._write_files(self.schema_def().conform(df), "append", repartition_n)
-        by_part: dict[str, list[dict]] = {}
-        for e in fresh:
-            by_part.setdefault(e["partition"], []).append(e)
-        base = {r["partition"]: r for r in mf.read_manifest_list(self.path, head.manifest)}
-        changed = {
-            part: (mf.read_shard(self.path, base[part]) if part in base else []) + entries
-            for part, entries in by_part.items()
-        }
-        rel, records = mf.update_manifest(self.path, head.manifest, changed)
-        return self.log.commit(
-            rel,
-            "append",
-            self._stamp(mf.summary_from_records(records)),
-            expected_parent=head.snapshot_id,
-        )
+        return commit_rewrite(self, head, "append", [], fresh, {})
 
     # ------------------------------------------------------------- read
     def manifest_entries(self, snapshot_id: int | None = None) -> list[dict]:
@@ -437,13 +428,13 @@ class TokenLakeTable:
 
         ckpt = JobCheckpoint(self.path, job_id)
         done = ckpt.completed_units()
-        rewritten: set[str] = set()
+        removed: list[dict] = []
         new_files: list[str] = []
         pending: list[tuple[str, list[dict]]] = []
         fresh: list[dict] = []  # per-file stats, computed inside units
         for part, groups in plans.items():
             inputs = [f for g in groups for f in g.files]
-            rewritten.update(f["file_path"] for f in inputs)
+            removed.extend(inputs)
             metrics.files_in += len(inputs)
             metrics.bytes_in += sum(f["file_bytes"] for f in inputs)
             metrics.rows += sum(f["row_count"] for f in inputs)
@@ -552,30 +543,21 @@ class TokenLakeTable:
 
         metrics.files_out = len(fresh)
         metrics.bytes_out = sum(e["file_bytes"] for e in fresh)
-        fresh_by_part: dict[str, list[dict]] = {}
-        for e in fresh:
-            fresh_by_part.setdefault(e["partition"], []).append(e)
         # only PLANNED partitions get a new shard (kept files + fresh
         # outputs); every other shard is carried by reference
-        changed = {
-            part: [e for e in shard_entries[part] if e["file_path"] not in rewritten]
-            + fresh_by_part.get(part, [])
-            for part in plans
-        }
-        rel, new_records = mf.update_manifest(self.path, head.manifest, changed)
-        snap = self.log.commit(
-            rel,
+        snap = commit_rewrite(
+            self,
+            head,
             "compact",
-            self._stamp(
-                {
-                    **mf.summary_from_records(new_records),
-                    "job_id": job_id,
-                    "curve": curve,
-                    **({"curve_by_source": cb} if cb else {}),
-                    "strategy": strategy,
-                }
-            ),
-            expected_parent=head.snapshot_id,
+            removed,
+            fresh,
+            {
+                "job_id": job_id,
+                "curve": curve,
+                **({"curve_by_source": cb} if cb else {}),
+                "strategy": strategy,
+            },
+            shards=shard_entries,
         )
         metrics.finish()
         from hoopstat_haus_spark.lakehouse.health import record_job_metrics
@@ -687,7 +669,11 @@ class TokenLakeTable:
         return self.log.commit(
             target.manifest,
             "rollback",
-            self._stamp({**summary, "restored_snapshot_id": snapshot_id}),
+            {
+                **summary,
+                "restored_snapshot_id": snapshot_id,
+                "schema_version": self.schema_def().version,
+            },
             expected_parent=head.snapshot_id if head else None,
         )
 
@@ -715,11 +701,60 @@ class TokenLakeTable:
         )
 
 
-def _summary(entries: list[dict]) -> dict:
-    return {
-        "files": len(entries),
-        "rows": int(sum(e["row_count"] for e in entries)),
-        "tokens": int(sum(e["token_count"] for e in entries)),
-        "bytes": int(sum(e["file_bytes"] for e in entries)),
-        "partitions": len({e["partition"] for e in entries}),
-    }
+
+def commit_rewrite(
+    table: TokenLakeTable,
+    head: Snapshot | None,
+    operation: str,
+    removed: list[dict],
+    added: list[dict],
+    summary: dict,
+    shards: dict[str, list[dict]] | None = None,
+) -> Snapshot:
+    """THE file-set commit: drop the ``removed`` manifest entries, add
+    the ``added`` ones (with their per-file stats), write new shards
+    ONLY for the touched partitions (those of removed ∪ added; every
+    other shard is carried by reference), and swap the snapshot pointer
+    if HEAD has not moved past ``head`` (``None``: a new table).
+
+    A touched partition's base entries come from ``shards`` (the
+    partition → entries map a planner already read) when present, else
+    from ``head``'s manifest list — so no shard is read twice. The
+    summary is the post-commit table aggregates, then the caller's
+    op-specific keys, then the live ``schema_version``."""
+    dropped = {e["file_path"] for e in removed}
+    parts = {e["partition"] for e in removed} | {e["partition"] for e in added}
+    base = dict(shards or {})
+    missing = parts - set(base)
+    if missing and head is not None:
+        for rec in mf.read_manifest_list(table.path, head.manifest):
+            if rec["partition"] in missing:
+                base[rec["partition"]] = mf.read_shard(table.path, rec)
+    changed = {p: [e for e in base.get(p, []) if e["file_path"] not in dropped] for p in parts}
+    for e in added:
+        changed[e["partition"]].append(e)
+    rel, records = mf.update_manifest(table.path, head.manifest if head else None, changed)
+    return table.log.commit(
+        rel,
+        operation,
+        {
+            **mf.summary_from_records(records),
+            **summary,
+            "schema_version": table.schema_def().version,
+        },
+        expected_parent=head.snapshot_id if head else None,
+    )
+
+
+def read_touched(table: TokenLakeTable, schema: TableSchema, paths: list[str]) -> DataFrame:
+    """Full-row read of exactly the listed table-relative data files
+    under ``schema`` (explicit read schema, ``_zkey`` dropped, evolved
+    columns' defaults applied) — the one file-list reader behind DML
+    rewrites, MERGE, the change feed and WAP audits."""
+    df = (
+        table.spark.read.option("basePath", table.data_dir)
+        .schema(schema.ddl(extra=((mf.ZKEY_COL, "long"),)))
+        .parquet(*[os.path.join(table.path, p) for p in paths])
+        .drop(mf.ZKEY_COL)
+    )
+    return schema.apply_defaults(df)

@@ -10,12 +10,14 @@ rows inside the one object holding them — generalized to arbitrary
 predicates and expressions.
 
 Shares DELETE's two-pass scale design (see delete.py's module
-docstring): pass 1 is a column-pruned find that never reads the token
-payload and shuffles one row per touched FILE; pass 2 reads only the
-touched files, applies the assignments under ``CASE WHEN pred``, and
-re-clusters. Untouched files — including in touched partitions — are
-carried into the new manifest by reference, so manifest I/O stays
-O(touched partitions).
+docstring) and its code: pass 1 is ``find_touched_files``, a
+column-pruned find that never reads the token payload and shuffles one
+row per touched FILE; pass 2 is ``rewrite_touched``, which reads only
+the touched files, applies the assignments under ``CASE WHEN pred``
+(the projection built here), re-clusters and commits through
+``table.commit_rewrite``. Untouched files — including in touched
+partitions — are carried into the new manifest by reference, so
+manifest I/O stays O(touched partitions).
 
 Invariants enforced here:
 
@@ -32,24 +34,20 @@ metrics)``).
 
 from __future__ import annotations
 
-import time
 import uuid
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hoopstat_haus_spark.lakehouse import manifest as mf
-from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
-from hoopstat_haus_spark.lakehouse.delete import (
-    commit_rewrite,
-    find_touched_files,
-    read_touched,
-)
+from hoopstat_haus_spark.lakehouse.delete import find_touched_files, rewrite_touched
 from hoopstat_haus_spark.lakehouse.health import records_failure
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
-from hoopstat_haus_spark.lakehouse.zorder import with_zkey
+
+# UPDATE commits inside delete.rewrite_touched; commit_rewrite stays a
+# module attribute here because maintbench/tracer.py wraps it by name
+# in both DML modules
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite  # noqa: F401
 
 _PROTECTED = ("doc_id", "source")
 
@@ -85,7 +83,6 @@ def _update_run(
     curve: str,
     metrics: JobMetrics,
 ) -> tuple[Snapshot | None, JobMetrics]:
-    spark = table.spark
     pred = F.expr(condition) if isinstance(condition, str) else condition
     schema = table.schema_def()
     names = schema.names()
@@ -108,75 +105,53 @@ def _update_run(
     head, matched_rows, cand, shard_entries = find_touched_files(table, pred, sources, metrics)
     if not cand:
         return None, metrics.finish()
-    cand_paths = [e["file_path"] for e in cand]
 
     # ---- pass 2: rewrite touched files with CASE WHEN assignments ------
-    ckpt = JobCheckpoint(table.path, job_id)
-    ckpt.intent("rewrite", cand_paths)
-    t0 = time.time()
-    target = read_touched(table, schema, cand_paths)
     hit = F.coalesce(pred, F.lit(False))
-    # Two-step projection so every RHS sees OLD values (standard UPDATE
-    # swap semantics). A single select that re-aliases `tokens` would let
-    # Spark 4's lateral column aliasing bind a later RHS's `tokens`
-    # reference to the NEW value; staging the new values under reserved
-    # `__new_*` names keeps all RHS references on the input attributes.
-    # Catalyst collapses the pair back into one Project.
-    staged = target.select(
-        "*",
-        *[F.when(hit, assigns[c]).otherwise(F.col(c)).alias(f"__new_{c}") for c in assigns],
-    )
-    # auto-recounted n_tok reads size(__new_tokens), NOT a copy of the
-    # tokens expression: the double reference to a non-cheap staged
-    # column blocks CollapseProject from re-inlining it (plan-verified),
-    # so the assignment expression evaluates ONCE per matched row —
-    # duplicating it would double the rewrite's dominant per-row cost.
-    def _out(c: str) -> Column:
-        if c == "n_tok" and auto_ntok:
-            return F.size(F.col("__new_tokens"))
-        return F.col(f"__new_{c}") if c in assigns else F.col(c)
 
-    updated = staged.select(*[_out(c).alias(c) for c in names])
-    # conform assignment results to the DECLARED column types (store-
-    # assignment cast, like Iceberg UPDATE): SQL `n_tok/2` is a double,
-    # and writing it as-is would commit parquet files the explicit-schema
-    # scan path can no longer read (INT32 expected, DOUBLE found)
-    updated = schema.conform(updated)
-    updated = with_zkey(updated, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
-    new_files, fresh = table._write_files(
-        updated, f"update-{job_id}", repartition_n=None, curve=curve
-    )
-    metrics.files_out = len(fresh)
-    metrics.bytes_out = sum(e["file_bytes"] for e in fresh)
-    ckpt.done(
-        "rewrite",
-        cand_paths,
-        new_files,
-        rows=metrics.rows,
-        tokens=metrics.tokens,
-        duration_s=time.time() - t0,
-        output_stats=fresh,
-    )
+    def assign(target: DataFrame) -> DataFrame:
+        # Two-step projection so every RHS sees OLD values (standard
+        # UPDATE swap semantics). A single select that re-aliases
+        # `tokens` would let Spark 4's lateral column aliasing bind a
+        # later RHS's `tokens` reference to the NEW value; staging the
+        # new values under reserved `__new_*` names keeps all RHS
+        # references on the input attributes. Catalyst collapses the
+        # pair back into one Project.
+        staged = target.select(
+            "*",
+            *[F.when(hit, assigns[c]).otherwise(F.col(c)).alias(f"__new_{c}") for c in assigns],
+        )
 
-    # ---- commit (shared with DELETE) ------------------------------------
-    snap = commit_rewrite(
+        # auto-recounted n_tok reads size(__new_tokens), NOT a copy of
+        # the tokens expression: the double reference to a non-cheap
+        # staged column blocks CollapseProject from re-inlining it
+        # (plan-verified), so the assignment expression evaluates ONCE
+        # per matched row — duplicating it would double the rewrite's
+        # dominant per-row cost.
+        def _out(c: str) -> Column:
+            if c == "n_tok" and auto_ntok:
+                return F.size(F.col("__new_tokens"))
+            return F.col(f"__new_{c}") if c in assigns else F.col(c)
+
+        # conform assignment results to the DECLARED column types
+        # (store-assignment cast, like Iceberg UPDATE): SQL `n_tok/2` is
+        # a double, and writing it as-is would commit parquet files the
+        # explicit-schema scan path can no longer read (INT32 expected,
+        # DOUBLE found)
+        return schema.conform(staged.select(*[_out(c).alias(c) for c in names]))
+
+    return rewrite_touched(
         table,
+        "update",
         head,
-        schema,
         cand,
         shard_entries,
-        fresh,
-        "update",
+        assign,
+        curve,
+        metrics,
         {
             "job_id": job_id,
             "matched_rows": matched_rows,
             "assigned_columns": sorted(set(assigns) | ({"n_tok"} if auto_ntok else set())),
-            "rewritten_files": len(cand_paths),
-            "new_files": len(fresh),
         },
     )
-    metrics.finish()
-    from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-    record_job_metrics(table.path, metrics, "update", snapshot_id=snap.snapshot_id)
-    return snap, metrics

@@ -25,9 +25,9 @@ GC (which treats LIVE staged records' files as reachable).
 
 Scale note: the staged record inlines one ~200-byte entry per data
 file — a staged batch is one ingest's output (10^2-10^3 files), never
-the whole table, so the record stays metadata-scale; publish touches
-only the partitions the batch landed in (same O(touched) shard writes
-as ``TokenLakeTable.append``).
+the whole table, so the record stays metadata-scale; publish commits
+through ``table.commit_rewrite`` exactly like ``TokenLakeTable.append``,
+so it writes shards only for the partitions the batch landed in.
 """
 
 from __future__ import annotations
@@ -36,16 +36,13 @@ import json
 import os
 import time
 import uuid
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 
-from hoopstat_haus_spark.lakehouse import manifest as mf
 from hoopstat_haus_spark.lakehouse.schema import read_schema
 from hoopstat_haus_spark.lakehouse.snapshots import ConcurrentCommitError, Snapshot
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite, read_touched
 
-if TYPE_CHECKING:  # pragma: no cover
-    from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
 
 def _ref_ok(ref: str) -> bool:
     return bool(ref) and all(c.isalnum() or c in "._-" for c in ref)
@@ -80,7 +77,7 @@ def _read_staged(table_path: str, ref: str) -> dict:
 
 
 def stage_append(
-    table: "TokenLakeTable",
+    table: TokenLakeTable,
     df: DataFrame,
     ref: str | None = None,
     repartition_n: int | None = None,
@@ -114,22 +111,16 @@ def stage_append(
     return rec
 
 
-def scan_staged(table: "TokenLakeTable", ref: str) -> DataFrame:
+def scan_staged(table: TokenLakeTable, ref: str) -> DataFrame:
     """The staged rows only (what an audit inspects) — explicit read
     schema + defaults, exactly like a committed scan; the audited view
     of the WHOLE table-after is ``table.scan().unionByName(this)``."""
     rec = _read_staged(table.path, ref)
     schema = read_schema(table.path, rec["schema_version"])
-    paths = [os.path.join(table.path, e["file_path"]) for e in rec["entries"]]
-    df = (
-        table.spark.read.option("basePath", table.data_dir)
-        .schema(schema.ddl(extra=((mf.ZKEY_COL, "long"),)))
-        .parquet(*paths)
-    )
-    return schema.apply_defaults(df).drop(mf.ZKEY_COL)
+    return read_touched(table, schema, [e["file_path"] for e in rec["entries"]])
 
 
-def _finish_published(table: "TokenLakeTable", ref: str, snap: Snapshot) -> Snapshot:
+def _finish_published(table: TokenLakeTable, ref: str, snap: Snapshot) -> Snapshot:
     """Complete a publish someone already committed: drop the staged
     record (the committing publisher may have beaten us to that too)."""
     try:
@@ -139,7 +130,7 @@ def _finish_published(table: "TokenLakeTable", ref: str, snap: Snapshot) -> Snap
     return snap
 
 
-def publish_staged(table: "TokenLakeTable", ref: str, max_retries: int = 5) -> Snapshot:
+def publish_staged(table: TokenLakeTable, ref: str, max_retries: int = 5) -> Snapshot:
     """Expose a staged batch: one append commit against the CURRENT
     head (not the stage-time head — appends commute with every commit
     kind, so the batch rebases onto whatever maintenance ran since).
@@ -169,9 +160,6 @@ def publish_staged(table: "TokenLakeTable", ref: str, max_retries: int = 5) -> S
             if snap.summary.get("wap_ref") == ref:
                 return _finish_published(table, ref, snap)
         raise
-    by_part: dict[str, list[dict]] = {}
-    for e in rec["entries"]:
-        by_part.setdefault(e["partition"], []).append(e)
     last_err: ConcurrentCommitError | None = None
     for _ in range(max_retries):
         head = table.log.current()
@@ -183,17 +171,14 @@ def publish_staged(table: "TokenLakeTable", ref: str, max_retries: int = 5) -> S
             checked = max(checked, sid)
             if snap.summary.get("wap_ref") == ref:
                 return _finish_published(table, ref, snap)
-        base = {r["partition"]: r for r in mf.read_manifest_list(table.path, head.manifest)}
-        changed = {
-            part: (mf.read_shard(table.path, base[part]) if part in base else []) + entries
-            for part, entries in by_part.items()
-        }
-        rel, records = mf.update_manifest(table.path, head.manifest, changed)
-        summary = table._stamp(mf.summary_from_records(records))
-        summary.update({"wap_ref": ref, "staged_ms": rec["created_ms"]})
         try:
-            snap = table.log.commit(
-                rel, "append", summary, expected_parent=head.snapshot_id
+            snap = commit_rewrite(
+                table,
+                head,
+                "append",
+                [],
+                rec["entries"],
+                {"wap_ref": ref, "staged_ms": rec["created_ms"]},
             )
         except ConcurrentCommitError as exc:
             last_err = exc  # head moved: re-plan against the new head
@@ -202,7 +187,7 @@ def publish_staged(table: "TokenLakeTable", ref: str, max_retries: int = 5) -> S
     raise last_err if last_err is not None else RuntimeError("publish retries exhausted")
 
 
-def discard_staged(table: "TokenLakeTable", ref: str) -> dict:
+def discard_staged(table: TokenLakeTable, ref: str) -> dict:
     """Drop a staged batch that failed its audit. Metadata-only: the
     staged data files become orphans and normal GC (min-age guarded)
     removes them."""

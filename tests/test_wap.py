@@ -138,6 +138,21 @@ def test_publish_after_schema_evolution(table, spark):
     assert {r["lang"] for r in out.select("lang").distinct().collect()} == {"und"}
 
 
+def test_republish_after_schema_evolve_returns_the_publish(table, spark):
+    """The schema snapshot carries only table aggregates: copying the
+    head's summary would stamp the publish's ``wap_ref`` on it, and an
+    exactly-once re-publish (newest-first stamp scan) would return the
+    schema snapshot instead of the append it made."""
+    stage_append(table, batch(spark, 60, "wapr"), ref="p")
+    pub = publish_staged(table, "p")
+    evo = table.evolve_schema([{"name": "lang", "type": "string", "default": "und"}])
+    assert "wap_ref" not in evo.summary and "job_id" not in evo.summary
+    aggs = ("files", "rows", "tokens", "bytes", "partitions")
+    assert {k: evo.summary[k] for k in aggs} == {k: pub.summary[k] for k in aggs}
+    assert evo.summary["schema_version"] == pub.summary["schema_version"] + 1
+    assert publish_staged(table, "p").snapshot_id == pub.snapshot_id
+
+
 def test_concurrent_publish_of_same_ref_appends_once(table, spark, monkeypatch):
     """Two publishers of one ref: the CAS loser must re-check the
     wap_ref stamp on retry instead of rebasing the batch onto a head
