@@ -17,7 +17,7 @@ maintenance over tables of pre-tokenized training sequences
   ``libs/hoopstat-s3/hoopstat_s3/silver_s3_manager.py:314-376``)
 - MERGE INTO as partition-pruned copy-on-write (reference quarantine replay:
   ``apps/bronze-ingestion/app/replay.py``)
-- per-partition lineage checkpoints + resumable runs (reference idempotent
+- per-partition lineage checkpoints + resumable compaction (reference idempotent
   re-run orchestration: ``apps/gold-analytics/app/processors.py:1022-1180``)
 
 Plus the reference's analytic operator surface (aggregations, windows,

@@ -1,10 +1,10 @@
-"""Per-partition lineage checkpoints → resumable maintenance jobs.
+"""Per-partition lineage checkpoints → resumable compaction jobs.
 
 The reference re-runs idempotently with per-date success maps and
 exists-checks (``apps/gold-analytics/app/processors.py:1022-1180``,
 ``silver_s3_manager.py:255-272``) and tracks replay status through a
 state machine (``apps/bronze-ingestion/app/replay.py:378-424``). The
-engine's equivalent: each maintenance job gets
+engine's equivalent: each compaction job gets
 ``_checkpoints/<job_id>/<unit>.json`` records written in two phases —
 
     intent:  {unit, state=running, input_files}
@@ -19,12 +19,22 @@ planned inputs, and re-runs every other unit from scratch after
 discarding its orphaned staging files. Because the snapshot commit
 happens once, at the end, a crash at ANY point leaves readers on the
 old snapshot.
+
+Compaction is the only multi-unit job, so it is the only writer of
+checkpoints: merge, delete and update are one rewrite each and keep
+their lineage in the snapshot summary and the ``_metrics`` record. A
+checkpoint lives exactly as long as there is something to resume —
+:meth:`JobCheckpoint.clear` removes it whenever the job returns
+normally (committed or nothing to do). Until then GC treats its
+``output_files`` as roots; a job that raised keeps it, and a crash
+between commit and clear is cleared by the next run with that job id.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -33,20 +43,13 @@ class JobCheckpoint:
     def __init__(self, table_path: str, job_id: str):
         self.job_id = job_id
         self.dir = os.path.join(table_path, "_checkpoints", job_id)
-        os.makedirs(self.dir, exist_ok=True)
 
     def _path(self, unit: str) -> str:
         safe = unit.replace("/", "_").replace("=", "-")
         return os.path.join(self.dir, f"{safe}.json")
 
-    def state(self, unit: str) -> dict | None:
-        p = self._path(unit)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
     def _write(self, unit: str, record: dict) -> None:
+        os.makedirs(self.dir, exist_ok=True)
         p = self._path(unit)
         tmp = p + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as f:
@@ -102,3 +105,9 @@ class JobCheckpoint:
             if rec.get("state") == "done":
                 out[rec["unit"]] = rec
         return out
+
+    def clear(self) -> None:
+        """Drop the job's checkpoint: nothing is left to resume, and GC
+        stops protecting its outputs (committed ones stay reachable
+        through the snapshot that holds them)."""
+        shutil.rmtree(self.dir, ignore_errors=True)

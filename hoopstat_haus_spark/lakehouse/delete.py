@@ -24,12 +24,12 @@ Scale design (two passes, both bounded by the predicate):
    so manifest I/O is O(touched partitions).
 
 A delete that matches nothing commits nothing (returns ``(None,
-metrics)``): readers keep the current snapshot, no empty rewrite churn.
+metrics)``): readers keep the current snapshot, no empty rewrite churn,
+and the run's ``_metrics`` record still reads success.
 """
 
 from __future__ import annotations
 
-import time
 import uuid
 from typing import Callable
 
@@ -37,8 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
-from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
-from hoopstat_haus_spark.lakehouse.health import records_failure
+from hoopstat_haus_spark.lakehouse.health import job_record
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite, read_touched
@@ -61,8 +60,7 @@ def delete_where(
     survivors are re-keyed with (same contract as ``merge_into``).
     """
     job_id = job_id or f"delete-{uuid.uuid4().hex[:10]}"
-    metrics = JobMetrics(job=job_id)
-    with records_failure(table.path, metrics, "delete"):
+    with job_record(table.path, "delete", job_id) as metrics:
         return _delete_run(table, condition, job_id, sources, curve, metrics)
 
 
@@ -146,30 +144,19 @@ def rewrite_touched(
 ) -> tuple[Snapshot, JobMetrics]:
     """Pass 2 + commit (shared by DELETE/UPDATE): read exactly the
     touched files, ``transform`` their rows (DELETE filters, UPDATE
-    projects), re-cluster, write, checkpoint, then commit the swap of
-    ``cand`` for the fresh files and record the job. ``summary`` holds
-    the op's own keys; the file counts are appended here. ``metrics.job``
-    is the job id (checkpoint dir and output-file prefix)."""
+    projects), re-cluster, write, then commit the swap of ``cand`` for
+    the fresh files and set ``metrics.snapshot_id`` (the caller's
+    ``job_record`` writes the record). ``summary`` holds the op's own
+    keys; the file counts are appended here. ``metrics.job`` is the job
+    id (output-file prefix)."""
     cand_paths = [e["file_path"] for e in cand]
-    ckpt = JobCheckpoint(table.path, metrics.job)
-    ckpt.intent("rewrite", cand_paths)
-    t0 = time.time()
     out = transform(read_touched(table, table.schema_def(), cand_paths))
     out = with_zkey(out, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
-    new_files, fresh = table._write_files(
+    fresh = table._write_files(
         out, f"{op}-{metrics.job}", repartition_n=None, curve=curve
     )
     metrics.files_out = len(fresh)
     metrics.bytes_out = sum(e["file_bytes"] for e in fresh)
-    ckpt.done(
-        "rewrite",
-        cand_paths,
-        new_files,
-        rows=metrics.rows,
-        tokens=metrics.tokens,
-        duration_s=time.time() - t0,
-        output_stats=fresh,
-    )
     snap = commit_rewrite(
         table,
         head,
@@ -179,10 +166,7 @@ def rewrite_touched(
         {**summary, "rewritten_files": len(cand_paths), "new_files": len(fresh)},
         shards=shard_entries,
     )
-    metrics.finish()
-    from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-    record_job_metrics(table.path, metrics, op, snapshot_id=snap.snapshot_id)
+    metrics.snapshot_id = snap.snapshot_id
     return snap, metrics
 
 
@@ -197,7 +181,7 @@ def _delete_run(
     pred = F.expr(condition) if isinstance(condition, str) else condition
     head, matched_rows, cand, shard_entries = find_touched_files(table, pred, sources, metrics)
     if not cand:
-        return None, metrics.finish()
+        return None, metrics
     return rewrite_touched(
         table,
         "delete",

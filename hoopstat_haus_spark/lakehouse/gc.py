@@ -12,9 +12,12 @@ Concurrent-writer safety (Iceberg's orphan-file rules):
   even if unreachable — it may belong to a job that hasn't committed its
   snapshot yet (default 1 h; pass 0 only when no other writer can run).
 - **checkpoint protection**: files recorded as ``output_files`` in ANY
-  ``_checkpoints`` record are kept — a crashed-but-resumable job's
-  staged-into-place outputs must survive GC or the resume fails on
-  missing files.
+  ``_checkpoints`` record are kept — a crashed-but-resumable
+  compaction's staged-into-place outputs must survive GC or the resume
+  fails on missing files. Only uncommitted compactions hold
+  checkpoints (a compaction that returns clears its own; merge, delete
+  and update write none), so committed outputs are protected only by
+  reachability and become garbage once their snapshots expire.
 - **scoped staging sweep**: only ``.staging/<job_id>`` dirs older than
   the min age AND not owned by a checkpointed job are removed — never
   the whole tree (which would destroy a live job's in-flight output).

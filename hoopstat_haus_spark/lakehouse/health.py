@@ -5,9 +5,11 @@ daily summaries rolled into a validated health report with
 OPERATIONAL / DEGRADED / OUTAGE statuses (most-recent-run semantics,
 worst-stage-wins overall, ``_derive_stage_statuses`` at :190-257).
 
-Engine version: every maintenance job (compact / merge) appends a JSON
-metrics record to ``_metrics/`` at commit time; :func:`health_report`
-rolls the records up per operation with the reference's status rules:
+Engine version: every compact / merge / delete / update run enters
+:func:`job_record`, which appends exactly one JSON metrics record to
+``_metrics/`` when the run ends — success (a no-op run included, with
+``snapshot_id`` None) or failure. :func:`health_report` rolls the
+records up per operation with the reference's status rules:
 
 - OPERATIONAL — the most recent run of the operation succeeded
 - DEGRADED   — the most recent run failed, but some run in the lookback
@@ -46,7 +48,6 @@ def record_job_metrics(
     metrics: JobMetrics,
     operation: str,
     status: str = "success",
-    snapshot_id: int | None = None,
     error: str | None = None,
 ) -> str:
     """Append one job record; returns its path. Immutable, uniquely named
@@ -57,7 +58,7 @@ def record_job_metrics(
         **metrics.to_dict(),
         "operation": operation,
         "status": status,
-        "snapshot_id": snapshot_id,
+        "snapshot_id": metrics.snapshot_id,
         "error": error,
         "recorded_ms": int(time.time() * 1000),
         # ns tiebreaker: two records in the same millisecond (e.g. a
@@ -72,17 +73,22 @@ def record_job_metrics(
 
 
 @contextmanager
-def records_failure(table_path: str, metrics: JobMetrics, operation: str):
-    """Record a ``status='failed'`` job record for ``operation`` when the
-    body raises, then re-raise. Without failure records DEGRADED/OUTAGE
-    are unreachable: a stage crashing for days would still read
-    OPERATIONAL from its last old success. The record's ``error`` is the
-    exception's class and message (``repr`` of a Spark
-    ``AnalysisException`` carries no message). An ``OSError`` while
-    recording (full or read-only disk) is swallowed so it cannot mask
-    the root cause."""
+def job_record(table_path: str, operation: str, job_id: str):
+    """One maintenance run's lifecycle record: yields a fresh
+    ``JobMetrics(job=job_id)`` and writes exactly one ``_metrics``
+    record when the body ends. A body that commits sets
+    ``metrics.snapshot_id``; one that returns without committing (a
+    no-op) still records ``status='success'``, so a healthy stage never
+    goes stale. A body that raises records ``status='failed'`` and
+    re-raises: without failure records DEGRADED/OUTAGE are unreachable,
+    since a stage crashing for days would still read OPERATIONAL from
+    its last old success. The failure's ``error`` is the exception's
+    class and message (``repr`` of a Spark ``AnalysisException``
+    carries no message); an ``OSError`` while recording it (full or
+    read-only disk) is swallowed so it cannot mask the root cause."""
+    metrics = JobMetrics(job=job_id)
     try:
-        yield
+        yield metrics
     except Exception as exc:
         metrics.finish()
         error = f"{type(exc).__name__}: {exc}"[:500]
@@ -91,6 +97,8 @@ def records_failure(table_path: str, metrics: JobMetrics, operation: str):
         except OSError:
             pass
         raise
+    metrics.finish()
+    record_job_metrics(table_path, metrics, operation)
 
 
 def read_job_records(table_path: str) -> list[dict]:
@@ -143,6 +151,10 @@ def health_report(
     for op, recs in sorted(by_op.items()):
         recs = recs[-lookback_jobs:]
         ok = [r for r in recs if r.get("status") == "success"]
+        # no-op runs read no bytes; averaging them into the throughput
+        # would drag a well-maintained table's rate toward zero
+        # (bytes_in, not the rounded gb_in, so tiny runs still count)
+        moved = [r for r in ok if r.get("bytes_in", 0) > 0]
         status = _stage_status(recs)
         if (
             max_staleness_ms is not None
@@ -158,9 +170,9 @@ def health_report(
             "total_gb_in": round(sum(r.get("gb_in", 0.0) for r in ok), 4),
             "total_rows": int(sum(r.get("rows", 0) for r in ok)),
             "mean_gb_per_hour": round(
-                sum(r.get("gb_per_hour", 0.0) for r in ok) / len(ok), 2
+                sum(r.get("gb_per_hour", 0.0) for r in moved) / len(moved), 2
             )
-            if ok
+            if moved
             else 0.0,
         }
 

@@ -21,15 +21,13 @@ carried into the new manifest by reference.
 
 from __future__ import annotations
 
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
-from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
-from hoopstat_haus_spark.lakehouse.health import records_failure
+from hoopstat_haus_spark.lakehouse.health import job_record
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite, read_touched
@@ -107,8 +105,7 @@ def merge_into(
             f"summary_extra keys would clobber commit aggregates: {sorted(clash)}"
         )
     job_id = job_id or f"merge-{uuid.uuid4().hex[:10]}"
-    metrics = JobMetrics(job=job_id)
-    with records_failure(table.path, metrics, "merge"):
+    with job_record(table.path, "merge", job_id) as metrics:
         return _merge_run(table, updates, job_id, curve, metrics, summary_extra)
 
 
@@ -120,8 +117,6 @@ def _merge_run(
     metrics: JobMetrics,
     summary_extra: dict | None = None,
 ) -> tuple[Snapshot, JobMetrics]:
-    spark = table.spark
-    ckpt = JobCheckpoint(table.path, job_id)
     head = table.log.current()
     # manifest LIST only — per-partition shards are read later, and only
     # for the partitions the update feed actually touches
@@ -151,7 +146,7 @@ def _merge_run(
     updates = updates.select(*proj, F.col(OP_COL)).persist()
     try:
         return _merge_apply(
-            table, updates, job_id, curve, metrics, ckpt, head, records, schema, value_cols,
+            table, updates, job_id, curve, metrics, head, records, schema, value_cols,
             summary_extra,
         )
     finally:
@@ -159,7 +154,7 @@ def _merge_run(
 
 
 def _merge_apply(
-    table, updates, job_id, curve, metrics, ckpt, head, records, schema, value_cols,
+    table, updates, job_id, curve, metrics, head, records, schema, value_cols,
     summary_extra=None,
 ):
     spark = table.spark
@@ -210,10 +205,7 @@ def _merge_apply(
     metrics.partitions = len({e["partition"] for e in cand})
 
     u = updates.alias("u")
-    new_files: list[str] = []
-    rw_stats: list[dict] = []
-    ckpt.intent("rewrite", cand_paths)
-    t0 = time.time()
+    fresh: list[dict] = []
     if cand_paths:
         t = read_touched(table, schema, cand_paths).alias("t")
         joined = t.join(F.broadcast(u), ["doc_id", "source"], "left_outer")
@@ -230,10 +222,9 @@ def _merge_apply(
             F.col("source"),
         )
         survivors = with_zkey(survivors, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
-        rw_files, rw_stats = table._write_files(
+        fresh = table._write_files(
             survivors, f"merge-{job_id}", repartition_n=None, curve=curve
         )
-        new_files += rw_files
 
         matched_keys = (
             t.join(F.broadcast(u.select("doc_id", "source")), ["doc_id", "source"], "left_semi")
@@ -270,30 +261,18 @@ def _merge_apply(
             salt = F.pmod(F.xxhash64("doc_id"), F.lit(int(n_ins_parts)))
             sized = inserts.repartition(int(n_ins_parts), "source", salt)
             sized = with_zkey(sized, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
-            ins_files, ins_stats = table._write_files(
+            fresh += table._write_files(
                 sized, f"insert-{job_id}", repartition_n=None, curve=curve
             )
-            new_files += ins_files
-            rw_stats += ins_stats
     finally:
         inserts.unpersist()
 
     # stats came back from the write jobs themselves (fused writer) —
     # no re-read of the new files
-    fresh = rw_stats
     metrics.files_out = len(fresh)
     metrics.bytes_out = sum(e["file_bytes"] for e in fresh)
     metrics.rows = sum(e["row_count"] for e in fresh)
     metrics.tokens = sum(e["token_count"] for e in fresh)
-    ckpt.done(
-        "rewrite",
-        cand_paths,
-        new_files,
-        rows=metrics.rows,
-        tokens=metrics.tokens,
-        duration_s=time.time() - t0,
-        output_stats=fresh,
-    )
     # new shards only for partitions that actually changed (a rewritten
     # file or a fresh output); everything else rides by reference.
     # summary_extra overlap with the commit's own keys is rejected at
@@ -314,8 +293,5 @@ def _merge_apply(
         # partition is in shards, so the commit re-reads no manifest
         shards={p: [] for p in feed_parts} | shard_entries,
     )
-    metrics.finish()
-    from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-    record_job_metrics(table.path, metrics, "merge", snapshot_id=snap.snapshot_id)
+    metrics.snapshot_id = snap.snapshot_id
     return snap, metrics

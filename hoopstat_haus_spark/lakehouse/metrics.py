@@ -26,6 +26,7 @@ class JobMetrics:
     files_out: int = 0
     partitions: int = 0
     duration_s: float = 0.0
+    snapshot_id: int | None = None  # the run's commit; None for a no-op
 
     def finish(self) -> "JobMetrics":
         self.duration_s = time.time() - self.started

@@ -6,7 +6,7 @@ Layout (SURVEY.md §7.2):
     <path>/_manifests/list-*.json             manifest list (1 record/partition)
     <path>/_manifests/shard-*.parquet         per-partition file-stats shards
     <path>/_snapshots/v<N>.json + current     snapshot log (snapshots.py)
-    <path>/_checkpoints/<job_id>/*.json       lineage (checkpoint.py)
+    <path>/_checkpoints/<job_id>/*.json       in-flight compaction lineage (checkpoint.py)
 
 Readers always resolve data files THROUGH a snapshot's manifest — never
 by listing directories — which is what makes commits atomic and scans
@@ -52,7 +52,7 @@ from hoopstat_haus_spark.lakehouse.compaction import (
     plan_compaction,
     plan_unit_bounds,
 )
-from hoopstat_haus_spark.lakehouse.health import records_failure
+from hoopstat_haus_spark.lakehouse.health import job_record
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.schema import TableSchema, evolved, read_schema, write_schema
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot, SnapshotLog
@@ -116,12 +116,12 @@ class TokenLakeTable:
 
     def _write_files(
         self, df: DataFrame, prefix: str, repartition_n: int | None, curve: str = "zorder"
-    ) -> tuple[list[str], list[dict]]:
+    ) -> list[dict]:
         """Write ``df`` through the one data writer
         (``manifest.write_data_files``): ONE job writes the
         source-partitioned files AND computes their manifest stats, then
         the files are renamed from staging into the table's data dirs.
-        Returns (new table-relative paths, their manifest stats entries).
+        Returns the new files' manifest entries.
         ``curve`` names the curve a stored ``_zkey`` was computed with
         (ignored for unclustered input, which sketches the derived
         Morton key exactly like ``compute_file_stats``)."""
@@ -131,9 +131,10 @@ class TokenLakeTable:
             out = out.repartition(repartition_n)
         keep = set(self.schema_def().names()) | {mf.ZKEY_COL}
         out = out.select(*[c for c in out.columns if c in keep])
-        return mf.write_data_files(
+        _paths, entries = mf.write_data_files(
             out, self.path, os.path.join(self.path, ".staging", job), job, curve=curve
         )
+        return entries
 
     @classmethod
     def create(
@@ -150,7 +151,7 @@ class TokenLakeTable:
         if t.log.current_id() is not None:
             raise ValueError(f"table already exists at {path}")
         os.makedirs(t.data_dir, exist_ok=True)
-        _new_files, entries = t._write_files(df, "append", repartition_n)
+        entries = t._write_files(df, "append", repartition_n)
         commit_rewrite(t, None, "append", [], entries, {})
         return t
 
@@ -159,7 +160,7 @@ class TokenLakeTable:
         the partitions the batch lands in get a new shard; the rest of
         the table is carried by reference in the new manifest list."""
         head = self.log.current()
-        _new_files, fresh = self._write_files(self.schema_def().conform(df), "append", repartition_n)
+        fresh = self._write_files(self.schema_def().conform(df), "append", repartition_n)
         return commit_rewrite(self, head, "append", [], fresh, {})
 
     # ------------------------------------------------------------- read
@@ -365,7 +366,9 @@ class TokenLakeTable:
         Per-partition units run through the lineage checkpoint: a re-run
         with the same job_id skips finished partitions (their outputs are
         already staged into the data dirs) and commits ONE snapshot at
-        the end. Crash anywhere → readers still see the old snapshot.
+        the end. Crash anywhere → readers still see the old snapshot and
+        the checkpoint stays for the resume; a run that returns
+        (committed, or nothing to do) removes it.
 
         Units are submitted concurrently (``max_concurrent_units``
         driver threads): Spark's scheduler interleaves their stages, so
@@ -380,14 +383,13 @@ class TokenLakeTable:
             max_concurrent_units = max(4, self.spark.sparkContext.defaultParallelism // 2)
         policy = policy or CompactionPolicy()
         job_id = job_id or f"compact-{uuid.uuid4().hex[:10]}"
-        metrics = JobMetrics(job=job_id)
-        # a crash stays resumable (checkpoint intact); only the metrics
-        # record marks the failure
-        with records_failure(self.path, metrics, "compact"):
-            return self._compact_run(
+        with job_record(self.path, "compact", job_id) as metrics:
+            out = self._compact_run(
                 policy, curve, strategy, job_id, max_concurrent_units, metrics, sources,
                 curve_by_source,
             )
+            JobCheckpoint(self.path, job_id).clear()
+            return out
 
     def _compact_run(
         self,
@@ -424,12 +426,11 @@ class TokenLakeTable:
         entries = [e for es in shard_entries.values() for e in es]
         plans = plan_compaction(entries, policy)
         if not plans:
-            return None, metrics.finish()
+            return None, metrics
 
         ckpt = JobCheckpoint(self.path, job_id)
         done = ckpt.completed_units()
         removed: list[dict] = []
-        new_files: list[str] = []
         pending: list[tuple[str, list[dict]]] = []
         fresh: list[dict] = []  # per-file stats, computed inside units
         for part, groups in plans.items():
@@ -446,7 +447,6 @@ class TokenLakeTable:
             # rows it removed. A re-run overwrites the stale outputs under
             # the same deterministic names.
             if part in done and set(done[part]["input_files"]) == {f["file_path"] for f in inputs}:
-                new_files.extend(done[part]["output_files"])
                 fresh.extend(done[part]["output_stats"])
             else:
                 pending.append((part, inputs))
@@ -466,7 +466,7 @@ class TokenLakeTable:
                 curve_by_source=cb,
             )
 
-        def _run_unit(part: str, inputs: list[dict]) -> tuple[list[str], list[dict]]:
+        def _run_unit(part: str, inputs: list[dict]) -> list[dict]:
             in_paths = [f["file_path"] for f in inputs]
             t0 = time.time()
             ckpt.intent(part, in_paths)
@@ -497,7 +497,7 @@ class TokenLakeTable:
                 duration_s=time.time() - t0,
                 output_stats=stats,
             )
-            return out, stats
+            return stats
 
         if pending:
             from concurrent.futures import ThreadPoolExecutor
@@ -534,8 +534,7 @@ class TokenLakeTable:
             self.spark.conf.set(aqe_key, "false")
             try:
                 with ThreadPoolExecutor(max_workers=workers) as pool:
-                    for out, stats in pool.map(lambda pu: _run_unit(*pu), pending):
-                        new_files.extend(out)
+                    for stats in pool.map(lambda pu: _run_unit(*pu), pending):
                         fresh.extend(stats)
             finally:
                 self.spark.conf.set(conf_key, prev)
@@ -559,10 +558,7 @@ class TokenLakeTable:
             },
             shards=shard_entries,
         )
-        metrics.finish()
-        from hoopstat_haus_spark.lakehouse.health import record_job_metrics
-
-        record_job_metrics(self.path, metrics, "compact", snapshot_id=snap.snapshot_id)
+        metrics.snapshot_id = snap.snapshot_id
         return snap, metrics
 
     # ------------------------------------------- maintenance: row delete

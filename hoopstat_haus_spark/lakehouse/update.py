@@ -29,7 +29,7 @@ Invariants enforced here:
   ingest; UPDATE must not create them post-ingest).
 
 An update that matches nothing commits nothing (returns ``(None,
-metrics)``).
+metrics)``); its ``_metrics`` record still reads success.
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse.delete import find_touched_files, rewrite_touched
-from hoopstat_haus_spark.lakehouse.health import records_failure
+from hoopstat_haus_spark.lakehouse.health import job_record
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 
@@ -69,8 +69,7 @@ def update_where(
     predicate matched nothing.
     """
     job_id = job_id or f"update-{uuid.uuid4().hex[:10]}"
-    metrics = JobMetrics(job=job_id)
-    with records_failure(table.path, metrics, "update"):
+    with job_record(table.path, "update", job_id) as metrics:
         return _update_run(table, condition, assignments, job_id, sources, curve, metrics)
 
 
@@ -104,7 +103,7 @@ def _update_run(
     # ---- pass 1: find touched files (shared with DELETE) ---------------
     head, matched_rows, cand, shard_entries = find_touched_files(table, pred, sources, metrics)
     if not cand:
-        return None, metrics.finish()
+        return None, metrics
 
     # ---- pass 2: rewrite touched files with CASE WHEN assignments ------
     hit = F.coalesce(pred, F.lit(False))

@@ -90,7 +90,7 @@ def stage_append(
     if head is None:
         raise ValueError("stage_append needs an existing table (use create)")
     schema = table.schema_def()
-    new_files, entries = table._write_files(schema.conform(df), f"wap-{ref}", repartition_n)
+    entries = table._write_files(schema.conform(df), f"wap-{ref}", repartition_n)
     rec = {
         "ref": ref,
         "base_id": head.snapshot_id,

@@ -49,9 +49,12 @@ Subcommands:
               --content-index NAME` without per-batch payload re-hash)
 
 On a cluster the session comes from spark-submit's conf; local runs fall
-back to the tuned local factory. Every job prints one JSON metrics line
-(the reference's performance-log contract, ``apps/gold-analytics/app/
-performance.py``)."""
+back to the tuned local factory. Every job prints one JSON line to
+stdout: the per-job record (the reference's performance-log contract,
+``apps/gold-analytics/app/performance.py``). compact, merge, delete and
+update also append their ``_metrics`` record (success, no-op or failure)
+keyed by ``--job-id``, which is stamped into the snapshot summary too;
+``health`` rolls those records up."""
 
 from __future__ import annotations
 
@@ -264,32 +267,7 @@ def main(argv: list[str] | None = None) -> int:
     ai.add_argument("--job-id", default=None)
 
     args = ap.parse_args(argv)
-    spark = _spark()
-
-    import logging
-
-    from hoopstat_haus_spark.observability import correlation_scope, performance_context
-
-    # the library logger ships no handler (stdlib convention); the CLI is
-    # the app, so give perf records a stderr sink here — without this,
-    # success records vanish (lastResort only emits WARNING+) and the
-    # observability layer logs nothing in real spark-submit runs
-    ob_logger = logging.getLogger("hoopstat_haus_spark")
-    if not ob_logger.handlers and not logging.getLogger().handlers:
-        handler = logging.StreamHandler(sys.stderr)
-        handler.setFormatter(logging.Formatter("%(message)s"))
-        ob_logger.addHandler(handler)
-        ob_logger.setLevel(logging.INFO)
-
-    # One perf record per job run (reference: performance.py decorators
-    # around Lambda handlers); the correlation id ties the record to the
-    # job-id so resumed runs share a trace key.
-    with correlation_scope(getattr(args, "job_id", None)):
-        with performance_context(f"maintenance:{args.cmd}") as perf:
-            out = _dispatch(args, spark)
-            if isinstance(out, dict) and isinstance(out.get("rows"), int):
-                perf.records = out["rows"]
-    print(json.dumps(out))
+    print(json.dumps(_dispatch(args, _spark())))
     return 0
 
 

@@ -99,6 +99,23 @@ def test_crashed_op_records_failed_and_degrades(spark, tmp_table_dir, op):
     assert health_report(t.path)["stages"][op]["status"] == DEGRADED
 
 
+def test_noop_compact_records_success_without_snapshot(spark, tmp_table_dir):
+    """A run with nothing to do still writes a success record (else a
+    nightly compaction of a compacted table goes stale), and its zero
+    bytes do not drag the stage's mean throughput to 0."""
+    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 2000), repartition_n=2)
+    assert t.compact(POLICY)[0] is not None
+    first = health_report(t.path)["stages"]["compact"]["mean_gb_per_hour"]
+    snap, _metrics = t.compact(POLICY)
+    assert snap is None
+    recs = [r for r in read_job_records(t.path) if r["operation"] == "compact"]
+    assert [r["status"] for r in recs] == ["success", "success"]
+    assert recs[-1]["snapshot_id"] is None and recs[0]["snapshot_id"] is not None
+    stage = health_report(t.path)["stages"]["compact"]
+    assert stage["successes"] == 2
+    assert stage["mean_gb_per_hour"] == first
+
+
 def test_stale_success_degrades_with_freshness_rule(spark, tmp_table_dir):
     t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 2000), repartition_n=2)
     t.compact(POLICY)

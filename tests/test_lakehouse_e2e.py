@@ -238,3 +238,41 @@ def test_checkpointed_stats_match_recomputation(spark, tmp_path_factory):
     assert len(fresh) == len(compacted)
     for e in fresh:
         assert entries[e["file_path"]] == e
+
+
+def _merge_new_docs(t, spark):
+    for i in range(3):
+        batch = synthetic(spark, 200).withColumn("doc_id", F.concat(F.lit(f"b{i}-"), "doc_id"))
+        merge_into(t, batch, job_id=f"batch-{i}")
+
+
+def _delete_compacted_docs(t, spark):
+    live = {e["file_path"] for e in t.manifest_entries()}
+    assert all("/compact-first-" in p for p in live), "delete must touch compaction outputs"
+    victims = [r["doc_id"] for r in t.scan().select("doc_id").orderBy("doc_id").limit(5).collect()]
+    snap, _metrics = t.delete_where(F.col("doc_id").isin(victims), job_id="gdpr")
+    assert snap is not None
+
+
+@pytest.mark.parametrize("between", [_delete_compacted_docs, _merge_new_docs], ids=["delete", "merge"])
+def test_gc_after_expire_leaves_only_live_files(spark, tmp_table_dir, between):
+    """Committed jobs keep no checkpoint, so once their snapshots expire
+    GC reclaims every output they superseded: the data files left on
+    disk are exactly the live manifest's."""
+    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 4000), repartition_n=8)
+    assert t.compact(POLICY, job_id="first")[0] is not None
+    between(t, spark)
+    t.compact(POLICY, job_id="second")
+    rows = sig_rows(t)
+
+    t.expire_snapshots(keep_last=1)
+    t.collect_garbage(min_age_s=0)
+    on_disk = {
+        os.path.relpath(os.path.join(d, n), t.path)
+        for d, _dirs, files in os.walk(os.path.join(t.path, "data"))
+        for n in files
+    }
+    assert on_disk == {e["file_path"] for e in t.manifest_entries()}
+    ckpt_root = os.path.join(t.path, "_checkpoints")
+    assert not os.path.isdir(ckpt_root) or os.listdir(ckpt_root) == []
+    assert sig_rows(t) == rows
