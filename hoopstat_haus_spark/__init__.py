@@ -6,7 +6,7 @@ idiomatic Spark DataFrame engine, centered on Iceberg-style table
 maintenance over tables of pre-tokenized training sequences
 ``(doc_id: string, tokens: array<int32>, n_tok: int32, source: string)``:
 
-- small-file compaction via bin-packing (reference planner:
+- small-file compaction into target-size files (reference planner:
   ``libs/hoopstat-data/hoopstat_data/partitioning.py:90-163``)
 - Z-order / Hilbert multi-dimensional clustering (reference rejected hash
   partitioning for lacking query benefits, ``meta/adr/ADR-020``; we give it

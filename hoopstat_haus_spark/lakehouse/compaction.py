@@ -1,39 +1,45 @@
-"""Small-file compaction: bin-packing planner + Z-order rewrite executor.
+"""Small-file compaction: candidate planner, range bounds, Z-order rewrite.
 
 The reference ships a compaction *planner* only — file-size policy
 MIN 5 / TARGET 25 / MAX 50 MB, a parquet size estimator, and a split
 recommendation (``libs/hoopstat-data/hoopstat_data/partitioning.py:
 90-163``) — and defers execution to S3 Tables ("3× faster queries via
 automatic compaction", ``meta/adr/ADR-026:74-75``). This module is the
-execution engine it never had, scaled for a 1000-executor cluster:
+execution engine it never had, scaled for a 1000-executor cluster. One
+path runs from plan to write:
 
 - **Planner** (:func:`plan_compaction`): pure driver-side function over
-  manifest rows (metadata, not data). First-fit-decreasing bin packing of
-  undersized files into target-size groups; oversized files become split
-  groups. Unit-testable with exact-value asserts, like the reference's
+  manifest rows (metadata, not data). Picks each partition's candidate
+  files (undersized, oversized or not yet clustered); the unit writes
+  :func:`output_file_count` files of the candidates' total bytes.
+  Unit-testable with exact-value asserts, like the reference's
   ``test_partitioning.py``.
+- **Bounds** (:func:`plan_unit_bounds`): each unit's n_out−1 Z-range
+  cuts, merged from the manifest's per-file quantile sketches; only
+  units sketched under another curve are sampled, in one fused scan per
+  curve.
 - **Executor** (:func:`compact_partition`): per `source` partition, ONE
-  wide transform: column-pruned read of the victim files → JVM-side
-  xxhash64 + Arrow Z-key kernel → ``repartitionByRange(n_out, _zkey)``
-  → ``sortWithinPartitions(_zkey)`` → parquet write through the one
-  fused writer every data write shares (``manifest.write_data_files``:
-  files and their manifest stats in the same job). Range partitioning
-  samples the key distribution, so output files get balanced bytes and
-  DISJOINT Z-ranges — that disjointness is what makes manifest zmin/zmax
-  pruning effective. AQE handles residual skew.
+  wide transform: column-pruned read of the victim files → Z-key →
+  hash routing of each row's Z-range bucket to its own partition
+  (:func:`_route_reps`) → ``sortWithinPartitions(_zkey)`` → parquet
+  write through the one fused writer every data write shares
+  (``manifest.write_data_files``: files and their manifest stats in the
+  same job). Output files get balanced row counts and DISJOINT Z-ranges
+  — that disjointness is what makes manifest zmin/zmax pruning
+  effective. ``TokenLakeTable.compact`` runs the units with AQE off:
+  routing is explicit, so there is nothing to re-plan.
 
 Skew handling: partitions are processed as independent units (hot
 `source` values don't convoy behind cold ones, and each unit saturates
-the cluster), and within a unit the shuffle key is the near-unique
-Z-key, which cannot skew. For the no-sort binpack strategy the shuffle
-key is a salted doc-hash (``pmod(xxhash64(doc_id), n_out)``).
+the cluster), and within a unit the bounds give every output bucket an
+equal share of rows.
 """
 
 from __future__ import annotations
 
 import math
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -83,62 +89,33 @@ class CompactionPolicy:
     min_input_files: int = 2
 
 
-@dataclass
-class FileGroup:
-    partition: str
-    files: list[dict] = field(default_factory=list)
-
-    @property
-    def total_bytes(self) -> int:
-        return sum(f["file_bytes"] for f in self.files)
-
-    @property
-    def paths(self) -> list[str]:
-        return [f["file_path"] for f in self.files]
-
-
-def plan_compaction(
-    entries: list[dict],
-    policy: CompactionPolicy,
-    require_clustered: bool = True,
-) -> dict[str, list[FileGroup]]:
-    """First-fit-decreasing bin packing per partition.
+def plan_compaction(entries: list[dict], policy: CompactionPolicy) -> dict[str, list[dict]]:
+    """Candidate files per partition.
 
     A file is a rewrite candidate when it is undersized, oversized, or
-    (``require_clustered``) not yet Z-clustered (zmin < 0). Candidates are
-    sorted by size descending and packed first-fit into bins capped at
-    ``target_file_bytes`` — the classic FFD ≤ (11/9)·OPT + 1 bound keeps
-    output counts near-optimal without a solver.
+    not yet Z-clustered (zmin < 0). A partition is planned when it has
+    at least ``min_input_files`` candidates or an oversized one; its
+    output file count is :func:`output_file_count` of the candidates'
+    bytes, cut into that many files by range bounds.
     """
     by_partition: dict[str, list[dict]] = {}
     for e in entries:
         by_partition.setdefault(e["partition"], []).append(e)
 
-    plans: dict[str, list[FileGroup]] = {}
+    plans: dict[str, list[dict]] = {}
     for part, files in sorted(by_partition.items()):
         candidates = [
             f
             for f in files
             if f["file_bytes"] < policy.min_file_bytes
             or f["file_bytes"] > policy.max_file_bytes
-            or (require_clustered and f["zmin"] < 0)
+            or f["zmin"] < 0
         ]
         if len(candidates) < policy.min_input_files and not any(
             f["file_bytes"] > policy.max_file_bytes for f in candidates
         ):
             continue
-        bins: list[FileGroup] = []
-        for f in sorted(candidates, key=lambda x: -x["file_bytes"]):
-            placed = False
-            if f["file_bytes"] <= policy.target_file_bytes:
-                for b in bins:
-                    if b.total_bytes + f["file_bytes"] <= policy.target_file_bytes:
-                        b.files.append(f)
-                        placed = True
-                        break
-            if not placed:
-                bins.append(FileGroup(partition=part, files=[f]))
-        plans[part] = bins
+        plans[part] = candidates
     return plans
 
 
@@ -146,14 +123,12 @@ def output_file_count(total_bytes: int, policy: CompactionPolicy) -> int:
     return max(1, math.ceil(total_bytes / policy.target_file_bytes))
 
 
-_BOUNDS_GRID = 256
-
-
+_BOUNDS_MIN_GRID = 256  # percentile points per partition in the bounds scan
 _BOUNDS_FILE_CAP = 32
-_BOUNDS_SAMPLE_MOD = 8  # keep ~1/8 of rows in the planning sketch
+_BOUNDS_SAMPLE_MOD = 8  # keep at most ~1/8 of rows in the bounds scan
 
 
-def _sample_files(entries: list[dict], cap: int = _BOUNDS_FILE_CAP) -> list[str]:
+def _sample_files(entries: list[dict], cap: int = _BOUNDS_FILE_CAP) -> list[dict]:
     """Deterministic every-kth file subset for boundary estimation.
 
     Files are strided over their manifest ``zmin`` order, NOT path
@@ -168,11 +143,10 @@ def _sample_files(entries: list[dict], cap: int = _BOUNDS_FILE_CAP) -> list[str]
     fragmented the input is — at 100 TB the boundary job must not
     touch a million footers."""
     ordered = sorted(entries, key=lambda e: (e.get("zmin", -1), e["file_path"]))
-    paths = [e["file_path"] for e in ordered]
-    if len(paths) <= cap:
-        return sorted(paths)
-    step = len(paths) / cap
-    return [paths[int(i * step)] for i in range(cap)]
+    if len(ordered) <= cap:
+        return ordered
+    step = len(ordered) / cap
+    return [ordered[int(i * step)] for i in range(cap)]
 
 
 def _bounds_from_sketches(entries: list[dict], n_out: int, curve: str = "zorder") -> list[int] | None:
@@ -187,8 +161,7 @@ def _bounds_from_sketches(entries: list[dict], n_out: int, curve: str = "zorder"
     a sketch (pre-sketch manifest) or carries one computed with a
     DIFFERENT curve than this run's (``zq_curve`` tag) — Hilbert-key
     quantiles interpreted as Morton cuts, or vice versa, would skew
-    output file sizes arbitrarily past the policy; mismatches fall back
-    to the scan."""
+    output file sizes arbitrarily past the policy."""
     pts: list[tuple[int, float]] = []
     total = 0
     for e in entries:
@@ -213,6 +186,54 @@ def _bounds_from_sketches(entries: list[dict], n_out: int, curve: str = "zorder"
     return bounds
 
 
+def _scan_bounds(
+    spark: SparkSession,
+    table_path: str,
+    units: dict[str, list[dict]],
+    unit_n_out: dict[str, int],
+    curve: str,
+) -> dict[str, list[int]]:
+    """Bounds for units the manifest sketches cannot answer: ONE
+    column-pruned, hash-sampled scan over a bounded file subset per unit
+    (:func:`_sample_files`) for all of them.
+
+    Each partition gets a percentile grid of max(256, 4·n_out) points,
+    n_out the largest among these units (accuracy scaled with it), read
+    off by :func:`_bounds_from_sketches` as if it were one file's
+    sketch. The sample rate comes from the sampled files' manifest row
+    counts: ~1/8 of rows, but no fewer rows than grid points, so a unit
+    of tiny files is read whole and no unit's sample comes up empty."""
+    grid_n = max(_BOUNDS_MIN_GRID, 4 * max(unit_n_out[p] for p in units))
+    sampled = {p: _sample_files(entries) for p, entries in units.items()}
+    mods = {
+        p: max(1, min(_BOUNDS_SAMPLE_MOD, sum(e["row_count"] for e in files) // grid_n))
+        for p, files in sampled.items()
+    }
+    rate = F.create_map(*[F.lit(x) for p, m in mods.items() for x in (p, m)])
+    skinny = (
+        spark.read.option("basePath", os.path.join(table_path, "data"))
+        .schema("doc_id string, n_tok int, source string")
+        .parquet(*[os.path.join(table_path, e["file_path"]) for files in sampled.values() for e in files])
+        .filter(F.pmod(F.xxhash64("doc_id", F.lit(7)), F.element_at(rate, F.col("source"))) == 0)
+    )
+    fracs = F.array(*[F.lit(i / grid_n) for i in range(1, grid_n)])
+    rows = (
+        with_zkey(skinny, curve=curve)
+        .groupBy("source")
+        .agg(F.percentile_approx("_zkey", fracs, F.lit(20 * grid_n)).alias("g"))
+        .collect()
+    )
+    grids = {r["source"]: r["g"] for r in rows}
+    out: dict[str, list[int]] = {}
+    for part in units:
+        grid = grids.get(part)
+        if not grid:
+            raise RuntimeError(f"bounds scan sampled no rows of partition {part!r}")
+        sketch = {"zq": grid, "row_count": len(grid), "zq_curve": curve}
+        out[part] = _bounds_from_sketches([sketch], unit_n_out[part], curve)
+    return out
+
+
 def plan_unit_bounds(
     spark: SparkSession,
     table_path: str,
@@ -221,73 +242,36 @@ def plan_unit_bounds(
     curve: str = "zorder",
     curve_by_source: dict[str, str] | None = None,
 ) -> dict[str, list[int]]:
-    """Range boundaries for EVERY pending unit — from manifest metadata
-    when possible, one fused skinny job otherwise.
+    """Range boundaries for EVERY unit: n_out−1 sorted cuts each ([] for
+    a one-file unit) — the one bounds estimator compaction has.
 
-    Preferred path (:func:`_bounds_from_sketches`): merge the per-file
-    ``zq`` quantile sketches the stats pass already computed — no scan,
-    no Spark job, the units start immediately. Sketches are curve-tagged
-    (``zq_curve``), so Hilbert compactions of Hilbert-sketched files
-    plan metadata-only too; a curve mismatch (or pre-tag manifest)
-    falls back to the scan.
-
-    Fallback (pre-sketch/mismatched manifests): a single column-pruned,
-    1/8-hash-sampled pass over a bounded file subset per unit
-    (:func:`_sample_files`) computes a fixed {grid} -quantile sketch
-    per partition, and each unit's n_out−1 boundaries are read off the
-    grid driver-side (grid granularity ≥ 4× any realistic n_out, so
-    the extra rounding shifts file sizes by ≪ the target/max headroom).
-    One scan instead of one per unit.
+    Manifest sketches answer first (:func:`_bounds_from_sketches`):
+    merging the per-file ``zq`` quantile sketches the stats pass already
+    computed needs no scan and no Spark job. Sampling fills in only
+    where a sketch cannot — files sketched under another curve (Hilbert
+    over Morton-sketched ingest) or predating sketches: those units
+    share one fused scan per curve (:func:`_scan_bounds`).
 
     ``curve_by_source`` overrides the curve per partition (mixed-curve
     single-cycle compaction): each unit's sketches are matched against
-    ITS curve, and the scan fallback runs one fused job per distinct
-    curve among the units that need it (≤ number of curves, not units).
+    ITS curve, so the scans number ≤ distinct curves, not units.
     """
-    out: dict[str, list[int]] = {}
-    scan_units: dict[str, list[dict]] = {}
     cb = curve_by_source or {}
+    out: dict[str, list[int]] = {}
+    scan_units: dict[str, dict[str, list[dict]]] = {}
     for part, entries in unit_entries.items():
         n_out = unit_n_out.get(part, 1)
         if n_out <= 1:
+            out[part] = []
             continue
-        sketched = _bounds_from_sketches(entries, n_out, cb.get(part, curve))
-        if sketched is not None:
-            out[part] = sketched
+        c = cb.get(part, curve)
+        sketched = _bounds_from_sketches(entries, n_out, c)
+        if sketched is None:
+            scan_units.setdefault(c, {})[part] = entries
         else:
-            scan_units[part] = entries
-
-    by_curve: dict[str, dict[str, list[dict]]] = {}
-    for part, entries in scan_units.items():
-        by_curve.setdefault(cb.get(part, curve), {})[part] = entries
-    data_dir = os.path.join(table_path, "data")
-    fracs = [i / _BOUNDS_GRID for i in range(1, _BOUNDS_GRID)]
-    for c, units in by_curve.items():
-        all_paths = [p for entries in units.values() for p in _sample_files(entries)]
-        if not all_paths:
-            continue
-        skinny = (
-            spark.read.option("basePath", data_dir)
-            .parquet(*[os.path.join(table_path, p) for p in all_paths])
-            .select("source", "doc_id", "n_tok")
-            .filter(F.pmod(F.xxhash64("doc_id", F.lit(7)), F.lit(_BOUNDS_SAMPLE_MOD)) == 0)
-        )
-        skinny = with_zkey(skinny, curve=c)
-        rows = (
-            skinny.groupBy("source")
-            .agg(F.percentile_approx("_zkey", F.array(*[F.lit(f) for f in fracs]), F.lit(5000)).alias("g"))
-            .collect()
-        )
-        grids = {r["source"]: r["g"] for r in rows}
-        for part in units:
-            n_out = unit_n_out[part]
-            grid = grids.get(part)
-            if not grid or n_out > _BOUNDS_GRID // 4:
-                continue  # huge unit: grid too coarse → per-unit estimation
-            out[part] = [
-                int(grid[min(len(grid) - 1, max(0, round(j * _BOUNDS_GRID / n_out) - 1))])
-                for j in range(1, n_out)
-            ]
+            out[part] = sketched
+    for c, units in scan_units.items():
+        out.update(_scan_bounds(spark, table_path, units, unit_n_out, c))
     return out
 
 
@@ -296,15 +280,13 @@ def compact_partition(
     table_path: str,
     partition: str,
     input_rel_paths: list[str],
-    total_bytes: int,
-    policy: CompactionPolicy,
     job_id: str,
+    bounds: list[int],
+    read_ddl: str,
     curve: str = "zorder",
-    strategy: str = "sort",
-    read_ddl: str | None = None,
-    bounds: list[int] | None = None,
 ) -> tuple[list[str], list[dict]]:
-    """Rewrite one partition's victim files; returns (new relative
+    """Rewrite one partition's victim files into len(bounds)+1 files cut
+    at ``bounds`` (from :func:`plan_unit_bounds`); returns (new relative
     paths, their manifest stats entries).
 
     The routed, ``_zkey``-sorted frame goes through the one data writer
@@ -321,68 +303,27 @@ def compact_partition(
     the reader inferring one arbitrary file's footer and silently
     dropping the column from the compacted output.
     """
-    data_dir = os.path.join(table_path, "data")
-    abs_paths = [os.path.join(table_path, p) for p in input_rel_paths]
-    n_out = output_file_count(total_bytes, policy)
-
-    reader = spark.read.option("basePath", data_dir)
-    if read_ddl:
-        reader = reader.schema(read_ddl)
-    df = reader.parquet(*abs_paths).drop("source", "_zkey")
-    if strategy == "sort":
-        df = with_zkey(df, curve=curve)
-        if n_out > 1:
-            if bounds is None:
-                # boundary estimation on a COLUMN-PRUNED scan: reads
-                # only (doc_id, n_tok) — a few % of bytes since `tokens`
-                # never loads — thinned to a deterministic ~1/4 hash
-                # sample (RangePartitioner samples too; boundary error
-                # shifts file sizes a few %, well under target/max
-                # headroom). Callers that plan many units should pass
-                # precomputed ``bounds`` from plan_unit_bounds() — ONE
-                # job for all units instead of one per unit.
-                skinny = (
-                    spark.read.option("basePath", data_dir)
-                    .parquet(*abs_paths)
-                    .select("doc_id", "n_tok")
-                    .filter(F.pmod(F.xxhash64("doc_id", F.lit(7)), F.lit(4)) == 0)
-                )
-                skinny = with_zkey(skinny, curve=curve)
-                fracs = [i / n_out for i in range(1, n_out)]
-                bounds = skinny.agg(
-                    F.percentile_approx("_zkey", F.array(*[F.lit(f) for f in fracs]), F.lit(5000))
-                ).collect()[0][0]
-                if not bounds:  # degenerate unit: sample came up empty
-                    full = with_zkey(
-                        spark.read.option("basePath", data_dir)
-                        .parquet(*abs_paths)
-                        .select("doc_id", "n_tok"),
-                        curve=curve,
-                    )
-                    bounds = full.agg(
-                        F.percentile_approx(
-                            "_zkey", F.array(*[F.lit(f) for f in fracs]), F.lit(5000)
-                        )
-                    ).collect()[0][0] or [0] * (n_out - 1)
-            b_arr = F.array(*[F.lit(int(b)) for b in bounds])
-            bucket = F.aggregate(
-                b_arr, F.lit(0), lambda acc, b: acc + F.when(F.col("_zkey") > b, 1).otherwise(0)
-            )
-            reps = _route_reps(spark, n_out)
-            # reps MUST stay LongType: HashPartitioning is Murmur3 over the
-            # column's physical type, and murmur3(int32 x) != murmur3(int64 x)
-            # — int literals here silently randomize the bucket→partition map
-            route = F.element_at(F.array(*[F.lit(r).cast("long") for r in reps]), bucket + 1)
-            df = df.repartition(n_out, route.alias("_route")).sortWithinPartitions("_zkey")
-        else:
-            df = df.coalesce(1).sortWithinPartitions("_zkey")
-    elif strategy == "binpack":
-        # no clustering: salted even-byte split, no sort cost
-        df = df.repartition(n_out, F.pmod(F.xxhash64("doc_id"), F.lit(n_out)))
-        df = with_zkey(df, curve=curve)  # still stamp the key for future pruning
-        df = df.sortWithinPartitions("_zkey")
+    n_out = len(bounds) + 1
+    df = (
+        spark.read.option("basePath", os.path.join(table_path, "data"))
+        .schema(read_ddl)
+        .parquet(*[os.path.join(table_path, p) for p in input_rel_paths])
+        .drop("source", "_zkey")
+    )
+    df = with_zkey(df, curve=curve)
+    if n_out > 1:
+        b_arr = F.array(*[F.lit(int(b)) for b in bounds])
+        bucket = F.aggregate(
+            b_arr, F.lit(0), lambda acc, b: acc + F.when(F.col("_zkey") > b, 1).otherwise(0)
+        )
+        reps = _route_reps(spark, n_out)
+        # reps MUST stay LongType: HashPartitioning is Murmur3 over the
+        # column's physical type, and murmur3(int32 x) != murmur3(int64 x)
+        # — int literals here silently randomize the bucket→partition map
+        route = F.element_at(F.array(*[F.lit(r).cast("long") for r in reps]), bucket + 1)
+        df = df.repartition(n_out, route.alias("_route")).sortWithinPartitions("_zkey")
     else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+        df = df.coalesce(1).sortWithinPartitions("_zkey")
 
     # only THIS unit's staging dir is cleared and removed — other units
     # of the job may still be writing under .staging/<job_id>/
@@ -393,11 +334,3 @@ def compact_partition(
         f"compact-{job_id}",
         curve=curve,
     )
-
-
-def estimate_parquet_bytes(row_count: int, avg_tokens: float) -> int:
-    """Planner-side size estimate: int32 tokens dominate; parquet gets
-    ~0.7 compression on this payload (the reference assumed the same
-    ratio, ``partitioning.py:99-113``)."""
-    raw = row_count * (4 * avg_tokens + 40)
-    return int(raw * 0.7)

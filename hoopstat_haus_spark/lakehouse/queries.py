@@ -84,7 +84,7 @@ _ROLLUP_SQL = """
 
 
 def compact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full cycle: fragmented create → bin-pack + space-filling-curve
+    """Full cycle: fragmented create → target-size space-filling-curve
     rewrite → snapshot → post-maintenance scan rollup (SURVEY.md §7.3
     step 5). BOTH curves run in ONE cycle (``curve_by_source``): the
     SMALLEST partition (deterministic: fewest bytes, name tie-break)

@@ -345,7 +345,6 @@ class TokenLakeTable:
         self,
         policy: CompactionPolicy | None = None,
         curve: str = "zorder",
-        strategy: str = "sort",
         job_id: str | None = None,
         max_concurrent_units: int | None = None,
         sources: list[str] | None = None,
@@ -385,8 +384,7 @@ class TokenLakeTable:
         job_id = job_id or f"compact-{uuid.uuid4().hex[:10]}"
         with job_record(self.path, "compact", job_id) as metrics:
             out = self._compact_run(
-                policy, curve, strategy, job_id, max_concurrent_units, metrics, sources,
-                curve_by_source,
+                policy, curve, job_id, max_concurrent_units, metrics, sources, curve_by_source
             )
             JobCheckpoint(self.path, job_id).clear()
             return out
@@ -395,7 +393,6 @@ class TokenLakeTable:
         self,
         policy: CompactionPolicy,
         curve: str,
-        strategy: str,
         job_id: str,
         max_concurrent_units: int,
         metrics: JobMetrics,
@@ -433,8 +430,7 @@ class TokenLakeTable:
         removed: list[dict] = []
         pending: list[tuple[str, list[dict]]] = []
         fresh: list[dict] = []  # per-file stats, computed inside units
-        for part, groups in plans.items():
-            inputs = [f for g in groups for f in g.files]
+        for part, inputs in plans.items():
             removed.extend(inputs)
             metrics.files_in += len(inputs)
             metrics.bytes_in += sum(f["file_bytes"] for f in inputs)
@@ -453,7 +449,7 @@ class TokenLakeTable:
 
         read_ddl = self.schema_def().ddl(extra=((mf.ZKEY_COL, "long"),))
         unit_bounds: dict[str, list[int]] = {}
-        if strategy == "sort" and pending:
+        if pending:
             unit_bounds = plan_unit_bounds(
                 self.spark,
                 self.path,
@@ -480,13 +476,10 @@ class TokenLakeTable:
                 self.path,
                 part,
                 in_paths,
-                sum(f["file_bytes"] for f in inputs),
-                policy,
                 job_id,
-                curve=cb.get(part, curve),
-                strategy=strategy,
+                bounds=unit_bounds[part],
                 read_ddl=read_ddl,
-                bounds=unit_bounds.get(part),
+                curve=cb.get(part, curve),
             )
             ckpt.done(
                 part,
@@ -554,7 +547,6 @@ class TokenLakeTable:
                 "job_id": job_id,
                 "curve": curve,
                 **({"curve_by_source": cb} if cb else {}),
-                "strategy": strategy,
             },
             shards=shard_entries,
         )

@@ -131,10 +131,8 @@ def zkey_udf(curve: str = "zorder", n_tok_lo: int = 0, n_tok_hi: int = 4096):
         b = h >> np.uint64(64 - bits)
         if curve == "zorder":
             key = morton2(a, b)
-        elif curve == "hilbert":
-            key = hilbert_index(np.stack([a, b], axis=1), bits)
         else:
-            raise ValueError(f"unknown curve {curve!r}")
+            key = hilbert_index(np.stack([a, b], axis=1), bits)
         # shift into signed-positive range for a LongType column
         return pd.Series((key >> np.uint64(1)).astype(np.int64))
 
@@ -185,7 +183,10 @@ def with_zkey(df, curve: str = "zorder", n_tok_lo: int = 0, n_tok_hi: int = 4096
 
     The default Morton curve is a pure JVM expression
     (:func:`zkey_expr_zorder`); Hilbert keeps the Arrow kernel (its
-    bit×dim iteration doesn't reduce to a fixed expression tree)."""
+    bit×dim iteration doesn't reduce to a fixed expression tree). An
+    unknown curve raises here, on the driver, before any plan exists."""
+    if curve not in ("zorder", "hilbert"):
+        raise ValueError(f"unknown curve {curve!r}")
     if curve == "zorder":
         return df.withColumn(
             "_zkey", zkey_expr_zorder(F.col("n_tok"), F.xxhash64(F.col("doc_id")), n_tok_lo, n_tok_hi)

@@ -182,7 +182,7 @@ def build_training_corpus(
     #     the candidate side hashes once into a skinny (doc_id, sig)
     #     frame, the lake side is the persisted index's sig column, and
     #     the semi-join shuffles only those two skinny frames; the final
-    #     anti-join's drop set is O(overlap) and AQE picks its strategy
+    #     anti-join's drop set is O(overlap) and AQE picks its join
     #     (same reasoning as the near-dedup drop set above).
     if dedupe_against is not None:
         from hoopstat_haus_spark.lakehouse.digest_index import DigestIndex

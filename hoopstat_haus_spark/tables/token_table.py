@@ -14,7 +14,7 @@ Two deterministic constructors:
   ``spark.range`` with a skewed ``source`` distribution — the bench
   input. No data files are shipped; everything is computed.
 
-This mirrors the reference's seeded mock-data strategy
+This mirrors the reference's seeded mock-data approach
 (``libs/hoopstat-mock-data``, ``MockDataGenerator(seed=42)`` at
 ``libs/hoopstat-e2e-testing/hoopstat_e2e_testing/pipeline_runner.py:33``)
 but with closed-form determinism instead of a seeded RNG so two engines

@@ -8,9 +8,11 @@ Ship as:
         --table /data/tokens --target-mb 128 --curve zorder --job-id nightly-42
 
 Subcommands:
-    compact   bin-pack + Z-order/Hilbert rewrite (resumable via --job-id;
-              --since-snapshot N compacts only partitions changed since
-              that snapshot, --sources a,b restricts to named partitions)
+    compact   rewrite each partition's small, oversized and unclustered
+              files into target-size files range-cut on a Z-order or
+              Hilbert curve (resumable via --job-id; --since-snapshot N
+              compacts only partitions changed since that snapshot,
+              --sources a,b restricts to named partitions)
     merge     MERGE INTO from an updates parquet path
     delete    DELETE FROM ... WHERE <sql predicate> (file-pruned CoW;
               GDPR-style row removal — only files holding a match are
@@ -85,7 +87,6 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--table", required=True)
     c.add_argument("--target-mb", type=int, default=128)
     c.add_argument("--curve", choices=["zorder", "hilbert"], default="zorder")
-    c.add_argument("--strategy", choices=["sort", "binpack"], default="sort")
     c.add_argument("--job-id", default=None, help="reuse to resume a crashed run")
     # default None = scale-adaptive (max(4, defaultParallelism // 2))
     c.add_argument("--concurrent-units", type=int, default=None)
@@ -384,7 +385,6 @@ def _dispatch(args, spark) -> dict:
         snap, metrics = table.compact(
             policy,
             curve=args.curve,
-            strategy=args.strategy,
             job_id=args.job_id,
             max_concurrent_units=args.concurrent_units,
             sources=sources,

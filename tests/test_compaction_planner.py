@@ -3,8 +3,6 @@
 
 from hoopstat_haus_spark.lakehouse.compaction import (
     CompactionPolicy,
-    FileGroup,
-    estimate_parquet_bytes,
     output_file_count,
     plan_compaction,
 )
@@ -31,38 +29,40 @@ def entry(path, part, size, zmin=0):
 POLICY = CompactionPolicy(min_file_bytes=5 * MB, target_file_bytes=25 * MB, max_file_bytes=50 * MB)
 
 
+def paths(files):
+    return [f["file_path"] for f in files]
+
+
 def test_well_sized_clustered_files_left_alone():
     entries = [entry("f1", "web", 25 * MB), entry("f2", "web", 30 * MB)]
     assert plan_compaction(entries, POLICY) == {}
 
 
-def test_small_files_packed_first_fit_decreasing():
+def test_small_files_are_all_candidates():
     sizes = [4, 4, 4, 4, 4, 4, 3, 3]  # MB, all < 5MB min -> candidates
     entries = [entry(f"f{i}", "web", s * MB) for i, s in enumerate(sizes)]
-    plans = plan_compaction(entries, POLICY, require_clustered=False)
-    bins = plans["web"]
-    packed = [sorted(f["file_bytes"] // MB for f in b.files) for b in bins]
-    # FFD with 25MB bins: six 4s = 24 (a 3 would overflow), then [3, 3]
-    assert packed == [[4, 4, 4, 4, 4, 4], [3, 3]]
+    entries.append(entry("ok", "web", 25 * MB))
+    plans = plan_compaction(entries, POLICY)
+    assert paths(plans["web"]) == [f"f{i}" for i in range(len(sizes))]
+    assert output_file_count(sum(f["file_bytes"] for f in plans["web"]), POLICY) == 2
 
 
 def test_oversized_file_gets_own_split_group():
     entries = [entry("big", "web", 120 * MB), entry("ok", "web", 25 * MB)]
-    plans = plan_compaction(entries, POLICY, require_clustered=False)
-    assert len(plans["web"]) == 1
-    assert plans["web"][0].paths == ["big"]
+    plans = plan_compaction(entries, POLICY)
+    assert paths(plans["web"]) == ["big"]
     assert output_file_count(120 * MB, POLICY) == 5
 
 
 def test_single_small_file_not_worth_rewriting():
     entries = [entry("lonely", "web", 1 * MB)]
-    assert plan_compaction(entries, POLICY, require_clustered=False) == {}
+    assert plan_compaction(entries, POLICY) == {}
 
 
 def test_unclustered_files_are_candidates_when_clustering_required():
     entries = [entry("f1", "web", 25 * MB, zmin=-1), entry("f2", "web", 25 * MB, zmin=-1)]
-    plans = plan_compaction(entries, POLICY, require_clustered=True)
-    assert {f for b in plans["web"] for f in b.paths} == {"f1", "f2"}
+    plans = plan_compaction(entries, POLICY)
+    assert set(paths(plans["web"])) == {"f1", "f2"}
 
 
 def test_partitions_planned_independently():
@@ -72,20 +72,9 @@ def test_partitions_planned_independently():
         entry("b1", "books", 1 * MB),
         entry("b2", "books", 1 * MB),
     ]
-    plans = plan_compaction(entries, POLICY, require_clustered=False)
+    plans = plan_compaction(entries, POLICY)
     assert set(plans) == {"web", "books"}
-    assert all(g.partition == p for p, gs in plans.items() for g in gs)
-
-
-def test_group_totals():
-    g = FileGroup(partition="web", files=[entry("a", "web", 3), entry("b", "web", 4)])
-    assert g.total_bytes == 7
-    assert g.paths == ["a", "b"]
-
-
-def test_size_estimator_matches_reference_compression_assumption():
-    # 0.7 compression ratio, int32-token dominated (reference: partitioning.py:99-113)
-    assert estimate_parquet_bytes(1000, 260.0) == int(1000 * (4 * 260.0 + 40) * 0.7)
+    assert all(f["partition"] == p for p, files in plans.items() for f in files)
 
 
 class TestSketchBounds:
@@ -235,3 +224,38 @@ class TestCurveTaggedSketches:
         for e in entries:
             e["zq_curve"] = None
         assert C._bounds_from_sketches(entries, 4, "zorder") is None
+
+    def test_curve_mismatch_scan_bounds_every_unit(self, spark, tmp_path):
+        """On a curve mismatch the scan answers EVERY unit with n_out−1
+        sorted cuts: a unit wanting more files than a 256-point grid
+        resolves at 4 points per file, and a unit of 1-row files none of
+        whose rows a fixed 1/8 hash sample would keep."""
+        from pyspark.sql import functions as F
+
+        from hoopstat_haus_spark.lakehouse import compaction as C
+        from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
+        from hoopstat_haus_spark.tables import synthetic
+
+        docs = synthetic(spark, 4000)
+        t = TokenLakeTable.create(spark, str(tmp_path / "t"), docs, repartition_n=6)
+        unsampled = (
+            docs.filter("source = 'web'")
+            .filter(F.pmod(F.xxhash64("doc_id", F.lit(7)), F.lit(8)) != 0)
+            .withColumn("source", F.lit("tiny"))
+            .limit(4)
+            .collect()
+        )
+        # one row per slice → one 1-row file per row
+        rows = spark.sparkContext.parallelize(unsampled, len(unsampled))
+        t.append(spark.createDataFrame(rows, docs.schema))
+
+        units: dict[str, list[dict]] = {}
+        for e in t.manifest_entries():
+            units.setdefault(e["partition"], []).append(e)
+        assert len(units["tiny"]) == 4 and all(e["row_count"] == 1 for e in units["tiny"])
+        n_out = {"web": 100, "tiny": 3}
+        units = {p: units[p] for p in n_out}
+        bounds = C.plan_unit_bounds(spark, t.path, units, n_out, curve="hilbert")
+        assert set(bounds) == set(units)
+        for p, b in bounds.items():
+            assert len(b) == n_out[p] - 1 and b == sorted(b), p

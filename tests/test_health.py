@@ -75,7 +75,7 @@ def test_crashed_op_records_failed_and_degrades(spark, tmp_table_dir, op):
         # fresh small files give the planner a unit; the unit raises
         more = synthetic(spark, 300).withColumn("doc_id", F.concat(F.lit("x-"), "doc_id"))
         t.append(more, repartition_n=4)
-        fail, match = (lambda: t.compact(POLICY, strategy="bogus")), "unknown strategy"
+        fail, match = (lambda: t.compact(POLICY, curve="bogus")), "unknown curve"
     elif op == "merge":
         ok = (
             t.scan().limit(5)

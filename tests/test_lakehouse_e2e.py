@@ -165,15 +165,13 @@ def test_resume_skips_completed_units(spark, tmp_table_dir):
     entries = t.manifest_entries()
     plans = plan_compaction(entries, POLICY)
     part = sorted(plans)[0]
-    inputs = [f for g in plans[part] for f in g.files]
-    in_paths = [f["file_path"] for f in inputs]
+    in_paths = [f["file_path"] for f in plans[part]]
 
     # simulate a crash: one unit completed, no snapshot committed
     ck = JobCheckpoint(t.path, "job-x")
     ck.intent(part, in_paths)
-    out, _stats = compact_partition(
-        spark, t.path, part, in_paths, sum(f["file_bytes"] for f in inputs), POLICY, "job-x"
-    )
+    ddl = t.schema_def().ddl(extra=(("_zkey", "long"),))
+    out, _stats = compact_partition(spark, t.path, part, in_paths, "job-x", bounds=[], read_ddl=ddl)
     ck.done(part, in_paths, out, rows=1, tokens=1, duration_s=0.0, output_stats=_stats)
     assert t.log.current_id() == 1  # crash left readers untouched
 
@@ -195,15 +193,13 @@ def test_resume_reruns_unit_whose_inputs_changed(spark, tmp_table_dir):
     t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 4000), repartition_n=8)
     plans = plan_compaction(t.manifest_entries(), POLICY)
     part = sorted(plans)[0]
-    inputs = [f for g in plans[part] for f in g.files]
-    in_paths = [f["file_path"] for f in inputs]
+    in_paths = [f["file_path"] for f in plans[part]]
 
     # crash after one unit finished: checkpointed done, nothing committed
     ck = JobCheckpoint(t.path, "job-z")
     ck.intent(part, in_paths)
-    out, stats = compact_partition(
-        spark, t.path, part, in_paths, sum(f["file_bytes"] for f in inputs), POLICY, "job-z"
-    )
+    ddl = t.schema_def().ddl(extra=(("_zkey", "long"),))
+    out, stats = compact_partition(spark, t.path, part, in_paths, "job-z", bounds=[], read_ddl=ddl)
     ck.done(part, in_paths, out, rows=1, tokens=1, duration_s=0.0, output_stats=stats)
 
     victims = [
