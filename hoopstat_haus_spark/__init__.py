@@ -15,8 +15,9 @@ maintenance over tables of pre-tokenized training sequences
   ``apps/bronze-ingestion/app/bronze_summary.py``)
 - snapshot commit / expiry / reachability GC (reference ready-markers:
   ``libs/hoopstat-s3/hoopstat_s3/silver_s3_manager.py:314-376``)
-- MERGE INTO as partition-pruned copy-on-write (reference quarantine replay:
-  ``apps/bronze-ingestion/app/replay.py``)
+- MERGE INTO / DELETE / UPDATE as partition-pruned matches recorded in
+  deletion vectors, the copy-on-write rewrite deferred to compaction
+  (reference quarantine replay: ``apps/bronze-ingestion/app/replay.py``)
 - per-partition lineage checkpoints + resumable compaction (reference idempotent
   re-run orchestration: ``apps/gold-analytics/app/processors.py:1022-1180``)
 

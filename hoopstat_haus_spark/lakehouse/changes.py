@@ -10,7 +10,7 @@ the manifest diff IS the changelog.
 Semantics — NET diff between the two snapshot states (not per-commit
 replay): a key inserted then deleted between the endpoints emits
 nothing; a compaction (pure physical rewrite) emits nothing; an upsert
-that rewrote a file emits only the rows whose CONTENT actually changed.
+emits only the rows whose CONTENT actually changed.
 Each emitted row carries ``_change`` ∈ {insert, update, delete}:
 ``update``/``insert`` rows carry the TO-snapshot values, ``delete``
 rows the FROM-snapshot values. Rows are compared projected onto the
@@ -19,11 +19,14 @@ schema evolution (no file touched) emits nothing.
 
 Scale design: the diff walks the two manifest LISTS shard-aware —
 partitions carried by reference (same shard path) are skipped without
-opening their shards; only files present on exactly one side are ever
-read. Row comparison is TWO-PHASE (round 6): the classifying full-outer
-join carries only (doc_id, source, sig) — the content signature is
-computed in the scan projection and the token payload never enters that
-exchange (~60 B/row shuffled instead of the ~1 KB row twice) — then
+opening their shards. Only files present on exactly one side are read
+whole (each under its deletion vector on that side); of a file kept on
+both sides whose DV changed, only the DV delta is read — the positions
+deleted on one side only (``changed_files``). So a DELETE's feed reads
+exactly the rows it deleted. Row comparison is TWO-PHASE (round 6): the
+classifying full-outer join carries only (doc_id, source, sig) — the
+content signature is computed in the scan projection and the token
+payload never enters that exchange (~60 B/row shuffled instead of the ~1 KB row twice) — then
 payloads are fetched with a second join ONLY for the net-changed keys,
 broadcast when the changed-key set is small, and skipped entirely for
 change classes the classify counts prove empty. CDC over a pure
@@ -35,6 +38,7 @@ one-row-per-key table invariant makes every added row an insert).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,20 +54,40 @@ CHANGE_COL = "_change"
 BROADCAST_KEYS_MAX = 500_000
 
 
-def changed_files(table: TokenLakeTable, from_id: int, to_id: int) -> tuple[list[str], list[str]]:
-    """Manifest diff → (added_paths, removed_paths), shard-aware: a
+def changed_files(
+    table: TokenLakeTable, from_id: int, to_id: int
+) -> tuple[list[dict], list[dict]]:
+    """Manifest diff → (added, removed) manifest entries, shard-aware: a
     partition whose shard is carried by reference between the snapshots
-    costs nothing (the shard parquet is never opened)."""
+    costs nothing (the shard parquet is never opened).
+
+    ``added`` holds TO-side entries of files only the TO snapshot has,
+    ``removed`` FROM-side entries of files only the FROM snapshot has —
+    each read under its own side's deletion vector. A file on both
+    sides whose DV changed contributes its DV delta as an entry
+    carrying ``pick_rows`` (read at exactly those positions): rows the
+    TO side newly deletes go to ``removed``, rows it no longer deletes
+    (a rollback past a delete) to ``added``."""
     old_snap, new_snap = table.log.get(from_id), table.log.get(to_id)
-    added: list[str] = []
-    removed: list[str] = []
+    added: list[dict] = []
+    removed: list[dict] = []
     for _part, old_entries, new_entries in mf.diff_partition_entries(
         table.path, old_snap.manifest, new_snap.manifest
     ):
-        old_files = {e["file_path"] for e in old_entries}
-        new_files = {e["file_path"] for e in new_entries}
-        added.extend(sorted(new_files - old_files))
-        removed.extend(sorted(old_files - new_files))
+        old_files = {e["file_path"]: e for e in old_entries}
+        new_files = {e["file_path"]: e for e in new_entries}
+        added.extend(new_files[p] for p in sorted(new_files.keys() - old_files.keys()))
+        removed.extend(old_files[p] for p in sorted(old_files.keys() - new_files.keys()))
+        for p in sorted(old_files.keys() & new_files.keys()):
+            o, n = old_files[p], new_files[p]
+            if o["dv_path"] == n["dv_path"]:
+                continue
+            o_dv, n_dv = mf.read_dv(table.path, o), mf.read_dv(table.path, n)
+            gone, back = np.setdiff1d(n_dv, o_dv), np.setdiff1d(o_dv, n_dv)
+            if len(gone):
+                removed.append({**o, "pick_rows": gone})
+            if len(back):
+                added.append({**n, "pick_rows": back})
     return added, removed
 
 
@@ -113,10 +137,10 @@ def table_changes(
 
     sig = F.md5(F.to_json(F.struct(*[F.col(c) for c in value_names])))
 
-    def skinny(paths: list[str], tag: str) -> DataFrame:
+    def skinny(entries: list[dict], tag: str) -> DataFrame:
         # signature in the scan projection: the classify join below
         # shuffles (doc_id, source, sig) — the payload never enters it
-        rows = read_touched(table, schema, paths)
+        rows = read_touched(table, schema, entries)
         return rows.select("doc_id", "source", sig.alias(f"{tag}_sig"))
 
     is_del = F.col("n_sig").isNull()
@@ -144,14 +168,14 @@ def table_changes(
         for r in keyed.groupBy(CHANGE_COL).agg(F.count(F.lit(1)).alias("n")).collect()
     }
 
-    def fetch(paths: list[str], wanted: list[str], relabel: dict[str, str]) -> DataFrame | None:
+    def fetch(entries: list[dict], wanted: list[str], relabel: dict[str, str]) -> DataFrame | None:
         n_keys = sum(counts.get(k, 0) for k in wanted)
         if n_keys == 0:
             return None
         keys = keyed.filter(F.col(CHANGE_COL).isin(wanted))
         if n_keys <= BROADCAST_KEYS_MAX:
             keys = F.broadcast(keys)
-        out = read_touched(table, schema, paths).join(keys, ["doc_id", "source"], "inner")
+        out = read_touched(table, schema, entries).join(keys, ["doc_id", "source"], "inner")
         kinds = F.col(CHANGE_COL)
         for src_k, dst_k in relabel.items():
             kinds = F.when(F.col(CHANGE_COL) == src_k, F.lit(dst_k)).otherwise(kinds)

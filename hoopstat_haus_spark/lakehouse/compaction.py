@@ -10,7 +10,9 @@ path runs from plan to write:
 
 - **Planner** (:func:`plan_compaction`): pure driver-side function over
   manifest rows (metadata, not data). Picks each partition's candidate
-  files (undersized, oversized or not yet clustered); the unit writes
+  files (undersized, oversized, not yet clustered, or carrying a
+  deletion vector — compaction is the only physical rewriter, so this
+  is where DELETE/UPDATE/MERGE's deleted rows leave disk); the unit writes
   :func:`output_file_count` files of the candidates' total bytes.
   Unit-testable with exact-value asserts, like the reference's
   ``test_partitioning.py``.
@@ -19,7 +21,8 @@ path runs from plan to write:
   units sketched under another curve are sampled, in one fused scan per
   curve.
 - **Executor** (:func:`compact_partition`): per `source` partition, ONE
-  wide transform: column-pruned read of the victim files → Z-key →
+  wide transform: read of the victim files under their deletion
+  vectors (``table.read_touched``) → Z-key →
   hash routing of each row's Z-range bucket to its own partition
   (:func:`_route_reps`) → ``sortWithinPartitions(_zkey)`` → parquet
   write through the one fused writer every data write shares
@@ -92,11 +95,13 @@ class CompactionPolicy:
 def plan_compaction(entries: list[dict], policy: CompactionPolicy) -> dict[str, list[dict]]:
     """Candidate files per partition.
 
-    A file is a rewrite candidate when it is undersized, oversized, or
-    not yet Z-clustered (zmin < 0). A partition is planned when it has
-    at least ``min_input_files`` candidates or an oversized one; its
-    output file count is :func:`output_file_count` of the candidates'
-    bytes, cut into that many files by range bounds.
+    A file is a rewrite candidate when it is undersized, oversized, not
+    yet Z-clustered (zmin < 0), or carries a deletion vector. A
+    partition is planned when it has at least ``min_input_files``
+    candidates, an oversized one or a DV'd one (a lone DV'd file is
+    still rewritten, so deleted rows do leave disk); its output file
+    count is :func:`output_file_count` of the candidates' bytes, cut
+    into that many files by range bounds.
     """
     by_partition: dict[str, list[dict]] = {}
     for e in entries:
@@ -110,9 +115,11 @@ def plan_compaction(entries: list[dict], policy: CompactionPolicy) -> dict[str, 
             if f["file_bytes"] < policy.min_file_bytes
             or f["file_bytes"] > policy.max_file_bytes
             or f["zmin"] < 0
+            or f.get("dv_rows", 0) > 0
         ]
         if len(candidates) < policy.min_input_files and not any(
-            f["file_bytes"] > policy.max_file_bytes for f in candidates
+            f["file_bytes"] > policy.max_file_bytes or f.get("dv_rows", 0) > 0
+            for f in candidates
         ):
             continue
         plans[part] = candidates
@@ -276,18 +283,19 @@ def plan_unit_bounds(
 
 
 def compact_partition(
-    spark: SparkSession,
-    table_path: str,
+    table,
+    schema,
     partition: str,
-    input_rel_paths: list[str],
+    inputs: list[dict],
     job_id: str,
     bounds: list[int],
-    read_ddl: str,
     curve: str = "zorder",
 ) -> tuple[list[str], list[dict]]:
-    """Rewrite one partition's victim files into len(bounds)+1 files cut
-    at ``bounds`` (from :func:`plan_unit_bounds`); returns (new relative
-    paths, their manifest stats entries).
+    """Rewrite one partition's victim files (manifest entries) into
+    len(bounds)+1 files cut at ``bounds`` (from
+    :func:`plan_unit_bounds`); returns (new relative paths, their
+    manifest stats entries). The inputs are read under their deletion
+    vectors, so the outputs hold only live rows and carry no DV.
 
     The routed, ``_zkey``-sorted frame goes through the one data writer
     (:func:`manifest.write_data_files`) with ``source`` as a literal:
@@ -298,19 +306,16 @@ def compact_partition(
     resolve files through the manifest, so they are invisible until the
     final snapshot commit.
 
-    ``read_ddl`` (the table schema + _zkey) makes mixed-schema rewrites
-    safe: files predating an evolved column read it as NULL instead of
-    the reader inferring one arbitrary file's footer and silently
-    dropping the column from the compacted output.
+    ``schema`` (the table's live schema) makes mixed-schema rewrites
+    safe: files predating an evolved column read it as its default
+    instead of the reader inferring one arbitrary file's footer and
+    silently dropping the column from the compacted output.
     """
+    from hoopstat_haus_spark.lakehouse.table import read_touched  # table imports this module
+
+    spark = table.spark
     n_out = len(bounds) + 1
-    df = (
-        spark.read.option("basePath", os.path.join(table_path, "data"))
-        .schema(read_ddl)
-        .parquet(*[os.path.join(table_path, p) for p in input_rel_paths])
-        .drop("source", "_zkey")
-    )
-    df = with_zkey(df, curve=curve)
+    df = with_zkey(read_touched(table, schema, inputs).drop("source"), curve=curve)
     if n_out > 1:
         b_arr = F.array(*[F.lit(int(b)) for b in bounds])
         bucket = F.aggregate(
@@ -329,8 +334,8 @@ def compact_partition(
     # of the job may still be writing under .staging/<job_id>/
     return mf.write_data_files(
         df.withColumn("source", F.lit(partition)),
-        table_path,
-        os.path.join(table_path, ".staging", job_id, partition),
+        table.path,
+        os.path.join(table.path, ".staging", job_id, partition),
         f"compact-{job_id}",
         curve=curve,
     )

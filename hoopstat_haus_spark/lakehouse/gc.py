@@ -1,10 +1,12 @@
 """Reachability GC: delete files no retained snapshot can reach.
 
 Expiry (snapshots.py) only drops snapshot records; this pass walks the
-remaining snapshots → their manifests → their file sets, and removes
-anything on disk outside that reachable set (orphans from crashed jobs
-included). The two-phase split means a crash between expire and GC can
-only leave garbage, never dangle a reference.
+remaining snapshots → their manifests → their file sets (every entry's
+data file AND its deletion vector), and removes anything on disk
+outside that reachable set (orphans from crashed jobs included — a DV
+or data file written before a commit that never landed). The two-phase
+split means a crash between expire and GC can only leave garbage, never
+dangle a reference.
 
 Concurrent-writer safety (Iceberg's orphan-file rules):
 
@@ -91,6 +93,8 @@ def collect_garbage(
             reachable_manifests.add(rec["path"])
             for e in mf.read_shard(table_path, rec):
                 reachable_data.add(e["file_path"])
+                if e["dv_path"]:
+                    reachable_data.add(e["dv_path"])
     reachable_data |= _checkpoint_protected(table_path)
     # live write-audit-publish batches: staged but not yet published
     # files have no snapshot referencing them, yet an audit may run

@@ -15,6 +15,21 @@ Manifest row schema:
     min_n_tok / max_n_tok      int
     zmin / zmax  long     (Z-order key range; -1 when file is unclustered)
     file_bytes   long
+    dv_path      string   (the file's deletion vector; null when it has none)
+    dv_rows / dv_tokens  long  (rows the DV deletes and their n_tok sum)
+
+``row_count`` and ``token_count`` stay PHYSICAL (what the file holds);
+the live counts are those minus ``dv_rows``/``dv_tokens``
+(:func:`live_rows`). An entry written before deletion vectors existed
+has no ``dv_*`` fields and counts as DV-free.
+
+Deletion vectors (Delta Lake's DV protocol, Iceberg v2 position
+deletes): DELETE, UPDATE and MERGE remove rows by recording their
+positions, never by rewriting the file. A DV is one small parquet of
+sorted int64 ``row_index`` (:func:`write_dv`) next to its data file
+under ``data/source=<s>/``; it holds the file's FULL deleted set, so a
+later delete on the same file writes the union to a new DV file and
+the entry swaps to it. Compaction is the only physical rewriter.
 
 Every data write (create, append, merge, DML, WAP, compaction) goes
 through :func:`write_data_files`: ONE job writes the files and folds
@@ -46,6 +61,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ZKEY_COL = "_zkey"  # kept in data files: parquet footers carry its min/max
+
+# the dv_* fields of a file without a deletion vector (also what an
+# entry written before DVs existed reads as)
+DV_FREE = {"dv_path": None, "dv_rows": 0, "dv_tokens": 0}
+
+
+def live_rows(e: dict) -> int:
+    """Rows of a manifest entry that are not deleted by its DV."""
+    return e["row_count"] - (e.get("dv_rows") or 0)
+
+
+def live_tokens(e: dict) -> int:
+    return e["token_count"] - (e.get("dv_tokens") or 0)
 
 
 def _file_bytes(table_path: str, rel_paths: list[str]) -> dict[str, int]:
@@ -206,6 +234,7 @@ def compute_file_stats(
         d["file_path"] = rel
         d["file_bytes"] = sizes[rel]
         d["zq_curve"] = zq_curve
+        d.update(DV_FREE)  # a freshly written file has no deletion vector
         out.append(d)
     return out
 
@@ -518,10 +547,41 @@ def write_data_files(
         new_rel.append(rel)
         e = {k: v for k, v in r.items() if k not in ("pid", "dir", "file_name")}
         e["zq"] = [int(z) for z in r["zq"]] or None
-        e.update(file_path=rel, file_bytes=os.path.getsize(dst), zq_curve=zq_curve)
+        e.update(file_path=rel, file_bytes=os.path.getsize(dst), zq_curve=zq_curve, **DV_FREE)
         entries.append(e)
     shutil.rmtree(staging, ignore_errors=True)
     return new_rel, entries
+
+
+def write_dv(table_path: str, entry: dict, positions) -> str:
+    """Write the FULL deleted-position set of ``entry``'s data file as a
+    new DV parquet (one int64 ``row_index`` column, sorted) next to the
+    data file, tmp + rename; returns its table-relative path. Every
+    write gets a fresh name, so a DV an older snapshot references is
+    never overwritten — it becomes garbage only when that snapshot
+    expires, and GC's data-dir walk and young-file guard cover it."""
+    import numpy as np
+
+    stem = os.path.splitext(entry["file_path"])[0]
+    rel = f"{stem}.dv-{uuid.uuid4().hex[:12]}.parquet"
+    abs_path = os.path.join(table_path, rel)
+    pq.write_table(
+        pa.table({"row_index": pa.array(np.asarray(positions, dtype=np.int64))}),
+        abs_path + ".tmp",
+    )
+    os.replace(abs_path + ".tmp", abs_path)
+    return rel
+
+
+def read_dv(table_path: str, entry: dict):
+    """The sorted deleted positions of ``entry``'s data file (an empty
+    int64 array when it has no DV)."""
+    import numpy as np
+
+    if not entry.get("dv_path"):
+        return np.empty(0, dtype=np.int64)
+    tbl = pq.read_table(os.path.join(table_path, entry["dv_path"]), columns=["row_index"])
+    return tbl.column(0).to_numpy()
 
 
 _MANIFEST_FIELDS = [
@@ -543,6 +603,11 @@ _MANIFEST_FIELDS = [
     # which curve the zq sketch (and stored _zkey) was computed with;
     # null for pre-tag manifests (planner treats as unsketched)
     ("zq_curve", pa.string()),
+    # the file's deletion vector (module docstring); absent in shards
+    # written before DVs, which read_shard fills with DV_FREE
+    ("dv_path", pa.string()),
+    ("dv_rows", pa.int64()),
+    ("dv_tokens", pa.int64()),
 ]
 MANIFEST_ARROW_SCHEMA = pa.schema(_MANIFEST_FIELDS)
 
@@ -561,18 +626,21 @@ MANIFEST_ARROW_SCHEMA = pa.schema(_MANIFEST_FIELDS)
 def shard_record(partition: str, rel_path: str, entries: list[dict]) -> dict:
     """List-file record: exact per-shard aggregates so planners can skip
     reading shards that cannot contain work — the candidate test in
-    plan_compaction (undersized / oversized / unclustered file exists)
-    and scan pruning (source, n_tok range) evaluate EXACTLY on these."""
+    plan_compaction (undersized / oversized / unclustered / DV'd file
+    exists) and scan pruning (source, n_tok range) evaluate EXACTLY on
+    these. ``row_count``/``token_count`` are LIVE (deletion vectors
+    subtracted), so the snapshot summary's ``rows`` is the live count."""
     return {
         "partition": partition,
         "path": rel_path,
         "n_files": len(entries),
-        "row_count": int(sum(e["row_count"] for e in entries)),
-        "token_count": int(sum(e["token_count"] for e in entries)),
+        "row_count": int(sum(live_rows(e) for e in entries)),
+        "token_count": int(sum(live_tokens(e) for e in entries)),
         "file_bytes": int(sum(e["file_bytes"] for e in entries)),
         "min_file_bytes": int(min(e["file_bytes"] for e in entries)),
         "max_file_bytes": int(max(e["file_bytes"] for e in entries)),
         "n_unclustered": sum(1 for e in entries if e["zmin"] < 0),
+        "n_dv_files": sum(1 for e in entries if e.get("dv_rows")),
         "min_n_tok": int(min(e["min_n_tok"] for e in entries)),
         "max_n_tok": int(max(e["max_n_tok"] for e in entries)),
     }
@@ -581,7 +649,9 @@ def shard_record(partition: str, rel_path: str, entries: list[dict]) -> dict:
 def _write_shard(table_path: str, partition: str, entries: list[dict]) -> dict:
     os.makedirs(os.path.join(table_path, "_manifests"), exist_ok=True)
     rel = f"_manifests/shard-{uuid.uuid4().hex[:12]}.parquet"
-    cols = {name: [e.get(name) for e in entries] for name, _ in _MANIFEST_FIELDS}
+    cols = {
+        name: [e.get(name, DV_FREE.get(name)) for e in entries] for name, _ in _MANIFEST_FIELDS
+    }
     pq.write_table(
         pa.Table.from_pydict(cols, schema=MANIFEST_ARROW_SCHEMA),
         os.path.join(table_path, rel),
@@ -621,8 +691,14 @@ def read_manifest_list(table_path: str, rel_path: str) -> list[dict]:
 
 
 def read_shard(table_path: str, record: dict) -> list[dict]:
-    """Entries of one shard record."""
-    return pq.read_table(os.path.join(table_path, record["path"])).to_pylist()
+    """Entries of one shard record (a shard written before deletion
+    vectors reads as DV-free)."""
+    tbl = pq.read_table(os.path.join(table_path, record["path"]))
+    rows = tbl.to_pylist()
+    if "dv_rows" not in tbl.column_names:
+        for r in rows:
+            r.update(DV_FREE)
+    return rows
 
 
 def diff_partition_entries(table_path: str, old_manifest: str, new_manifest: str):
@@ -682,12 +758,6 @@ def summary_from_records(records: list[dict]) -> dict:
         "bytes": int(sum(r["file_bytes"] for r in records)),
         "partitions": len(records),
     }
-
-
-def manifest_files(table_path: str, rel_path: str) -> list[str]:
-    """Every metadata file a manifest rel reaches (itself + its shards)
-    — the GC reachability set for manifests."""
-    return [rel_path] + [r["path"] for r in read_manifest_list(table_path, rel_path)]
 
 
 def read_manifest(table_path: str, rel_path: str) -> list[dict]:

@@ -1,4 +1,4 @@
-"""MERGE INTO: partition-pruned, manifest-pruned copy-on-write rewrite.
+"""MERGE INTO: partition-pruned, manifest-pruned, by deletion vectors.
 
 Reference ancestor: quarantine replay — patch a payload, overwrite the
 single bronze object addressed by (entity, date, game_id), re-derive the
@@ -13,10 +13,14 @@ object that holds the key" to Iceberg MERGE semantics:
 Scale design (SURVEY.md §7.5): the full table is NEVER joined. Candidate
 files are chosen by joining the (small) update set against the manifest's
 per-file [min_doc_id, max_doc_id] ranges within matching `source`
-partitions — a broadcast of metadata, not data. Only candidate files are
-read and rewritten; the join inside them broadcasts the update side so
-the 4 KB token arrays of the target never shuffle. Untouched files are
-carried into the new manifest by reference.
+partitions — a broadcast of metadata, not data. ONE match pass reads the
+candidate files (under their deletion vectors) and hash-joins them with
+the broadcast update side, so the 4 KB token arrays of the target never
+shuffle. No data file is rewritten: every matched row — upserted or
+deleted — gets a deletion vector (``delete.commit_dvs``), and the
+upserts' new versions plus the inserts go out in ONE fused write of just
+those rows. Untouched files are carried into the new manifest by
+reference.
 """
 
 from __future__ import annotations
@@ -27,33 +31,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
+from hoopstat_haus_spark.lakehouse.delete import (
+    avg_row_bytes,
+    collect_hits,
+    commit_dvs,
+    write_new_rows,
+)
 from hoopstat_haus_spark.lakehouse.health import job_record
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite, read_touched
-from hoopstat_haus_spark.lakehouse.zorder import with_zkey
+from hoopstat_haus_spark.lakehouse.table import POS_FILE, POS_ROW, TokenLakeTable, read_touched
 
 OP_COL = "_op"  # optional in updates: 'upsert' (default) | 'delete'
-
-INSERT_TARGET_FILE_BYTES = 128 << 20
 
 # Snapshot-summary keys the merge commit computes itself; summary_extra
 # must not shadow them (history()/metadata readers trust the aggregates).
 _RESERVED_SUMMARY_KEYS = frozenset(
     {"files", "rows", "tokens", "bytes", "partitions",
-     "job_id", "rewritten_files", "new_files", "schema_version"}
+     "job_id", "dv_files", "new_files", "schema_version"}
 )
 
 
-def _avg_row_bytes(records: list[dict]) -> int:
-    """Observed bytes/row from the manifest LIST's per-shard aggregates
-    (no shard parquet is read; fallback 1 KiB)."""
-    rows = sum(r["row_count"] for r in records)
-    return max(1, sum(r["file_bytes"] for r in records) // rows) if rows else 1024
-
-
 def _candidate_files(spark: SparkSession, entries: list[dict], updates: DataFrame) -> list[dict]:
-    """Manifest ∩ updates on (partition, doc_id range) → files to rewrite."""
+    """Manifest ∩ updates on (partition, doc_id range) → files to match."""
     man = spark.createDataFrame(
         [(e["file_path"], e["partition"], e["min_doc_id"], e["max_doc_id"]) for e in entries],
         schema="file_path string, partition string, min_doc_id string, max_doc_id string",
@@ -138,11 +138,11 @@ def _merge_run(
         ).alias(f["name"])
         for f in schema.fields
     ]
-    # cache the projected update set: four downstream actions consume it
-    # (dup probe, candidate-file pruning, the CoW rewrite join, the
-    # matched-keys anti-join for inserts) and re-deriving the feed each
-    # time re-runs its upstream plan. The dup probe below doubles as the
-    # cache materializer (full aggregation, no limit short-circuit).
+    # cache the projected update set: three downstream actions consume
+    # it (the probe, candidate-file pruning, the match pass) and
+    # re-deriving the feed each time re-runs its upstream plan. The probe
+    # below doubles as the cache materializer (full aggregation, no limit
+    # short-circuit).
     updates = updates.select(*proj, F.col(OP_COL)).persist()
     try:
         return _merge_apply(
@@ -159,17 +159,19 @@ def _merge_apply(
 ):
     spark = table.spark
     # ONE materializing aggregate: populates the persisted cache, probes
-    # for duplicate keys (max per-key count), yields the feed row count,
+    # for duplicate keys (max per-key count), counts the rows the merge
+    # will write (every non-delete feed row is an upsert or an insert),
     # AND the feed's distinct partitions (which decide the manifest
-    # shards to read) — previously the dup probe and a later
-    # updates.count() were two separate jobs over the feed (serial
-    # seconds weigh 4× in the N→4N efficiency; see BENCH.md)
+    # shards to read)
     probe = (
         updates.groupBy("doc_id", "source")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.coalesce(F.col(OP_COL), F.lit("upsert")) != "delete", 1)).alias("w"),
+        )
         .agg(
             F.max("n").alias("max_n"),
-            F.sum("n").cast("long").alias("n_rows"),
+            F.sum("w").cast("long").alias("n_new"),
             F.collect_set("source").alias("feed_parts"),
         )
         .collect()[0]
@@ -199,99 +201,85 @@ def _merge_apply(
     }
     touched_entries = [e for es in shard_entries.values() for e in es]
     cand = _candidate_files(spark, touched_entries, updates)
-    cand_paths = [e["file_path"] for e in cand]
-    metrics.files_in = len(cand_paths)
+    metrics.files_in = len(cand)
     metrics.bytes_in = sum(e["file_bytes"] for e in cand)
     metrics.partitions = len({e["partition"] for e in cand})
 
     u = updates.alias("u")
-    fresh: list[dict] = []
-    if cand_paths:
-        t = read_touched(table, schema, cand_paths).alias("t")
-        joined = t.join(F.broadcast(u), ["doc_id", "source"], "left_outer")
-        survivors = joined.filter(
-            (F.col(f"u.{OP_COL}").isNull()) | (F.col(f"u.{OP_COL}") != "delete")
-        ).select(
-            F.col("doc_id"),
-            *[
-                F.coalesce(F.col(f"u.{f['name']}"), F.col(f"t.{f['name']}"))
-                .cast(f["type"])
-                .alias(f["name"])
-                for f in value_cols
-            ],
-            F.col("source"),
-        )
-        survivors = with_zkey(survivors, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
-        fresh = table._write_files(
-            survivors, f"merge-{job_id}", repartition_n=None, curve=curve
-        )
-
-        matched_keys = (
-            t.join(F.broadcast(u.select("doc_id", "source")), ["doc_id", "source"], "left_semi")
-            .select("doc_id", "source")
-        )
-    else:
-        matched_keys = spark.createDataFrame([], schema="doc_id string, source string")
-
-    inserts = (
-        u.filter(F.col(OP_COL) != "delete")
-        .join(matched_keys, ["doc_id", "source"], "left_anti")
-        .select(*schema.names())
-    )
-    inserts = schema.apply_defaults(inserts).persist()
+    # feed rows that insert: the non-deletes, less the matched keys below
+    new_rows = u.filter(F.col(OP_COL) != "delete")
+    hits: list[dict] = []
+    matched = None
     try:
-        # Size the insert write to the ACTUAL insert count, not the
-        # whole feed: a mostly-upsert feed with a handful of new rows
-        # must not fan those few inserts across feed-sized partitions
-        # (up to 256 tiny files — MERGE must not undo compaction). The
-        # count materializes the persisted insert set (one skinny
-        # semi-join scan of candidate files); the write below then reads
-        # the cache instead of re-running the anti-join, so the file
-        # scan count is unchanged.
-        n_ins = inserts.count()
-        if n_ins:
-            row_bytes = _avg_row_bytes(records)
-            n_ins_parts = max(1, min(256, -(-n_ins * row_bytes // INSERT_TARGET_FILE_BYTES)))
-            # hash on (source, doc-salt), not source alone: hashing only
-            # source caps non-empty partitions at the distinct-source
-            # count, so a big single-source backfill would sort+write as
-            # ONE task/file no matter what n_ins_parts says. The salt
-            # spreads within each source; the partitionBy('source')
-            # write still splits files per source per task.
-            salt = F.pmod(F.xxhash64("doc_id"), F.lit(int(n_ins_parts)))
-            sized = inserts.repartition(int(n_ins_parts), "source", salt)
-            sized = with_zkey(sized, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
-            fresh += table._write_files(
-                sized, f"insert-{job_id}", repartition_n=None, curve=curve
+        if cand:
+            # the ONE match pass: candidate files (under their DVs) ⋈ the
+            # broadcast feed. Cached because two actions read it — the
+            # DV positions collect and the write — while it holds only
+            # the matched rows, so the candidate files are scanned once.
+            t = read_touched(table, schema, cand, with_pos=True).alias("t")
+            matched = (
+                t.join(F.broadcast(u), ["doc_id", "source"], "inner")
+                .select(
+                    F.col("doc_id"),
+                    F.col("source"),
+                    F.col(f"t.{POS_FILE}").alias(POS_FILE),
+                    F.col(f"t.{POS_ROW}").alias(POS_ROW),
+                    F.col("t.n_tok").alias("n_tok"),  # the target's: DV token count
+                    F.col(f"u.{OP_COL}").alias(OP_COL),
+                    # a feed NULL (e.g. an evolved column the feed lacks)
+                    # keeps the target's value
+                    *[
+                        F.coalesce(F.col(f"u.{f['name']}"), F.col(f"t.{f['name']}"))
+                        .cast(f["type"])
+                        .alias(f"_new_{f['name']}")
+                        for f in value_cols
+                    ],
+                )
+                .persist()
+            )
+            hits = collect_hits(matched, cand)
+            new_rows = new_rows.join(
+                matched.select("doc_id", "source"), ["doc_id", "source"], "left_anti"
+            )
+        new_rows = schema.apply_defaults(new_rows.select(*schema.names()))
+        if matched is not None:
+            upserts = matched.filter(F.coalesce(F.col(OP_COL), F.lit("upsert")) != "delete")
+            new_rows = upserts.select(
+                *[
+                    c if c in ("doc_id", "source") else F.col(f"_new_{c}").alias(c)
+                    for c in schema.names()
+                ]
+            ).unionByName(new_rows)
+        # matched upserts and inserts: ONE fused write, sized from the probe
+        fresh = []
+        if probe["n_new"]:
+            # row width from the manifest LIST's per-shard aggregates
+            row_bytes = avg_row_bytes(records)
+            fresh = write_new_rows(
+                table, new_rows, probe["n_new"], row_bytes, f"merge-{job_id}", curve
             )
     finally:
-        inserts.unpersist()
+        if matched is not None:
+            matched.unpersist()
 
-    # stats came back from the write jobs themselves (fused writer) —
-    # no re-read of the new files
-    metrics.files_out = len(fresh)
-    metrics.bytes_out = sum(e["file_bytes"] for e in fresh)
+    # stats came back from the write job itself (fused writer) — no
+    # re-read of the new files
     metrics.rows = sum(e["row_count"] for e in fresh)
     metrics.tokens = sum(e["token_count"] for e in fresh)
-    # new shards only for partitions that actually changed (a rewritten
-    # file or a fresh output); everything else rides by reference.
+    # new shards only for partitions that actually changed (a DV'd file
+    # or a fresh output); everything else rides by reference.
     # summary_extra overlap with the commit's own keys is rejected at
     # entry, so history() never sees clobbered aggregates
-    snap = commit_rewrite(
+    snap = commit_dvs(
         table,
-        head,
         "merge",
-        cand,
-        fresh,
-        {
-            "job_id": job_id,
-            "rewritten_files": len(cand_paths),
-            "new_files": len(fresh),
-            **(summary_extra or {}),
-        },
+        head,
+        hits,
         # a feed partition new to the table starts empty: every touched
         # partition is in shards, so the commit re-reads no manifest
-        shards={p: [] for p in feed_parts} | shard_entries,
+        {p: [] for p in feed_parts} | shard_entries,
+        fresh,
+        {"job_id": job_id, **(summary_extra or {})},
+        metrics,
     )
-    metrics.snapshot_id = snap.snapshot_id
     return snap, metrics

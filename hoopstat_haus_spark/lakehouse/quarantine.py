@@ -120,12 +120,6 @@ def read_quarantine(table: TokenLakeTable) -> DataFrame:
 # -------------------------------------------------- fix transforms (M7)
 
 
-def fix_identity(df: DataFrame) -> DataFrame:
-    """Reference Identity transform: replay unchanged (for rows that
-    were quarantined by a since-fixed validator bug)."""
-    return df
-
-
 def fix_recount(df: DataFrame) -> DataFrame:
     """Repair length_mismatch: trust the array, recompute n_tok."""
     return df.withColumn("n_tok", F.size("tokens").cast("int"))
@@ -211,10 +205,3 @@ def replay(
     # names once they age past min_age_s).
     return {"replayed": total, "resolved": resolved, "still_failed": still_failed}
 
-
-def summarize_quarantine(table: TokenLakeTable) -> DataFrame:
-    """Counts by error classification (reference quarantine summary,
-    ``quarantine.py:320-372``)."""
-    return read_quarantine(table).groupBy("_error_class").agg(F.count(F.lit(1)).alias("n")).orderBy(
-        "_error_class"
-    )

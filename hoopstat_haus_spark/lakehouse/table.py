@@ -19,6 +19,12 @@ manifest entries and swap the snapshot pointer through it. Only the
 metadata-only commits (``evolve_schema``, ``rollback``) reuse an
 existing manifest and call ``SnapshotLog.commit`` directly.
 
+``read_touched`` (module level) is THE reader of table data files:
+scan, the DML find passes, MERGE, the change feed, WAP audits and
+compaction all read manifest entries through it, and it applies each
+file's deletion vector (manifest.py). The only other readers are the
+compaction bounds sampler and the ``compute_file_stats`` test oracle.
+
 Scale bound — scan path list: a full-table ``scan()`` materializes every
 surviving file path driver-side into one ``parquet(*paths)`` call. At the
 target 10^6-file scale that is ~10^8 bytes of path strings — the same
@@ -32,6 +38,15 @@ memory grows with files *selected*, never files *on disk*. Beyond
 ``parquet()`` reads behind a ``unionByName`` — each relation's
 InMemoryFileIndex then holds one chunk's paths instead of the full list,
 and Spark unions the scans (filters/pruning push into every branch).
+
+Scale bound — deletion vectors: a read of files that carry DVs loads
+their deleted positions driver-side into ONE Arrow-backed local
+relation (three columns per deleted row) that the scan anti-joins by
+broadcast: no Spark job reads a DV file, and the broadcast collects the
+driver-held relation in one single-task job. The manifest gives the
+size before any DV file is opened: Σ ``dv_rows`` over the selected
+files, ~30 bytes per deleted row. Compaction is what bounds it — a DV'd
+file is a rewrite candidate, and its output carries no DV.
 """
 
 from __future__ import annotations
@@ -223,6 +238,8 @@ class TokenLakeTable:
     ) -> DataFrame:
         """One row per live data file with its manifest stats (the zq
         planning sketch is dropped — inspect via ``manifest_entries``).
+        ``row_count``/``token_count`` are physical; ``dv_rows`` of them
+        are deleted by the file's deletion vector.
         ``sources`` prunes at shard level BEFORE any shard is opened,
         same as ``scan``; an unfiltered call materializes O(files) rows
         through the driver — the same footprint as ``manifest_entries``
@@ -247,12 +264,13 @@ class TokenLakeTable:
             "zmax",
             "file_bytes",
             "zq_curve",
+            "dv_rows",
         )
         return self.spark.createDataFrame(
             [tuple(e.get(c) for c in cols) for e in entries],
             "file_path string, partition string, row_count long, token_count long, "
             "min_doc_id string, max_doc_id string, min_n_tok int, max_n_tok int, "
-            "zmin long, zmax long, file_bytes long, zq_curve string",
+            "zmin long, zmax long, file_bytes long, zq_curve string, dv_rows long",
         )
 
     def scan(
@@ -310,34 +328,11 @@ class TokenLakeTable:
             entries = [e for e in entries if e["min_n_tok"] <= n_tok_max]
         if not entries:
             return self.spark.createDataFrame([], schema=schema.ddl())
-        paths = [os.path.join(self.path, e["file_path"]) for e in entries]
-
-        # explicit expected schema: files older than an evolved column
-        # read it as NULL (then its default applies) instead of the
-        # reader inferring a random file's footer on mixed-schema scans
-        def read_chunk(chunk: list[str]) -> DataFrame:
-            return (
-                self.spark.read.option("basePath", self.data_dir)
-                .schema(schema.ddl(extra=((mf.ZKEY_COL, "long"),)))
-                .parquet(*chunk)
-            )
-
-        if len(paths) <= SCAN_PATHS_CHUNK:
-            df = read_chunk(paths)
-        else:
-            # huge selections: cap each relation's file-index size; the
-            # union of scans plans the same physical reads and every
-            # filter below pushes into each branch
-            df = read_chunk(paths[:SCAN_PATHS_CHUNK])
-            for i in range(SCAN_PATHS_CHUNK, len(paths), SCAN_PATHS_CHUNK):
-                df = df.unionByName(read_chunk(paths[i : i + SCAN_PATHS_CHUNK]))
-        df = schema.apply_defaults(df)
+        df = read_touched(self, schema, entries, keep_zkey=include_zkey)
         if n_tok_min is not None:
             df = df.filter(F.col("n_tok") >= n_tok_min)
         if n_tok_max is not None:
             df = df.filter(F.col("n_tok") <= n_tok_max)
-        if not include_zkey and mf.ZKEY_COL in df.columns:
-            df = df.drop(mf.ZKEY_COL)
         return df
 
     # ------------------------------------------- maintenance: compaction
@@ -405,9 +400,9 @@ class TokenLakeTable:
         # Exact shard-level prefilter mirroring plan_compaction's
         # candidate test: a partition can hold a rewrite candidate only
         # if its smallest file is undersized, its largest oversized, or
-        # it contains unclustered files — all exact aggregates in the
-        # manifest list, so a well-compacted partition's shard is never
-        # even opened (O(touched) planning, not O(all files)).
+        # it contains unclustered or DV'd files — all exact aggregates in
+        # the manifest list, so a well-compacted partition's shard is
+        # never even opened (O(touched) planning, not O(all files)).
         want = set(sources) if sources is not None else None
         cand_records = [
             r
@@ -417,6 +412,7 @@ class TokenLakeTable:
                 r["min_file_bytes"] < policy.min_file_bytes
                 or r["max_file_bytes"] > policy.max_file_bytes
                 or r["n_unclustered"] > 0
+                or r.get("n_dv_files", 0) > 0
             )
         ]
         shard_entries = {r["partition"]: mf.read_shard(self.path, r) for r in cand_records}
@@ -434,20 +430,20 @@ class TokenLakeTable:
             removed.extend(inputs)
             metrics.files_in += len(inputs)
             metrics.bytes_in += sum(f["file_bytes"] for f in inputs)
-            metrics.rows += sum(f["row_count"] for f in inputs)
-            metrics.tokens += sum(f["token_count"] for f in inputs)
+            metrics.rows += sum(mf.live_rows(f) for f in inputs)
+            metrics.tokens += sum(mf.live_tokens(f) for f in inputs)
             metrics.partitions += 1
             # reuse a finished unit only if it rewrote exactly the inputs
-            # planned against THIS head: a commit since the crash (e.g. a
-            # DELETE) changes them, and stale outputs would resurrect the
-            # rows it removed. A re-run overwrites the stale outputs under
-            # the same deterministic names.
-            if part in done and set(done[part]["input_files"]) == {f["file_path"] for f in inputs}:
+            # planned against THIS head, DVs included: a commit since the
+            # crash (e.g. a DELETE) changes them, and stale outputs would
+            # resurrect the rows it removed. A re-run overwrites the stale
+            # outputs under the same deterministic names.
+            if part in done and set(done[part]["input_files"]) == set(_input_files(inputs)):
                 fresh.extend(done[part]["output_stats"])
             else:
                 pending.append((part, inputs))
 
-        read_ddl = self.schema_def().ddl(extra=((mf.ZKEY_COL, "long"),))
+        schema = self.schema_def()
         unit_bounds: dict[str, list[int]] = {}
         if pending:
             unit_bounds = plan_unit_bounds(
@@ -463,7 +459,7 @@ class TokenLakeTable:
             )
 
         def _run_unit(part: str, inputs: list[dict]) -> list[dict]:
-            in_paths = [f["file_path"] for f in inputs]
+            in_paths = _input_files(inputs)
             t0 = time.time()
             ckpt.intent(part, in_paths)
             # stats come back from the SAME job that writes the files
@@ -472,21 +468,20 @@ class TokenLakeTable:
             # boundaries (the serial tail costs 4x in N->4N scaling) and
             # ~GB-scale less read I/O per cycle
             out, stats = compact_partition(
-                self.spark,
-                self.path,
+                self,
+                schema,
                 part,
-                in_paths,
+                inputs,
                 job_id,
                 bounds=unit_bounds[part],
-                read_ddl=read_ddl,
                 curve=cb.get(part, curve),
             )
             ckpt.done(
                 part,
                 in_paths,
                 out,
-                rows=sum(f["row_count"] for f in inputs),
-                tokens=sum(f["token_count"] for f in inputs),
+                rows=sum(mf.live_rows(f) for f in inputs),
+                tokens=sum(mf.live_tokens(f) for f in inputs),
                 duration_s=time.time() - t0,
                 output_stats=stats,
             )
@@ -559,12 +554,12 @@ class TokenLakeTable:
         condition,
         job_id: str | None = None,
         sources: list[str] | None = None,
-        curve: str = "zorder",
     ):
-        """Predicate DELETE (copy-on-write; see lakehouse/delete.py)."""
+        """Predicate DELETE by deletion vectors: writes no data file
+        (see lakehouse/delete.py)."""
         from hoopstat_haus_spark.lakehouse.delete import delete_where
 
-        return delete_where(self, condition, job_id=job_id, sources=sources, curve=curve)
+        return delete_where(self, condition, job_id=job_id, sources=sources)
 
     # ------------------------------------------- maintenance: row update
     def update_where(
@@ -575,7 +570,8 @@ class TokenLakeTable:
         sources: list[str] | None = None,
         curve: str = "zorder",
     ):
-        """Predicate UPDATE SET (copy-on-write; see lakehouse/update.py)."""
+        """Predicate UPDATE SET: a deletion vector on the matched rows
+        plus a write of only their new versions (see lakehouse/update.py)."""
         from hoopstat_haus_spark.lakehouse.update import update_where
 
         return update_where(
@@ -591,11 +587,17 @@ class TokenLakeTable:
 
     # -------------------------------------- incremental planning (M8)
     def changed_partitions_since(self, snapshot_id: int) -> dict[str, dict]:
-        """Snapshot-diff: which partitions gained/lost files since
+        """Snapshot-diff: which partitions gained/lost rows since
         ``snapshot_id`` — the engine's incremental-discovery primitive
         (reference analog: lookback-window freshness checks,
         ``apps/gold-analytics/app/s3_discovery.py:240-314``). Downstream
         jobs re-derive ONLY these partitions instead of rescanning.
+
+        A file kept on both sides whose deletion vector changed counts
+        like ``changes.changed_files`` counts it: as removed when its DV
+        grew (a DELETE adds and removes no file), as added when it
+        shrank (a rollback past a delete); ``row_delta`` moves by the
+        DV's row change, so a DV-only commit reports −Δ``dv_rows``.
 
         Shard-aware: a partition whose manifest shard is carried by
         reference between the two snapshots (same shard path) is skipped
@@ -612,11 +614,15 @@ class TokenLakeTable:
             for path, e in new_files.items():
                 if path not in old_files:
                     d["added_files"] += 1
-                    d["row_delta"] += e["row_count"]
+                    d["row_delta"] += mf.live_rows(e)
             for path, e in old_files.items():
                 if path not in new_files:
                     d["removed_files"] += 1
-                    d["row_delta"] -= e["row_count"]
+                    d["row_delta"] -= mf.live_rows(e)
+                elif new_files[path]["dv_rows"] != e["dv_rows"]:
+                    grown = new_files[path]["dv_rows"] - e["dv_rows"]
+                    d["removed_files" if grown > 0 else "added_files"] += 1
+                    d["row_delta"] -= grown
             if d["added_files"] or d["removed_files"]:
                 out[part] = d
         return out
@@ -689,6 +695,11 @@ class TokenLakeTable:
         )
 
 
+def _input_files(inputs: list[dict]) -> list[str]:
+    """A compaction unit's input identity for its checkpoint: the data
+    files and the DVs they are read under."""
+    return [f["file_path"] for f in inputs] + [f["dv_path"] for f in inputs if f.get("dv_path")]
+
 
 def commit_rewrite(
     table: TokenLakeTable,
@@ -734,15 +745,96 @@ def commit_rewrite(
     )
 
 
-def read_touched(table: TokenLakeTable, schema: TableSchema, paths: list[str]) -> DataFrame:
-    """Full-row read of exactly the listed table-relative data files
-    under ``schema`` (explicit read schema, ``_zkey`` dropped, evolved
-    columns' defaults applied) — the one file-list reader behind DML
-    rewrites, MERGE, the change feed and WAP audits."""
-    df = (
-        table.spark.read.option("basePath", table.data_dir)
-        .schema(schema.ddl(extra=((mf.ZKEY_COL, "long"),)))
-        .parquet(*[os.path.join(table.path, p) for p in paths])
-        .drop(mf.ZKEY_COL)
-    )
+# position columns of a ``read_touched(..., with_pos=True)`` frame: with
+# ``source`` they key a row to its (partition, data file, row_index)
+POS_FILE = "_pos_file"
+POS_ROW = "_pos_row"
+_POS_KEYS = ["source", POS_FILE, POS_ROW]
+
+
+def _positions(table: TokenLakeTable, rows_by_entry: list[tuple[dict, object]]) -> DataFrame:
+    """(source, file name, row_index) of every (entry, row positions)
+    pair, loaded driver-side into ONE Arrow-backed local relation (a
+    ``LocalTableScan``: no Spark job reads the positions)."""
+    import pyarrow as pa
+
+    parts = []
+    for e, rows in rows_by_entry:
+        parts.append(
+            pa.table(
+                {
+                    "source": pa.repeat(pa.scalar(e["partition"], pa.string()), len(rows)),
+                    POS_FILE: pa.repeat(
+                        pa.scalar(os.path.basename(e["file_path"]), pa.string()), len(rows)
+                    ),
+                    POS_ROW: pa.array(rows, pa.int64()),
+                }
+            )
+        )
+    return table.spark.createDataFrame(pa.concat_tables(parts))
+
+
+def read_touched(
+    table: TokenLakeTable,
+    schema: TableSchema,
+    entries: list[dict],
+    keep_zkey: bool = False,
+    with_pos: bool = False,
+) -> DataFrame:
+    """THE reader of table data files: the rows of exactly the listed
+    manifest entries under ``schema`` (explicit read schema, so a file
+    older than an evolved column reads it as NULL and then its default;
+    ``_zkey`` dropped unless ``keep_zkey``). ``with_pos`` adds the
+    ``POS_FILE``/``POS_ROW`` columns the DML find passes collect.
+
+    DV-free files are one plain parquet relation — at most
+    ``SCAN_PATHS_CHUNK`` paths each, unioned beyond that. Files with a
+    deletion vector are read with ``_metadata.row_index`` and broadcast
+    anti-joined on (source, file name, row_index) against their DVs'
+    positions (``_positions``; the module docstring bounds its size).
+    An entry carrying ``pick_rows`` (the change feed's DV delta) is
+    instead read at exactly those positions, by semi-join."""
+    ddl = schema.ddl(extra=((mf.ZKEY_COL, "long"),))
+
+    def read(es: list[dict], pos: bool) -> DataFrame:
+        paths = [os.path.join(table.path, e["file_path"]) for e in es]
+        out = None
+        for i in range(0, len(paths), SCAN_PATHS_CHUNK):
+            df = (
+                table.spark.read.option("basePath", table.data_dir)
+                .schema(ddl)
+                .parquet(*paths[i : i + SCAN_PATHS_CHUNK])
+            )
+            if pos:
+                df = df.select(
+                    "*",
+                    F.col("_metadata.file_name").alias(POS_FILE),
+                    F.col("_metadata.row_index").alias(POS_ROW),
+                )
+            out = df if out is None else out.unionByName(df)
+        return out
+
+    plain = [e for e in entries if "pick_rows" not in e and not e.get("dv_rows")]
+    deleted = [e for e in entries if "pick_rows" not in e and e.get("dv_rows")]
+    picked = [e for e in entries if "pick_rows" in e]
+    frames = []
+    if plain:
+        frames.append(read(plain, with_pos))
+    if deleted:
+        dvs = _positions(table, [(e, mf.read_dv(table.path, e)) for e in deleted])
+        frames.append(read(deleted, True).join(F.broadcast(dvs), _POS_KEYS, "left_anti"))
+    if picked:
+        keep = _positions(table, [(e, e["pick_rows"]) for e in picked])
+        frames.append(read(picked, True).join(F.broadcast(keep), _POS_KEYS, "left_semi"))
+    if not frames:
+        return table.spark.createDataFrame([], schema=schema.ddl())
+    # the joins put their keys first: restore the schema's column order
+    cols = schema.names()
+    if keep_zkey:
+        cols.append(mf.ZKEY_COL)
+    if with_pos:
+        cols += [POS_FILE, POS_ROW]
+    df = frames[0].select(*cols)
+    for f in frames[1:]:
+        df = df.unionByName(f.select(*cols))
     return schema.apply_defaults(df)

@@ -1,22 +1,23 @@
-"""UPDATE SET ... WHERE: predicate update as a file-pruned CoW rewrite.
+"""UPDATE SET ... WHERE: predicate update by deletion vector + new rows.
 
 Completes the row-level DML trio (MERGE ``merge.py``, DELETE
 ``delete.py``, UPDATE here) with Iceberg ``UPDATE`` semantics: rows
 where the predicate is TRUE get the assignment expressions applied;
-NULL/FALSE rows are carried through byte-identical. Reference ancestor:
+NULL/FALSE rows stay in place, untouched. Reference ancestor:
 the replay engine's fix-and-rewrite path
 (``apps/bronze-ingestion/app/replay.py:425-458``), which patches known
 rows inside the one object holding them — generalized to arbitrary
 predicates and expressions.
 
-Shares DELETE's two-pass scale design (see delete.py's module
-docstring) and its code: pass 1 is ``find_touched_files``, a
-column-pruned find that never reads the token payload and shuffles one
-row per touched FILE; pass 2 is ``rewrite_touched``, which reads only
-the touched files, applies the assignments under ``CASE WHEN pred``
-(the projection built here), re-clusters and commits through
-``table.commit_rewrite``. Untouched files — including in touched
-partitions — are carried into the new manifest by reference, so
+Shares DELETE's design (see delete.py's module docstring) and its code:
+pass 1 is ``find_touched_files``, a column-pruned find through the
+DV-aware reader that never reads the token payload and collects one
+row per touched FILE; pass 2 reads only the touched files' MATCHED rows,
+applies the assignments (the projection built here) and writes just
+those new versions through the fused writer (``write_new_rows``); the
+commit (``commit_dvs``) puts a deletion vector on the matched positions
+of every touched file. No existing data file is rewritten, and every
+untouched file is carried into the new manifest by reference, so
 manifest I/O stays O(touched partitions).
 
 Invariants enforced here:
@@ -39,15 +40,22 @@ import uuid
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hoopstat_haus_spark.lakehouse.delete import find_touched_files, rewrite_touched
+from hoopstat_haus_spark.lakehouse.delete import (
+    avg_row_bytes,
+    commit_dvs,
+    find_touched_files,
+    write_new_rows,
+)
 from hoopstat_haus_spark.lakehouse.health import job_record
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 
-# UPDATE commits inside delete.rewrite_touched; commit_rewrite stays a
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, read_touched
+
+# UPDATE commits inside delete.commit_dvs; commit_rewrite stays a
 # module attribute here because maintbench/tracer.py wraps it by name
 # in both DML modules
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite  # noqa: F401
+from hoopstat_haus_spark.lakehouse.table import commit_rewrite  # noqa: F401
 
 _PROTECTED = ("doc_id", "source")
 
@@ -65,8 +73,9 @@ def update_where(
     ``assignments`` maps column name → Column or SQL expression string
     evaluated over the OLD row (standard UPDATE semantics: all
     right-hand sides see pre-update values, so ``{"a": "b", "b": "a"}``
-    swaps). Returns ``(snapshot, metrics)``; snapshot is None when the
-    predicate matched nothing.
+    swaps). ``curve`` names the space-filling curve the new row versions
+    are keyed with. Returns ``(snapshot, metrics)``; snapshot is None
+    when the predicate matched nothing.
     """
     job_id = job_id or f"update-{uuid.uuid4().hex[:10]}"
     with job_record(table.path, "update", job_id) as metrics:
@@ -105,9 +114,7 @@ def _update_run(
     if not cand:
         return None, metrics
 
-    # ---- pass 2: rewrite touched files with CASE WHEN assignments ------
-    hit = F.coalesce(pred, F.lit(False))
-
+    # ---- pass 2: new versions of exactly the matched rows --------------
     def assign(target: DataFrame) -> DataFrame:
         # Two-step projection so every RHS sees OLD values (standard
         # UPDATE swap semantics). A single select that re-aliases
@@ -116,16 +123,13 @@ def _update_run(
         # new values under reserved `__new_*` names keeps all RHS
         # references on the input attributes. Catalyst collapses the
         # pair back into one Project.
-        staged = target.select(
-            "*",
-            *[F.when(hit, assigns[c]).otherwise(F.col(c)).alias(f"__new_{c}") for c in assigns],
-        )
+        staged = target.select("*", *[assigns[c].alias(f"__new_{c}") for c in assigns])
 
         # auto-recounted n_tok reads size(__new_tokens), NOT a copy of
         # the tokens expression: the double reference to a non-cheap
         # staged column blocks CollapseProject from re-inlining it
         # (plan-verified), so the assignment expression evaluates ONCE
-        # per matched row — duplicating it would double the rewrite's
+        # per matched row — duplicating it would double the write's
         # dominant per-row cost.
         def _out(c: str) -> Column:
             if c == "n_tok" and auto_ntok:
@@ -139,18 +143,15 @@ def _update_run(
         # DOUBLE found)
         return schema.conform(staged.select(*[_out(c).alias(c) for c in names]))
 
-    return rewrite_touched(
-        table,
-        "update",
-        head,
-        cand,
-        shard_entries,
-        assign,
-        curve,
-        metrics,
-        {
-            "job_id": job_id,
-            "matched_rows": matched_rows,
-            "assigned_columns": sorted(set(assigns) | ({"n_tok"} if auto_ntok else set())),
-        },
+    # the touched files read under their OLD DVs: pred matches exactly
+    # the rows pass 1 found
+    matched = read_touched(table, schema, cand).filter(pred)
+    fresh = write_new_rows(
+        table, assign(matched), matched_rows, avg_row_bytes(cand), f"update-{job_id}", curve
     )
+    summary = {
+        "job_id": job_id,
+        "matched_rows": matched_rows,
+        "assigned_columns": sorted(set(assigns) | ({"n_tok"} if auto_ntok else set())),
+    }
+    return commit_dvs(table, "update", head, cand, shard_entries, fresh, summary, metrics), metrics

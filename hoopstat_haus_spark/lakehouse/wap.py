@@ -117,7 +117,7 @@ def scan_staged(table: TokenLakeTable, ref: str) -> DataFrame:
     of the WHOLE table-after is ``table.scan().unionByName(this)``."""
     rec = _read_staged(table.path, ref)
     schema = read_schema(table.path, rec["schema_version"])
-    return read_touched(table, schema, [e["file_path"] for e in rec["entries"]])
+    return read_touched(table, schema, rec["entries"])
 
 
 def _finish_published(table: TokenLakeTable, ref: str, snap: Snapshot) -> Snapshot:

@@ -39,23 +39,8 @@ def _spread2(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def _spread3(x: np.ndarray) -> np.ndarray:
-    """Dilate 21 bits with two 0s between consecutive bits."""
-    x = x & np.uint64(0x1FFFFF)
-    x = (x | (x << np.uint64(32))) & np.uint64(0x001F00000000FFFF)
-    x = (x | (x << np.uint64(16))) & np.uint64(0x001F0000FF0000FF)
-    x = (x | (x << np.uint64(8))) & np.uint64(0x100F00F00F00F00F)
-    x = (x | (x << np.uint64(4))) & np.uint64(0x10C30C30C30C30C3)
-    x = (x | (x << np.uint64(2))) & np.uint64(0x1249249249249249)
-    return x
-
-
 def morton2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return _spread2(a) | (_spread2(b) << np.uint64(1))
-
-
-def morton3(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    return _spread3(a) | (_spread3(b) << np.uint64(1)) | (_spread3(c) << np.uint64(2))
 
 
 # ---------------------------------------------------------------- hilbert

@@ -78,21 +78,6 @@ def plan_mixture_from_table(table, budgets: dict[str, int]) -> dict[str, int]:
     return _thresholds({r["partition"]: r["token_count"] for r in recs}, budgets)
 
 
-def mixed_corpus_from_table(table, budgets: dict[str, int], salt: str = "mix") -> DataFrame:
-    """The sampled corpus of a lakehouse table: manifest-planned
-    thresholds applied to ``table.scan()`` restricted to the budgeted
-    partitions (shard-level manifest pruning skips the rest's metadata
-    and files entirely)."""
-    thresholds = plan_mixture_from_table(table, budgets)
-    keep = sorted(s for s, t in thresholds.items() if t > 0)
-    if not keep:  # nothing budgeted: constant-false folds to an empty relation
-        return table.scan().filter(F.lit(False))
-    gate = F.lit(0).cast("long")
-    for source in keep:
-        gate = F.when(F.col("source") == source, F.lit(thresholds[source])).otherwise(gate)
-    return table.scan(sources=keep).filter(_u32_hash(salt) < gate)
-
-
 def mixed_corpus(
     tokens_df: DataFrame,
     budgets: dict[str, int],
@@ -111,27 +96,6 @@ def mixed_corpus(
     for source, thr in sorted(thresholds.items()):
         gate = F.when(F.col("source") == source, F.lit(thr)).otherwise(gate)
     return tokens_df.filter(_u32_hash(salt) < gate)
-
-
-def mixing_report(tokens_df: DataFrame, budgets: dict[str, int], salt: str = "mix") -> DataFrame:
-    """(source, total_tokens, budget, kept_docs, kept_tokens) — what the
-    mixture actually achieved; kept_tokens ≈ budget within sampling
-    error (a build log line, like PipelineReport's stage counts)."""
-    kept = source_token_totals(mixed_corpus(tokens_df, budgets, salt)).select(
-        "source",
-        F.col("n_docs").alias("kept_docs"),
-        F.col("total_tokens").alias("kept_tokens"),
-    )
-    b = F.lit(0).cast("long")
-    for source, budget in sorted(budgets.items()):
-        b = F.when(F.col("source") == source, F.lit(int(budget))).otherwise(b)
-    return (
-        source_token_totals(tokens_df)
-        .select("source", "total_tokens", b.alias("budget"))
-        .join(kept, "source", "left")
-        .fillna(0, ["kept_docs", "kept_tokens"])
-        .orderBy("source")
-    )
 
 
 def with_split(
@@ -182,15 +146,6 @@ def with_split(
         .withColumn(col_name, expr.otherwise(F.lit(None).cast("string")))
         .drop("_split_h")
     )
-
-
-def split_corpus(
-    df: DataFrame, fractions: dict[str, float], salt: str = "split"
-) -> dict[str, DataFrame]:
-    """{split_name: DataFrame} — the filtered views of :func:`with_split`
-    (each a stateless filter over the input; no materialization)."""
-    tagged = with_split(df, fractions, salt)
-    return {name: tagged.filter(F.col("split") == name).drop("split") for name in fractions}
 
 
 def mixed_corpus_sql(thresholds: dict[str, int], salt: str, tok_inner: str) -> str:

@@ -14,11 +14,13 @@ Subcommands:
               compacts only partitions changed since that snapshot,
               --sources a,b restricts to named partitions)
     merge     MERGE INTO from an updates parquet path
-    delete    DELETE FROM ... WHERE <sql predicate> (file-pruned CoW;
-              GDPR-style row removal — only files holding a match are
-              rewritten, the rest carry by reference)
-    update    UPDATE ... SET col=expr WHERE <sql predicate> (same
-              file-pruned CoW find/rewrite as delete; RHS sees OLD row)
+    delete    DELETE FROM ... WHERE <sql predicate> (deletion vectors:
+              only files holding a match get one, no data file is
+              written; the next compaction of those partitions removes
+              the rows from disk — run it for GDPR-style erasure)
+    update    UPDATE ... SET col=expr WHERE <sql predicate> (same find
+              pass as delete; DVs + one write of the new row versions;
+              RHS sees OLD row)
     changes   row-level net change feed between two snapshots
               (insert/update/delete classification; optional --out
               parquet for downstream incremental consumers)

@@ -4,7 +4,7 @@
 DELETE is verified the same way every other maintenance op is: token-sig
 equality of the survivors against the filtered pre-state, snapshot
 isolation of the pre-delete state, and carried-by-reference proof that
-only predicate-touched files were rewritten.
+only predicate-touched files got a deletion vector.
 
 The change feed is verified by REPLAY: applying the emitted changes to
 the FROM state must reproduce the TO state exactly, and pure physical
@@ -71,13 +71,14 @@ def test_delete_where_rows_and_isolation(table):
         else:
             assert post_list[part] == path
 
-    # file pruning within the partition: only files whose doc_id range
-    # could hold a match were rewritten
-    pre_web = {e["file_path"] for e in table.manifest_entries(pre_snap)
+    # file pruning within the partition: only files holding a match got
+    # a DV; no data file was written or dropped
+    pre_web = {e["file_path"]: e["dv_path"] for e in table.manifest_entries(pre_snap)
                if e["partition"] == "web"}
-    post_web = {e["file_path"] for e in table.manifest_entries()
+    post_web = {e["file_path"]: e["dv_path"] for e in table.manifest_entries()
                 if e["partition"] == "web"}
-    assert metrics.files_in == len(pre_web - post_web)
+    assert set(post_web) == set(pre_web)
+    assert metrics.files_in == sum(1 for p, dv in post_web.items() if dv != pre_web[p])
 
 
 def test_delete_where_no_match_commits_nothing(table):
@@ -97,8 +98,8 @@ def test_delete_where_null_predicate_rows_survive(table):
     post = sig_map(table.scan())
     assert set(pre) - set(post) == {some_id}
     assert snap.summary["matched_rows"] == 1
-    # file-level pruning: one doc lives in one file — exactly one rewrite
-    assert snap.summary["rewritten_files"] == 1
+    # file-level pruning: one doc lives in one file — exactly one DV
+    assert snap.summary["dv_files"] == 1
 
 
 def test_changes_after_merge_replays_exactly(table, spark):
@@ -185,7 +186,7 @@ def test_changes_shard_aware_single_partition(table, spark):
     merge_into(table, upd)
     added, removed = changed_files(table, from_id, table.log.current_id())
     assert added and removed
-    assert all("source=code/" in p for p in added + removed)
+    assert all("source=code/" in e["file_path"] for e in added + removed)
 
 
 def test_changes_across_schema_evolution(table, spark):
@@ -291,9 +292,9 @@ def test_changes_classify_join_shuffles_no_payload(spark, tmp_path):
         ch.explain("formatted")
     assert "Scan parquet" not in buf.getvalue()
 
-    # two-sided diff (delete rewrites files): the full plan now contains
-    # the phase-2 fetch; with the changed-key set broadcast, NO Exchange
-    # anywhere may carry the tokens payload
+    # a DELETE's diff is the DV delta of the files it touched: the plan
+    # now scans those rows; with only position sets broadcast, NO
+    # Exchange anywhere may carry the tokens payload
     from_id2 = t.log.current_id()
     t.delete_where(f"{NUM} % 500 = 3")
     ch2 = table_changes(t, from_id2)

@@ -170,8 +170,7 @@ def test_resume_skips_completed_units(spark, tmp_table_dir):
     # simulate a crash: one unit completed, no snapshot committed
     ck = JobCheckpoint(t.path, "job-x")
     ck.intent(part, in_paths)
-    ddl = t.schema_def().ddl(extra=(("_zkey", "long"),))
-    out, _stats = compact_partition(spark, t.path, part, in_paths, "job-x", bounds=[], read_ddl=ddl)
+    out, _stats = compact_partition(t, t.schema_def(), part, plans[part], "job-x", bounds=[])
     ck.done(part, in_paths, out, rows=1, tokens=1, duration_s=0.0, output_stats=_stats)
     assert t.log.current_id() == 1  # crash left readers untouched
 
@@ -198,8 +197,7 @@ def test_resume_reruns_unit_whose_inputs_changed(spark, tmp_table_dir):
     # crash after one unit finished: checkpointed done, nothing committed
     ck = JobCheckpoint(t.path, "job-z")
     ck.intent(part, in_paths)
-    ddl = t.schema_def().ddl(extra=(("_zkey", "long"),))
-    out, stats = compact_partition(spark, t.path, part, in_paths, "job-z", bounds=[], read_ddl=ddl)
+    out, stats = compact_partition(t, t.schema_def(), part, plans[part], "job-z", bounds=[])
     ck.done(part, in_paths, out, rows=1, tokens=1, duration_s=0.0, output_stats=stats)
 
     victims = [

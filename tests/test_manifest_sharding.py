@@ -118,7 +118,7 @@ def test_gc_walks_manifest_list_and_keeps_carried_shards(spark, tmp_table_dir):
     )
     merge_into(t, ups)
     head_rel = t.log.current().manifest
-    live_meta = set(mf.manifest_files(t.path, head_rel))
+    live_meta = {r["path"] for r in mf.read_manifest_list(t.path, head_rel)}
     carried = {
         compacted_records[p]["path"] for p in compacted_records if p != target
     }
@@ -194,7 +194,7 @@ def test_non_list_manifest_is_rejected(spark, tmp_table_dir):
         os.path.join(t.path, rel),
     )
     t.log.commit(rel, "legacy", {"schema_version": 1})
-    for read in (t.scan, t.manifest_entries, lambda: mf.manifest_files(t.path, rel)):
+    for read in (t.scan, t.manifest_entries, lambda: mf.read_manifest_list(t.path, rel)):
         with pytest.raises(ValueError, match="unsupported manifest format"):
             read()
 

@@ -12,7 +12,6 @@ from hoopstat_haus_spark.tables import from_documents
 from hoopstat_haus_spark.tables.mixing import (
     mixed_corpus,
     mixed_corpus_sql,
-    mixing_report,
     plan_mixture,
     source_token_totals,
 )
@@ -49,14 +48,14 @@ def test_mixing_matches_duckdb(spark, duck):
 def test_mixing_hits_budgets(spark):
     tok = from_documents(spark, SF01_DIR)
     budgets, totals = _budgets(tok, {0: 0.5, 1: 0.25})
-    rep = {r.source: r for r in mixing_report(tok, budgets).collect()}
-    assert set(rep) == set(totals)
+    kept = {
+        r.source: r.total_tokens
+        for r in source_token_totals(mixed_corpus(tok, budgets)).collect()
+    }
     for s, budget in budgets.items():
-        assert abs(rep[s].kept_tokens - budget) / budget < 0.10, (s, rep[s], budget)
-        assert rep[s].budget == budget
+        assert abs(kept[s] - budget) / budget < 0.10, (s, kept[s], budget)
     # unbudgeted sources drop entirely
-    for s in set(totals) - set(budgets):
-        assert rep[s].kept_tokens == 0 and rep[s].kept_docs == 0
+    assert set(kept) == set(budgets) and set(budgets) < set(totals)
 
 
 def test_mixing_full_budget_keeps_everything(spark):
@@ -102,7 +101,7 @@ def test_mixing_gate_is_shuffle_free(spark):
 def test_mixing_plans_from_manifest_metadata(spark, tmp_table_dir):
     from hoopstat_haus_spark.lakehouse import TokenLakeTable
     from hoopstat_haus_spark.tables import synthetic
-    from hoopstat_haus_spark.tables.mixing import mixed_corpus_from_table, plan_mixture_from_table
+    from hoopstat_haus_spark.tables.mixing import plan_mixture_from_table
 
     t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 4000), repartition_n=4)
     totals = {r.source: r.total_tokens for r in source_token_totals(t.scan()).collect()}
@@ -112,18 +111,21 @@ def test_mixing_plans_from_manifest_metadata(spark, tmp_table_dir):
     # manifest token_count rollup IS the per-source total)
     assert plan_mixture_from_table(t, budgets) == plan_mixture(t.scan(), budgets)
 
-    got = mixed_corpus_from_table(t, budgets, "s1")
-    want = mixed_corpus(t.scan(), budgets, "s1").filter(F.col("source").isin("web", "books"))
+    # the manifest-planned gate over a partition-pruned scan keeps the
+    # same docs as the scan-planned gate over the whole table
+    got = mixed_corpus(
+        t.scan(sources=["web", "books"]), budgets, "s1",
+        thresholds=plan_mixture_from_table(t, budgets),
+    )
+    want = mixed_corpus(t.scan(), budgets, "s1")
     assert sorted(r.doc_id for r in got.select("doc_id").collect()) == sorted(
         r.doc_id for r in want.select("doc_id").collect()
     )
-    # unbudgeted: empty without error
-    assert mixed_corpus_from_table(t, {}).count() == 0
 
 
 class TestSplit:
     def test_disjoint_exhaustive_deterministic(self, spark):
-        from hoopstat_haus_spark.tables.mixing import split_corpus, with_split
+        from hoopstat_haus_spark.tables.mixing import with_split
         from hoopstat_haus_spark.tables import synthetic
 
         docs = synthetic(spark, 4000)
@@ -148,10 +150,6 @@ class TestSplit:
             expect = "train" if h < int(0.9 * 2**32) else (
                 "val" if h < int(0.95 * 2**32) else "test")
             assert r["split"] == expect, r
-
-        # split_corpus views are the same partition of the corpus
-        parts = split_corpus(docs, fr)
-        assert sum(v.count() for v in parts.values()) == n
 
     def test_split_stable_under_corpus_growth(self, spark):
         from hoopstat_haus_spark.tables.mixing import with_split

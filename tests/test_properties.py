@@ -7,7 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hoopstat_haus_spark.lakehouse.compaction import CompactionPolicy, plan_compaction
-from hoopstat_haus_spark.lakehouse.zorder import hilbert_index, morton2, morton3
+from hoopstat_haus_spark.lakehouse.zorder import hilbert_index, morton2
 
 MB = 1024 * 1024
 
@@ -24,18 +24,6 @@ def test_morton2_is_injective_and_monotone_on_axes(pairs):
         fixed = b[0]
         ks = morton2(np.sort(a), np.full_like(a, fixed))
         assert (np.diff(ks.astype(np.int64)) >= 0).all()
-
-
-@given(st.integers(0, 0x1FFFFF), st.integers(0, 0x1FFFFF), st.integers(0, 0x1FFFFF))
-def test_morton3_bit_interleaving(a, b, c):
-    key = int(morton3(np.array([a], dtype=np.uint64), np.array([b], dtype=np.uint64), np.array([c], dtype=np.uint64))[0])
-    # de-interleave and check round trip
-    ra = rb = rc = 0
-    for i in range(21):
-        ra |= ((key >> (3 * i)) & 1) << i
-        rb |= ((key >> (3 * i + 1)) & 1) << i
-        rc |= ((key >> (3 * i + 2)) & 1) << i
-    assert (ra, rb, rc) == (a, b, c)
 
 
 @settings(deadline=2000)

@@ -13,7 +13,6 @@ from hoopstat_haus_spark.lakehouse.quarantine import (
     quarantine_batch,
     read_quarantine,
     replay,
-    summarize_quarantine,
     validate_batch,
 )
 from hoopstat_haus_spark.tables import synthetic
@@ -39,6 +38,12 @@ def corrupted_batch(spark):
     return df
 
 
+def by_class(t):
+    """Quarantined row counts per error class."""
+    rows = read_quarantine(t).groupBy("_error_class").agg(F.count(F.lit(1)).alias("n")).collect()
+    return {r["_error_class"]: r["n"] for r in rows}
+
+
 def test_classify_priorities(spark):
     c = classify(corrupted_batch(spark))
     counts = {r["_error_class"]: r["n"] for r in c.groupBy("_error_class").agg(F.count("*").alias("n")).collect()}
@@ -59,7 +64,7 @@ def test_ingest_with_quarantine_then_replay(spark, tmp_table_dir):
     quarantine_batch(t, rejected)
     assert t.scan().count() == n_valid
 
-    summary = {r["_error_class"]: r["n"] for r in summarize_quarantine(t).collect()}
+    summary = by_class(t)
     assert summary[ERROR_LENGTH] == 20 and summary[ERROR_VOCAB] == 10 and summary[ERROR_EMPTY] == 10
 
     # replay fixable classes: length (recount) + vocab (clamp)
@@ -74,7 +79,7 @@ def test_ingest_with_quarantine_then_replay(spark, tmp_table_dir):
     assert max(clamped["tokens"]) < 50257
 
     # empty-sequence rows have no fix: still quarantined (terminal failed)
-    left = {r["_error_class"]: r["n"] for r in summarize_quarantine(t).collect()}
+    left = by_class(t)
     assert left == {ERROR_EMPTY: 10}
 
     # replay is idempotent once resolved

@@ -170,10 +170,10 @@ def test_merge_rejects_duplicate_update_keys(spark, tmp_table_dir):
 
 
 def test_merge_insert_files_sized_to_insert_count(spark, tmp_table_dir):
-    """A mostly-upsert feed with a handful of genuinely-new rows must
-    size the insert write from the INSERT count (post anti-join), not
-    the whole feed — otherwise the few inserts fan out across up to 256
-    salted partitions as tiny files, undoing compaction."""
+    """A mostly-upsert feed with a handful of genuinely-new rows writes
+    its upserts' new versions and its inserts in ONE write sized from
+    the rows it writes — not fanned out across up to 256 salted
+    partitions as tiny files, undoing compaction."""
     from hoopstat_haus_spark.lakehouse.merge import merge_into
 
     t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 4000), repartition_n=4)
@@ -188,10 +188,10 @@ def test_merge_insert_files_sized_to_insert_count(spark, tmp_table_dir):
     merge_into(t, ups.unionByName(news))
     ins_files = [
         e for e in t.manifest_entries()
-        if e["file_path"] not in before and "/insert-" in e["file_path"]
+        if e["file_path"] not in before and "/merge-" in e["file_path"]
     ]
-    n_sources = news.select("source").distinct().count()
-    # sized from 3 inserts → 1 shuffle partition → ≤ one file per source
+    n_sources = ups.unionByName(news).select("source").distinct().count()
+    # sized from 503 rows → 1 shuffle partition → ≤ one file per source
     assert 1 <= len(ins_files) <= n_sources, [e["file_path"] for e in ins_files]
 
 
@@ -225,7 +225,8 @@ def test_lost_race_orphan_shards_are_gc_able(spark, tmp_table_dir):
     report = t.collect_garbage(min_age_s=0.0)
     # the loser's list (and its freshly-written shard) are orphans now
     assert loser_rel in report["removed_manifests"]
-    live = set(mf.manifest_files(t.path, t.log.current().manifest))
+    head_rel = t.log.current().manifest
+    live = {head_rel} | {r["path"] for r in mf.read_manifest_list(t.path, head_rel)}
     for rel in live:
         assert os.path.exists(os.path.join(t.path, rel))
     assert sorted(r["doc_id"] for r in t.scan().select("doc_id").collect()) == pre

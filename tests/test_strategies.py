@@ -77,3 +77,21 @@ def test_changed_partitions_since(spark, tmp_table_dir):
     assert "wiki" in diff
     assert diff["wiki"]["added_files"] >= 1 and diff["wiki"]["removed_files"] >= 1
     assert "books" not in diff or diff["books"]["added_files"] == 0
+
+
+def test_changed_partitions_since_dv_only_commit(spark, tmp_table_dir):
+    """A DELETE adds and removes no file, only deletion vectors: the
+    diff still reports its partitions, each DV'd file as removed and
+    row_delta = −Δdv_rows, so incremental jobs see the change."""
+    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 3000), repartition_n=4)
+    v1 = t.log.current_id()
+    snap, _ = t.delete_where("source = 'wiki' and cast(substr(doc_id, 5) as long) % 5 = 0")
+    dv_files = [e for e in t.manifest_entries() if e["dv_rows"]]
+    diff = t.changed_partitions_since(v1)
+    assert diff == {
+        "wiki": {
+            "added_files": 0,
+            "removed_files": len(dv_files),
+            "row_delta": -snap.summary["matched_rows"],
+        }
+    }

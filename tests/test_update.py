@@ -3,8 +3,8 @@
 Verified the DML way: token-sig equality of updated rows against a
 closed-form expectation, byte-identity of non-matching rows, snapshot
 isolation of the pre-update state, carried-by-reference proof that only
-predicate-touched files were rewritten, and CDC classification of the
-rewrite as pure ``update`` rows.
+predicate-touched files got a deletion vector, and CDC classification
+of the change as pure ``update`` rows.
 """
 
 import pytest
@@ -72,12 +72,17 @@ def test_update_where_values_isolation_and_pruning(table, spark):
     for part, path in pre_list.items():
         assert (post_list[part] != path) == (part == "web")
 
-    # file pruning: only files holding a match were rewritten
-    pre_web = {e["file_path"] for e in table.manifest_entries(pre_snap)
+    # file pruning: only files holding a match got a DV, and the only
+    # new files hold the matched rows' new versions
+    pre_web = {e["file_path"]: e["dv_path"] for e in table.manifest_entries(pre_snap)
                if e["partition"] == "web"}
-    post_web = {e["file_path"] for e in table.manifest_entries()
+    post_web = {e["file_path"]: e for e in table.manifest_entries()
                 if e["partition"] == "web"}
-    assert metrics.files_in == len(pre_web - post_web)
+    assert metrics.files_in == sum(
+        1 for p, dv in pre_web.items() if post_web[p]["dv_path"] != dv
+    )
+    new = [e for p, e in post_web.items() if p not in pre_web]
+    assert sum(e["row_count"] for e in new) == len(expected_hit)
 
 
 def test_update_cdc_classifies_as_update_with_preimage(table):

@@ -7,7 +7,6 @@ from hoopstat_haus_spark.lakehouse.zorder import (
     _scale_to_bits,
     hilbert_index,
     morton2,
-    morton3,
 )
 
 
@@ -28,13 +27,6 @@ def test_morton2_orders_by_high_bits():
     b = np.array([0, 0, 0, 0], dtype=np.uint64)
     out = morton2(a, b)
     assert list(np.argsort(out)) == [0, 1, 2, 3]
-
-
-def test_morton3_exact():
-    a = np.array([0b1], dtype=np.uint64)
-    b = np.array([0b1], dtype=np.uint64)
-    c = np.array([0b1], dtype=np.uint64)
-    assert morton3(a, b, c)[0] == 0b111
 
 
 def test_hilbert_bijective_on_small_grid():
