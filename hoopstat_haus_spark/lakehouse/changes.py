@@ -43,14 +43,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, read_touched
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, local_frame, read_touched
 
 CHANGE_COL = "_change"
 
 # fetch-join build side: broadcast the changed-key set while it fits
 # comfortably under the session's 32 MB autoBroadcast threshold
 # (~60 B/key); past that the payload side shuffles once (sort-merge),
-# which is the scale-correct fallback for a table-wide churn diff
+# which is the scale-correct fallback for a table-wide churn diff.
+# (The DV positions a read applies switch from an IN predicate to a
+# broadcast join at a much smaller count, table.DV_PREDICATE_MAX: an IN
+# list is parsed and planned per key, a broadcast side is not.)
 BROADCAST_KEYS_MAX = 500_000
 
 
@@ -118,10 +121,10 @@ def table_changes(
     value_names = [c for c in names if c not in ("doc_id", "source")]
     empty_ddl = schema.ddl() + f", {CHANGE_COL} string"
     if from_id == to_id:
-        return table.spark.createDataFrame([], schema=empty_ddl)
+        return local_frame(table.spark, empty_ddl)
     added, removed = changed_files(table, from_id, to_id)
     if not added and not removed:
-        return table.spark.createDataFrame([], schema=empty_ddl)
+        return local_frame(table.spark, empty_ddl)
 
     def labeled(df: DataFrame, kinds: F.Column) -> DataFrame:
         return df.select(*names, kinds.alias(CHANGE_COL))
@@ -193,7 +196,7 @@ def table_changes(
         ]
     parts = [p for p in parts if p is not None]
     if not parts:
-        return table.spark.createDataFrame([], schema=empty_ddl)
+        return local_frame(table.spark, empty_ddl)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse.changes import CHANGE_COL, table_changes
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, local_frame
 from hoopstat_haus_spark.tables.token_table import token_sig
 
 _PART_COL = "_part"
@@ -239,7 +239,5 @@ class DigestIndex:
             parts = {s: p for s, p in parts.items() if s in sources}
         dirs = [os.path.join(self.root, rel) for rel in sorted(parts.values())]
         if not dirs:
-            return self.table.spark.createDataFrame(
-                [], schema="doc_id string, source string, sig string"
-            )
+            return local_frame(self.table.spark, "doc_id string, source string, sig string")
         return self.table.spark.read.parquet(*dirs).select("doc_id", "source", "sig")

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse.changes import CHANGE_COL, table_changes
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, local_frame
 
 _MEASURES = ("n_docs", "sum_n_tok", "sum_tok_checksum")
 
@@ -125,6 +125,8 @@ class IncrementalRollup:
         if st is None:
             raise ValueError("view never refreshed")
         data = [(s, *vals) for s, vals in sorted(st["rows"].items())]
-        return self.table.spark.createDataFrame(
-            data, schema="source string, n_docs long, sum_n_tok long, sum_tok_checksum long"
+        return local_frame(
+            self.table.spark,
+            "source string, n_docs long, sum_n_tok long, sum_tok_checksum long",
+            list(zip(*data)),
         )

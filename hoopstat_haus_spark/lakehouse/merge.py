@@ -10,24 +10,32 @@ object that holds the key" to Iceberg MERGE semantics:
     WHEN MATCHED                       THEN UPDATE (tokens, n_tok)
     WHEN NOT MATCHED AND NOT delete    THEN INSERT
 
-Scale design (SURVEY.md §7.5): the full table is NEVER joined. Candidate
-files are chosen by joining the (small) update set against the manifest's
-per-file [min_doc_id, max_doc_id] ranges within matching `source`
-partitions — a broadcast of metadata, not data. ONE match pass reads the
-candidate files (under their deletion vectors) and hash-joins them with
-the broadcast update side, so the 4 KB token arrays of the target never
-shuffle. No data file is rewritten: every matched row — upserted or
-deleted — gets a deletion vector (``delete.commit_dvs``), and the
-upserts' new versions plus the inserts go out in ONE fused write of just
-those rows. Untouched files are carried into the new manifest by
-reference.
+A missing or NULL ``_op`` upserts.
+
+Scale design (SURVEY.md §7.5): the full table is NEVER joined. MERGE
+plans driver-side from ONE Arrow collect of the feed's (doc_id, source,
+_op) — the feed the match pass broadcasts whole anyway, so its keys are
+driver-sized. That collect materializes the cached feed, checks for
+duplicate keys, sizes the write, names the partitions whose manifest
+shards are read, and picks the candidate files: a file of a feed
+partition is a candidate iff one of that partition's feed keys falls in
+its [min_doc_id, max_doc_id] (one bisect per file, no Spark job). ONE
+match pass reads the candidate files (under their deletion vectors) and
+hash-joins them with the broadcast update side, so the 4 KB token arrays
+of the target never shuffle. No data file is rewritten: every matched
+row — upserted or deleted — gets a deletion vector
+(``delete.commit_dvs``), and the upserts' new versions plus the inserts
+go out in ONE fused write of just those rows. Untouched files are
+carried into the new manifest by reference.
 """
 
 from __future__ import annotations
 
+import bisect
 import uuid
+from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
@@ -42,7 +50,7 @@ from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 from hoopstat_haus_spark.lakehouse.table import POS_FILE, POS_ROW, TokenLakeTable, read_touched
 
-OP_COL = "_op"  # optional in updates: 'upsert' (default) | 'delete'
+OP_COL = "_op"  # optional in updates: 'upsert' (default, also for NULL) | 'delete'
 
 # Snapshot-summary keys the merge commit computes itself; summary_extra
 # must not shadow them (history()/metadata readers trust the aggregates).
@@ -52,29 +60,32 @@ _RESERVED_SUMMARY_KEYS = frozenset(
 )
 
 
-def _candidate_files(spark: SparkSession, entries: list[dict], updates: DataFrame) -> list[dict]:
-    """Manifest ∩ updates on (partition, doc_id range) → files to match."""
-    man = spark.createDataFrame(
-        [(e["file_path"], e["partition"], e["min_doc_id"], e["max_doc_id"]) for e in entries],
-        schema="file_path string, partition string, min_doc_id string, max_doc_id string",
-    )
-    # no .distinct(): the semi-join only tests existence, and dedup would
-    # cost a full shuffle stage over the update feed just to shrink an
-    # already-broadcast-sized build side
-    keys = updates.select("doc_id", "source")
-    hit = (
-        man.join(
-            F.broadcast(keys),
-            (man.partition == keys.source)
-            & (keys.doc_id >= man.min_doc_id)
-            & (keys.doc_id <= man.max_doc_id),
-            "left_semi",
-        )
-        .select("file_path")
-        .collect()
-    )
-    paths = {r["file_path"] for r in hit}
-    return [e for e in entries if e["file_path"] in paths]
+def _keys_by_part(keys: list[tuple[str | None, str | None]]) -> dict[str, list[str]]:
+    """Feed (doc_id, source) keys → partition → sorted doc_ids. A key
+    with a NULL half is left out: it matches no file, as in SQL."""
+    out: dict[str, list[str]] = {}
+    for doc_id, source in keys:
+        if doc_id is not None and source is not None:
+            out.setdefault(source, []).append(doc_id)
+    for ks in out.values():
+        ks.sort()
+    return out
+
+
+def _candidate_files(entries: list[dict], keys_by_part: dict[str, list[str]]) -> list[dict]:
+    """The entries whose [min_doc_id, max_doc_id] holds a feed key of
+    their partition (``keys_by_part``: partition → sorted doc_ids): one
+    bisect per file, driver-side."""
+    out = []
+    for e in entries:
+        keys = keys_by_part.get(e["partition"])
+        lo, hi = e["min_doc_id"], e["max_doc_id"]
+        if not keys or lo is None or hi is None:
+            continue
+        i = bisect.bisect_left(keys, lo)
+        if i < len(keys) and keys[i] <= hi:
+            out.append(e)
+    return out
 
 
 def merge_into(
@@ -124,8 +135,8 @@ def _merge_run(
 
     schema = table.schema_def()
     value_cols = [f for f in schema.fields if f["name"] not in ("doc_id", "source")]
-    if OP_COL not in updates.columns:
-        updates = updates.withColumn(OP_COL, F.lit("upsert"))
+    # one _op per row: a missing or NULL _op upserts
+    op = F.col(OP_COL) if OP_COL in updates.columns else F.lit(None)
     # project onto the live schema, keeping _op: evolved columns absent
     # from the update feed become NULL → the coalesce below keeps the
     # target's value (an explicit NULL overwrite is not expressible —
@@ -138,12 +149,11 @@ def _merge_run(
         ).alias(f["name"])
         for f in schema.fields
     ]
-    # cache the projected update set: three downstream actions consume
-    # it (the probe, candidate-file pruning, the match pass) and
-    # re-deriving the feed each time re-runs its upstream plan. The probe
-    # below doubles as the cache materializer (full aggregation, no limit
-    # short-circuit).
-    updates = updates.select(*proj, F.col(OP_COL)).persist()
+    # cache the projected update set: the planning collect below
+    # materializes it, and the match pass and the write read it again
+    updates = updates.select(
+        *proj, F.coalesce(op.cast("string"), F.lit("upsert")).alias(OP_COL)
+    ).persist()
     try:
         return _merge_apply(
             table, updates, job_id, curve, metrics, head, records, schema, value_cols,
@@ -157,39 +167,24 @@ def _merge_apply(
     table, updates, job_id, curve, metrics, head, records, schema, value_cols,
     summary_extra=None,
 ):
-    spark = table.spark
-    # ONE materializing aggregate: populates the persisted cache, probes
-    # for duplicate keys (max per-key count), counts the rows the merge
-    # will write (every non-delete feed row is an upsert or an insert),
-    # AND the feed's distinct partitions (which decide the manifest
-    # shards to read)
-    probe = (
-        updates.groupBy("doc_id", "source")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.coalesce(F.col(OP_COL), F.lit("upsert")) != "delete", 1)).alias("w"),
-        )
-        .agg(
-            F.max("n").alias("max_n"),
-            F.sum("w").cast("long").alias("n_new"),
-            F.collect_set("source").alias("feed_parts"),
-        )
-        .collect()[0]
-    )
-    feed_parts = set(probe["feed_parts"] or [])
-    if (probe["max_n"] or 0) > 1:
-        dup = (
-            updates.groupBy("doc_id", "source")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(1)
-            .collect()
-        )
+    # ONE collect of the feed's keys plans the whole merge driver-side:
+    # the duplicate-key check, the write size, the feed partitions
+    # (which decide the manifest shards to read) and the candidate
+    # files. The feed is broadcast whole in the match pass, so its keys
+    # are driver-sized; the collect is Arrow, so no Python worker runs.
+    feed = updates.select("doc_id", "source", OP_COL).toArrow().to_pydict()
+    keys = list(zip(feed["doc_id"], feed["source"]))
+    if len(set(keys)) < len(keys):
+        # NULLs compare equal here, as in a groupBy
+        doc_id, source = next(k for k, n in Counter(keys).items() if n > 1)
         raise ValueError(
-            f"merge_into: duplicate update key (doc_id={dup[0]['doc_id']!r}, "
-            f"source={dup[0]['source']!r}) — MERGE requires unique (doc_id, source); "
+            f"merge_into: duplicate update key (doc_id={doc_id!r}, "
+            f"source={source!r}) — MERGE requires unique (doc_id, source); "
             "dedupe the update set first"
         )
+    # every non-delete feed row is an upsert or an insert
+    n_new = sum(op != "delete" for op in feed[OP_COL])
+    feed_parts = {s for s in feed["source"] if s is not None}
 
     # read ONLY the feed partitions' manifest shards: untouched
     # partitions never materialize driver-side, so a MERGE into 1 of
@@ -199,8 +194,9 @@ def _merge_apply(
         for r in records
         if r["partition"] in feed_parts
     }
-    touched_entries = [e for es in shard_entries.values() for e in es]
-    cand = _candidate_files(spark, touched_entries, updates)
+    cand = _candidate_files(
+        [e for es in shard_entries.values() for e in es], _keys_by_part(keys)
+    )
     metrics.files_in = len(cand)
     metrics.bytes_in = sum(e["file_bytes"] for e in cand)
     metrics.partitions = len({e["partition"] for e in cand})
@@ -243,20 +239,21 @@ def _merge_apply(
             )
         new_rows = schema.apply_defaults(new_rows.select(*schema.names()))
         if matched is not None:
-            upserts = matched.filter(F.coalesce(F.col(OP_COL), F.lit("upsert")) != "delete")
+            upserts = matched.filter(F.col(OP_COL) != "delete")
             new_rows = upserts.select(
                 *[
                     c if c in ("doc_id", "source") else F.col(f"_new_{c}").alias(c)
                     for c in schema.names()
                 ]
             ).unionByName(new_rows)
-        # matched upserts and inserts: ONE fused write, sized from the probe
+        # matched upserts and inserts: ONE fused write, sized from the
+        # planning collect
         fresh = []
-        if probe["n_new"]:
+        if n_new:
             # row width from the manifest LIST's per-shard aggregates
             row_bytes = avg_row_bytes(records)
             fresh = write_new_rows(
-                table, new_rows, probe["n_new"], row_bytes, f"merge-{job_id}", curve
+                table, new_rows, n_new, row_bytes, f"merge-{job_id}", curve
             )
     finally:
         if matched is not None:

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse.merge import merge_into
-from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
+from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, local_frame
 
 VOCAB_SIZE = 50257
 
@@ -113,7 +113,7 @@ def read_quarantine(table: TokenLakeTable) -> DataFrame:
     if not os.path.isdir(qd) or not any(
         f.endswith(".parquet") for _, _, fs in os.walk(qd) for f in fs
     ):
-        return table.spark.createDataFrame([], schema=_QUARANTINE_DDL)
+        return local_frame(table.spark, _QUARANTINE_DDL)
     return table.spark.read.parquet(qd)
 
 

@@ -39,14 +39,20 @@ memory grows with files *selected*, never files *on disk*. Beyond
 InMemoryFileIndex then holds one chunk's paths instead of the full list,
 and Spark unions the scans (filters/pruning push into every branch).
 
-Scale bound — deletion vectors: a read of files that carry DVs loads
-their deleted positions driver-side into ONE Arrow-backed local
-relation (three columns per deleted row) that the scan anti-joins by
-broadcast: no Spark job reads a DV file, and the broadcast collects the
-driver-held relation in one single-task job. The manifest gives the
-size before any DV file is opened: Σ ``dv_rows`` over the selected
-files, ~30 bytes per deleted row. Compaction is what bounds it — a DV'd
-file is a rewrite candidate, and its output carries no DV.
+Scale bound — deletion vectors: a read of files that carry DVs, or of
+the change feed's picked positions, loads those positions driver-side;
+the manifest gives their count before any DV file is opened (Σ
+``dv_rows`` over the selected files), and no Spark job reads a DV file.
+Up to ``DV_PREDICATE_MAX`` positions are applied by ONE IN predicate
+inside the read's own parquet relation: the plan carries one ~40-byte
+key string per position, and parsing and planning the list costs JVM
+CPU that grows with it (~1.7 s at 10^4 keys, ~7 s at 10^5). Above the
+constant the positions become ONE Arrow-backed local relation (~30
+driver bytes per position) that the same relation outer-joins by
+broadcast, at the price of one single-task job to collect it; the
+constant sits where the two cost the same. Compaction is what bounds
+the count — a DV'd file is a rewrite candidate, and its output carries
+no DV.
 """
 
 from __future__ import annotations
@@ -55,7 +61,8 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
@@ -77,6 +84,14 @@ DATA_COLUMNS = ["doc_id", "tokens", "n_tok", "source"]  # base (schema v1)
 # Max file paths per parquet relation in scan(); larger selections union
 # chunked reads (see the module docstring's scale-bound note).
 SCAN_PATHS_CHUNK = 100_000
+
+# Max selected DV + pick positions a read applies by one IN predicate;
+# above it read_touched broadcast-joins them (module docstring). Where
+# the two cost the same, measured warm on a 4-vCPU host (40k-row table,
+# process-tree CPU per lookup, predicate vs join): 10^3 positions 0.45
+# vs 0.51 s, 2·10^3 0.37 vs 0.47 s, 4·10^3 0.63 vs 0.57 s, 8·10^3 0.79
+# vs 0.53 s.
+DV_PREDICATE_MAX = 2_000
 
 
 class TokenLakeTable:
@@ -213,11 +228,12 @@ class TokenLakeTable:
             )
             for s in (self.log.get(sid) for sid in self.log.list_ids())
         ]
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark,
             "snapshot_id long, parent_id long, committed_ms long, operation string, "
             "rows long, files long, schema_version int, is_current boolean, "
             "tags array<string>",
+            list(zip(*rows)),
         )
 
     def partitions(self, snapshot_id: int | None = None) -> DataFrame:
@@ -225,12 +241,13 @@ class TokenLakeTable:
         O(partitions) metadata, no shard parquet is opened."""
         snap = self.log.get(snapshot_id) if snapshot_id else self.log.current()
         recs = mf.read_manifest_list(self.path, snap.manifest) if snap else []
-        rows = [
-            (r["partition"], r["n_files"], r["row_count"], r["token_count"], r["file_bytes"])
-            for r in recs
-        ]
-        return self.spark.createDataFrame(
-            rows, "partition string, n_files long, rows long, tokens long, bytes long"
+        return local_frame(
+            self.spark,
+            "partition string, n_files long, rows long, tokens long, bytes long",
+            [
+                [r[k] for r in recs]
+                for k in ("partition", "n_files", "row_count", "token_count", "file_bytes")
+            ],
         )
 
     def files(
@@ -266,11 +283,12 @@ class TokenLakeTable:
             "zq_curve",
             "dv_rows",
         )
-        return self.spark.createDataFrame(
-            [tuple(e.get(c) for c in cols) for e in entries],
+        return local_frame(
+            self.spark,
             "file_path string, partition string, row_count long, token_count long, "
             "min_doc_id string, max_doc_id string, min_n_tok int, max_n_tok int, "
             "zmin long, zmax long, file_bytes long, zq_curve string, dv_rows long",
+            [[e.get(c) for e in entries] for c in cols],
         )
 
     def scan(
@@ -327,7 +345,7 @@ class TokenLakeTable:
         if n_tok_max is not None:
             entries = [e for e in entries if e["min_n_tok"] <= n_tok_max]
         if not entries:
-            return self.spark.createDataFrame([], schema=schema.ddl())
+            return local_frame(self.spark, schema.ddl())
         df = read_touched(self, schema, entries, keep_zkey=include_zkey)
         if n_tok_min is not None:
             df = df.filter(F.col("n_tok") >= n_tok_min)
@@ -750,28 +768,41 @@ def commit_rewrite(
 POS_FILE = "_pos_file"
 POS_ROW = "_pos_row"
 _POS_KEYS = ["source", POS_FILE, POS_ROW]
+_POS_HIT = "_pos_hit"
+# the same keys as one SQL string: the file name holds no "/" and the
+# row is digits, so the key is unambiguous whatever the partition value
+_FILE_KEY = f"concat_ws('/', source, {POS_FILE})"
+_ROW_KEY = f"concat_ws('/', source, {POS_FILE}, cast({POS_ROW} as string))"
 
 
-def _positions(table: TokenLakeTable, rows_by_entry: list[tuple[dict, object]]) -> DataFrame:
-    """(source, file name, row_index) of every (entry, row positions)
-    pair, loaded driver-side into ONE Arrow-backed local relation (a
-    ``LocalTableScan``: no Spark job reads the positions)."""
+def local_frame(spark: SparkSession, ddl: str, columns=()) -> DataFrame:
+    """A driver-held frame: ``columns`` (one sequence per ``ddl`` field;
+    empty for no rows) as ONE Arrow-backed local relation. Its plan is a
+    ``LocalTableScan``, so no action over it runs a Python-worker task —
+    ``createDataFrame`` over a Python list plans a Python RDD instead."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
-    parts = []
-    for e, rows in rows_by_entry:
-        parts.append(
-            pa.table(
-                {
-                    "source": pa.repeat(pa.scalar(e["partition"], pa.string()), len(rows)),
-                    POS_FILE: pa.repeat(
-                        pa.scalar(os.path.basename(e["file_path"]), pa.string()), len(rows)
-                    ),
-                    POS_ROW: pa.array(rows, pa.int64()),
-                }
-            )
-        )
-    return table.spark.createDataFrame(pa.concat_tables(parts))
+    struct = _parse_datatype_string(ddl)
+    arrow = to_arrow_schema(struct)
+    columns = columns or [[]] * len(arrow)
+    arrays = [pa.array(c, f.type) for c, f in zip(columns, arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema=struct)
+
+
+def _file_of(entry: dict) -> tuple[str, str]:
+    """(partition, file name): a data file as the position keys name it."""
+    return entry["partition"], os.path.basename(entry["file_path"])
+
+
+def _is_in(key_sql: str, keys) -> Column:
+    """``key_sql IN (keys)`` built in ONE JVM call. Spark turns a long
+    IN list into a hash set, and string literals are bound as
+    references, not inlined into generated code, so a new key set
+    compiles no new code."""
+    lits = ",".join("'" + k.replace("\\", "\\\\").replace("'", "\\'") + "'" for k in keys)
+    return F.expr(f"{key_sql} IN ({lits})")
 
 
 def read_touched(
@@ -787,54 +818,79 @@ def read_touched(
     ``_zkey`` dropped unless ``keep_zkey``). ``with_pos`` adds the
     ``POS_FILE``/``POS_ROW`` columns the DML find passes collect.
 
-    DV-free files are one plain parquet relation — at most
-    ``SCAN_PATHS_CHUNK`` paths each, unioned beyond that. Files with a
-    deletion vector are read with ``_metadata.row_index`` and broadcast
-    anti-joined on (source, file name, row_index) against their DVs'
-    positions (``_positions``; the module docstring bounds its size).
-    An entry carrying ``pick_rows`` (the change feed's DV delta) is
-    instead read at exactly those positions, by semi-join."""
+    Every entry is read through ONE parquet relation per
+    ``SCAN_PATHS_CHUNK`` paths (unioned beyond that). A file with a
+    deletion vector drops its DV's positions; an entry carrying
+    ``pick_rows`` (the change feed's DV delta) keeps exactly those
+    positions. Positions are keyed on (source, ``_metadata.file_name``,
+    ``_metadata.row_index``) and applied in the relation's own stage:
+    up to ``DV_PREDICATE_MAX`` selected positions by one IN predicate
+    per chunk (≈ the key's bytes in the plan, ~40 per position), above
+    it by a broadcast outer join against one Arrow-backed local relation
+    (~30 driver bytes per position, collected by one single-task job).
+    A read with no DV and no pick adds neither and reads no
+    ``_metadata``."""
     ddl = schema.ddl(extra=((mf.ZKEY_COL, "long"),))
+    # (partition, file name) → positions: a picked file keeps them, a
+    # DV'd file drops them
+    marks: dict[tuple[str, str], object] = {}
+    picked: set[tuple[str, str]] = set()
+    for e in entries:
+        key = _file_of(e)
+        if "pick_rows" in e:
+            marks[key] = e["pick_rows"]
+            picked.add(key)
+        elif e.get("dv_rows"):
+            marks[key] = mf.read_dv(table.path, e)
+    by_join = sum(len(rows) for rows in marks.values()) > DV_PREDICATE_MAX
 
-    def read(es: list[dict], pos: bool) -> DataFrame:
-        paths = [os.path.join(table.path, e["file_path"]) for e in es]
-        out = None
-        for i in range(0, len(paths), SCAN_PATHS_CHUNK):
-            df = (
-                table.spark.read.option("basePath", table.data_dir)
-                .schema(ddl)
-                .parquet(*paths[i : i + SCAN_PATHS_CHUNK])
+    def keep(hit: Column, keys) -> Column:
+        """Rows to keep, given ``hit`` (the row's position is marked)
+        over files ``keys``: unmarked and DV'd files keep the rows not
+        hit, picked files the rows hit."""
+        picks = [f"{p}/{n}" for p, n in keys if (p, n) in picked]
+        return F.when(_is_in(_FILE_KEY, picks), hit).otherwise(~hit) if picks else ~hit
+
+    df = None
+    for i in range(0, len(entries), SCAN_PATHS_CHUNK):
+        chunk = entries[i : i + SCAN_PATHS_CHUNK]
+        part = (
+            table.spark.read.option("basePath", table.data_dir)
+            .schema(ddl)
+            .parquet(*[os.path.join(table.path, e["file_path"]) for e in chunk])
+        )
+        if with_pos or marks:
+            # _metadata does not pass through unionByName: select it per chunk
+            part = part.select(
+                "*",
+                F.col("_metadata.file_name").alias(POS_FILE),
+                F.col("_metadata.row_index").alias(POS_ROW),
             )
-            if pos:
-                df = df.select(
-                    "*",
-                    F.col("_metadata.file_name").alias(POS_FILE),
-                    F.col("_metadata.row_index").alias(POS_ROW),
-                )
-            out = df if out is None else out.unionByName(df)
-        return out
-
-    plain = [e for e in entries if "pick_rows" not in e and not e.get("dv_rows")]
-    deleted = [e for e in entries if "pick_rows" not in e and e.get("dv_rows")]
-    picked = [e for e in entries if "pick_rows" in e]
-    frames = []
-    if plain:
-        frames.append(read(plain, with_pos))
-    if deleted:
-        dvs = _positions(table, [(e, mf.read_dv(table.path, e)) for e in deleted])
-        frames.append(read(deleted, True).join(F.broadcast(dvs), _POS_KEYS, "left_anti"))
-    if picked:
-        keep = _positions(table, [(e, e["pick_rows"]) for e in picked])
-        frames.append(read(picked, True).join(F.broadcast(keep), _POS_KEYS, "left_semi"))
-    if not frames:
-        return table.spark.createDataFrame([], schema=schema.ddl())
-    # the joins put their keys first: restore the schema's column order
+        keys = [_file_of(e) for e in chunk if _file_of(e) in marks]
+        if keys and not by_join:
+            hit = _is_in(_ROW_KEY, (f"{p}/{n}/{r}" for p, n in keys for r in marks[(p, n)]))
+            part = part.filter(keep(hit, keys))
+        df = part if df is None else df.unionByName(part)
+    if df is None:
+        return local_frame(table.spark, schema.ddl())
+    if by_join:
+        counts = [len(rows) for rows in marks.values()]
+        hits = local_frame(
+            table.spark,
+            f"source string, {POS_FILE} string, {POS_ROW} long, {_POS_HIT} boolean",
+            [
+                np.repeat(np.array([p for p, _f in marks], dtype=object), counts),
+                np.repeat(np.array([f for _p, f in marks], dtype=object), counts),
+                np.concatenate([np.asarray(rows, np.int64) for rows in marks.values()]),
+                np.ones(sum(counts), dtype=bool),
+            ],
+        )
+        df = df.join(F.broadcast(hits), _POS_KEYS, "left_outer")
+        df = df.filter(keep(F.col(_POS_HIT).isNotNull(), marks))
     cols = schema.names()
     if keep_zkey:
         cols.append(mf.ZKEY_COL)
     if with_pos:
         cols += [POS_FILE, POS_ROW]
-    df = frames[0].select(*cols)
-    for f in frames[1:]:
-        df = df.unionByName(f.select(*cols))
-    return schema.apply_defaults(df)
+    # the join puts its keys first: restore the schema's column order
+    return schema.apply_defaults(df.select(*cols))

@@ -251,3 +251,52 @@ def test_crash_at_commit_leaves_head_and_gc_collects_orphans(spark, tmp_path, mo
     report = t.collect_garbage(min_age_s=0)
     assert set(report["removed_data_files"]) == orphans
     assert data_files(t) >= {e["file_path"] for e in t.manifest_entries()}
+
+
+ODD_SOURCE = "o'b\\c/d%e f"  # a SQL quote, a backslash, a path separator, % and a space
+
+
+@pytest.mark.parametrize("cap", [10**9, 0], ids=["predicate", "join"])
+def test_dv_and_pick_reads_on_both_sides_of_predicate_cap(spark, tmp_path, monkeypatch, cap):
+    """DVs and the change feed's picked positions apply the same way by
+    one IN predicate (at most DV_PREDICATE_MAX positions) and by a
+    broadcast join (above it): on whole, chunked and mixed reads, and on
+    a partition whose name needs SQL and path escaping."""
+    from hoopstat_haus_spark.lakehouse import table as table_mod
+
+    monkeypatch.setattr(table_mod, "DV_PREDICATE_MAX", cap)
+    df = synthetic(spark, 2000).withColumn(
+        "source", F.when(F.expr(f"{NUM} % 4 = 0"), F.lit(ODD_SOURCE)).otherwise(F.col("source"))
+    )
+    t = TokenLakeTable.create(spark, str(tmp_path / "t"), df, repartition_n=4)
+    base_id, pre = t.log.current_id(), sig_map(t.scan())
+    t.delete_where(f"{NUM} % 7 = 3")
+    del_id = t.log.current_id()
+    t.update_where(f"{NUM} % 7 = 4", {"n_tok": "n_tok + 1"})
+    want = {
+        d: (sig, n + (int(d[4:]) % 7 == 4), s) for d, (sig, n, s) in pre.items() if int(d[4:]) % 7 != 3
+    }
+    assert any(s == ODD_SOURCE for _sig, _n, s in want.values())
+    assert sig_map(t.scan()) == want
+    assert sig_map(t.scan(sources=[ODD_SOURCE])) == {
+        d: v for d, v in want.items() if v[2] == ODD_SOURCE
+    }
+    n_del = sum(int(d[4:]) % 7 == 3 for d in pre)
+
+    # picks: a DELETE's feed reads its rows at their positions, the
+    # reverse diff reads them back
+    assert changes_summary(table_changes(t, base_id, del_id)) == {"delete": n_del}
+    assert changes_summary(table_changes(t, del_id, base_id)) == {"insert": n_del}
+    # one relation of picked and whole files: rollback past the delete,
+    # then an append
+    t.rollback(base_id)
+    t.append(synthetic(spark, 2010).filter(F.expr(f"{NUM} >= 2000")))
+    assert changes_summary(table_changes(t, del_id)) == {"insert": n_del + 10}
+
+    monkeypatch.setattr(table_mod, "SCAN_PATHS_CHUNK", 3)
+    assert len(t.manifest_entries()) > 3
+    t.delete_where(f"{NUM} % 5 = 0")
+    assert sig_map(t.scan()) == {
+        **{d: v for d, v in pre.items() if int(d[4:]) % 5},
+        **sig_map(synthetic(spark, 2010).filter(F.expr(f"{NUM} >= 2000 AND {NUM} % 5 != 0"))),
+    }

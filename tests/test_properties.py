@@ -91,3 +91,38 @@ def test_scrub_chain_is_idempotent():
         assert chain(once) == once
 
     check()
+
+
+_DOC = st.one_of(st.none(), st.text(alphabet="ab", min_size=1, max_size=4))
+_PART = st.sampled_from(["p", "q", "new"])
+
+
+@settings(max_examples=300, deadline=None, derandomize=True)
+@given(
+    st.lists(st.tuples(st.sampled_from(["p", "q"]), _DOC, _DOC), max_size=12),
+    st.lists(st.tuples(_DOC, st.one_of(st.none(), _PART)), max_size=20),
+)
+def test_merge_candidate_files_match_interval_test(files, feed):
+    """MERGE's driver-side candidate pick equals the brute-force range
+    test: a file is a candidate iff a non-NULL feed key of its partition
+    lies in [min_doc_id, max_doc_id]. Short strings over two letters put
+    keys in the gaps between files and on their endpoints; NULL halves
+    and a partition new to the table ("new") match nothing."""
+    from hoopstat_haus_spark.lakehouse.merge import _candidate_files, _keys_by_part
+
+    entries = []
+    for i, (p, lo, hi) in enumerate(files):
+        if lo is not None and hi is not None:
+            lo, hi = min(lo, hi), max(lo, hi)
+        entries.append({"file_path": f"f{i}", "partition": p, "min_doc_id": lo, "max_doc_id": hi})
+    want = [
+        e
+        for e in entries
+        if e["min_doc_id"] is not None
+        and e["max_doc_id"] is not None
+        and any(
+            d is not None and s == e["partition"] and e["min_doc_id"] <= d <= e["max_doc_id"]
+            for d, s in feed
+        )
+    ]
+    assert _candidate_files(entries, _keys_by_part(feed)) == want

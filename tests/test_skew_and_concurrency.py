@@ -169,6 +169,25 @@ def test_merge_rejects_duplicate_update_keys(spark, tmp_table_dir):
         merge_into(t, dup)
 
 
+def test_merge_null_op_upserts(spark, tmp_table_dir):
+    """A feed row whose ``_op`` is NULL upserts: a new key lands and a
+    matched key takes the feed's value, like a row without ``_op``."""
+    from hoopstat_haus_spark.lakehouse.merge import merge_into
+
+    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 1000), repartition_n=2)
+    feed = (
+        synthetic(spark, 1002)
+        .filter("doc_id IN ('doc-0000000007', 'doc-0000001001')")
+        .withColumn("tokens", F.expr("transform(tokens, x -> cast(x + 1 as int))"))
+        .withColumn("_op", F.lit(None).cast("string"))
+    )
+    want = {r["doc_id"]: r["tokens"] for r in feed.collect()}
+    merge_into(t, feed)
+    got = t.scan().filter(F.col("doc_id").isin(list(want))).collect()
+    assert {r["doc_id"]: r["tokens"] for r in got} == want
+    assert t.scan().count() == 1001
+
+
 def test_merge_insert_files_sized_to_insert_count(spark, tmp_table_dir):
     """A mostly-upsert feed with a handful of genuinely-new rows writes
     its upserts' new versions and its inserts in ONE write sized from
