@@ -22,15 +22,20 @@ path runs from plan to write:
   curve.
 - **Executor** (:func:`compact_partition`): per `source` partition, ONE
   wide transform: read of the victim files under their deletion
-  vectors (``table.read_touched``) → Z-key →
-  hash routing of each row's Z-range bucket to its own partition
-  (:func:`_route_reps`) → ``sortWithinPartitions(_zkey)`` → parquet
-  write through the one fused writer every data write shares
-  (``manifest.write_data_files``: files and their manifest stats in the
-  same job). Output files get balanced row counts and DISJOINT Z-ranges
-  — that disjointness is what makes manifest zmin/zmax pruning
-  effective. ``TokenLakeTable.compact`` runs the units with AQE off:
-  routing is explicit, so there is nothing to re-plan.
+  vectors (``table.read_touched``) → Z-key → each row's Z-range bucket
+  (``_bucket``) → a write stage sized by bytes, one task per
+  ``manifest.WRITE_TASK_BYTES`` of input (:func:`write_task_count`):
+  contiguous bucket runs hash-route to their task (:func:`_route_reps`),
+  or, for a one-task unit, no shuffle at all →
+  ``sortWithinPartitions(_zkey)`` → parquet write through the one fused
+  writer every data write shares (``manifest.write_data_files``: files
+  and their manifest stats in the same job), which rolls one file per
+  bucket. Every Python writer task costs ~0.2 s of worker CPU whatever
+  its row count, so small units write many files from one task. Output
+  files get balanced row counts and DISJOINT Z-ranges — that
+  disjointness is what makes manifest zmin/zmax pruning effective.
+  ``TokenLakeTable.compact`` runs the units on their own session with
+  AQE off: routing is explicit, so there is nothing to re-plan.
 
 Skew handling: partitions are processed as independent units (hot
 `source` values don't convoy behind cold ones, and each unit saturates
@@ -57,8 +62,8 @@ def _route_reps(spark: SparkSession, n_out: int) -> list[int]:
     """Representative longs r_i with pmod(murmur3_hash(r_i), n_out) == i.
 
     ``df.repartition(n, key)`` hash-routes rows; routing the literal
-    r_bucket therefore lands each Z-range bucket in its OWN partition —
-    range-partitioned output without RangePartitioner's sampling job
+    r_i therefore lands each run of Z-range buckets in its OWN partition
+    i — range-partitioned output without RangePartitioner's sampling job
     (which re-reads full rows, tokens included, with no column pruning:
     the dominant cost of a naive repartitionByRange rewrite)."""
     if n_out in _ROUTE_REPS_CACHE:
@@ -128,6 +133,14 @@ def plan_compaction(entries: list[dict], policy: CompactionPolicy) -> dict[str, 
 
 def output_file_count(total_bytes: int, policy: CompactionPolicy) -> int:
     return max(1, math.ceil(total_bytes / policy.target_file_bytes))
+
+
+def write_task_count(inputs: list[dict], n_out: int) -> int:
+    """Writer tasks of a unit writing ``n_out`` files from ``inputs``:
+    one per ``manifest.WRITE_TASK_BYTES`` of input, at most one per
+    output file. At the default 128 MB target it equals ``n_out``."""
+    total = sum(f["file_bytes"] for f in inputs)
+    return min(n_out, max(1, math.ceil(total / mf.WRITE_TASK_BYTES)))
 
 
 _BOUNDS_MIN_GRID = 256  # percentile points per partition in the bounds scan
@@ -297,14 +310,19 @@ def compact_partition(
     manifest stats entries). The inputs are read under their deletion
     vectors, so the outputs hold only live rows and carry no DV.
 
-    The routed, ``_zkey``-sorted frame goes through the one data writer
-    (:func:`manifest.write_data_files`) with ``source`` as a literal:
-    each task holds one source, so it writes exactly one file, in its
-    sorted order, and its stats come back from the SAME job. Outputs are
-    staged under ``.staging/<job_id>/<partition>`` and renamed to
-    deterministic ``compact-<job_id>-NNNNN.parquet`` names; readers
-    resolve files through the manifest, so they are invisible until the
-    final snapshot commit.
+    The write stage is sized by bytes, not by output files
+    (:func:`write_task_count`): each row carries its range bucket as
+    ``_bucket``, and contiguous bucket runs hash-route to
+    ``n_tasks`` tasks (:func:`_route_reps`); a unit of one task — any
+    unit under ``manifest.WRITE_TASK_BYTES`` — skips the shuffle
+    (``coalesce(1)``). The ``_zkey``-sorted frame goes through the one
+    data writer (:func:`manifest.write_data_files`) with ``source`` as a
+    literal: a task rolls one file per bucket in sorted order, and the
+    files' stats come back from the SAME job. Outputs are staged under
+    ``.staging/<job_id>/<partition>`` and renamed to deterministic
+    ``compact-<job_id>-NNNNN.parquet`` names, numbered in bucket order;
+    readers resolve files through the manifest, so they are invisible
+    until the final snapshot commit.
 
     ``schema`` (the table's live schema) makes mixed-schema rewrites
     safe: files predating an evolved column read it as its default
@@ -315,18 +333,24 @@ def compact_partition(
 
     spark = table.spark
     n_out = len(bounds) + 1
+    n_tasks = write_task_count(inputs, n_out)
     df = with_zkey(read_touched(table, schema, inputs).drop("source"), curve=curve)
     if n_out > 1:
         b_arr = F.array(*[F.lit(int(b)) for b in bounds])
         bucket = F.aggregate(
             b_arr, F.lit(0), lambda acc, b: acc + F.when(F.col("_zkey") > b, 1).otherwise(0)
         )
-        reps = _route_reps(spark, n_out)
-        # reps MUST stay LongType: HashPartitioning is Murmur3 over the
-        # column's physical type, and murmur3(int32 x) != murmur3(int64 x)
-        # — int literals here silently randomize the bucket→partition map
-        route = F.element_at(F.array(*[F.lit(r).cast("long") for r in reps]), bucket + 1)
-        df = df.repartition(n_out, route.alias("_route")).sortWithinPartitions("_zkey")
+        df = df.withColumn(mf.BUCKET_COL, bucket)
+    if n_tasks > 1:
+        reps = _route_reps(spark, n_tasks)
+        # bucket b goes to task b·n_tasks // n_out: contiguous bucket
+        # runs, so task order is bucket order. reps MUST stay LongType:
+        # HashPartitioning is Murmur3 over the column's physical type,
+        # and murmur3(int32 x) != murmur3(int64 x) — int literals here
+        # silently randomize the bucket→task map
+        task_rep = F.array(*[F.lit(reps[b * n_tasks // n_out]).cast("long") for b in range(n_out)])
+        route = F.element_at(task_rep, F.col(mf.BUCKET_COL) + 1)
+        df = df.repartition(n_tasks, route.alias("_route")).sortWithinPartitions("_zkey")
     else:
         df = df.coalesce(1).sortWithinPartitions("_zkey")
 

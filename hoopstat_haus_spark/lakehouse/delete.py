@@ -60,8 +60,6 @@ from hoopstat_haus_spark.lakehouse.table import (
 )
 from hoopstat_haus_spark.lakehouse.zorder import with_zkey
 
-NEW_ROWS_TARGET_FILE_BYTES = 128 << 20
-
 
 def delete_where(
     table: TokenLakeTable,
@@ -170,12 +168,13 @@ def write_new_rows(
     table: TokenLakeTable, rows: DataFrame, n_rows: int, row_bytes: int, prefix: str, curve: str
 ) -> list[dict]:
     """ONE fused write of new row versions (UPDATE's, MERGE's upserts
-    and inserts), sized to their count: ⌈n_rows·row_bytes / 128 MB⌉
-    partitions (≤ 256), so a handful of changed rows is one file per
-    source, not a file per touched file. Hashing on (source, doc-salt),
-    not source alone, lets a big single-source write still spread over
-    that many tasks. Returns the new files' manifest entries."""
-    n_parts = max(1, min(256, -(-n_rows * row_bytes // NEW_ROWS_TARGET_FILE_BYTES)))
+    and inserts), sized to their bytes: ⌈n_rows·row_bytes /
+    ``manifest.WRITE_TASK_BYTES``⌉ writer tasks (≤ 256), so a handful
+    of changed rows is one task and one file per source, not a file per
+    touched file. Hashing on (source, doc-salt), not source alone, lets
+    a big single-source write still spread over that many tasks.
+    Returns the new files' manifest entries."""
+    n_parts = max(1, min(256, -(-n_rows * row_bytes // mf.WRITE_TASK_BYTES)))
     salt = F.pmod(F.xxhash64("doc_id"), F.lit(n_parts))
     sized = rows.repartition(n_parts, "source", salt)
     sized = with_zkey(sized, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)

@@ -61,6 +61,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 ZKEY_COL = "_zkey"  # kept in data files: parquet footers carry its min/max
+# a row's output file within its source (compaction's range bucket);
+# keys the fused writer's files, never written into one
+BUCKET_COL = "_bucket"
+
+# input bytes one fused-writer task takes: DML new-row writes and each
+# compaction unit's write stage size their task count by it. A Python
+# writer task costs ~0.2 s of worker CPU whatever its row count, so
+# Python stages are sized by bytes, not by output files.
+WRITE_TASK_BYTES = 128 << 20
 
 # the dv_* fields of a file without a deletion vector (also what an
 # entry written before DVs existed reads as)
@@ -260,11 +269,12 @@ _PARTITIONED_STATS_DDL = (
 )
 
 # fused-writer buffering, in Arrow bytes (``RecordBatch.nbytes``): flush
-# a source's accumulated batches as one row group once they reach the
-# per-source cap, and flush everything when the task's total buffer
-# crosses the task cap (128 MB/task worst case on top of the in-flight
-# Arrow batch, whatever the row width — the Python worker has no spill
-# mechanism, so the bound must be explicit)
+# an open file's accumulated batches as one row group once they reach
+# the per-file cap (one file per source unless the write is bucketed),
+# and flush everything when the task's total buffer crosses the task
+# cap (128 MB/task worst case on top of the in-flight Arrow batch,
+# whatever the row width — the Python worker has no spill mechanism, so
+# the bound must be explicit)
 _FLUSH_BYTES_PER_SOURCE = 64 << 20
 _FLUSH_BYTES_TOTAL = 128 << 20
 
@@ -365,15 +375,25 @@ def write_partitioned_with_stats(
     DML, WAP and compaction, via :func:`write_data_files`); no job
     re-reads its own output for stats.
 
-    Each task splits its Arrow batches by ``source`` and streams them
-    into one pyarrow ParquetWriter per source (same zstd codec/level as
-    the JVM writer), folding the stats accumulators batch-wise. A batch
-    holding a single source value (every compaction batch: a compaction
-    task holds one routed, ``_zkey``-sorted source) is used whole, with
-    no filter copy, so in-file row order is the input order. Buffered
-    batches flush as one row group at ``_FLUSH_BYTES_PER_SOURCE`` Arrow
-    bytes per source, and every source flushes once the task holds
-    ``_FLUSH_BYTES_TOTAL``: memory stays bounded whatever the row width.
+    A file's key is its ``source`` value, or ``(source, _bucket)`` when
+    ``df`` carries a :data:`BUCKET_COL` column (compaction's range
+    buckets). Each task splits its Arrow batches by source and streams
+    them into a pyarrow ParquetWriter (same codec/level as the JVM
+    writer), folding the stats accumulators batch-wise. Unbucketed, a
+    task keeps one writer per source. Bucketed, the task's rows arrive
+    ``_zkey``-sorted — so in (source, bucket) order, bucket being
+    monotone in ``_zkey`` — and a key change closes the current file
+    before the next opens: one task rolls any number of range-cut files
+    with at most one ParquetWriter open, and ``_bucket`` is never
+    written. Staged names are ``part-<pid>-<uuid>`` or, bucketed,
+    ``part-<pid>-<bucket>-<uuid>``, so :func:`write_data_files` numbers
+    outputs in task, then bucket order. A batch slice holding a single
+    key is used whole, with no filter copy, so in-file row order is the
+    input order. Buffered batches flush as one row group at
+    ``_FLUSH_BYTES_PER_SOURCE`` Arrow bytes per file, and every open
+    file flushes once the task holds ``_FLUSH_BYTES_TOTAL``: memory
+    stays bounded whatever the row width. A NULL ``source`` raises
+    ``ValueError`` naming the partition column.
 
     Stats are bit-identical to :func:`compute_file_stats`: same
     JVM-computed zq sample flag, ascending sort, grid truncation and
@@ -390,6 +410,7 @@ def write_partitioned_with_stats(
     import uuid as _uuid
 
     has_zkey = ZKEY_COL in df.columns
+    bucketed = BUCKET_COL in df.columns
     flag = F.pmod(F.xxhash64("doc_id", F.lit(13)), F.lit(ZQ_SAMPLE_MOD)) == 0
     wide = df.withColumn("_zs_flag", flag)
     if not has_zkey:
@@ -399,9 +420,14 @@ def write_partitioned_with_stats(
             "_zq_src", zkey_expr_zorder(F.col("n_tok"), F.xxhash64(F.col("doc_id")), 0, 4096)
         )
     zsrc_col = ZKEY_COL if has_zkey else "_zq_src"
-    drop = ["source", "_zs_flag"] + ([] if has_zkey else ["_zq_src"])
+    drop = (
+        ["source", "_zs_flag"]
+        + ([] if has_zkey else ["_zq_src"])
+        + ([BUCKET_COL] if bucketed else [])
+    )
 
     def write_task(batches):
+        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -411,7 +437,14 @@ def write_partitioned_with_stats(
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else 0
-        state: dict[str, dict] = {}  # source value -> writer + accumulator
+        state: dict = {}  # file key -> writer + accumulator
+        out: dict[str, list] = {
+            k: []
+            for k in (
+                "pid", "partition", "dir", "file_name", "row_count", "token_count",
+                "min_doc_id", "max_doc_id", "min_n_tok", "max_n_tok", "zmin", "zmax", "zq",
+            )
+        }
         total_buffered = 0
 
         def flush(st):
@@ -431,9 +464,30 @@ def write_partitioned_with_stats(
             total_buffered -= st["buf_bytes"]
             st["buf"], st["buf_bytes"] = [], 0
 
-        for batch in batches:
+        def close(key):
+            st = state.pop(key)
+            flush(st)
+            if st["writer"] is None:
+                return
+            st["writer"].close()
+            stats = st["acc"].finalize(clustered=has_zkey)
+            out["pid"].append(pid)
+            out["partition"].append(st["partition"])
+            out["dir"].append(st["dir"])
+            out["file_name"].append(st["name"])
+            for k, v in stats.items():
+                out[k].append(v)
+
+        def pieces(batch):
+            """(file key, rows, their z-keys, their sample flags) of one
+            batch: split by source value, then by bucket run."""
             cols = batch.schema.names
             src = batch.column(cols.index("source"))
+            if src.null_count:
+                raise ValueError(
+                    "NULL value in partition column 'source': every written row "
+                    "must name its partition"
+                )
             zk = batch.column(cols.index(zsrc_col)).to_numpy(zero_copy_only=False)
             fl = batch.column(cols.index("_zs_flag")).to_numpy(zero_copy_only=False).astype(bool)
             vals = pc.unique(src).to_pylist()
@@ -445,11 +499,28 @@ def write_partitioned_with_stats(
                     sub = batch.filter(mask)
                     m = mask.to_numpy(zero_copy_only=False).astype(bool)
                     sub_zk, sub_fl = zk[m], fl[m]
-                st = state.get(val)
+                if not bucketed:
+                    yield (val, None), sub, sub_zk, sub_fl
+                    continue
+                bk = sub.column(cols.index(BUCKET_COL)).to_numpy(zero_copy_only=False)
+                cuts = [0, *(np.flatnonzero(bk[1:] != bk[:-1]) + 1).tolist(), len(bk)]
+                for a, b in zip(cuts, cuts[1:]):
+                    part = sub if b - a == len(bk) else sub.slice(a, b - a)
+                    yield (val, int(bk[a])), part, sub_zk[a:b], sub_fl[a:b]
+
+        for batch in batches:
+            for key, sub, sub_zk, sub_fl in pieces(batch):
+                st = state.get(key)
                 if st is None:
+                    if bucketed:
+                        for k in list(state):  # sorted input: a new key ends the open file
+                            close(k)
+                    val, bucket = key
                     d = f"source={_escape_partition_value(val)}"
-                    name = f"part-{pid:05d}-{_uuid.uuid4().hex[:8]}.parquet"
-                    st = state[val] = {
+                    tag = f"{pid:05d}" if bucket is None else f"{pid:05d}-{bucket:05d}"
+                    name = f"part-{tag}-{_uuid.uuid4().hex[:8]}.parquet"
+                    st = state[key] = {
+                        "partition": val,
                         "dir": d,
                         "name": name,
                         "path": os.path.join(staging, d, name),
@@ -469,25 +540,8 @@ def write_partitioned_with_stats(
                 for st in state.values():
                     flush(st)
 
-        out: dict[str, list] = {
-            k: []
-            for k in (
-                "pid", "partition", "dir", "file_name", "row_count", "token_count",
-                "min_doc_id", "max_doc_id", "min_n_tok", "max_n_tok", "zmin", "zmax", "zq",
-            )
-        }
-        for val, st in state.items():
-            flush(st)
-            if st["writer"] is None:
-                continue
-            st["writer"].close()
-            stats = st["acc"].finalize(clustered=has_zkey)
-            out["pid"].append(pid)
-            out["partition"].append(val)
-            out["dir"].append(st["dir"])
-            out["file_name"].append(st["name"])
-            for k, v in stats.items():
-                out[k].append(v)
+        for key in list(state):
+            close(key)
         if out["pid"]:
             yield pa.RecordBatch.from_pydict(
                 out,

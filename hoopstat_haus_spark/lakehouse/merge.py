@@ -182,7 +182,13 @@ def _merge_apply(
             f"source={source!r}) — MERGE requires unique (doc_id, source); "
             "dedupe the update set first"
         )
-    # every non-delete feed row is an upsert or an insert
+    # every non-delete feed row is an upsert or an insert; it must name
+    # its partition (a NULL-source delete matches nothing, as in SQL)
+    if any(s is None and op != "delete" for s, op in zip(feed["source"], feed[OP_COL])):
+        raise ValueError(
+            "merge_into: an upsert or insert row has a NULL source — every "
+            "written row must name its partition"
+        )
     n_new = sum(op != "delete" for op in feed[OP_COL])
     feed_parts = {s for s in feed["source"] if s is not None}
 

@@ -476,7 +476,7 @@ class TokenLakeTable:
                 curve_by_source=cb,
             )
 
-        def _run_unit(part: str, inputs: list[dict]) -> list[dict]:
+        def _run_unit(unit_table: TokenLakeTable, part: str, inputs: list[dict]) -> list[dict]:
             in_paths = _input_files(inputs)
             t0 = time.time()
             ckpt.intent(part, in_paths)
@@ -486,7 +486,7 @@ class TokenLakeTable:
             # boundaries (the serial tail costs 4x in N->4N scaling) and
             # ~GB-scale less read I/O per cycle
             out, stats = compact_partition(
-                self,
+                unit_table,
                 schema,
                 part,
                 inputs,
@@ -520,31 +520,32 @@ class TokenLakeTable:
             # scale the barrier and the CASE-per-source routing plan
             # only get worse, so the pipelined per-unit design stays.)
             pending.sort(key=lambda pu: -sum(f["file_bytes"] for f in pu[1]))
+            # the units run on their own session: the confs below must
+            # not reach a query the caller runs meanwhile. It starts from
+            # the caller's runtime SQL conf (codec, batch size, ...).
+            unit_spark = self.spark.newSession()
+            caller_conf = self.spark.conf
+            for k, v in caller_conf.getAll.items():
+                if caller_conf.isModifiable(k):
+                    unit_spark.conf.set(k, v)
             # size map partitions to the JOB, not the default: small-file
             # inputs coalesce under maxPartitionBytes, and the 128 MB
             # default can leave a big cluster mostly idle through the
             # whole map stage (e.g. 1 GB hot partition → 8 read tasks on
             # 16+ cores). Target ≈ 3 waves of map tasks per core.
-            conf_key = "spark.sql.files.maxPartitionBytes"
-            aqe_key = "spark.sql.adaptive.enabled"
             par = self.spark.sparkContext.defaultParallelism
             total_in = sum(f["file_bytes"] for _p, inputs in pending for f in inputs)
             sized = min(128 << 20, max(4 << 20, total_in // max(par * 3, 1)))
-            prev = self.spark.conf.get(conf_key)
-            prev_aqe = self.spark.conf.get(aqe_key)
-            self.spark.conf.set(conf_key, str(sized))
+            unit_spark.conf.set("spark.sql.files.maxPartitionBytes", str(sized))
             # AQE's per-shuffle-stage materialization barrier buys
             # nothing here — bucket routing is explicit and the key is
             # near-unique (no skew to re-plan) — and costs 8-20% wall
             # (interleaved A/B, BENCH.md). Queries keep AQE.
-            self.spark.conf.set(aqe_key, "false")
-            try:
-                with ThreadPoolExecutor(max_workers=workers) as pool:
-                    for stats in pool.map(lambda pu: _run_unit(*pu), pending):
-                        fresh.extend(stats)
-            finally:
-                self.spark.conf.set(conf_key, prev)
-                self.spark.conf.set(aqe_key, prev_aqe)
+            unit_spark.conf.set("spark.sql.adaptive.enabled", "false")
+            unit_table = TokenLakeTable(unit_spark, self.path)
+            with ThreadPoolExecutor(max_workers=workers) as pool:
+                for stats in pool.map(lambda pu: _run_unit(unit_table, *pu), pending):
+                    fresh.extend(stats)
 
         metrics.files_out = len(fresh)
         metrics.bytes_out = sum(e["file_bytes"] for e in fresh)

@@ -1,6 +1,7 @@
 """Spark jobs per op: the driver-side MERGE plan and the one-relation
 DV read keep every DML round to a fixed, small number of Spark jobs,
-and driver-held frames plan no Python RDD.
+driver-held frames plan no Python RDD, and a compaction unit under
+``manifest.WRITE_TASK_BYTES`` writes all its files from one task.
 
 Counts are per op on a ≤2k-row table in the shared session, by job
 group. Before the MERGE plan moved driver-side and DVs were applied
@@ -10,14 +11,21 @@ on this test's table that code ran MERGE 13, DELETE 3, UPDATE 6 and a
 DV'd lookup 3 (a clean one 2).
 """
 
+import os
+import threading
 import uuid
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import CompactionPolicy, TokenLakeTable
+from hoopstat_haus_spark.lakehouse import manifest as mf
+from hoopstat_haus_spark.lakehouse import table as table_mod
 from hoopstat_haus_spark.lakehouse.changes import table_changes
+from hoopstat_haus_spark.lakehouse.compaction import output_file_count, write_task_count
 from hoopstat_haus_spark.lakehouse.merge import merge_into
-from hoopstat_haus_spark.tables import synthetic
+from hoopstat_haus_spark.tables import synthetic, token_sig
 
 NUM = "cast(substr(doc_id, 5) as long)"
 
@@ -77,3 +85,86 @@ def test_empty_and_metadata_frames_plan_no_python_rdd(spark, tmp_path):
     ]
     for df in frames:
         assert "ExistingRDD" not in executed_plan(df)
+
+
+@pytest.mark.parametrize("task_bytes", [None, 160 << 10], ids=["default", "small_cap"])
+def test_compaction_write_stage_sized_by_bytes(spark, tmp_path, monkeypatch, task_bytes):
+    """A unit's write stage runs one Python task per
+    ``manifest.WRITE_TASK_BYTES`` of input, not one per output file: a
+    Python writer task costs ~0.2 s of worker CPU whatever its row
+    count. A unit under the cap writes all its range-cut files from ONE
+    task, with no Exchange (one task per output file ran before); under
+    a small cap, runs of buckets share a task. Either way every unit
+    writes its planned file count, in ascending disjoint Z-ranges, and
+    the rows are unchanged."""
+    if task_bytes:
+        monkeypatch.setattr(mf, "WRITE_TASK_BYTES", task_bytes)
+    t = TokenLakeTable.create(spark, str(tmp_path / "t"), synthetic(spark, 4000), repartition_n=4)
+    policy = CompactionPolicy(min_file_bytes=1 << 20, target_file_bytes=40 << 10, max_file_bytes=8 << 20)
+    pre = sorted(t.scan().select("doc_id", token_sig("tokens")).collect())
+    sc = spark.sparkContext
+    units: dict[str, dict] = {}
+    current = threading.local()  # the partition of the unit this thread runs
+    orig_unit, orig_write = table_mod.compact_partition, mf.write_partitioned_with_stats
+
+    def unit(table, schema, partition, inputs, job_id, bounds, curve="zorder"):
+        # units run on pool threads: tag their jobs from inside the unit
+        group = f"unit-{uuid.uuid4().hex[:8]}"
+        units[partition] = {"group": group, "n_out": len(bounds) + 1, "inputs": inputs}
+        current.partition = partition
+        sc.setJobGroup(group, group)
+        try:
+            return orig_unit(table, schema, partition, inputs, job_id, bounds, curve)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def write(df, *args):
+        units[current.partition]["plan"] = df._jdf.queryExecution().executedPlan().toString()
+        return orig_write(df, *args)
+
+    monkeypatch.setattr(table_mod, "compact_partition", unit)
+    monkeypatch.setattr(mf, "write_partitioned_with_stats", write)
+    snap, _metrics = t.compact(policy, job_id="tasks")
+    assert snap is not None and len(units) >= 2
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    by_part: dict[str, list[dict]] = {}
+    for e in t.manifest_entries():
+        by_part.setdefault(e["partition"], []).append(e)
+    shared = 0  # units whose tasks each write several files
+    for part, u in units.items():
+        planned = output_file_count(sum(f["file_bytes"] for f in u["inputs"]), policy)
+        assert u["n_out"] == planned >= 2
+        n_tasks = write_task_count(u["inputs"], planned)
+        stages = [
+            tracker.getStageInfo(s)
+            for j in sorted(tracker.getJobIdsForGroup(u["group"]))
+            for s in sorted(tracker.getJobInfo(j).stageIds)
+        ]
+        if n_tasks == 1:
+            assert [s.numTasks for s in stages] == [1], (part, [s.numTasks for s in stages])
+            assert "Exchange" not in u["plan"]
+        else:
+            assert stages[-1].numTasks == n_tasks  # the write job's result stage
+        shared += 1 < n_tasks < planned
+        files = sorted(by_part[part], key=lambda e: e["file_path"])
+        assert len(files) == planned
+        assert all(
+            mf.BUCKET_COL not in pq.read_schema(os.path.join(t.path, e["file_path"])).names
+            for e in files
+        )
+        assert all(e["zmin"] <= e["zmax"] for e in files)
+        for a, b in zip(files, files[1:]):
+            assert a["zmax"] < b["zmin"], (part, a["file_path"], b["file_path"])
+    assert (shared > 0) == bool(task_bytes)
+    assert sorted(t.scan().select("doc_id", token_sig("tokens")).collect()) == pre
+
+
+def test_write_tasks_match_output_files_at_default_target():
+    """At the default 128 MB target a unit writes one file per task, as
+    before the write stage was sized by bytes."""
+    policy = CompactionPolicy()
+    for total in (1, 100 << 20, 128 << 20, (128 << 20) + 1, 1 << 30, (5 << 30) + 12345):
+        inputs = [{"file_bytes": total // 3}, {"file_bytes": total - total // 3}]
+        n_out = output_file_count(total, policy)
+        assert write_task_count(inputs, n_out) == n_out

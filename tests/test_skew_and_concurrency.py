@@ -249,3 +249,75 @@ def test_lost_race_orphan_shards_are_gc_able(spark, tmp_table_dir):
     for rel in live:
         assert os.path.exists(os.path.join(t.path, rel))
     assert sorted(r["doc_id"] for r in t.scan().select("doc_id").collect()) == pre
+
+
+def test_compaction_confs_stay_off_the_caller_session(spark, tmp_table_dir, monkeypatch):
+    """Compaction runs its units with AQE off and a job-sized
+    maxPartitionBytes on a session of its own: a query the caller runs
+    meanwhile keeps AQE. The caller's runtime SQL conf (here the parquet
+    codec) still reaches the units."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from hoopstat_haus_spark.lakehouse import table as table_mod
+
+    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 4000), repartition_n=4)
+    aqe, codec = "spark.sql.adaptive.enabled", "spark.sql.parquet.compression.codec"
+    seen = []
+    orig = table_mod.compact_partition
+
+    def unit(table, *args, **kwargs):
+        seen.append((spark.conf.get(aqe), table.spark.conf.get(aqe)))
+        return orig(table, *args, **kwargs)
+
+    monkeypatch.setattr(table_mod, "compact_partition", unit)
+    prev = spark.conf.get(codec)
+    spark.conf.set(codec, "snappy")
+    try:
+        snap, _metrics = t.compact(POLICY, job_id="confs")
+    finally:
+        spark.conf.set(codec, prev)
+    assert snap is not None and seen
+    assert set(seen) == {("true", "false")}
+    assert spark.conf.get(aqe) == "true"
+    compacted = [e for e in t.manifest_entries() if "/compact-confs-" in e["file_path"]]
+    assert compacted
+    for e in compacted:
+        md = pq.ParquetFile(os.path.join(t.path, e["file_path"])).metadata
+        assert md.row_group(0).column(0).compression == "SNAPPY"
+
+
+def test_merge_null_source_upsert_fails_before_writing(spark, tmp_table_dir):
+    """An upsert or insert with a NULL source names no partition: MERGE
+    rejects it from its planning collect, before any write, and leaves
+    the head and the staging dir as they were. A NULL-source delete
+    matches nothing and is fine."""
+    import os
+
+    from hoopstat_haus_spark.lakehouse.merge import merge_into
+
+    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 1000), repartition_n=2)
+    head = t.log.current_id()
+    feed = synthetic(spark, 1002).filter("doc_id IN ('doc-0000000007', 'doc-0000001001')")
+    null_src = feed.withColumn(
+        "source", F.when(F.col("doc_id") == "doc-0000001001", F.lit(None)).otherwise(F.col("source"))
+    )
+    with pytest.raises(ValueError, match="NULL source"):
+        merge_into(t, null_src)
+    assert t.log.current_id() == head
+    staging = os.path.join(t.path, ".staging")
+    assert not os.path.isdir(staging) or os.listdir(staging) == []
+
+    merge_into(t, null_src.filter(F.col("source").isNull()).withColumn("_op", F.lit("delete")))
+    assert t.scan().count() == 1000
+
+
+def test_append_null_source_names_the_partition_column(spark, tmp_table_dir):
+    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 200), repartition_n=1)
+    bad = synthetic(spark, 202).filter("doc_id >= 'doc-0000000200'").withColumn(
+        "source", F.lit(None).cast("string")
+    )
+    with pytest.raises(Exception, match="partition column 'source'"):
+        t.append(bad)
+    assert t.scan().count() == 200
