@@ -5,7 +5,7 @@ exists-checks (``apps/gold-analytics/app/processors.py:1022-1180``,
 ``silver_s3_manager.py:255-272``) and tracks replay status through a
 state machine (``apps/bronze-ingestion/app/replay.py:378-424``). The
 engine's equivalent: each compaction job gets
-``_checkpoints/<job_id>/<unit>.json`` records written in two phases —
+``_checkpoints/<job_id>/<quoted unit>.json`` records written in two phases —
 
     intent:  {unit, state=running, input_files}
     done:    {unit, state=done, input_files, output_files,
@@ -37,6 +37,7 @@ import os
 import shutil
 import time
 import uuid
+from urllib.parse import quote
 
 
 class JobCheckpoint:
@@ -45,8 +46,8 @@ class JobCheckpoint:
         self.dir = os.path.join(table_path, "_checkpoints", job_id)
 
     def _path(self, unit: str) -> str:
-        safe = unit.replace("/", "_").replace("=", "-")
-        return os.path.join(self.dir, f"{safe}.json")
+        # injective: two units never share a record file
+        return os.path.join(self.dir, f"{quote(unit, safe='')}.json")
 
     def _write(self, unit: str, record: dict) -> None:
         os.makedirs(self.dir, exist_ok=True)

@@ -26,10 +26,10 @@ path runs from plan to write:
   (``_bucket``) → a write stage sized by bytes, one task per
   ``manifest.WRITE_TASK_BYTES`` of input (:func:`write_task_count`):
   contiguous bucket runs hash-route to their task (:func:`_route_reps`),
-  or, for a one-task unit, no shuffle at all →
-  ``sortWithinPartitions(_zkey)`` → parquet write through the one fused
-  writer every data write shares (``manifest.write_data_files``: files
-  and their manifest stats in the same job), which rolls one file per
+  or, for a one-task unit, no shuffle at all → parquet write through
+  the one fused writer every data write shares
+  (``manifest.write_data_files``: files and their manifest stats in the
+  same job), which sorts each task by ``_zkey`` and rolls one file per
   bucket. Every Python writer task costs ~0.2 s of worker CPU whatever
   its row count, so small units write many files from one task. Output
   files get balanced row counts and DISJOINT Z-ranges — that
@@ -315,10 +315,11 @@ def compact_partition(
     ``_bucket``, and contiguous bucket runs hash-route to
     ``n_tasks`` tasks (:func:`_route_reps`); a unit of one task — any
     unit under ``manifest.WRITE_TASK_BYTES`` — skips the shuffle
-    (``coalesce(1)``). The ``_zkey``-sorted frame goes through the one
-    data writer (:func:`manifest.write_data_files`) with ``source`` as a
-    literal: a task rolls one file per bucket in sorted order, and the
-    files' stats come back from the SAME job. Outputs are staged under
+    (``coalesce(1)``). The frame goes through the one data writer
+    (:func:`manifest.write_data_files`) with ``source`` as a literal:
+    the writer sorts each task by ``_zkey``, a task rolls one file per
+    bucket in that order, and the files' stats come back from the SAME
+    job. Outputs are staged under
     ``.staging/<job_id>/<partition>`` and renamed to deterministic
     ``compact-<job_id>-NNNNN.parquet`` names, numbered in bucket order;
     readers resolve files through the manifest, so they are invisible
@@ -350,9 +351,9 @@ def compact_partition(
         # silently randomize the bucket→task map
         task_rep = F.array(*[F.lit(reps[b * n_tasks // n_out]).cast("long") for b in range(n_out)])
         route = F.element_at(task_rep, F.col(mf.BUCKET_COL) + 1)
-        df = df.repartition(n_tasks, route.alias("_route")).sortWithinPartitions("_zkey")
+        df = df.repartition(n_tasks, route.alias("_route"))
     else:
-        df = df.coalesce(1).sortWithinPartitions("_zkey")
+        df = df.coalesce(1)
 
     # only THIS unit's staging dir is cleared and removed — other units
     # of the job may still be writing under .staging/<job_id>/

@@ -172,12 +172,13 @@ def write_new_rows(
     ``manifest.WRITE_TASK_BYTES``⌉ writer tasks (≤ 256), so a handful
     of changed rows is one task and one file per source, not a file per
     touched file. Hashing on (source, doc-salt), not source alone, lets
-    a big single-source write still spread over that many tasks.
-    Returns the new files' manifest entries."""
+    a big single-source write still spread over that many tasks. The
+    rows carry their ``_zkey`` and the writer sorts each task by
+    ``(source, _zkey)``, so every file is Z-clustered. Returns the new
+    files' manifest entries."""
     n_parts = max(1, min(256, -(-n_rows * row_bytes // mf.WRITE_TASK_BYTES)))
     salt = F.pmod(F.xxhash64("doc_id"), F.lit(n_parts))
-    sized = rows.repartition(n_parts, "source", salt)
-    sized = with_zkey(sized, curve=curve).sortWithinPartitions("source", mf.ZKEY_COL)
+    sized = with_zkey(rows.repartition(n_parts, "source", salt), curve=curve)
     return table._write_files(sized, prefix, repartition_n=None, curve=curve)
 
 

@@ -34,7 +34,11 @@ the entry swaps to it. Compaction is the only physical rewriter.
 Every data write (create, append, merge, DML, WAP, compaction) goes
 through :func:`write_data_files`: ONE job writes the files and folds
 their stats (:func:`write_partitioned_with_stats`), then the files are
-renamed out of staging. :func:`compute_file_stats`, a column-pruned
+renamed out of staging. The writer sorts each task's rows by its file
+key itself, so callers hand it unsorted frames, and each task streams
+its batches into one file at a time (:func:`_write_task`): the Python
+worker, which cannot spill, holds one open file whatever the source
+count. :func:`compute_file_stats`, a column-pruned
 re-read of written files, is the parity oracle the tests pin the
 writer's stats against; no production path calls it.
 
@@ -51,6 +55,7 @@ can matter.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import uuid
@@ -262,21 +267,30 @@ def _escape_partition_value(v: str) -> str:
     )
 
 
-_PARTITIONED_STATS_DDL = (
-    "pid int, partition string, dir string, file_name string, row_count long, "
-    "token_count long, min_doc_id string, max_doc_id string, min_n_tok int, "
-    "max_n_tok int, zmin long, zmax long, zq array<long>"
+# the fused writer's one stats row per written file
+_STATS_SCHEMA = pa.schema(
+    [
+        ("pid", pa.int32()),
+        ("partition", pa.string()),
+        ("dir", pa.string()),
+        ("file_name", pa.string()),
+        ("row_count", pa.int64()),
+        ("token_count", pa.int64()),
+        ("min_doc_id", pa.string()),
+        ("max_doc_id", pa.string()),
+        ("min_n_tok", pa.int32()),
+        ("max_n_tok", pa.int32()),
+        ("zmin", pa.int64()),
+        ("zmax", pa.int64()),
+        ("zq", pa.list_(pa.int64())),
+    ]
 )
 
-# fused-writer buffering, in Arrow bytes (``RecordBatch.nbytes``): flush
-# an open file's accumulated batches as one row group once they reach
-# the per-file cap (one file per source unless the write is bucketed),
-# and flush everything when the task's total buffer crosses the task
-# cap (128 MB/task worst case on top of the in-flight Arrow batch,
-# whatever the row width — the Python worker has no spill mechanism, so
-# the bound must be explicit)
-_FLUSH_BYTES_PER_SOURCE = 64 << 20
-_FLUSH_BYTES_TOTAL = 128 << 20
+# fused-writer buffering, in Arrow bytes (``RecordBatch.nbytes``): the
+# open file's batches flush as one row group once they reach this cap.
+# A task has at most one open file, so this bounds its buffer whatever
+# the row width or source count — the Python worker cannot spill.
+_FLUSH_BYTES_PER_FILE = 64 << 20
 
 
 def parquet_codec_conf(spark: SparkSession) -> tuple[str | None, int | None]:
@@ -366,6 +380,99 @@ class FileStatsAcc:
         }
 
 
+def _write_task(batches, staging: str, codec: str | None, codec_level: int | None):
+    """One writer task (the ``mapInArrow`` body of
+    :func:`write_partitioned_with_stats`): stream the task's sorted
+    Arrow batches into parquet files under ``staging`` and yield one
+    :data:`_STATS_SCHEMA` row per file.
+
+    A file's key is its ``source`` value, plus its :data:`BUCKET_COL`
+    value when the batches carry that column. Each batch is cut into
+    zero-copy slices at key changes. A slice with the open file's key
+    joins that file; any other key closes it and opens the next. Sorted
+    input never brings a closed key back, so at most one ParquetWriter
+    is open. A file's buffered slices flush as one row group at
+    ``_FLUSH_BYTES_PER_FILE``; being one contiguous run, they pin at
+    most two batches beyond the bytes they count. Files are named
+    ``part-<pid>-<file ordinal>-<uuid>``, so sorting the names of one
+    task's files gives their write order."""
+    import numpy as np
+    import pyarrow.compute as pc
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx else 0
+    out: dict[str, list] = {name: [] for name in _STATS_SCHEMA.names}
+    cur = None  # the open file
+
+    def flush():
+        if cur["buf"]:
+            cur["writer"].write_table(pa.Table.from_batches(cur["buf"]))
+            cur["buf"], cur["buf_bytes"] = [], 0
+
+    def close():
+        flush()
+        cur["writer"].close()
+        for k, v in {"pid": pid, **cur["names"], **cur["acc"].finalize(cur["clustered"])}.items():
+            out[k].append(v)
+
+    for batch in batches:
+        n = batch.num_rows
+        if not n:
+            continue
+        cols = batch.schema.names
+        src = batch.column(cols.index("source"))
+        if src.null_count:
+            raise ValueError(
+                "NULL value in partition column 'source': every written row "
+                "must name its partition"
+            )
+        clustered = ZKEY_COL in cols
+        zk = batch.column(cols.index(ZKEY_COL if clustered else "_zq_src"))
+        zk = zk.to_numpy(zero_copy_only=False)
+        fl = batch.column(cols.index("_zs_flag")).to_numpy(zero_copy_only=False).astype(bool)
+        bk = None
+        change = pc.not_equal(src.slice(1), src.slice(0, n - 1)).to_numpy(zero_copy_only=False)
+        if BUCKET_COL in cols:
+            bk = batch.column(cols.index(BUCKET_COL)).to_numpy(zero_copy_only=False)
+            change = change | (bk[1:] != bk[:-1])
+        drop = [c for c in ("source", "_zs_flag", "_zq_src", BUCKET_COL) if c in cols]
+        cuts = [0, *(np.flatnonzero(change) + 1).tolist(), n]
+        for a, b in zip(cuts, cuts[1:]):
+            rows = batch.slice(a, b - a)
+            data = rows.drop_columns(drop)
+            key = (src[a].as_py(), None if bk is None else int(bk[a]))
+            if cur is None or cur["key"] != key:
+                if cur is not None:
+                    close()
+                d = f"source={_escape_partition_value(key[0])}"
+                # the file ordinal is the count of files this task closed
+                name = f"part-{pid:05d}-{len(out['pid']):05d}-{uuid.uuid4().hex[:8]}.parquet"
+                path = os.path.join(staging, d, name)
+                os.makedirs(os.path.dirname(path), exist_ok=True)
+                writer = pq.ParquetWriter(
+                    path, data.schema, compression=codec or "none", compression_level=codec_level
+                )
+                cur = {
+                    "key": key,
+                    "names": {"partition": key[0], "dir": d, "file_name": name},
+                    "clustered": clustered,
+                    "writer": writer,
+                    "buf": [],
+                    "buf_bytes": 0,
+                    "acc": FileStatsAcc(),
+                }
+            cur["buf"].append(data)
+            cur["buf_bytes"] += data.nbytes
+            cur["acc"].add(rows, zk[a:b], fl[a:b])
+            if cur["buf_bytes"] >= _FLUSH_BYTES_PER_FILE:
+                flush()
+    if cur is not None:
+        close()
+    if out["pid"]:
+        yield pa.RecordBatch.from_pydict(out, schema=_STATS_SCHEMA)
+
+
 def write_partitioned_with_stats(
     df: DataFrame, staging: str, codec: str | None, codec_level: int | None
 ) -> list[dict]:
@@ -375,24 +482,16 @@ def write_partitioned_with_stats(
     DML, WAP and compaction, via :func:`write_data_files`); no job
     re-reads its own output for stats.
 
-    A file's key is its ``source`` value, or ``(source, _bucket)`` when
-    ``df`` carries a :data:`BUCKET_COL` column (compaction's range
-    buckets). Each task splits its Arrow batches by source and streams
-    them into a pyarrow ParquetWriter (same codec/level as the JVM
-    writer), folding the stats accumulators batch-wise. Unbucketed, a
-    task keeps one writer per source. Bucketed, the task's rows arrive
-    ``_zkey``-sorted — so in (source, bucket) order, bucket being
-    monotone in ``_zkey`` — and a key change closes the current file
-    before the next opens: one task rolls any number of range-cut files
-    with at most one ParquetWriter open, and ``_bucket`` is never
-    written. Staged names are ``part-<pid>-<uuid>`` or, bucketed,
-    ``part-<pid>-<bucket>-<uuid>``, so :func:`write_data_files` numbers
-    outputs in task, then bucket order. A batch slice holding a single
-    key is used whole, with no filter copy, so in-file row order is the
-    input order. Buffered batches flush as one row group at
-    ``_FLUSH_BYTES_PER_SOURCE`` Arrow bytes per file, and every open
-    file flushes once the task holds ``_FLUSH_BYTES_TOTAL``: memory
-    stays bounded whatever the row width. A NULL ``source`` raises
+    The writer owns the order it depends on: it sorts each task's rows
+    by ``source``, then ``_zkey`` when ``df`` carries it
+    (``sortWithinPartitions``, so the JVM sorter buffers and spills, not
+    the Python worker). A caller that already sorted that way, or by
+    ``_zkey`` under a literal ``source``, gets no second Sort. Each task
+    then runs :func:`_write_task`: one file per run of the file key —
+    ``source``, or ``(source, _bucket)`` when ``df`` carries a
+    :data:`BUCKET_COL` column (compaction's range buckets, monotone in
+    ``_zkey``, never written) — with at most one ParquetWriter open,
+    same codec/level as the JVM writer. A NULL ``source`` raises
     ``ValueError`` naming the partition column.
 
     Stats are bit-identical to :func:`compute_file_stats`: same
@@ -407,173 +506,31 @@ def write_partitioned_with_stats(
     ``pid`` and the stat fields. Task-retry safe: names carry a fresh
     uuid per attempt and only files named in collected rows are
     renamed out of staging."""
-    import uuid as _uuid
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     has_zkey = ZKEY_COL in df.columns
-    bucketed = BUCKET_COL in df.columns
     flag = F.pmod(F.xxhash64("doc_id", F.lit(13)), F.lit(ZQ_SAMPLE_MOD)) == 0
-    wide = df.withColumn("_zs_flag", flag)
+    wide = df.sortWithinPartitions("source", *([ZKEY_COL] if has_zkey else []))
+    wide = wide.withColumn("_zs_flag", flag)
     if not has_zkey:
         from hoopstat_haus_spark.lakehouse.zorder import zkey_expr_zorder
 
         wide = wide.withColumn(
             "_zq_src", zkey_expr_zorder(F.col("n_tok"), F.xxhash64(F.col("doc_id")), 0, 4096)
         )
-    zsrc_col = ZKEY_COL if has_zkey else "_zq_src"
-    drop = (
-        ["source", "_zs_flag"]
-        + ([] if has_zkey else ["_zq_src"])
-        + ([BUCKET_COL] if bucketed else [])
-    )
-
-    def write_task(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        from hoopstat_haus_spark.lakehouse.manifest import FileStatsAcc
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else 0
-        state: dict = {}  # file key -> writer + accumulator
-        out: dict[str, list] = {
-            k: []
-            for k in (
-                "pid", "partition", "dir", "file_name", "row_count", "token_count",
-                "min_doc_id", "max_doc_id", "min_n_tok", "max_n_tok", "zmin", "zmax", "zq",
-            )
-        }
-        total_buffered = 0
-
-        def flush(st):
-            nonlocal total_buffered
-            if not st["buf"]:
-                return
-            tbl = pa.Table.from_batches(st["buf"])
-            if st["writer"] is None:
-                os.makedirs(os.path.dirname(st["path"]), exist_ok=True)
-                st["writer"] = pq.ParquetWriter(
-                    st["path"],
-                    tbl.schema,
-                    compression=codec or "none",
-                    compression_level=codec_level,
-                )
-            st["writer"].write_table(tbl)
-            total_buffered -= st["buf_bytes"]
-            st["buf"], st["buf_bytes"] = [], 0
-
-        def close(key):
-            st = state.pop(key)
-            flush(st)
-            if st["writer"] is None:
-                return
-            st["writer"].close()
-            stats = st["acc"].finalize(clustered=has_zkey)
-            out["pid"].append(pid)
-            out["partition"].append(st["partition"])
-            out["dir"].append(st["dir"])
-            out["file_name"].append(st["name"])
-            for k, v in stats.items():
-                out[k].append(v)
-
-        def pieces(batch):
-            """(file key, rows, their z-keys, their sample flags) of one
-            batch: split by source value, then by bucket run."""
-            cols = batch.schema.names
-            src = batch.column(cols.index("source"))
-            if src.null_count:
-                raise ValueError(
-                    "NULL value in partition column 'source': every written row "
-                    "must name its partition"
-                )
-            zk = batch.column(cols.index(zsrc_col)).to_numpy(zero_copy_only=False)
-            fl = batch.column(cols.index("_zs_flag")).to_numpy(zero_copy_only=False).astype(bool)
-            vals = pc.unique(src).to_pylist()
-            for val in vals:
-                if len(vals) == 1:
-                    sub, sub_zk, sub_fl = batch, zk, fl
-                else:
-                    mask = pc.equal(src, val)
-                    sub = batch.filter(mask)
-                    m = mask.to_numpy(zero_copy_only=False).astype(bool)
-                    sub_zk, sub_fl = zk[m], fl[m]
-                if not bucketed:
-                    yield (val, None), sub, sub_zk, sub_fl
-                    continue
-                bk = sub.column(cols.index(BUCKET_COL)).to_numpy(zero_copy_only=False)
-                cuts = [0, *(np.flatnonzero(bk[1:] != bk[:-1]) + 1).tolist(), len(bk)]
-                for a, b in zip(cuts, cuts[1:]):
-                    part = sub if b - a == len(bk) else sub.slice(a, b - a)
-                    yield (val, int(bk[a])), part, sub_zk[a:b], sub_fl[a:b]
-
-        for batch in batches:
-            for key, sub, sub_zk, sub_fl in pieces(batch):
-                st = state.get(key)
-                if st is None:
-                    if bucketed:
-                        for k in list(state):  # sorted input: a new key ends the open file
-                            close(k)
-                    val, bucket = key
-                    d = f"source={_escape_partition_value(val)}"
-                    tag = f"{pid:05d}" if bucket is None else f"{pid:05d}-{bucket:05d}"
-                    name = f"part-{tag}-{_uuid.uuid4().hex[:8]}.parquet"
-                    st = state[key] = {
-                        "partition": val,
-                        "dir": d,
-                        "name": name,
-                        "path": os.path.join(staging, d, name),
-                        "writer": None,
-                        "buf": [],
-                        "buf_bytes": 0,
-                        "acc": FileStatsAcc(),
-                    }
-                data = sub.drop_columns(drop)
-                st["buf"].append(data)
-                st["buf_bytes"] += data.nbytes
-                total_buffered += data.nbytes
-                st["acc"].add(sub, sub_zk, sub_fl)
-                if st["buf_bytes"] >= _FLUSH_BYTES_PER_SOURCE:
-                    flush(st)
-            if total_buffered >= _FLUSH_BYTES_TOTAL:
-                for st in state.values():
-                    flush(st)
-
-        for key in list(state):
-            close(key)
-        if out["pid"]:
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema(
-                    [
-                        ("pid", pa.int32()),
-                        ("partition", pa.string()),
-                        ("dir", pa.string()),
-                        ("file_name", pa.string()),
-                        ("row_count", pa.int64()),
-                        ("token_count", pa.int64()),
-                        ("min_doc_id", pa.string()),
-                        ("max_doc_id", pa.string()),
-                        ("min_n_tok", pa.int32()),
-                        ("max_n_tok", pa.int32()),
-                        ("zmin", pa.int64()),
-                        ("zmax", pa.int64()),
-                        ("zq", pa.list_(pa.int64())),
-                    ]
-                ),
-            )
-
-    return [r.asDict() for r in wide.mapInArrow(write_task, _PARTITIONED_STATS_DDL).collect()]
+    task = functools.partial(_write_task, staging=staging, codec=codec, codec_level=codec_level)
+    return [r.asDict() for r in wide.mapInArrow(task, from_arrow_schema(_STATS_SCHEMA)).collect()]
 
 
 def write_data_files(
     df: DataFrame, table_path: str, staging: str, prefix: str, curve: str = "zorder"
 ) -> tuple[list[str], list[dict]]:
-    """Write ``df`` (with a ``source`` column) through
-    :func:`write_partitioned_with_stats` into ``staging``, then rename
-    each file to ``data/source=<s>/{prefix}-{seq:05d}.parquet``.
-    Returns (new table-relative paths, their manifest entries).
+    """Write ``df`` (with a ``source`` column, in any row order: the
+    writer sorts it) through :func:`write_partitioned_with_stats` into
+    ``staging``, then rename each file to
+    ``data/source=<s>/{prefix}-{seq:05d}.parquet``, numbered per
+    partition in task, then file-ordinal order. Returns (new
+    table-relative paths, their manifest entries).
 
     The one staged-rename step of every data write. Staged files are
     invisible to readers (they resolve files through a snapshot's

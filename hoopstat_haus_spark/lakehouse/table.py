@@ -57,6 +57,7 @@ no DV.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
@@ -506,7 +507,10 @@ class TokenLakeTable:
             return stats
 
         if pending:
+            import warnings
             from concurrent.futures import ThreadPoolExecutor
+
+            from pyspark import inheritable_thread_target
 
             workers = max(1, min(max_concurrent_units, len(pending)))
             # biggest partitions first: small ones backfill the tail.
@@ -543,8 +547,19 @@ class TokenLakeTable:
             # (interleaved A/B, BENCH.md). Queries keep AQE.
             unit_spark.conf.set("spark.sql.adaptive.enabled", "false")
             unit_table = TokenLakeTable(unit_spark, self.path)
+            # pool threads start without the caller's Spark local
+            # properties (job group, description, scheduler pool): each
+            # unit gets its own copy, captured here in the calling thread.
+            # Session tags are not inherited (the wrapper warns), but the
+            # units run on their own session, which never carried them.
+            with warnings.catch_warnings():
+                warnings.simplefilter("ignore", UserWarning)
+                runs = [
+                    inheritable_thread_target(functools.partial(_run_unit, unit_table, *pu))
+                    for pu in pending
+                ]
             with ThreadPoolExecutor(max_workers=workers) as pool:
-                for stats in pool.map(lambda pu: _run_unit(unit_table, *pu), pending):
+                for stats in pool.map(lambda run: run(), runs):
                     fresh.extend(stats)
 
         metrics.files_out = len(fresh)

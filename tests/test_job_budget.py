@@ -1,7 +1,9 @@
 """Spark jobs per op: the driver-side MERGE plan and the one-relation
 DV read keep every DML round to a fixed, small number of Spark jobs,
-driver-held frames plan no Python RDD, and a compaction unit under
-``manifest.WRITE_TASK_BYTES`` writes all its files from one task.
+driver-held frames plan no Python RDD, a compaction unit under
+``manifest.WRITE_TASK_BYTES`` writes all its files from one task, every
+write plan sorts once (in the fused writer), and compaction units run
+in the caller's job group.
 
 Counts are per op on a ≤2k-row table in the shared session, by job
 group. Before the MERGE plan moved driver-side and DVs were applied
@@ -12,6 +14,7 @@ DV'd lookup 3 (a clean one 2).
 """
 
 import os
+import re
 import threading
 import uuid
 
@@ -168,3 +171,67 @@ def test_write_tasks_match_output_files_at_default_target():
         inputs = [{"file_bytes": total // 3}, {"file_bytes": total - total // 3}]
         n_out = output_file_count(total, policy)
         assert write_task_count(inputs, n_out) == n_out
+
+
+def writer_frames(spark, monkeypatch) -> list:
+    """Collects the fused writer's ``mapInArrow`` frames, in run order."""
+    frames = []
+    cls = type(spark.range(0))
+    orig = cls.mapInArrow
+
+    def spy(self, func, *args, **kwargs):
+        out = orig(self, func, *args, **kwargs)
+        if getattr(func, "func", None) is mf._write_task:
+            frames.append(out)
+        return out
+
+    monkeypatch.setattr(cls, "mapInArrow", spy)
+    return frames
+
+
+def final_plan(df) -> str:
+    """The executed plan of a frame that ran (AQE's final plan)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_one_sort_per_write_plan(spark, tmp_path, monkeypatch):
+    """The fused writer sorts its own input, so every write plan holds
+    exactly one Sort: a new one for create and append, and the writer's
+    alone where the rows used to arrive pre-sorted (UPDATE's and MERGE's
+    new rows, compaction units). A one-task compaction unit still runs
+    without an Exchange."""
+    frames = writer_frames(spark, monkeypatch)
+    t = TokenLakeTable.create(spark, str(tmp_path / "t"), synthetic(spark, 4000), repartition_n=4)
+    t.append(synthetic(spark, 4100).filter(F.expr(f"{NUM} >= 4000")), repartition_n=2)
+    t.update_where(f"{NUM} % 9 = 2", {"n_tok": "n_tok + 1"})
+    feed = (
+        synthetic(spark, 4105)
+        .filter(F.expr(f"{NUM} < 40 OR {NUM} >= 4100"))
+        .withColumn("tokens", F.expr("transform(tokens, x -> cast(x + 1 as int))"))
+    )
+    merge_into(t, feed)
+    assert len(frames) == 4
+    monkeypatch.setattr(mf, "WRITE_TASK_BYTES", 160 << 10)
+    policy = CompactionPolicy(min_file_bytes=1 << 20, target_file_bytes=40 << 10, max_file_bytes=8 << 20)
+    assert t.compact(policy)[0] is not None
+    plans = [final_plan(f) for f in frames]
+    assert [len(re.findall(r"\bSort \[", p)) for p in plans] == [1] * len(plans)
+    units = plans[4:]
+    assert {"Exchange" in p for p in units} == {True, False}  # multi-task and one-task units
+    assert all("Coalesce 1" in p for p in units if "Exchange" not in p)
+
+
+def test_compaction_units_run_in_callers_job_group(spark, tmp_path):
+    """Compaction units run on pool threads, which must carry the
+    caller's Spark local properties: a job group set around
+    ``compact`` holds every unit's jobs, so ``cancelJobGroup`` can stop
+    a running compaction."""
+    t = TokenLakeTable.create(spark, str(tmp_path / "t"), synthetic(spark, 1000), repartition_n=4)
+    policy = CompactionPolicy(min_file_bytes=1 << 20, target_file_bytes=4 << 20, max_file_bytes=8 << 20)
+    out = {}
+    n_jobs = jobs(spark, lambda: out.update(metrics=t.compact(policy)[1]))
+    assert out["metrics"].partitions >= 2
+    assert n_jobs >= out["metrics"].partitions

@@ -213,6 +213,21 @@ def test_resume_reruns_unit_whose_inputs_changed(spark, tmp_table_dir):
     assert sig_rows(t) == expected
 
 
+def test_checkpoint_records_of_distinct_units_stay_apart(tmp_path):
+    """Unit names that differ only in characters a file name must encode
+    keep one record each, so a resumed job finds every done unit (and
+    GC keeps protecting its outputs)."""
+    from hoopstat_haus_spark.lakehouse.checkpoint import JobCheckpoint
+
+    ck = JobCheckpoint(str(tmp_path), "job-n")
+    units = ["a/b", "a_b", "a=b", "a-b"]
+    for u in units:
+        ck.done(u, [], [f"out-{u}"], rows=1, tokens=1, duration_s=0.0, output_stats=[])
+    done = ck.completed_units()
+    assert sorted(done) == sorted(units)
+    assert all(done[u]["output_files"] == [f"out-{u}"] for u in units)
+
+
 def test_checkpointed_stats_match_recomputation(spark, tmp_path_factory):
     """Round-3 path: manifest entries come from per-unit checkpoint
     stats (computed inside the unit thread, not a post-rewrite stats

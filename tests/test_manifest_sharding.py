@@ -350,5 +350,67 @@ def test_fused_writer_flushes_wide_rows_by_bytes(spark, tmp_table_dir):
     assert entry["row_count"] == n_rows
     md = pq.ParquetFile(os.path.join(t.path, entry["file_path"])).metadata
     assert md.num_row_groups >= 2, "the whole file was buffered as one row group"
-    cap_rows = mf._FLUSH_BYTES_PER_SOURCE // (4 * n_tok) + batch_rows
+    cap_rows = mf._FLUSH_BYTES_PER_FILE // (4 * n_tok) + batch_rows
     assert max(md.row_group(i).num_rows for i in range(md.num_row_groups)) <= cap_rows
+
+
+def test_writer_task_keeps_one_file_open_over_many_sources(tmp_path, monkeypatch):
+    """One writer task over 1000 sources writes 1000 files with at most
+    one ParquetWriter open at a time: the Python worker cannot spill, so
+    its open writers must not grow with the source count."""
+    live = peak = 0
+
+    class CountingWriter(pq.ParquetWriter):
+        def __init__(self, *args, **kwargs):
+            nonlocal live, peak
+            super().__init__(*args, **kwargs)
+            live += 1
+            peak = max(peak, live)
+
+        def close(self):
+            nonlocal live
+            live -= self.is_open
+            super().close()
+
+    monkeypatch.setattr(pq, "ParquetWriter", CountingWriter)
+    n = 3000  # 3 rows per source; the 500-row batches cut source runs
+    batch = pa.table(
+        {
+            "doc_id": [f"doc-{i:08d}" for i in range(n)],
+            "tokens": pa.array([[i] for i in range(n)], pa.list_(pa.int32())),
+            "n_tok": pa.array([1] * n, pa.int32()),
+            "source": [f"s{i // 3:04d}" for i in range(n)],
+            # the helper columns write_partitioned_with_stats adds
+            "_zs_flag": [i % 3 == 0 for i in range(n)],
+            "_zq_src": pa.array(range(n), pa.int64()),
+        }
+    )
+    batches = batch.to_batches(max_chunksize=500)
+    (stats,) = mf._write_task(iter(batches), str(tmp_path), None, None)
+    stats = stats.to_pylist()
+    assert peak == 1 and live == 0
+    assert len(stats) == 1000
+    assert sorted(s["partition"] for s in stats) == [f"s{i:04d}" for i in range(1000)]
+    assert all(s["row_count"] == 3 for s in stats)
+    for s in stats:
+        tbl = pq.read_table(os.path.join(tmp_path, s["dir"], s["file_name"]))
+        assert tbl.num_rows == 3 and "source" not in tbl.column_names
+
+
+def test_create_from_one_task_writes_one_file_per_source(spark, tmp_table_dir):
+    """A create whose one task interleaves 1000 sources (3 rows each)
+    writes 1000 files, each holding one source's rows, with stats equal
+    to a re-read."""
+    df = spark.range(0, 3000, 1, 1).select(
+        F.format_string("doc-%08d", "id").alias("doc_id"),
+        F.array(F.col("id").cast("int")).alias("tokens"),
+        F.lit(1).alias("n_tok"),
+        F.format_string("s%04d", F.col("id") * 7 % 1000).alias("source"),  # interleaved
+    )
+    t = TokenLakeTable.create(spark, tmp_table_dir, df)
+    entries = {e["file_path"]: e for e in t.manifest_entries()}
+    assert len(entries) == 1000
+    assert len({e["partition"] for e in entries.values()}) == 1000
+    assert all(e["row_count"] == 3 for e in entries.values())
+    fresh = mf.compute_file_stats(spark, t.path, sorted(entries))
+    assert {e["file_path"]: e for e in fresh} == entries
