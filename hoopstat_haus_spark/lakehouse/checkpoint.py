@@ -5,7 +5,8 @@ exists-checks (``apps/gold-analytics/app/processors.py:1022-1180``,
 ``silver_s3_manager.py:255-272``) and tracks replay status through a
 state machine (``apps/bronze-ingestion/app/replay.py:378-424``). The
 engine's equivalent: each compaction job gets
-``_checkpoints/<job_id>/<quoted unit>.json`` records written in two phases —
+``_checkpoints/<job_id>/<quoted unit>.json`` records, each replaced
+atomically (``snapshots.write_atomic``), written in two phases —
 
     intent:  {unit, state=running, input_files}
     done:    {unit, state=done, input_files, output_files,
@@ -36,8 +37,9 @@ import json
 import os
 import shutil
 import time
-import uuid
 from urllib.parse import quote
+
+from hoopstat_haus_spark.lakehouse import snapshots
 
 
 class JobCheckpoint:
@@ -51,11 +53,7 @@ class JobCheckpoint:
 
     def _write(self, unit: str, record: dict) -> None:
         os.makedirs(self.dir, exist_ok=True)
-        p = self._path(unit)
-        tmp = p + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(record, f, indent=1)
-        os.replace(tmp, p)
+        snapshots.write_atomic(self._path(unit), json.dumps(record, indent=1))
 
     def intent(self, unit: str, input_files: list[str]) -> None:
         self._write(

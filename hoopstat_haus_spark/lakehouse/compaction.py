@@ -93,8 +93,10 @@ class CompactionPolicy:
     min_file_bytes: int = 32 * 1024 * 1024
     target_file_bytes: int = 128 * 1024 * 1024
     max_file_bytes: int = 256 * 1024 * 1024
-    # rewrite a partition when at least this many files are undersized
-    min_input_files: int = 2
+
+
+# rewrite a partition when at least this many of its files are candidates
+MIN_INPUT_FILES = 2
 
 
 def plan_compaction(entries: list[dict], policy: CompactionPolicy) -> dict[str, list[dict]]:
@@ -102,7 +104,7 @@ def plan_compaction(entries: list[dict], policy: CompactionPolicy) -> dict[str, 
 
     A file is a rewrite candidate when it is undersized, oversized, not
     yet Z-clustered (zmin < 0), or carries a deletion vector. A
-    partition is planned when it has at least ``min_input_files``
+    partition is planned when it has at least ``MIN_INPUT_FILES``
     candidates, an oversized one or a DV'd one (a lone DV'd file is
     still rewritten, so deleted rows do leave disk); its output file
     count is :func:`output_file_count` of the candidates' bytes, cut
@@ -122,7 +124,7 @@ def plan_compaction(entries: list[dict], policy: CompactionPolicy) -> dict[str, 
             or f["zmin"] < 0
             or f.get("dv_rows", 0) > 0
         ]
-        if len(candidates) < policy.min_input_files and not any(
+        if len(candidates) < MIN_INPUT_FILES and not any(
             f["file_bytes"] > policy.max_file_bytes or f.get("dv_rows", 0) > 0
             for f in candidates
         ):
@@ -319,8 +321,10 @@ def compact_partition(
     (:func:`manifest.write_data_files`) with ``source`` as a literal:
     the writer sorts each task by ``_zkey``, a task rolls one file per
     bucket in that order, and the files' stats come back from the SAME
-    job. Outputs are staged under
-    ``.staging/<job_id>/<partition>`` and renamed to deterministic
+    job. Outputs are staged under ``.staging/<job_id>/source=<escaped
+    partition>`` (the data dir's own escaped name, so no partition value
+    can aim the writer's staging ``rmtree`` outside the job's staging
+    dir) and renamed to deterministic
     ``compact-<job_id>-NNNNN.parquet`` names, numbered in bucket order;
     readers resolve files through the manifest, so they are invisible
     until the final snapshot commit.
@@ -360,7 +364,9 @@ def compact_partition(
     return mf.write_data_files(
         df.withColumn("source", F.lit(partition)),
         table.path,
-        os.path.join(table.path, ".staging", job_id, partition),
+        os.path.join(
+            table.path, ".staging", job_id, "source=" + mf._escape_partition_value(partition)
+        ),
         f"compact-{job_id}",
         curve=curve,
     )

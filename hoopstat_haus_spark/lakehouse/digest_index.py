@@ -16,21 +16,22 @@ upgraded to row-granular maintenance off the net change feed
 (:func:`~hoopstat_haus_spark.lakehouse.changes.table_changes`), the
 same substrate :mod:`incremental` uses for scalar rollups. The index is
 the per-ROW analog: too big for JSON state, so its state is parquet,
-partitioned by source and committed with the engine's standard
-pointer-swap discipline.
+partitioned by source and committed by atomically replacing one small
+state file (``snapshots.write_atomic``).
 
 Layout (all under ``<table>/_digest_index/<name>/``):
 
 - ``state.json`` — ``{"snapshot_id": N, "parts": {source: reldir}}``,
-  written tmp + ``os.replace`` (atomic; a crashed refresh leaves the
-  old state valid).
+  replaced atomically (``snapshots.write_atomic``; a crashed refresh
+  leaves the old state valid). ``<name>`` must pass
+  ``snapshots.check_name``.
 - ``build-*/`` / ``refresh-*/`` — immutable parquet dirs holding
   ``_part=<source>/`` subdirs (Spark ``partitionBy``; the data files
   ALSO carry ``source`` as a real column, so readers never parse dir
   names). A refresh writes new subdirs only for CHANGED sources and
   carries the rest by pointer — the manifest-list trick at index scale.
 - Unreferenced top-level dirs are swept opportunistically after a
-  successful pointer swap, but only once OLDER than ``SWEEP_MIN_AGE_S``
+  successful state swap, but only once OLDER than ``SWEEP_MIN_AGE_S``
   — the GC min-age discipline: a racing refresher's just-written dirs
   and a reader still planning over the previous state are never deleted
   underneath them; true orphans (crashes, lost-update races) age out on
@@ -55,6 +56,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hoopstat_haus_spark.lakehouse import snapshots
 from hoopstat_haus_spark.lakehouse.changes import CHANGE_COL, table_changes
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, local_frame
 from hoopstat_haus_spark.tables.token_table import token_sig
@@ -66,17 +68,9 @@ class DigestIndex:
     """A named, persisted, incrementally-maintained content-sig index."""
 
     def __init__(self, table: TokenLakeTable, name: str = "content_sigs"):
-        # names are path components under _digest_index/ and the sweep
-        # rmtrees inside self.root, so "." / ".." (which pass a bare
-        # charset check) would make root the shared dir or the TABLE
-        # root and let the sweep destroy it — require a leading alnum
-        if (
-            not name
-            or not name[0].isalnum()
-            or not all(c.isalnum() or c in "._-" for c in name)
-            or ".." in name
-        ):
-            raise ValueError(f"bad index name {name!r}")
+        # a path component under _digest_index/, and the sweep rmtrees
+        # inside self.root: "." / ".." would aim it at the table root
+        snapshots.check_name(name, "index name")
         self.table = table
         self.root = os.path.join(table.path, "_digest_index", name)
 
@@ -95,10 +89,7 @@ class DigestIndex:
     def _write_state(self, snapshot_id: int, parts: dict[str, str]) -> dict:
         state = {"snapshot_id": snapshot_id, "parts": parts}
         os.makedirs(self.root, exist_ok=True)
-        tmp = self._state_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._state_path)
+        snapshots.write_atomic(self._state_path, json.dumps(state, indent=1, sort_keys=True))
         self._sweep_orphans(parts)
         return state
 

@@ -30,6 +30,7 @@ import time
 import uuid
 from contextlib import contextmanager
 
+from hoopstat_haus_spark.lakehouse import snapshots
 from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 
 OPERATIONAL = "operational"
@@ -51,7 +52,8 @@ def record_job_metrics(
     error: str | None = None,
 ) -> str:
     """Append one job record; returns its path. Immutable, uniquely named
-    — concurrent writers never collide."""
+    — concurrent writers never collide — and created exclusively
+    (``snapshots.write_atomic``), so a reader never sees it torn."""
     d = _metrics_dir(table_path)
     os.makedirs(d, exist_ok=True)
     rec = {
@@ -67,8 +69,7 @@ def record_job_metrics(
         "recorded_ns": time.time_ns(),
     }
     path = os.path.join(d, f"{rec['recorded_ms']}-{operation}-{uuid.uuid4().hex[:6]}.json")
-    with open(path, "w") as f:
-        json.dump(rec, f, indent=1)
+    snapshots.write_atomic(path, json.dumps(rec, indent=1), exclusive=True)
     return path
 
 
@@ -85,7 +86,12 @@ def job_record(table_path: str, operation: str, job_id: str):
     its last old success. The failure's ``error`` is the exception's
     class and message (``repr`` of a Spark ``AnalysisException``
     carries no message); an ``OSError`` while recording it (full or
-    read-only disk) is swallowed so it cannot mask the root cause."""
+    read-only disk) is swallowed so it cannot mask the root cause.
+
+    ``job_id`` names the job's checkpoint and staging dirs and its
+    output files, so it must pass ``snapshots.check_name``; a bad id
+    raises ValueError before the body runs and records nothing."""
+    snapshots.check_name(job_id, "job id")
     metrics = JobMetrics(job=job_id)
     try:
         yield metrics

@@ -11,23 +11,25 @@ the view forward — subtract ``delete``/``update_pre`` rows, add
 ``insert``/``update_post`` rows. No rescan, no join against the table.
 
 State is a tiny JSON at ``<table>/_views/<name>.json`` (O(sources) rows
-+ the snapshot id it is valid for), written atomically via tmp +
-``os.replace``. A crashed refresh leaves the old state intact; re-runs
-are idempotent because the stored snapshot id only advances on a
-successful write. Refresh cost = one Spark aggregate over the changed
-files' rows — at 100 TB a 1-partition MERGE refreshes the corpus-wide
-rollup in seconds while a full recompute would rescan everything.
++ the snapshot id it is valid for), replaced atomically
+(``snapshots.write_atomic``); ``<name>`` must pass
+``snapshots.check_name``. A crashed refresh leaves the old state
+intact; re-runs are idempotent because the stored snapshot id only
+advances on a successful write. Refresh cost = one Spark aggregate over
+the changed files' rows — at 100 TB a 1-partition MERGE refreshes the
+corpus-wide rollup in seconds while a full recompute would rescan
+everything.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hoopstat_haus_spark.lakehouse import snapshots
 from hoopstat_haus_spark.lakehouse.changes import CHANGE_COL, table_changes
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, local_frame
 
@@ -51,15 +53,7 @@ class IncrementalRollup:
     """A named materialized per-source rollup over a TokenLakeTable."""
 
     def __init__(self, table: TokenLakeTable, name: str = "source_rollup"):
-        # a path component: "." / ".." pass a bare charset check and
-        # would escape _views/ — require a leading alnum, no ".."
-        if (
-            not name
-            or not name[0].isalnum()
-            or not all(c.isalnum() or c in "._-" for c in name)
-            or ".." in name
-        ):
-            raise ValueError(f"bad view name {name!r}")
+        snapshots.check_name(name, "view name")  # a path component under _views/
         self.table = table
         self.path = os.path.join(table.path, "_views", f"{name}.json")
 
@@ -74,10 +68,7 @@ class IncrementalRollup:
     def _write_state(self, snapshot_id: int, rows: dict) -> dict:
         state = {"snapshot_id": snapshot_id, "rows": rows}
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
-        tmp = self.path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)
+        snapshots.write_atomic(self.path, json.dumps(state, indent=1, sort_keys=True))
         return state
 
     # -- maintenance ------------------------------------------------------

@@ -65,6 +65,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hoopstat_haus_spark.lakehouse import snapshots
+
 ZKEY_COL = "_zkey"  # kept in data files: parquet footers carry its min/max
 # a row's output file within its source (compaction's range bucket);
 # keys the fused writer's files, never written into one
@@ -676,13 +678,9 @@ def _write_list(table_path: str, records: list[dict]) -> str:
     os.makedirs(os.path.join(table_path, "_manifests"), exist_ok=True)
     rel = f"_manifests/list-{uuid.uuid4().hex[:12]}.json"
     body = {"format_version": 2, "shards": sorted(records, key=lambda r: r["partition"])}
-    # tmp + rename: a crash mid-write must not leave a truncated JSON a
-    # future resume path could try to parse (same atomic-metadata-write
-    # convention as the snapshot pointer and the serving artifact index)
-    abs_path = os.path.join(table_path, rel)
-    with open(abs_path + ".tmp", "w") as f:
-        json.dump(body, f, indent=1)
-    os.replace(abs_path + ".tmp", abs_path)
+    # a crash mid-write must not leave a truncated JSON a future resume
+    # path could try to parse
+    snapshots.write_atomic(os.path.join(table_path, rel), json.dumps(body, indent=1))
     return rel
 
 

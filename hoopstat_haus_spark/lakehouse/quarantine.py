@@ -16,6 +16,9 @@ is set-based instead of per-object:
   re-validates, MERGEs the now-valid rows into the table, and rewrites
   the sidecar without them (resolved). Rows whose fix still fails stay
   quarantined (failed) — same terminal states as the reference.
+
+The live sidecar is named by the ``_quarantine_ptr`` file, which replay
+replaces atomically (``snapshots.write_atomic``) to publish a new one.
 """
 
 from __future__ import annotations
@@ -27,6 +30,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hoopstat_haus_spark.lakehouse import snapshots
 from hoopstat_haus_spark.lakehouse.merge import merge_into
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, local_frame
 
@@ -72,7 +76,7 @@ def _ptr_path(table: TokenLakeTable) -> str:
 def quarantine_dir(table: TokenLakeTable) -> str:
     """Resolve the LIVE sidecar dir through the pointer file (snapshot-log
     style). No pointer → the default dir. Replay swaps the pointer with
-    one atomic os.replace, so a crash at any instant leaves a valid live
+    one atomic replace, so a crash at any instant leaves a valid live
     sidecar — the old two-rename swap had a window (after `qd -> old`,
     before `tmp -> qd`) where no sidecar existed and every quarantined
     row silently vanished from reads."""
@@ -191,11 +195,8 @@ def replay(
     remaining.write.mode("overwrite").partitionBy("_error_class").parquet(
         os.path.join(table.path, new_name)
     )
-    ptr = _ptr_path(table)
-    tmp = ptr + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        f.write(new_name)
-    os.replace(tmp, ptr)  # atomic: readers see old or new, never neither
+    # atomic: readers see old or new, never neither
+    snapshots.write_atomic(_ptr_path(table), new_name)
     # the old dir is NOT destroyed here: a concurrent quarantine_batch
     # that resolved the pointer pre-swap may still be writing into it
     # (its post-write recheck will retry into the new dir) — an

@@ -5,7 +5,8 @@ added/missing fields between silver-model versions
 (``libs/hoopstat-data/hoopstat_data/silver_models.py:353-417``). The
 engine makes it a first-class table property:
 
-    _schema/schema-v<K>.json      immutable schema records
+    _schema/schema-v<K>.json      immutable schema records, each created
+                                  exclusively (``snapshots.write_atomic``)
     snapshot.summary.schema_version   version live at commit time
 
 Rules (deliberately additive-only, like the reference):
@@ -33,6 +34,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hoopstat_haus_spark.lakehouse import snapshots
 
 BASE_FIELDS: list[dict] = [
     {"name": "doc_id", "type": "string", "default": None},
@@ -110,27 +113,18 @@ def read_schema(table_path: str, version: int | None = None) -> TableSchema:
 
 
 def write_schema(table_path: str, schema: TableSchema) -> str:
-    """Exclusively create the schema record (same create-if-absent mutex
-    as snapshot commits — two concurrent evolutions cannot both win).
-    Returns the created path so a failed commit can roll it back."""
-    import uuid
-
+    """Exclusively create the schema record (``snapshots.write_atomic``,
+    the same create-if-absent mutex as snapshot commits — two concurrent
+    evolutions cannot both win). Returns the created path so a failed
+    commit can roll it back."""
     d = _schema_dir(table_path)
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, f"schema-v{schema.version}.json")
-    # tmp name must be WRITER-UNIQUE (like wap/quarantine): a fixed
-    # .tmp path would let a concurrent evolution overwrite this
-    # writer's staging mid-flight, publishing the loser's (possibly
-    # torn) bytes through the winner's os.link
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        json.dump({"version": schema.version, "fields": schema.fields}, f, indent=1)
+    body = json.dumps({"version": schema.version, "fields": schema.fields}, indent=1)
     try:
-        os.link(tmp, path)
+        snapshots.write_atomic(path, body, exclusive=True)
     except FileExistsError:
         raise ValueError(f"schema v{schema.version} already exists") from None
-    finally:
-        os.unlink(tmp)
     return path
 
 

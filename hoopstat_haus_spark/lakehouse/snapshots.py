@@ -5,21 +5,26 @@ JSON written exactly once (``libs/hoopstat-s3/hoopstat_s3/
 silver_s3_manager.py:314-376``) plus an idempotency head-check
 (``:255-272``). We generalize both into an Iceberg-style snapshot log:
 
-    _snapshots/v<N>.json   — immutable snapshot record
-    _snapshots/current     — pointer file, swapped atomically (os.replace)
+    _snapshots/v<N>.json   — immutable snapshot record; the newest is HEAD
 
+The exclusive create of ``v<N+1>.json`` is the commit point: exactly one
+writer can create each version, and once it exists it is the head.
 Readers pin a snapshot id and resolve it to a manifest; maintenance jobs
 commit a new snapshot only at the very end, so a crashed job leaves the
 table unchanged (the staged files are orphans collected by GC).
 
-The pointer swap is isolated behind ``_swap_pointer`` so an object-store
-conditional-put (S3 If-None-Match) could replace the local rename without
-touching callers — the same issue the reference hit with S3's lack of
-atomic append (``meta/adr/ADR-031:49-51``).
+Every metadata file of the engine becomes visible through
+:func:`write_atomic` (whole, exactly once, or atomically replaced), and
+every name that reaches a metadata or staging path passes
+:func:`check_name`. An object-store conditional put (S3 If-None-Match)
+would replace the local link/rename in ``write_atomic`` alone — the
+same issue the reference hit with S3's lack of atomic append
+(``meta/adr/ADR-031:49-51``).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -45,6 +50,44 @@ class ConcurrentCommitError(RuntimeError):
     """Another writer committed since this job planned — retry from plan."""
 
 
+def write_atomic(path: str, text: str, exclusive: bool = False) -> None:
+    """Make ``text`` visible at ``path`` whole or not at all — the one
+    way every metadata file of a table is published.
+
+    The text goes to a writer-unique ``<path>.tmp-<uuid>`` in the same
+    directory (a fixed tmp name would let a concurrent writer tear this
+    one's bytes), which is then ``os.replace``d onto ``path``, or with
+    ``exclusive`` hard-linked to it: an atomic create-if-absent whose
+    ``FileExistsError`` propagates to the caller. The tmp is always
+    removed, and its name never ends in ``.json``, so no directory scan
+    reads it as a record."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+        if exclusive:
+            os.link(tmp, path)
+        else:
+            os.replace(tmp, path)
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+
+
+def check_name(name: str, what: str) -> None:
+    """Raise ValueError unless ``name`` is safe as ONE path component:
+    non-empty, a leading alphanumeric, only alphanumerics and ``._-``,
+    and no ``..`` — "." and ".." pass a bare charset check and would
+    resolve to the parent directory."""
+    if not (
+        name
+        and name[0].isalnum()
+        and all(c.isalnum() or c in "._-" for c in name)
+        and ".." not in name
+    ):
+        raise ValueError(f"bad {what} {name!r} (leading alnum, then alnum . _ -, no '..')")
+
+
 class SnapshotLog:
     def __init__(self, table_path: str):
         self.table_path = table_path
@@ -53,11 +96,9 @@ class SnapshotLog:
 
     # -- reads ---------------------------------------------------------
     def current_id(self) -> int | None:
-        ptr = os.path.join(self.dir, "current")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as f:
-            return int(f.read().strip().lstrip("v"))
+        """HEAD: the newest retained snapshot (expiry never removes it)."""
+        ids = self.list_ids()
+        return ids[-1] if ids else None
 
     def get(self, snapshot_id: int) -> Snapshot:
         with open(os.path.join(self.dir, f"v{snapshot_id}.json")) as f:
@@ -112,12 +153,14 @@ class SnapshotLog:
         ``expected_parent`` (pass the id the job planned against).
 
         The head check alone is check-then-act — two writers that both
-        read head=N would both pass and the second os.replace would
+        read head=N would both pass and a second plain replace would
         silently overwrite the first's acknowledged commit. The real
-        mutex is the EXCLUSIVE creation of v(N+1).json via os.link
-        (atomic fail-if-exists on POSIX; maps to S3 If-None-Match
-        conditional put): exactly one writer can create each version, the
-        loser gets ConcurrentCommitError and must re-plan."""
+        mutex is the EXCLUSIVE creation of v(N+1).json (``write_atomic``;
+        maps to S3 If-None-Match conditional put): exactly one writer can
+        create each version, the loser gets ConcurrentCommitError and
+        must re-plan. That create is also the commit point — the new
+        record is HEAD the moment it exists, so no crash can leave a
+        committed version that readers do not see."""
         head = self.current_id()
         if expected_parent is not None and head != expected_parent:
             raise ConcurrentCommitError(f"planned against v{expected_parent}, head is v{head}")
@@ -136,26 +179,13 @@ class SnapshotLog:
             timestamp_ms=ts,
         )
         snap_path = os.path.join(self.dir, f"{snap.name}.json")
-        tmp = snap_path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(asdict(snap), f, indent=1)
         try:
-            os.link(tmp, snap_path)  # atomic create-if-absent, full content
+            write_atomic(snap_path, json.dumps(asdict(snap), indent=1), exclusive=True)
         except FileExistsError:
             raise ConcurrentCommitError(
                 f"v{snap.snapshot_id} already committed by a concurrent writer"
             ) from None
-        finally:
-            os.unlink(tmp)
-        self._swap_pointer(snap.name)
         return snap
-
-    def _swap_pointer(self, name: str) -> None:
-        ptr = os.path.join(self.dir, "current")
-        tmp = ptr + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(name)
-        os.replace(tmp, ptr)  # atomic on POSIX
 
     # -- tags ------------------------------------------------------------
     # Named refs (Iceberg tag analog): `_snapshots/tag-<name>.json`, one
@@ -165,19 +195,14 @@ class SnapshotLog:
     # ("corpus a model trained on"), and expiry/GC keep that snapshot
     # reachable for as long as the tag lives.
 
-    _TAG_NAME_OK = staticmethod(
-        lambda name: bool(name) and all(c.isalnum() or c in "._-" for c in name)
-    )
-
     def _tag_path(self, name: str) -> str:
-        if not self._TAG_NAME_OK(name):
-            raise ValueError(f"bad tag name {name!r} (alnum . _ - only)")
+        check_name(name, "tag name")
         return os.path.join(self.dir, f"tag-{name}.json")
 
     def set_tag(self, name: str, snapshot_id: int | None = None, replace: bool = False) -> dict:
         """Pin ``name`` to ``snapshot_id`` (default: HEAD). Exclusive by
         default (a second tagger gets FileExistsError); ``replace=True``
-        retargets atomically via os.replace."""
+        retargets atomically."""
         sid = snapshot_id if snapshot_id is not None else self.current_id()
         if sid is None:
             raise ValueError("cannot tag an empty table")
@@ -186,19 +211,10 @@ class SnapshotLog:
         except FileNotFoundError:
             raise ValueError(f"snapshot v{sid} does not exist") from None
         rec = {"name": name, "snapshot_id": sid, "created_ms": int(time.time() * 1000)}
-        path = self._tag_path(name)
-        tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(rec, f, indent=1)
-        if replace:
-            os.replace(tmp, path)
-        else:
-            try:
-                os.link(tmp, path)  # atomic create-if-absent
-            except FileExistsError:
-                raise FileExistsError(f"tag {name!r} already exists (replace=True to move)") from None
-            finally:
-                os.unlink(tmp)
+        try:
+            write_atomic(self._tag_path(name), json.dumps(rec, indent=1), exclusive=not replace)
+        except FileExistsError:
+            raise FileExistsError(f"tag {name!r} already exists (replace=True to move)") from None
         return rec
 
     def resolve_tag(self, name: str) -> int:

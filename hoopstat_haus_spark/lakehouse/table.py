@@ -5,7 +5,7 @@ Layout (SURVEY.md §7.2):
     <path>/data/source=<s>/<file>.parquet     data files (Hive dirs)
     <path>/_manifests/list-*.json             manifest list (1 record/partition)
     <path>/_manifests/shard-*.parquet         per-partition file-stats shards
-    <path>/_snapshots/v<N>.json + current     snapshot log (snapshots.py)
+    <path>/_snapshots/v<N>.json               snapshot log; newest = HEAD (snapshots.py)
     <path>/_checkpoints/<job_id>/*.json       in-flight compaction lineage (checkpoint.py)
 
 Readers always resolve data files THROUGH a snapshot's manifest — never
@@ -15,7 +15,7 @@ silver-ready marker, ``meta/adr/ADR-028:33-38``).
 
 ``commit_rewrite`` (module level) is THE file-set commit: create,
 append, compact, merge, delete, update and WAP publish all drop/add
-manifest entries and swap the snapshot pointer through it. Only the
+manifest entries and commit the next snapshot record through it. Only the
 metadata-only commits (``evolve_schema``, ``rollback``) reuse an
 existing manifest and call ``SnapshotLog.commit`` directly.
 
@@ -295,7 +295,6 @@ class TokenLakeTable:
     def scan(
         self,
         snapshot_id: int | None = None,
-        include_zkey: bool = False,
         n_tok_min: int | None = None,
         n_tok_max: int | None = None,
         sources: list[str] | None = None,
@@ -347,7 +346,7 @@ class TokenLakeTable:
             entries = [e for e in entries if e["min_n_tok"] <= n_tok_max]
         if not entries:
             return local_frame(self.spark, schema.ddl())
-        df = read_touched(self, schema, entries, keep_zkey=include_zkey)
+        df = read_touched(self, schema, entries)
         if n_tok_min is not None:
             df = df.filter(F.col("n_tok") >= n_tok_min)
         if n_tok_max is not None:
@@ -825,13 +824,12 @@ def read_touched(
     table: TokenLakeTable,
     schema: TableSchema,
     entries: list[dict],
-    keep_zkey: bool = False,
     with_pos: bool = False,
 ) -> DataFrame:
     """THE reader of table data files: the rows of exactly the listed
     manifest entries under ``schema`` (explicit read schema, so a file
     older than an evolved column reads it as NULL and then its default;
-    ``_zkey`` dropped unless ``keep_zkey``). ``with_pos`` adds the
+    ``_zkey`` dropped). ``with_pos`` adds the
     ``POS_FILE``/``POS_ROW`` columns the DML find passes collect.
 
     Every entry is read through ONE parquet relation per
@@ -904,8 +902,6 @@ def read_touched(
         df = df.join(F.broadcast(hits), _POS_KEYS, "left_outer")
         df = df.filter(keep(F.col(_POS_HIT).isNotNull(), marks))
     cols = schema.names()
-    if keep_zkey:
-        cols.append(mf.ZKEY_COL)
     if with_pos:
         cols += [POS_FILE, POS_ROW]
     # the join puts its keys first: restore the schema's column order

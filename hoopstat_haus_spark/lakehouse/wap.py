@@ -10,8 +10,10 @@ batch awaiting audit never blocks concurrent maintenance commits.
 
     _snapshots/staged-<ref>.json  — staged record (file entries inline)
 
+The record is created exclusively (``snapshots.write_atomic``: one
+staged batch per ref), and ``<ref>`` must pass ``snapshots.check_name``.
 ``stage_append`` writes the data files and computes their manifest
-entries, but moves no pointer and claims no version. Audits read the
+entries, but commits no snapshot and claims no version. Audits read the
 staged rows through ``scan_staged`` (same explicit-schema/defaults path
 as a committed scan) — e.g. ``quarantine.validate_batch`` over them.
 ``publish_staged`` replays an append commit against WHATEVER head
@@ -39,18 +41,18 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from hoopstat_haus_spark.lakehouse import snapshots
 from hoopstat_haus_spark.lakehouse.schema import read_schema
 from hoopstat_haus_spark.lakehouse.snapshots import ConcurrentCommitError, Snapshot
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite, read_touched
 
-
-def _ref_ok(ref: str) -> bool:
-    return bool(ref) and all(c.isalnum() or c in "._-" for c in ref)
+# commit attempts of one publish before its last ConcurrentCommitError
+# is raised
+PUBLISH_RETRIES = 5
 
 
 def _staged_path(table_path: str, ref: str) -> str:
-    if not _ref_ok(ref):
-        raise ValueError(f"bad staged ref {ref!r} (alnum . _ - only)")
+    snapshots.check_name(ref, "staged ref")
     return os.path.join(table_path, "_snapshots", f"staged-{ref}.json")
 
 
@@ -99,15 +101,11 @@ def stage_append(
         "entries": entries,
         "created_ms": int(time.time() * 1000),
     }
-    tmp = path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump(rec, f, indent=1)
     try:
-        os.link(tmp, path)  # exclusive: one staged batch per ref
+        # exclusive: one staged batch per ref
+        snapshots.write_atomic(path, json.dumps(rec, indent=1), exclusive=True)
     except FileExistsError:
         raise FileExistsError(f"staged ref {ref!r} already exists") from None
-    finally:
-        os.unlink(tmp)
     return rec
 
 
@@ -130,7 +128,7 @@ def _finish_published(table: TokenLakeTable, ref: str, snap: Snapshot) -> Snapsh
     return snap
 
 
-def publish_staged(table: TokenLakeTable, ref: str, max_retries: int = 5) -> Snapshot:
+def publish_staged(table: TokenLakeTable, ref: str) -> Snapshot:
     """Expose a staged batch: one append commit against the CURRENT
     head (not the stage-time head — appends commute with every commit
     kind, so the batch rebases onto whatever maintenance ran since).
@@ -161,7 +159,7 @@ def publish_staged(table: TokenLakeTable, ref: str, max_retries: int = 5) -> Sna
                 return _finish_published(table, ref, snap)
         raise
     last_err: ConcurrentCommitError | None = None
-    for _ in range(max_retries):
+    for _ in range(PUBLISH_RETRIES):
         head = table.log.current()
         # re-check ANY snapshot committed since the last scan — including
         # on the first attempt (a same-ref publish can land between the

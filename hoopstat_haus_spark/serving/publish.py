@@ -18,9 +18,10 @@ Design:
   snapshot manifest.
 - ``index/latest.json`` lists every artifact {resource_uri, rows,
   bytes} plus per-query row totals and the publish timestamp. It is
-  written ATOMICALLY LAST via os.replace — a reader always sees either
+  replaced ATOMICALLY LAST (``lakehouse.snapshots.write_atomic``, the
+  one metadata write of the lakehouse) — a reader always sees either
   the complete new catalog or the previous one, the same
-  commit-ordering rule as the lakehouse snapshot pointer; and since
+  commit-ordering rule as a lakehouse snapshot record; and since
   pages are immutable, the OLD catalog's pages stay intact for
   in-flight readers (the previous publish is retained; older ones are
   pruned after the swap).
@@ -38,6 +39,8 @@ import os
 import time
 
 from pyspark.sql import SparkSession
+
+from hoopstat_haus_spark.lakehouse import snapshots
 
 MAX_ARTIFACT_BYTES = 100 * 1024
 
@@ -94,9 +97,7 @@ def _write_pages(
         rel = f"{name}/{pub_id}/{len(records):04d}.json"
         path = os.path.join(out_root, rel)
         body = "\n".join(page) + ("\n" if page else "")
-        with open(path + ".tmp", "w") as f:
-            f.write(body)
-        os.replace(path + ".tmp", path)
+        snapshots.write_atomic(path, body)
         rec = {
             "resource_uri": rel[: -len(".json")],
             "rows": len(page),
@@ -143,15 +144,14 @@ def _prune_old_publishes(out_root: str, names: list[str], keep: int = 2) -> None
 
 
 def _write_index(out_root: str, index: dict) -> None:
-    """Commit the catalog ATOMICALLY LAST (tmp + os.replace): a reader
-    always sees either the complete new index or the previous one — the
-    same ordering rule as the lakehouse snapshot pointer. Both
+    """Commit the catalog ATOMICALLY LAST (``snapshots.write_atomic``):
+    a reader always sees either the complete new index or the previous
+    one — the same ordering rule as a lakehouse snapshot record. Both
     publishers share this so the commit protocol can't drift."""
     os.makedirs(os.path.join(out_root, "index"), exist_ok=True)
-    tmp = os.path.join(out_root, "index", "latest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(index, f, indent=1)
-    os.replace(tmp, os.path.join(out_root, "index", "latest.json"))
+    snapshots.write_atomic(
+        os.path.join(out_root, "index", "latest.json"), json.dumps(index, indent=1)
+    )
 
 
 def publish_gold_artifacts(

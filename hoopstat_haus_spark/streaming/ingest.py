@@ -290,7 +290,6 @@ def stream_ingest(
     dedupe: str | None = "key",
     validate: bool = False,
     content_index: str | None = None,
-    max_files_per_trigger: int | None = None,
 ) -> None:
     """Process every parquet file currently in ``feed_dir`` that this
     checkpoint has not seen, as one-or-more exactly-once micro-batch
@@ -302,7 +301,7 @@ def stream_ingest(
     # (parquet files without the column read it as NULL → upsert default)
     reader = (
         spark.readStream.schema(table.schema_def().ddl(extra=((OP_COL, "string"),)))
-        .option("maxFilesPerTrigger", max_files_per_trigger or 1000)
+        .option("maxFilesPerTrigger", 1000)
         .parquet(feed_dir)
     )
     q = (
