@@ -30,10 +30,10 @@ path runs from plan to write:
   the one fused writer every data write shares
   (``manifest.write_data_files``: files and their manifest stats in the
   same job), which sorts each task by ``_zkey`` and rolls one file per
-  bucket. Every Python writer task costs ~0.2 s of worker CPU whatever
-  its row count, so small units write many files from one task. Output
-  files get balanced row counts and DISJOINT Z-ranges — that
-  disjointness is what makes manifest zmin/zmax pruning effective.
+  bucket. Tasks are sized by bytes, so a small unit writes many files
+  from one task. Output files get balanced row counts and DISJOINT
+  Z-ranges — that disjointness is what makes manifest zmin/zmax
+  pruning effective.
   ``TokenLakeTable.compact`` runs the units on their own session with
   AQE off: routing is explicit, so there is nothing to re-plan.
 

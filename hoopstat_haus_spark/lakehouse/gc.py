@@ -20,6 +20,11 @@ Concurrent-writer safety (Iceberg's orphan-file rules):
   checkpoints (a compaction that returns clears its own; merge, delete
   and update write none), so committed outputs are protected only by
   reachability and become garbage once their snapshots expire.
+- **publish leftovers**: a process killed inside
+  ``snapshots.write_atomic`` leaves its ``<name>.tmp-<32 hex>`` behind;
+  past the min age these are swept from ``_snapshots/``, ``_schema/``
+  and ``_metrics/`` (``_manifests/`` is swept whole) and reported under
+  ``removed_manifests``.
 - **scoped staging sweep**: only ``.staging/<job_id>`` dirs older than
   the min age AND not owned by a checkpointed job are removed — never
   the whole tree (which would destroy a live job's in-flight output).
@@ -36,8 +41,10 @@ Spark job over manifest DataFrames.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import re
 import shutil
 import time
 
@@ -45,6 +52,8 @@ from hoopstat_haus_spark.lakehouse import manifest as mf
 from hoopstat_haus_spark.lakehouse.snapshots import SnapshotLog
 
 DEFAULT_MIN_AGE_S = 3600.0
+# the tmp name snapshots.write_atomic publishes through
+_PUBLISH_TMP = re.compile(r".+\.tmp-[0-9a-f]{32}")
 
 
 def _checkpoint_protected(table_path: str) -> set[str]:
@@ -148,6 +157,18 @@ def collect_garbage(
                 removed_manifests.append(rel)
                 if not dry_run:
                     os.remove(abs_path)
+
+    for sub in ("_snapshots", "_schema", "_metrics"):
+        meta_dir = os.path.join(table_path, sub)
+        if not os.path.isdir(meta_dir):
+            continue
+        for name in os.listdir(meta_dir):
+            abs_path = os.path.join(meta_dir, name)
+            if _PUBLISH_TMP.fullmatch(name) and not young(abs_path):
+                removed_manifests.append(f"{sub}/{name}")
+                if not dry_run:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(abs_path)
 
     # sweep ONLY stale per-job staging dirs; jobs with a checkpoint dir
     # are resumable and keep their staging until the checkpoint is gone

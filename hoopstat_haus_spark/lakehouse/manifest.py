@@ -73,9 +73,9 @@ ZKEY_COL = "_zkey"  # kept in data files: parquet footers carry its min/max
 BUCKET_COL = "_bucket"
 
 # input bytes one fused-writer task takes: DML new-row writes and each
-# compaction unit's write stage size their task count by it. A Python
-# writer task costs ~0.2 s of worker CPU whatever its row count, so
-# Python stages are sized by bytes, not by output files.
+# compaction unit's write stage size their task count by it. Python
+# stages are sized by bytes, not by output files: fewer, fuller tasks
+# mean fewer Arrow round trips and less shuffle.
 WRITE_TASK_BYTES = 128 << 20
 
 # the dv_* fields of a file without a deletion vector (also what an

@@ -252,10 +252,13 @@ class SnapshotLog:
         ``older_than_ms`` adds Iceberg's age cutoff: a snapshot committed
         at or after that timestamp is NEVER expired, regardless of
         ``keep_last`` — age only widens retention, so a retention policy
-        of "keep 7 days" cannot be narrowed by a burst of commits."""
+        of "keep 7 days" cannot be narrowed by a burst of commits.
+        ``keep_last=0`` keeps only HEAD, tagged and age-protected ones."""
+        if keep_last < 0:
+            raise ValueError(f"keep_last must be >= 0, got {keep_last}")
         ids = self.list_ids()
         head = self.current_id()
-        keep = set(ids[-keep_last:])
+        keep = set(ids[-keep_last:]) if keep_last else set()  # ids[-0:] is every id
         if head is not None:
             keep.add(head)
         keep.update(self.tags().values())
