@@ -41,15 +41,13 @@ metrics)``): readers keep the current snapshot, and the run's
 from __future__ import annotations
 
 import os
-import uuid
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
-from hoopstat_haus_spark.lakehouse.health import job_record
-from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
+from hoopstat_haus_spark.lakehouse.health import JobMetrics, job_record
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 from hoopstat_haus_spark.lakehouse.table import (
     POS_FILE,
@@ -74,7 +72,6 @@ def delete_where(
     partitions (manifest-level pruning — shards of other partitions are
     never opened). Writes DVs only, never a data file.
     """
-    job_id = job_id or f"delete-{uuid.uuid4().hex[:10]}"
     with job_record(table.path, "delete", job_id) as metrics:
         pred = F.expr(condition) if isinstance(condition, str) else condition
         head, matched_rows, cand, shard_entries = find_touched_files(
@@ -82,7 +79,7 @@ def delete_where(
         )
         if not cand:
             return None, metrics
-        summary = {"job_id": job_id, "matched_rows": matched_rows}
+        summary = {"job_id": metrics.job, "matched_rows": matched_rows}
         return commit_dvs(table, "delete", head, cand, shard_entries, [], summary, metrics), metrics
 
 

@@ -22,9 +22,9 @@ Concurrent-writer safety (Iceberg's orphan-file rules):
   reachability and become garbage once their snapshots expire.
 - **publish leftovers**: a process killed inside
   ``snapshots.write_atomic`` leaves its ``<name>.tmp-<32 hex>`` behind;
-  past the min age these are swept from ``_snapshots/``, ``_schema/``
-  and ``_metrics/`` (``_manifests/`` is swept whole) and reported under
-  ``removed_manifests``.
+  past the min age these are swept from the whole table tree but
+  ``data/``, ``.staging/`` and ``_manifests/`` (each swept by its own
+  rule) and reported under ``removed_manifests``.
 - **scoped staging sweep**: only ``.staging/<job_id>`` dirs older than
   the min age AND not owned by a checkpointed job are removed — never
   the whole tree (which would destroy a live job's in-flight output).
@@ -158,14 +158,16 @@ def collect_garbage(
                 if not dry_run:
                     os.remove(abs_path)
 
-    for sub in ("_snapshots", "_schema", "_metrics"):
-        meta_dir = os.path.join(table_path, sub)
-        if not os.path.isdir(meta_dir):
-            continue
-        for name in os.listdir(meta_dir):
-            abs_path = os.path.join(meta_dir, name)
+    # publish leftovers wherever write_atomic runs: every metadata dir,
+    # and the table root (the quarantine pointer). The trees swept by
+    # their own rules are left out.
+    for dirpath, dirs, files in os.walk(table_path):
+        if dirpath == table_path:
+            dirs[:] = [d for d in dirs if d not in ("data", ".staging", "_manifests")]
+        for name in files:
+            abs_path = os.path.join(dirpath, name)
             if _PUBLISH_TMP.fullmatch(name) and not young(abs_path):
-                removed_manifests.append(f"{sub}/{name}")
+                removed_manifests.append(os.path.relpath(abs_path, table_path))
                 if not dry_run:
                     with contextlib.suppress(FileNotFoundError):
                         os.remove(abs_path)

@@ -6,9 +6,15 @@ OPERATIONAL / DEGRADED / OUTAGE statuses (most-recent-run semantics,
 worst-stage-wins overall, ``_derive_stage_statuses`` at :190-257).
 
 Engine version: every compact / merge / delete / update run enters
-:func:`job_record`, which appends exactly one JSON metrics record to
-``_metrics/`` when the run ends — success (a no-op run included, with
-``snapshot_id`` None) or failure. :func:`health_report` rolls the
+:func:`job_record`, which yields the run's :class:`JobMetrics` and
+appends exactly one JSON record of it to ``_metrics/`` when the run
+ends — success (a no-op run included, with ``snapshot_id`` None) or
+failure. The record is the reference's per-job performance context
+manager output (``apps/gold-analytics/app/performance.py:22-198``,
+throughput at ``:190-193``: ``{job, duration_s, records_processed,
+records_per_second}``), extended with the byte-level numbers the north
+rule grades (GB in/out, GB/hr, files and partitions touched), plus the
+run's status, commit and error. :func:`health_report` rolls the
 records up per operation with the reference's status rules:
 
 - OPERATIONAL — the most recent run of the operation succeeded
@@ -29,15 +35,64 @@ import os
 import time
 import uuid
 from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 from hoopstat_haus_spark.lakehouse import snapshots
-from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
 
 OPERATIONAL = "operational"
 DEGRADED = "degraded"
 OUTAGE = "outage"
 
 _SEVERITY = {OPERATIONAL: 0, DEGRADED: 1, OUTAGE: 2}
+
+
+@dataclass
+class JobMetrics:
+    job: str
+    started: float = field(default_factory=time.time)
+    bytes_in: int = 0
+    bytes_out: int = 0
+    rows: int = 0
+    tokens: int = 0
+    files_in: int = 0
+    files_out: int = 0
+    partitions: int = 0
+    duration_s: float = 0.0
+    snapshot_id: int | None = None  # the run's commit; None for a no-op
+
+    def finish(self) -> "JobMetrics":
+        self.duration_s = time.time() - self.started
+        return self
+
+    @property
+    def gb_in(self) -> float:
+        return self.bytes_in / 1e9
+
+    @property
+    def gb_per_hour(self) -> float:
+        if self.duration_s <= 0:
+            return 0.0
+        return self.gb_in / (self.duration_s / 3600.0)
+
+    @property
+    def rows_per_second(self) -> float:
+        return self.rows / self.duration_s if self.duration_s > 0 else 0.0
+
+    def to_dict(self) -> dict:
+        return {
+            "job": self.job,
+            "duration_s": round(self.duration_s, 3),
+            "bytes_in": self.bytes_in,
+            "bytes_out": self.bytes_out,
+            "gb_in": round(self.gb_in, 4),
+            "gb_per_hour": round(self.gb_per_hour, 2),
+            "rows": self.rows,
+            "tokens": self.tokens,
+            "rows_per_second": round(self.rows_per_second, 1),
+            "files_in": self.files_in,
+            "files_out": self.files_out,
+            "partitions": self.partitions,
+        }
 
 
 def _metrics_dir(table_path: str) -> str:
@@ -74,10 +129,12 @@ def record_job_metrics(
 
 
 @contextmanager
-def job_record(table_path: str, operation: str, job_id: str):
+def job_record(table_path: str, operation: str, job_id: str | None = None):
     """One maintenance run's lifecycle record: yields a fresh
-    ``JobMetrics(job=job_id)`` and writes exactly one ``_metrics``
-    record when the body ends. A body that commits sets
+    ``JobMetrics(job=job_id)`` (``job_id`` defaults to
+    ``<operation>-<10 hex>``; the body reads it as ``metrics.job``) and
+    writes exactly one ``_metrics`` record when the body ends. A body
+    that commits sets
     ``metrics.snapshot_id``; one that returns without committing (a
     no-op) still records ``status='success'``, so a healthy stage never
     goes stale. A body that raises records ``status='failed'`` and
@@ -91,6 +148,7 @@ def job_record(table_path: str, operation: str, job_id: str):
     ``job_id`` names the job's checkpoint and staging dirs and its
     output files, so it must pass ``snapshots.check_name``; a bad id
     raises ValueError before the body runs and records nothing."""
+    job_id = job_id or f"{operation}-{uuid.uuid4().hex[:10]}"
     snapshots.check_name(job_id, "job id")
     metrics = JobMetrics(job=job_id)
     try:

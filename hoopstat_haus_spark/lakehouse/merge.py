@@ -32,7 +32,6 @@ carried into the new manifest by reference.
 from __future__ import annotations
 
 import bisect
-import uuid
 from collections import Counter
 
 from pyspark.sql import DataFrame
@@ -45,8 +44,7 @@ from hoopstat_haus_spark.lakehouse.delete import (
     commit_dvs,
     write_new_rows,
 )
-from hoopstat_haus_spark.lakehouse.health import job_record
-from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
+from hoopstat_haus_spark.lakehouse.health import JobMetrics, job_record
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 from hoopstat_haus_spark.lakehouse.table import POS_FILE, POS_ROW, TokenLakeTable, read_touched
 
@@ -115,174 +113,157 @@ def merge_into(
         raise ValueError(
             f"summary_extra keys would clobber commit aggregates: {sorted(clash)}"
         )
-    job_id = job_id or f"merge-{uuid.uuid4().hex[:10]}"
     with job_record(table.path, "merge", job_id) as metrics:
-        return _merge_run(table, updates, job_id, curve, metrics, summary_extra)
+        head = table.log.current()
+        # manifest LIST only — per-partition shards are read later, and
+        # only for the partitions the update feed actually touches
+        records = mf.read_manifest_list(table.path, head.manifest)
 
-
-def _merge_run(
-    table: TokenLakeTable,
-    updates: DataFrame,
-    job_id: str,
-    curve: str,
-    metrics: JobMetrics,
-    summary_extra: dict | None = None,
-) -> tuple[Snapshot, JobMetrics]:
-    head = table.log.current()
-    # manifest LIST only — per-partition shards are read later, and only
-    # for the partitions the update feed actually touches
-    records = mf.read_manifest_list(table.path, head.manifest)
-
-    schema = table.schema_def()
-    value_cols = [f for f in schema.fields if f["name"] not in ("doc_id", "source")]
-    # one _op per row: a missing or NULL _op upserts
-    op = F.col(OP_COL) if OP_COL in updates.columns else F.lit(None)
-    # project onto the live schema, keeping _op: evolved columns absent
-    # from the update feed become NULL → the coalesce below keeps the
-    # target's value (an explicit NULL overwrite is not expressible —
-    # same limitation as the reference's dict-merge upserts)
-    proj = [
-        (
-            F.col(f["name"]).cast(f["type"])
-            if f["name"] in updates.columns
-            else F.lit(None).cast(f["type"])
-        ).alias(f["name"])
-        for f in schema.fields
-    ]
-    # cache the projected update set: the planning collect below
-    # materializes it, and the match pass and the write read it again
-    updates = updates.select(
-        *proj, F.coalesce(op.cast("string"), F.lit("upsert")).alias(OP_COL)
-    ).persist()
-    try:
-        return _merge_apply(
-            table, updates, job_id, curve, metrics, head, records, schema, value_cols,
-            summary_extra,
-        )
-    finally:
-        updates.unpersist()
-
-
-def _merge_apply(
-    table, updates, job_id, curve, metrics, head, records, schema, value_cols,
-    summary_extra=None,
-):
-    # ONE collect of the feed's keys plans the whole merge driver-side:
-    # the duplicate-key check, the write size, the feed partitions
-    # (which decide the manifest shards to read) and the candidate
-    # files. The feed is broadcast whole in the match pass, so its keys
-    # are driver-sized; the collect is Arrow, so no Python worker runs.
-    feed = updates.select("doc_id", "source", OP_COL).toArrow().to_pydict()
-    keys = list(zip(feed["doc_id"], feed["source"]))
-    if len(set(keys)) < len(keys):
-        # NULLs compare equal here, as in a groupBy
-        doc_id, source = next(k for k, n in Counter(keys).items() if n > 1)
-        raise ValueError(
-            f"merge_into: duplicate update key (doc_id={doc_id!r}, "
-            f"source={source!r}) — MERGE requires unique (doc_id, source); "
-            "dedupe the update set first"
-        )
-    # every non-delete feed row is an upsert or an insert; it must name
-    # its partition (a NULL-source delete matches nothing, as in SQL)
-    if any(s is None and op != "delete" for s, op in zip(feed["source"], feed[OP_COL])):
-        raise ValueError(
-            "merge_into: an upsert or insert row has a NULL source — every "
-            "written row must name its partition"
-        )
-    n_new = sum(op != "delete" for op in feed[OP_COL])
-    feed_parts = {s for s in feed["source"] if s is not None}
-
-    # read ONLY the feed partitions' manifest shards: untouched
-    # partitions never materialize driver-side, so a MERGE into 1 of
-    # 10^4 partitions plans against one shard's entries
-    shard_entries = {
-        r["partition"]: mf.read_shard(table.path, r)
-        for r in records
-        if r["partition"] in feed_parts
-    }
-    cand = _candidate_files(
-        [e for es in shard_entries.values() for e in es], _keys_by_part(keys)
-    )
-    metrics.files_in = len(cand)
-    metrics.bytes_in = sum(e["file_bytes"] for e in cand)
-    metrics.partitions = len({e["partition"] for e in cand})
-
-    u = updates.alias("u")
-    # feed rows that insert: the non-deletes, less the matched keys below
-    new_rows = u.filter(F.col(OP_COL) != "delete")
-    hits: list[dict] = []
-    matched = None
-    try:
-        if cand:
-            # the ONE match pass: candidate files (under their DVs) ⋈ the
-            # broadcast feed. Cached because two actions read it — the
-            # DV positions collect and the write — while it holds only
-            # the matched rows, so the candidate files are scanned once.
-            t = read_touched(table, schema, cand, with_pos=True).alias("t")
-            matched = (
-                t.join(F.broadcast(u), ["doc_id", "source"], "inner")
-                .select(
-                    F.col("doc_id"),
-                    F.col("source"),
-                    F.col(f"t.{POS_FILE}").alias(POS_FILE),
-                    F.col(f"t.{POS_ROW}").alias(POS_ROW),
-                    F.col("t.n_tok").alias("n_tok"),  # the target's: DV token count
-                    F.col(f"u.{OP_COL}").alias(OP_COL),
-                    # a feed NULL (e.g. an evolved column the feed lacks)
-                    # keeps the target's value
-                    *[
-                        F.coalesce(F.col(f"u.{f['name']}"), F.col(f"t.{f['name']}"))
-                        .cast(f["type"])
-                        .alias(f"_new_{f['name']}")
-                        for f in value_cols
-                    ],
+        schema = table.schema_def()
+        value_cols = [f for f in schema.fields if f["name"] not in ("doc_id", "source")]
+        # one _op per row: a missing or NULL _op upserts
+        op = F.col(OP_COL) if OP_COL in updates.columns else F.lit(None)
+        # project onto the live schema, keeping _op: evolved columns
+        # absent from the update feed become NULL → the coalesce below
+        # keeps the target's value (an explicit NULL overwrite is not
+        # expressible — same limitation as the reference's dict-merge
+        # upserts)
+        proj = [
+            (
+                F.col(f["name"]).cast(f["type"])
+                if f["name"] in updates.columns
+                else F.lit(None).cast(f["type"])
+            ).alias(f["name"])
+            for f in schema.fields
+        ]
+        # cache the projected update set: the planning collect below
+        # materializes it, and the match pass and the write read it again
+        updates = updates.select(
+            *proj, F.coalesce(op.cast("string"), F.lit("upsert")).alias(OP_COL)
+        ).persist()
+        try:
+            # ONE collect of the feed's keys plans the whole merge
+            # driver-side: the duplicate-key check, the write size, the
+            # feed partitions (which decide the manifest shards to read)
+            # and the candidate files. The feed is broadcast whole in the
+            # match pass, so its keys are driver-sized; the collect is
+            # Arrow, so no Python worker runs.
+            feed = updates.select("doc_id", "source", OP_COL).toArrow().to_pydict()
+            keys = list(zip(feed["doc_id"], feed["source"]))
+            if len(set(keys)) < len(keys):
+                # NULLs compare equal here, as in a groupBy
+                doc_id, source = next(k for k, n in Counter(keys).items() if n > 1)
+                raise ValueError(
+                    f"merge_into: duplicate update key (doc_id={doc_id!r}, "
+                    f"source={source!r}) — MERGE requires unique (doc_id, source); "
+                    "dedupe the update set first"
                 )
-                .persist()
-            )
-            hits = collect_hits(matched, cand)
-            new_rows = new_rows.join(
-                matched.select("doc_id", "source"), ["doc_id", "source"], "left_anti"
-            )
-        new_rows = schema.apply_defaults(new_rows.select(*schema.names()))
-        if matched is not None:
-            upserts = matched.filter(F.col(OP_COL) != "delete")
-            new_rows = upserts.select(
-                *[
-                    c if c in ("doc_id", "source") else F.col(f"_new_{c}").alias(c)
-                    for c in schema.names()
-                ]
-            ).unionByName(new_rows)
-        # matched upserts and inserts: ONE fused write, sized from the
-        # planning collect
-        fresh = []
-        if n_new:
-            # row width from the manifest LIST's per-shard aggregates
-            row_bytes = avg_row_bytes(records)
-            fresh = write_new_rows(
-                table, new_rows, n_new, row_bytes, f"merge-{job_id}", curve
-            )
-    finally:
-        if matched is not None:
-            matched.unpersist()
+            # every non-delete feed row is an upsert or an insert; it must
+            # name its partition (a NULL-source delete matches nothing, as
+            # in SQL)
+            if any(s is None and op != "delete" for s, op in zip(feed["source"], feed[OP_COL])):
+                raise ValueError(
+                    "merge_into: an upsert or insert row has a NULL source — every "
+                    "written row must name its partition"
+                )
+            n_new = sum(op != "delete" for op in feed[OP_COL])
+            feed_parts = {s for s in feed["source"] if s is not None}
 
-    # stats came back from the write job itself (fused writer) — no
-    # re-read of the new files
-    metrics.rows = sum(e["row_count"] for e in fresh)
-    metrics.tokens = sum(e["token_count"] for e in fresh)
-    # new shards only for partitions that actually changed (a DV'd file
-    # or a fresh output); everything else rides by reference.
-    # summary_extra overlap with the commit's own keys is rejected at
-    # entry, so history() never sees clobbered aggregates
-    snap = commit_dvs(
-        table,
-        "merge",
-        head,
-        hits,
-        # a feed partition new to the table starts empty: every touched
-        # partition is in shards, so the commit re-reads no manifest
-        {p: [] for p in feed_parts} | shard_entries,
-        fresh,
-        {"job_id": job_id, **(summary_extra or {})},
-        metrics,
-    )
-    return snap, metrics
+            # read ONLY the feed partitions' manifest shards: untouched
+            # partitions never materialize driver-side, so a MERGE into 1
+            # of 10^4 partitions plans against one shard's entries
+            shard_entries = {
+                r["partition"]: mf.read_shard(table.path, r)
+                for r in records
+                if r["partition"] in feed_parts
+            }
+            cand = _candidate_files(
+                [e for es in shard_entries.values() for e in es], _keys_by_part(keys)
+            )
+            metrics.files_in = len(cand)
+            metrics.bytes_in = sum(e["file_bytes"] for e in cand)
+            metrics.partitions = len({e["partition"] for e in cand})
+
+            u = updates.alias("u")
+            # feed rows that insert: the non-deletes, less the matched keys
+            new_rows = u.filter(F.col(OP_COL) != "delete")
+            hits: list[dict] = []
+            matched = None
+            try:
+                if cand:
+                    # the ONE match pass: candidate files (under their DVs)
+                    # ⋈ the broadcast feed. Cached because two actions read
+                    # it — the DV positions collect and the write — while
+                    # it holds only the matched rows, so the candidate
+                    # files are scanned once.
+                    t = read_touched(table, schema, cand, with_pos=True).alias("t")
+                    matched = (
+                        t.join(F.broadcast(u), ["doc_id", "source"], "inner")
+                        .select(
+                            F.col("doc_id"),
+                            F.col("source"),
+                            F.col(f"t.{POS_FILE}").alias(POS_FILE),
+                            F.col(f"t.{POS_ROW}").alias(POS_ROW),
+                            F.col("t.n_tok").alias("n_tok"),  # the target's: DV token count
+                            F.col(f"u.{OP_COL}").alias(OP_COL),
+                            # a feed NULL (e.g. an evolved column the feed
+                            # lacks) keeps the target's value
+                            *[
+                                F.coalesce(F.col(f"u.{f['name']}"), F.col(f"t.{f['name']}"))
+                                .cast(f["type"])
+                                .alias(f"_new_{f['name']}")
+                                for f in value_cols
+                            ],
+                        )
+                        .persist()
+                    )
+                    hits = collect_hits(matched, cand)
+                    new_rows = new_rows.join(
+                        matched.select("doc_id", "source"), ["doc_id", "source"], "left_anti"
+                    )
+                new_rows = schema.apply_defaults(new_rows.select(*schema.names()))
+                if matched is not None:
+                    upserts = matched.filter(F.col(OP_COL) != "delete")
+                    new_rows = upserts.select(
+                        *[
+                            c if c in ("doc_id", "source") else F.col(f"_new_{c}").alias(c)
+                            for c in schema.names()
+                        ]
+                    ).unionByName(new_rows)
+                # matched upserts and inserts: ONE fused write, sized from
+                # the planning collect
+                fresh = []
+                if n_new:
+                    # row width from the manifest LIST's per-shard aggregates
+                    row_bytes = avg_row_bytes(records)
+                    fresh = write_new_rows(
+                        table, new_rows, n_new, row_bytes, f"merge-{metrics.job}", curve
+                    )
+            finally:
+                if matched is not None:
+                    matched.unpersist()
+
+            # stats came back from the write job itself (fused writer) —
+            # no re-read of the new files
+            metrics.rows = sum(e["row_count"] for e in fresh)
+            metrics.tokens = sum(e["token_count"] for e in fresh)
+            # new shards only for partitions that actually changed (a DV'd
+            # file or a fresh output); everything else rides by reference.
+            # summary_extra overlap with the commit's own keys is rejected
+            # at entry, so history() never sees clobbered aggregates
+            snap = commit_dvs(
+                table,
+                "merge",
+                head,
+                hits,
+                # a feed partition new to the table starts empty: every
+                # touched partition is in shards, so the commit re-reads
+                # no manifest
+                {p: [] for p in feed_parts} | shard_entries,
+                fresh,
+                {"job_id": metrics.job, **(summary_extra or {})},
+                metrics,
+            )
+        finally:
+            updates.unpersist()
+        return snap, metrics

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from hoopstat_haus_spark.lakehouse import snapshots
 from hoopstat_haus_spark.lakehouse.merge import merge_into
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, local_frame
+from hoopstat_haus_spark.tables.token_table import token_sig
 
 VOCAB_SIZE = 50257
 
@@ -173,8 +174,7 @@ def replay(
     # duplicate keys, so pick ONE deterministic winner per (doc_id,
     # source) — longest token array, then lexicographic token digest
     dedupe_w = Window.partitionBy("doc_id", "source").orderBy(
-        F.desc("n_tok"),
-        F.md5(F.concat_ws(",", F.transform("tokens", lambda t: t.cast("string")))),
+        F.desc("n_tok"), token_sig(F.col("tokens"))
     )
     valid = (
         valid.withColumn("_rn", F.row_number().over(dedupe_w))

@@ -115,6 +115,21 @@ class SnapshotLog:
                 out.append(int(name[1:-5]))
         return sorted(out)
 
+    def stamped(self, key: str, value, after: int = -1) -> Snapshot | None:
+        """The newest retained snapshot with id > ``after`` whose
+        ``summary[key] == value``, or None — the one "did this commit
+        already land?" lookup (WAP's ``wap_ref``, the stream ingest's
+        ``stream_id``). Walks newest-first and stops at ``after``, so a
+        caller that remembers the head it last checked reads only the
+        snapshots committed since."""
+        for sid in reversed(self.list_ids()):
+            if sid <= after:
+                break
+            snap = self.get(sid)
+            if snap.summary.get(key) == value:
+                return snap
+        return None
+
     def snapshot_as_of(self, ts_ms: int) -> int:
         """Newest RETAINED snapshot committed at or before ``ts_ms``
         (Delta's TIMESTAMP AS OF). Raises if every retained snapshot is

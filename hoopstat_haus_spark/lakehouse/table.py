@@ -75,8 +75,7 @@ from hoopstat_haus_spark.lakehouse.compaction import (
     plan_compaction,
     plan_unit_bounds,
 )
-from hoopstat_haus_spark.lakehouse.health import job_record
-from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
+from hoopstat_haus_spark.lakehouse.health import JobMetrics, job_record
 from hoopstat_haus_spark.lakehouse.schema import TableSchema, evolved, read_schema, write_schema
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot, SnapshotLog
 
@@ -394,24 +393,26 @@ class TokenLakeTable:
         if max_concurrent_units is None:
             max_concurrent_units = max(4, self.spark.sparkContext.defaultParallelism // 2)
         policy = policy or CompactionPolicy()
-        job_id = job_id or f"compact-{uuid.uuid4().hex[:10]}"
         with job_record(self.path, "compact", job_id) as metrics:
+            # a separate body so the checkpoint is cleared on every
+            # return (a commit or a no-op) and never on a raise, which
+            # leaves it for the resume
             out = self._compact_run(
-                policy, curve, job_id, max_concurrent_units, metrics, sources, curve_by_source
+                policy, curve, max_concurrent_units, metrics, sources, curve_by_source
             )
-            JobCheckpoint(self.path, job_id).clear()
+            JobCheckpoint(self.path, metrics.job).clear()
             return out
 
     def _compact_run(
         self,
         policy: CompactionPolicy,
         curve: str,
-        job_id: str,
         max_concurrent_units: int,
         metrics: JobMetrics,
         sources: list[str] | None = None,
         curve_by_source: dict[str, str] | None = None,
     ) -> tuple[Snapshot | None, JobMetrics]:
+        job_id = metrics.job
         cb = curve_by_source or {}
         head = self.log.current()
         records = mf.read_manifest_list(self.path, head.manifest)

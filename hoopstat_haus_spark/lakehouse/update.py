@@ -35,9 +35,7 @@ metrics)``); its ``_metrics`` record still reads success.
 
 from __future__ import annotations
 
-import uuid
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse.delete import (
@@ -46,8 +44,7 @@ from hoopstat_haus_spark.lakehouse.delete import (
     find_touched_files,
     write_new_rows,
 )
-from hoopstat_haus_spark.lakehouse.health import job_record
-from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
+from hoopstat_haus_spark.lakehouse.health import JobMetrics, job_record
 from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, read_touched
@@ -77,81 +74,67 @@ def update_where(
     are keyed with. Returns ``(snapshot, metrics)``; snapshot is None
     when the predicate matched nothing.
     """
-    job_id = job_id or f"update-{uuid.uuid4().hex[:10]}"
     with job_record(table.path, "update", job_id) as metrics:
-        return _update_run(table, condition, assignments, job_id, sources, curve, metrics)
+        pred = F.expr(condition) if isinstance(condition, str) else condition
+        schema = table.schema_def()
+        names = schema.names()
 
+        bad = [c for c in assignments if c in _PROTECTED]
+        if bad:
+            raise ValueError(
+                f"cannot assign identity/partition column(s) {bad}; "
+                "a partition or key move is a delete+insert (use merge_into)"
+            )
+        unknown = [c for c in assignments if c not in names]
+        if unknown:
+            raise ValueError(f"unknown column(s) {unknown}; table schema is {names}")
+        assigns = {
+            c: (F.expr(v) if isinstance(v, str) else v) for c, v in assignments.items()
+        }
+        auto_ntok = "tokens" in assigns and "n_tok" not in assigns and "n_tok" in names
 
-def _update_run(
-    table: TokenLakeTable,
-    condition: Column | str,
-    assignments: dict[str, Column | str],
-    job_id: str,
-    sources: list[str] | None,
-    curve: str,
-    metrics: JobMetrics,
-) -> tuple[Snapshot | None, JobMetrics]:
-    pred = F.expr(condition) if isinstance(condition, str) else condition
-    schema = table.schema_def()
-    names = schema.names()
+        # ---- pass 1: find touched files (shared with DELETE) -----------
+        head, matched_rows, cand, shard_entries = find_touched_files(table, pred, sources, metrics)
+        if not cand:
+            return None, metrics
 
-    bad = [c for c in assignments if c in _PROTECTED]
-    if bad:
-        raise ValueError(
-            f"cannot assign identity/partition column(s) {bad}; "
-            "a partition or key move is a delete+insert (use merge_into)"
-        )
-    unknown = [c for c in assignments if c not in names]
-    if unknown:
-        raise ValueError(f"unknown column(s) {unknown}; table schema is {names}")
-    assigns = {
-        c: (F.expr(v) if isinstance(v, str) else v) for c, v in assignments.items()
-    }
-    auto_ntok = "tokens" in assigns and "n_tok" not in assigns and "n_tok" in names
-
-    # ---- pass 1: find touched files (shared with DELETE) ---------------
-    head, matched_rows, cand, shard_entries = find_touched_files(table, pred, sources, metrics)
-    if not cand:
-        return None, metrics
-
-    # ---- pass 2: new versions of exactly the matched rows --------------
-    def assign(target: DataFrame) -> DataFrame:
+        # ---- pass 2: new versions of exactly the matched rows ----------
+        # the touched files read under their OLD DVs: pred matches exactly
+        # the rows pass 1 found
+        matched = read_touched(table, schema, cand).filter(pred)
         # Two-step projection so every RHS sees OLD values (standard
-        # UPDATE swap semantics). A single select that re-aliases
-        # `tokens` would let Spark 4's lateral column aliasing bind a
-        # later RHS's `tokens` reference to the NEW value; staging the
-        # new values under reserved `__new_*` names keeps all RHS
-        # references on the input attributes. Catalyst collapses the
-        # pair back into one Project.
-        staged = target.select("*", *[assigns[c].alias(f"__new_{c}") for c in assigns])
+        # UPDATE swap semantics). A single select that re-aliases `tokens`
+        # would let Spark 4's lateral column aliasing bind a later RHS's
+        # `tokens` reference to the NEW value; staging the new values
+        # under reserved `__new_*` names keeps all RHS references on the
+        # input attributes. Catalyst collapses the pair back into one
+        # Project.
+        staged = matched.select("*", *[assigns[c].alias(f"__new_{c}") for c in assigns])
 
-        # auto-recounted n_tok reads size(__new_tokens), NOT a copy of
-        # the tokens expression: the double reference to a non-cheap
-        # staged column blocks CollapseProject from re-inlining it
-        # (plan-verified), so the assignment expression evaluates ONCE
-        # per matched row — duplicating it would double the write's
-        # dominant per-row cost.
+        # auto-recounted n_tok reads size(__new_tokens), NOT a copy of the
+        # tokens expression: the double reference to a non-cheap staged
+        # column blocks CollapseProject from re-inlining it
+        # (plan-verified), so the assignment expression evaluates ONCE per
+        # matched row — duplicating it would double the write's dominant
+        # per-row cost.
         def _out(c: str) -> Column:
             if c == "n_tok" and auto_ntok:
                 return F.size(F.col("__new_tokens"))
             return F.col(f"__new_{c}") if c in assigns else F.col(c)
 
         # conform assignment results to the DECLARED column types
-        # (store-assignment cast, like Iceberg UPDATE): SQL `n_tok/2` is
-        # a double, and writing it as-is would commit parquet files the
+        # (store-assignment cast, like Iceberg UPDATE): SQL `n_tok/2` is a
+        # double, and writing it as-is would commit parquet files the
         # explicit-schema scan path can no longer read (INT32 expected,
         # DOUBLE found)
-        return schema.conform(staged.select(*[_out(c).alias(c) for c in names]))
-
-    # the touched files read under their OLD DVs: pred matches exactly
-    # the rows pass 1 found
-    matched = read_touched(table, schema, cand).filter(pred)
-    fresh = write_new_rows(
-        table, assign(matched), matched_rows, avg_row_bytes(cand), f"update-{job_id}", curve
-    )
-    summary = {
-        "job_id": job_id,
-        "matched_rows": matched_rows,
-        "assigned_columns": sorted(set(assigns) | ({"n_tok"} if auto_ntok else set())),
-    }
-    return commit_dvs(table, "update", head, cand, shard_entries, fresh, summary, metrics), metrics
+        new_rows = schema.conform(staged.select(*[_out(c).alias(c) for c in names]))
+        fresh = write_new_rows(
+            table, new_rows, matched_rows, avg_row_bytes(cand), f"update-{metrics.job}", curve
+        )
+        summary = {
+            "job_id": metrics.job,
+            "matched_rows": matched_rows,
+            "assigned_columns": sorted(set(assigns) | ({"n_tok"} if auto_ntok else set())),
+        }
+        snap = commit_dvs(table, "update", head, cand, shard_entries, fresh, summary, metrics)
+        return snap, metrics

@@ -20,8 +20,10 @@ as a committed scan) — e.g. ``quarantine.validate_batch`` over them.
 exists at publish time — appends commute, so rebasing over concurrent
 compact/merge/append commits is safe — under a bounded CAS retry, and
 is exactly-once: the published snapshot's summary carries ``wap_ref``,
-so a re-publish after a crash between commit and cleanup finds the
-earlier commit and only completes the cleanup. ``discard_staged``
+and every attempt looks it up (``SnapshotLog.stamped``) before it
+commits, so a re-publish after a crash between commit and cleanup, or
+a publisher that lost the version slot to a rival publisher of the
+same ref, finds the earlier commit and only completes the cleanup. ``discard_staged``
 drops the record; the now-orphaned data files age out through normal
 GC (which treats LIVE staged records' files as reachable).
 
@@ -134,41 +136,30 @@ def publish_staged(table: TokenLakeTable, ref: str) -> Snapshot:
     kind, so the batch rebases onto whatever maintenance ran since).
     Exactly-once via the ``wap_ref`` summary stamp.
 
-    The stamp check runs before EVERY commit attempt, scanning only
-    snapshots newer than the last scanned head: a ConcurrentCommitError
-    can mean "another publisher of THIS ref won the slot", and retrying
-    without re-checking would rebase onto a head that already contains
-    the batch and append it twice."""
-    # crash between commit and cleanup leaves the staged file behind —
-    # finish the cleanup instead of double-appending
-    checked = -1  # highest snapshot id already scanned for the stamp
-    for sid in reversed(table.log.list_ids()):
-        snap = table.log.get(sid)
-        checked = max(checked, sid)
-        if snap.summary.get("wap_ref") == ref:
-            return _finish_published(table, ref, snap)
-    try:
-        rec = _read_staged(table.path, ref)
-    except KeyError:
-        # the staged record vanished between the scan and this read — a
-        # rival publisher may have committed AND cleaned up in that
-        # window; its stamp decides whether this is success or an error
-        for sid in (i for i in table.log.list_ids() if i > checked):
-            snap = table.log.get(sid)
-            if snap.summary.get("wap_ref") == ref:
-                return _finish_published(table, ref, snap)
-        raise
+    Every attempt reads the head, then looks the stamp up among the
+    snapshots newer than the previous attempt's head (the first attempt
+    walks the whole log: a crash between commit and cleanup leaves the
+    staged record behind, and a re-publish only finishes the cleanup),
+    then commits. A ConcurrentCommitError can mean "another publisher
+    of THIS ref won the slot", so the next attempt's lookup runs before
+    its commit; rebasing without it would append the batch twice."""
+    checked = -1  # the head id up to which the stamp is known absent
     last_err: ConcurrentCommitError | None = None
     for _ in range(PUBLISH_RETRIES):
         head = table.log.current()
-        # re-check ANY snapshot committed since the last scan — including
-        # on the first attempt (a same-ref publish can land between the
-        # initial full scan and this head read)
-        for sid in (i for i in table.log.list_ids() if i > checked):
-            snap = table.log.get(sid)
-            checked = max(checked, sid)
-            if snap.summary.get("wap_ref") == ref:
-                return _finish_published(table, ref, snap)
+        done = table.log.stamped("wap_ref", ref, after=checked)
+        if done is not None:
+            return _finish_published(table, ref, done)
+        try:
+            rec = _read_staged(table.path, ref)
+        except KeyError:
+            # the staged record vanished after the lookup — a rival
+            # publisher may have committed AND cleaned up in that window;
+            # its stamp decides whether this is success or an error
+            done = table.log.stamped("wap_ref", ref, after=checked)
+            if done is not None:
+                return _finish_published(table, ref, done)
+            raise
         try:
             snap = commit_rewrite(
                 table,
@@ -179,7 +170,8 @@ def publish_staged(table: TokenLakeTable, ref: str) -> Snapshot:
                 {"wap_ref": ref, "staged_ms": rec["created_ms"]},
             )
         except ConcurrentCommitError as exc:
-            last_err = exc  # head moved: re-plan against the new head
+            last_err = exc  # head moved: re-check and re-plan against the new head
+            checked = head.snapshot_id
             continue
         return _finish_published(table, ref, snap)
     raise last_err if last_err is not None else RuntimeError("publish retries exhausted")

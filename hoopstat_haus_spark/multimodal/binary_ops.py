@@ -3,10 +3,10 @@
 A 100 TB training corpus carries images/audio/video as `binary` columns
 with struct metadata. The Spark-side machinery — schema, partition-safe
 batch iteration, Arrow-batched UDF signatures — is real and tested here;
-the *codec* step (actual JPEG/audio decode) is stubbed because the
-image/audio libraries aren't in this container. Each stub is clearly
-marked and isolated behind one function so swapping in PIL/torchaudio
-touches nothing else.
+there is no *codec* step (actual JPEG/audio decode) because the
+image/audio libraries aren't in this container: features are computed
+from the raw payload bytes, inside the one ``mapInPandas`` body a real
+decoder would slot into.
 
 Design rules encoded here:
 - decode/feature work runs in ``mapInPandas`` (arrow batches, one Python
@@ -94,18 +94,6 @@ def synthetic_media(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return docs.mapInPandas(gen, schema=MEDIA_SCHEMA)
-
-
-def decode_image(payload: bytes) -> "np.ndarray":
-    """STUB — real implementation: PIL.Image.open(io.BytesIO(payload)).
-    The container ships no imaging libs; the Spark plumbing around this
-    is real and tested with deterministic fake payloads."""
-    raise NotImplementedError("image decode requires PIL/opencv — not in this container")
-
-
-def sample_video_frames(payload: bytes, every_n: int = 30) -> list[bytes]:
-    """STUB — real implementation: pyav/ffmpeg frame iterator."""
-    raise NotImplementedError("video decode requires pyav/ffmpeg — not in this container")
 
 
 def extract_features(media: DataFrame) -> DataFrame:

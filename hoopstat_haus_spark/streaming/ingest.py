@@ -9,7 +9,8 @@ batch under the SAME ``batch_id``, so sinks must be idempotent per
 batch. Every merge commit here stamps ``stream_id``/``stream_batch_id``
 — plus the checkpoint's own query id — into the snapshot summary; a
 replayed batch whose id is ≤ the highest committed id FOR THE SAME
-QUERY ID is skipped before any Spark job runs. The query-id guard is
+QUERY ID is skipped before any Spark job runs (the newest stamp is one
+``SnapshotLog.stamped`` lookup, the one WAP publish uses too). The query-id guard is
 what makes checkpoint loss safe: a fresh checkpoint renumbers batches
 from 0, so without it the never-ingested files that land in batches
 0..k ≤ high-water would be skipped as "replays" — silent data loss.
@@ -79,21 +80,21 @@ def _checkpoint_query_id(checkpoint_dir: str | None) -> str | None:
 
 def last_committed_stamp(table: TokenLakeTable, stream_id: str) -> tuple[str | None, int]:
     """(query_id, batch_id) of the newest snapshot stamped for
-    ``stream_id`` ((None, −1) if none). Walks the snapshot log
-    newest-first and stops at the first stamp: a stream's commits are
-    ordered, so the newest stamp IS its high-water mark — O(snapshots
-    since the last ingest), not O(history), per micro-batch.
+    ``stream_id`` ((None, −1) if none): one ``SnapshotLog.stamped``
+    lookup, which walks newest-first and stops at the first stamp. A
+    stream's commits are ordered, so the newest stamp IS its high-water
+    mark — O(snapshots since the last ingest), not O(history), per
+    micro-batch.
 
     If snapshot expiry has dropped every stamped snapshot, this returns
     (None, −1) and a replayed batch would merge again — which is still
     CORRECT: re-upserting identical (doc_id, source)→tokens rows (and
     re-deleting absent ones) is a semantic no-op; the stamp only avoids
     the wasted work and keeps snapshot counts stable under replay."""
-    for sid in reversed(table.log.list_ids()):
-        s = table.log.get(sid).summary
-        if s.get(SUMMARY_STREAM_ID) == stream_id:
-            return s.get(SUMMARY_QUERY_ID), int(s.get(SUMMARY_BATCH_ID, -1))
-    return None, -1
+    snap = table.log.stamped(SUMMARY_STREAM_ID, stream_id)
+    if snap is None:
+        return None, -1
+    return snap.summary.get(SUMMARY_QUERY_ID), int(snap.summary.get(SUMMARY_BATCH_ID, -1))
 
 
 def last_committed_batch(table: TokenLakeTable, stream_id: str) -> int:

@@ -84,3 +84,28 @@ def test_gc_sweeps_write_atomic_leftovers(tmp_path):
 
     assert collect_garbage(table, min_age_s=0)["removed_manifests"] == [young]
     assert all(os.path.exists(os.path.join(table, rel)) for rel in kept)
+
+
+def test_gc_sweeps_write_atomic_leftovers_outside_metadata_dirs(tmp_path):
+    """Checkpoints, incremental views, digest indexes and the quarantine
+    pointer publish through ``write_atomic`` too, so their leftovers
+    are swept as well; a young one survives the default min age."""
+    table = str(tmp_path)
+    SnapshotLog(table)
+    planted = [
+        f"_checkpoints/j1/u.json.tmp-{uuid.uuid4().hex}",
+        f"_views/v.json.tmp-{uuid.uuid4().hex}",
+        f"_digest_index/ix/meta.json.tmp-{uuid.uuid4().hex}",
+        f"_quarantine_ptr.tmp-{uuid.uuid4().hex}",
+    ]
+    young = f"_views/w.json.tmp-{uuid.uuid4().hex}"
+    for rel in [*planted, young]:
+        os.makedirs(os.path.dirname(os.path.join(table, rel)), exist_ok=True)
+        with open(os.path.join(table, rel), "w") as f:
+            f.write("{}")
+    for rel in planted:
+        os.utime(os.path.join(table, rel), (0, 0))
+
+    assert collect_garbage(table)["removed_manifests"] == sorted(planted)
+    assert not any(os.path.exists(os.path.join(table, rel)) for rel in planted)
+    assert os.path.exists(os.path.join(table, young))

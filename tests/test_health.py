@@ -14,7 +14,7 @@ from hoopstat_haus_spark.lakehouse.health import (
     record_job_metrics,
 )
 from hoopstat_haus_spark.lakehouse.merge import merge_into
-from hoopstat_haus_spark.lakehouse.metrics import JobMetrics
+from hoopstat_haus_spark.lakehouse.health import JobMetrics
 from hoopstat_haus_spark.tables import synthetic
 
 MB = 1024 * 1024
