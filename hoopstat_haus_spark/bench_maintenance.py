@@ -96,10 +96,9 @@ def main() -> None:
         max_file_bytes=(args.target_mb * 4) << 20,
     )
 
-    # v2: manifests carry per-file zq sketches (metadata-only bounds
-    # planning) — old templates lack them and would silently fall back
-    # to the planning scan, benching the wrong path
-    template = os.path.join(SCRATCH, f"bench-template-{args.docs}-{args.fragment_files}-v2")
+    # v3: the manifest format version; an older template's manifest
+    # list is refused by this engine's reader
+    template = os.path.join(SCRATCH, f"bench-template-{args.docs}-{args.fragment_files}-v3")
     if not os.path.isdir(os.path.join(template, "_snapshots")):
         shutil.rmtree(template, ignore_errors=True)
         # the fragmented input simulates raw ingest output: snappy, like

@@ -17,9 +17,9 @@ path runs from plan to write:
   Unit-testable with exact-value asserts, like the reference's
   ``test_partitioning.py``.
 - **Bounds** (:func:`plan_unit_bounds`): each unit's n_out−1 Z-range
-  cuts, merged from the manifest's per-file quantile sketches; only
-  units sketched under another curve are sampled, in one fused scan per
-  curve.
+  cuts, from the manifest alone: the unit's per-file ``zq`` samples of
+  the curve inputs, evaluated under the unit's curve and merged. Any
+  curve plans this way, so no Spark job runs.
 - **Executor** (:func:`compact_partition`): per `source` partition, ONE
   wide transform: read of the victim files under their deletion
   vectors (``table.read_touched``) → Z-key → each row's Z-range bucket
@@ -49,11 +49,12 @@ import math
 import os
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from hoopstat_haus_spark.lakehouse import manifest as mf
-from hoopstat_haus_spark.lakehouse.zorder import with_zkey
+from hoopstat_haus_spark.lakehouse.zorder import with_zkey, zkey_np
 
 _ROUTE_REPS_CACHE: dict[int, list[int]] = {}
 
@@ -133,6 +134,19 @@ def plan_compaction(entries: list[dict], policy: CompactionPolicy) -> dict[str, 
     return plans
 
 
+def partition_has_candidates(record: dict, policy: CompactionPolicy) -> bool:
+    """Whether a partition can hold a :func:`plan_compaction` candidate,
+    from its manifest-list record's exact aggregates: its smallest file
+    is undersized, its largest oversized, or it has unclustered or DV'd
+    files. A partition this rejects needs no shard read to plan."""
+    return (
+        record["min_file_bytes"] < policy.min_file_bytes
+        or record["max_file_bytes"] > policy.max_file_bytes
+        or record["n_unclustered"] > 0
+        or record["n_dv_files"] > 0
+    )
+
+
 def output_file_count(total_bytes: int, policy: CompactionPolicy) -> int:
     return max(1, math.ceil(total_bytes / policy.target_file_bytes))
 
@@ -145,56 +159,23 @@ def write_task_count(inputs: list[dict], n_out: int) -> int:
     return min(n_out, max(1, math.ceil(total / mf.WRITE_TASK_BYTES)))
 
 
-_BOUNDS_MIN_GRID = 256  # percentile points per partition in the bounds scan
-_BOUNDS_FILE_CAP = 32
-_BOUNDS_SAMPLE_MOD = 8  # keep at most ~1/8 of rows in the bounds scan
+def _bounds_from_sketches(entries: list[dict], n_out: int, curve: str = "zorder") -> list[int]:
+    """A unit's n_out−1 range cuts under ``curve`` from its files'
+    manifest ``zq`` samples — pure driver-side arithmetic, ZERO data
+    scanned.
 
-
-def _sample_files(entries: list[dict], cap: int = _BOUNDS_FILE_CAP) -> list[dict]:
-    """Deterministic every-kth file subset for boundary estimation.
-
-    Files are strided over their manifest ``zmin`` order, NOT path
-    order: victim files can be CLUSTERED (e.g. MERGE/compaction output,
-    each file a narrow zkey band), and a path-ordered subset of those
-    would skip whole zkey ranges, leaving the quantile sketch blind in
-    the gaps. Striding the zmin-sorted list keeps the sampled files
-    spread across the key domain for clustered victims, and is a no-op
-    distinction for unclustered ingest output (zmin = -1 everywhere,
-    rows hash-distributed → any subset is unbiased). Capping bounds
-    the planning scan at ~cap file opens per unit no matter how
-    fragmented the input is — at 100 TB the boundary job must not
-    touch a million footers."""
-    ordered = sorted(entries, key=lambda e: (e.get("zmin", -1), e["file_path"]))
-    if len(ordered) <= cap:
-        return ordered
-    step = len(ordered) / cap
-    return [ordered[int(i * step)] for i in range(cap)]
-
-
-def _bounds_from_sketches(entries: list[dict], n_out: int, curve: str = "zorder") -> list[int] | None:
-    """Range boundaries from the manifest's per-file ``zq`` quantile
-    sketches — pure driver-side arithmetic, ZERO data scanned.
-
-    Each file contributes its sketch points weighted by its row count;
-    the merged weighted CDF yields the unit's n_out−1 equal-mass cuts.
-    Sketch resolution (31 points/file × files) dwarfs n_out, and
-    boundary error only shifts output file sizes, bounded well inside
-    the policy's max/target headroom. Returns None when any file lacks
-    a sketch (pre-sketch manifest) or carries one computed with a
-    DIFFERENT curve than this run's (``zq_curve`` tag) — Hilbert-key
-    quantiles interpreted as Morton cuts, or vice versa, would skew
-    output file sizes arbitrarily past the policy."""
-    pts: list[tuple[int, float]] = []
-    total = 0
-    for e in entries:
-        zq, r = e.get("zq"), e.get("row_count", 0)
-        if not zq or e.get("zq_curve") != curve:
-            return None
-        pts.extend((int(z), r / len(zq)) for z in zq)
-        total += r
-    if not pts or total <= 0:
-        return None
-    pts.sort()
+    Each sample point is a row's packed curve inputs
+    (``manifest._zq_src``); unpacked, ``zorder.zkey_np`` gives its key
+    under any curve. Each file's points are weighted by its row count;
+    the merged weighted CDF yields the equal-mass cuts. Sample
+    resolution (≤31 points/file × files) dwarfs n_out, and boundary
+    error only shifts output file sizes, bounded well inside the
+    policy's max/target headroom."""
+    sampled = [(e["row_count"], e["zq"]) for e in entries]
+    packed = np.array([z for _, zq in sampled for z in zq], dtype=np.int64)
+    keys = zkey_np(curve, packed & 0x7FFFFFFF, packed >> 31)
+    pts = sorted(zip(keys.tolist(), [r / len(zq) for r, zq in sampled for _ in zq]))
+    total = sum(r for r, _ in sampled)
     targets = [j * total / n_out for j in range(1, n_out)]
     bounds: list[int] = []
     cum, ti = 0.0, 0
@@ -208,93 +189,23 @@ def _bounds_from_sketches(entries: list[dict], n_out: int, curve: str = "zorder"
     return bounds
 
 
-def _scan_bounds(
-    spark: SparkSession,
-    table_path: str,
-    units: dict[str, list[dict]],
-    unit_n_out: dict[str, int],
-    curve: str,
-) -> dict[str, list[int]]:
-    """Bounds for units the manifest sketches cannot answer: ONE
-    column-pruned, hash-sampled scan over a bounded file subset per unit
-    (:func:`_sample_files`) for all of them.
-
-    Each partition gets a percentile grid of max(256, 4·n_out) points,
-    n_out the largest among these units (accuracy scaled with it), read
-    off by :func:`_bounds_from_sketches` as if it were one file's
-    sketch. The sample rate comes from the sampled files' manifest row
-    counts: ~1/8 of rows, but no fewer rows than grid points, so a unit
-    of tiny files is read whole and no unit's sample comes up empty."""
-    grid_n = max(_BOUNDS_MIN_GRID, 4 * max(unit_n_out[p] for p in units))
-    sampled = {p: _sample_files(entries) for p, entries in units.items()}
-    mods = {
-        p: max(1, min(_BOUNDS_SAMPLE_MOD, sum(e["row_count"] for e in files) // grid_n))
-        for p, files in sampled.items()
-    }
-    rate = F.create_map(*[F.lit(x) for p, m in mods.items() for x in (p, m)])
-    skinny = (
-        spark.read.option("basePath", os.path.join(table_path, "data"))
-        .schema("doc_id string, n_tok int, source string")
-        .parquet(*[os.path.join(table_path, e["file_path"]) for files in sampled.values() for e in files])
-        .filter(F.pmod(F.xxhash64("doc_id", F.lit(7)), F.element_at(rate, F.col("source"))) == 0)
-    )
-    fracs = F.array(*[F.lit(i / grid_n) for i in range(1, grid_n)])
-    rows = (
-        with_zkey(skinny, curve=curve)
-        .groupBy("source")
-        .agg(F.percentile_approx("_zkey", fracs, F.lit(20 * grid_n)).alias("g"))
-        .collect()
-    )
-    grids = {r["source"]: r["g"] for r in rows}
-    out: dict[str, list[int]] = {}
-    for part in units:
-        grid = grids.get(part)
-        if not grid:
-            raise RuntimeError(f"bounds scan sampled no rows of partition {part!r}")
-        sketch = {"zq": grid, "row_count": len(grid), "zq_curve": curve}
-        out[part] = _bounds_from_sketches([sketch], unit_n_out[part], curve)
-    return out
-
-
 def plan_unit_bounds(
-    spark: SparkSession,
-    table_path: str,
     unit_entries: dict[str, list[dict]],
     unit_n_out: dict[str, int],
     curve: str = "zorder",
     curve_by_source: dict[str, str] | None = None,
 ) -> dict[str, list[int]]:
     """Range boundaries for EVERY unit: n_out−1 sorted cuts each ([] for
-    a one-file unit) — the one bounds estimator compaction has.
-
-    Manifest sketches answer first (:func:`_bounds_from_sketches`):
-    merging the per-file ``zq`` quantile sketches the stats pass already
-    computed needs no scan and no Spark job. Sampling fills in only
-    where a sketch cannot — files sketched under another curve (Hilbert
-    over Morton-sketched ingest) or predating sketches: those units
-    share one fused scan per curve (:func:`_scan_bounds`).
-
+    a one-file unit) — the one bounds estimator compaction has. Each
+    unit's cuts come from its files' manifest samples under its curve
+    (:func:`_bounds_from_sketches`): no scan, no Spark job.
     ``curve_by_source`` overrides the curve per partition (mixed-curve
-    single-cycle compaction): each unit's sketches are matched against
-    ITS curve, so the scans number ≤ distinct curves, not units.
-    """
+    single-cycle compaction)."""
     cb = curve_by_source or {}
-    out: dict[str, list[int]] = {}
-    scan_units: dict[str, dict[str, list[dict]]] = {}
-    for part, entries in unit_entries.items():
-        n_out = unit_n_out.get(part, 1)
-        if n_out <= 1:
-            out[part] = []
-            continue
-        c = cb.get(part, curve)
-        sketched = _bounds_from_sketches(entries, n_out, c)
-        if sketched is None:
-            scan_units.setdefault(c, {})[part] = entries
-        else:
-            out[part] = sketched
-    for c, units in scan_units.items():
-        out.update(_scan_bounds(spark, table_path, units, unit_n_out, c))
-    return out
+    return {
+        part: _bounds_from_sketches(entries, unit_n_out.get(part, 1), cb.get(part, curve))
+        for part, entries in unit_entries.items()
+    }
 
 
 def compact_partition(
@@ -368,5 +279,4 @@ def compact_partition(
             table.path, ".staging", job_id, "source=" + mf._escape_partition_value(partition)
         ),
         f"compact-{job_id}",
-        curve=curve,
     )

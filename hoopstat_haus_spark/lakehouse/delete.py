@@ -176,7 +176,7 @@ def write_new_rows(
     n_parts = max(1, min(256, -(-n_rows * row_bytes // mf.WRITE_TASK_BYTES)))
     salt = F.pmod(F.xxhash64("doc_id"), F.lit(n_parts))
     sized = with_zkey(rows.repartition(n_parts, "source", salt), curve=curve)
-    return table._write_files(sized, prefix, repartition_n=None, curve=curve)
+    return table._write_files(sized, prefix, repartition_n=None)
 
 
 def commit_dvs(

@@ -15,13 +15,23 @@ Manifest row schema:
     min_n_tok / max_n_tok      int
     zmin / zmax  long     (Z-order key range; -1 when file is unclustered)
     file_bytes   long
+    zq           list<long>  (sample of the curve's inputs, below)
     dv_path      string   (the file's deletion vector; null when it has none)
     dv_rows / dv_tokens  long  (rows the DV deletes and their n_tok sum)
 
 ``row_count`` and ``token_count`` stay PHYSICAL (what the file holds);
 the live counts are those minus ``dv_rows``/``dv_tokens``
-(:func:`live_rows`). An entry written before deletion vectors existed
-has no ``dv_*`` fields and counts as DV-free.
+(:func:`live_rows`).
+
+``zq`` is what compaction plans its range cuts from, with no scan: a
+sorted sample of ≤ ``ZQ_GRID``−1 of the file's rows, each packed as
+``(xxhash64(doc_id) >>> 33) << 31 | max(n_tok, 0)`` (:func:`_zq_src`)
+— the two inputs of every space-filling curve, not one curve's key, so
+the planner can evaluate ANY curve on it (``zorder.zkey_np``). Rows
+enter the sample by a fixed 1/``ZQ_SAMPLE_MOD`` doc-hash draw (all rows
+of a file the draw misses), and the sorted sample is cut to evenly
+spaced ranks. Sorting hash-major spreads the kept points evenly over
+the hash axis.
 
 Deletion vectors (Delta Lake's DV protocol, Iceberg v2 position
 deletes): DELETE, UPDATE and MERGE remove rows by recording their
@@ -78,8 +88,7 @@ BUCKET_COL = "_bucket"
 # mean fewer Arrow round trips and less shuffle.
 WRITE_TASK_BYTES = 128 << 20
 
-# the dv_* fields of a file without a deletion vector (also what an
-# entry written before DVs existed reads as)
+# the dv_* fields of a file without a deletion vector
 DV_FREE = {"dv_path": None, "dv_rows": 0, "dv_tokens": 0}
 
 
@@ -96,18 +105,36 @@ def _file_bytes(table_path: str, rel_paths: list[str]) -> dict[str, int]:
     return {p: os.path.getsize(os.path.join(table_path, p)) for p in rel_paths}
 
 
-ZQ_GRID = 32  # per-file zkey quantile sketch resolution (≤31 cut points)
-ZQ_SAMPLE_MOD = 16  # sketch from a deterministic 1/16 doc-hash sample
+ZQ_GRID = 32  # per-file zq sample resolution (≤31 points)
+ZQ_SAMPLE_MOD = 16  # zq draws from a deterministic 1/16 doc-hash sample
+
+# the manifest-list format this code writes and reads; v3 lists point at
+# shards whose zq holds packed curve inputs (v2 held Morton-key quantiles)
+MANIFEST_FORMAT_VERSION = 3
+
+
+def _zq_src():
+    """A row's curve inputs packed into one non-negative long: the top 31
+    bits of xxhash64(doc_id) over max(n_tok, 0) in the low 31 bits. Every
+    curve clips n_tok below 0, so the clamp leaves the key unchanged."""
+    hash_hi31 = F.shiftrightunsigned(F.xxhash64("doc_id"), 33)
+    n_tok = F.greatest(F.col("n_tok"), F.lit(0)).cast("long")
+    return F.shiftleft(hash_hi31, 31).bitwiseOR(n_tok)
+
+
+def _zs_flag():
+    """Whether a row is in its file's 1/ZQ_SAMPLE_MOD zq draw."""
+    return F.pmod(F.xxhash64("doc_id", F.lit(13)), F.lit(ZQ_SAMPLE_MOD)) == 0
 
 
 def _zq_grid_expr(zs):
-    """EXECUTOR-side grid truncation of a sorted key-sample array down to
-    ≤ ZQ_GRID−1 quantile points, inside the agg's output projection.
+    """EXECUTOR-side grid truncation of a sorted sample array down to
+    ≤ ZQ_GRID−1 evenly ranked points, inside the agg's output projection.
 
     This bounds each manifest row at ≤31 longs BEFORE collect, so the
     stats pass's driver traffic is O(files × ZQ_GRID) no matter the file
     size — a whole-table stats pass at 10^6 files ships ~250 MB of
-    sketch points instead of the O(rows / ZQ_SAMPLE_MOD) raw samples
+    sample points instead of the O(rows / ZQ_SAMPLE_MOD) raw samples
     (~100 GB at target scale) the round-4 driver-side truncation
     collected. Index arithmetic is done in exact-double territory
     (i·n < 2^53) so the picked points are bit-identical to the former
@@ -142,49 +169,25 @@ def uri_to_rel(table_path: str, uri: str) -> str:
     raise ValueError(f"file {uri!r} is not under table root {table_path!r}")
 
 
-def compute_file_stats(
-    spark: SparkSession, table_path: str, rel_paths: list[str], curve: str = "zorder"
-) -> list[dict]:
+def compute_file_stats(spark: SparkSession, table_path: str, rel_paths: list[str]) -> list[dict]:
     """One distributed pass: per-file row/token counts + min/max stats +
-    a {ZQ_GRID}-quantile Z-key sketch (``zq``) tagged with its curve
-    (``zq_curve``).
+    the ``zq`` sample of the curve inputs (module docstring).
 
     The parity oracle: no production path calls this (every write
     computes its stats in :func:`write_partitioned_with_stats`); tests
     compare the writer's manifest entries against this re-read of the
     written files, so the stats definition below is the reference.
 
-    ``curve`` names the space-filling curve the files' STORED ``_zkey``
-    was written with (the writing job knows it); the tag is what lets
-    the compaction planner refuse to interpret Hilbert-key quantiles as
-    Morton cuts (or vice versa) on mixed-curve tables — it takes the
-    metadata-only bounds path only when every sketch's curve matches
-    the current run's. Unclustered files (no stored ``_zkey``) always
-    sketch the DERIVED Morton key and are tagged ``zorder`` regardless
-    of ``curve``.
-
-    The sketch is what lets compaction plan its range boundaries from
-    MANIFEST METADATA instead of re-scanning victim files (an Iceberg
-    planner reads footers, not data). Files that already carry a stored
-    ``_zkey`` sketch that column; unclustered files (fresh ingest — no
-    ``_zkey`` stored, zmin/zmax stay -1 so Z-pruning semantics are
-    unchanged) sketch the DERIVED default-curve Morton key, a pure-JVM
-    expression over (n_tok, doc_id) that whole-stage codegen fuses into
-    this same pass.
-
-    Sketch mechanics (round 4): a deterministic 1/{ZQ_SAMPLE_MOD}
-    doc-hash sample of each file's keys is collected sorted and
-    downsampled to ≤{ZQ_GRID}−1 quantile points driver-side — measured
-    ~40% cheaper than percentile_approx, whose per-row GK updates
-    dominated the stats pass regardless of accuracy. Accuracy is set by
-    the UNIT-level merged sample (the planner weights every file's
-    points by its row count, so sketch length is free to vary): a
-    typical unit merges thousands of sampled keys for a handful of
-    cuts, ≪1% mass error. Files whose sample comes up empty (P =
-    (15/16)^rows — only near-empty files in practice) get a bounded
-    second pass that collects ALL their keys (each such file is tiny by
-    construction), so every file carries a sketch and the metadata-only
-    planning path never degrades to a scan over sampling luck."""
+    Sample mechanics (round 4): a deterministic 1/{ZQ_SAMPLE_MOD}
+    doc-hash sample of each file's packed inputs is collected sorted and
+    cut to ≤{ZQ_GRID}−1 evenly ranked points — measured ~40% cheaper
+    than percentile_approx, whose per-row GK updates dominated the stats
+    pass regardless of accuracy. Accuracy is set by the UNIT-level
+    merged sample (the planner weights every file's points by its row
+    count, so sample length is free to vary). Files whose sample comes
+    up empty (P = (15/16)^rows — only near-empty files in practice) get
+    a bounded second pass that collects ALL their rows (each such file
+    is tiny by construction), so every file carries a sample."""
     if not rel_paths:
         return []
     abs_paths = [os.path.join(table_path, p) for p in rel_paths]
@@ -193,13 +196,7 @@ def compute_file_stats(
     has_zkey = ZKEY_COL in df.columns
     zmin = F.min(ZKEY_COL) if has_zkey else F.lit(-1).cast("long")
     zmax = F.max(ZKEY_COL) if has_zkey else F.lit(-1).cast("long")
-    if has_zkey:
-        zsrc = F.col(ZKEY_COL)
-    else:
-        from hoopstat_haus_spark.lakehouse.zorder import zkey_expr_zorder
-
-        zsrc = zkey_expr_zorder(F.col("n_tok"), F.xxhash64(F.col("doc_id")), 0, 4096)
-    zsamp = F.when(F.pmod(F.xxhash64("doc_id", F.lit(13)), F.lit(ZQ_SAMPLE_MOD)) == 0, zsrc)
+    zsamp = F.when(_zs_flag(), _zq_src())
     rows = (
         df.groupBy(F.input_file_name().alias("file_uri"), F.col("source").alias("partition"))
         .agg(
@@ -222,8 +219,8 @@ def compute_file_stats(
         return uri_to_rel(table_path, uri)
 
     # bounded second pass: files the 1/mod sample missed entirely are
-    # tiny (P(empty) = ((mod-1)/mod)^rows), so collecting ALL their keys
-    # is metadata-scale and keeps every file sketch-planned
+    # tiny (P(empty) = ((mod-1)/mod)^rows), so collecting ALL their rows
+    # is metadata-scale and gives every file a sample
     missed = [to_rel(r["file_uri"]) for r in rows if not r["zs"]]
     full_zs: dict[str, list] = {}
     if missed:
@@ -232,14 +229,13 @@ def compute_file_stats(
         )
         for r2 in (
             small.groupBy(F.input_file_name().alias("file_uri"))
-            .agg(F.sort_array(F.collect_list(zsrc)).alias("zs_full"))
+            .agg(F.sort_array(F.collect_list(_zq_src())).alias("zs_full"))
             .select("*", _zq_grid_expr(F.col("zs_full")).alias("zs"))
             .collect()
         ):
             full_zs[to_rel(r2["file_uri"])] = r2["zs"]
 
     sizes = _file_bytes(table_path, rel_paths)
-    zq_curve = curve if has_zkey else "zorder"
     out = []
     for r in rows:
         rel = to_rel(r["file_uri"])
@@ -249,7 +245,6 @@ def compute_file_stats(
         d["zq"] = [int(z) for z in zs] or None  # already grid-truncated executor-side
         d["file_path"] = rel
         d["file_bytes"] = sizes[rel]
-        d["zq_curve"] = zq_curve
         d.update(DV_FREE)  # a freshly written file has no deletion vector
         out.append(d)
     return out
@@ -327,11 +322,11 @@ class FileStatsAcc:
     :func:`compute_file_stats`: fold Arrow batches with :meth:`add`,
     read the final stat fields from :meth:`finalize`.
 
-    ``zk`` is the file's z-key source values (stored ``_zkey`` for
-    clustered output, derived Morton key for unclustered input),
-    ``flag`` the JVM-computed zq sample membership. The sketch is the
-    ascending-sorted sample grid-truncated to ≤ ZQ_GRID−1 points, with
-    the tiny-file full-keys fallback — index arithmetic identical to
+    ``zq_src`` is the rows' packed curve inputs (:func:`_zq_src`),
+    ``flag`` the JVM-computed zq sample membership and ``zk`` the stored
+    ``_zkey`` (None for unclustered input, whose zmin/zmax stay -1). The
+    sample is the ascending-sorted draw cut to ≤ ZQ_GRID−1 points, with
+    the tiny-file all-rows fallback — index arithmetic identical to
     ``_zq_grid_expr``."""
 
     def __init__(self) -> None:
@@ -339,10 +334,11 @@ class FileStatsAcc:
         self.tok_sum = 0
         self.min_doc = self.max_doc = None
         self.min_nt = self.max_nt = None
-        self.zk_parts: list = []
+        self.zmin = self.zmax = -1
+        self.src_parts: list = []
         self.samp_parts: list = []
 
-    def add(self, batch, zk, flag) -> None:
+    def add(self, batch, zq_src, flag, zk=None) -> None:
         import pyarrow.compute as pc
 
         names = batch.schema.names
@@ -357,15 +353,18 @@ class FileStatsAcc:
         dlo, dhi = dm["min"].as_py(), dm["max"].as_py()
         self.min_doc = dlo if self.min_doc is None else min(self.min_doc, dlo)
         self.max_doc = dhi if self.max_doc is None else max(self.max_doc, dhi)
-        self.zk_parts.append(zk)
-        self.samp_parts.append(zk[flag])
+        if zk is not None:
+            zlo, zhi = int(zk.min()), int(zk.max())
+            self.zmin = zlo if self.zmin < 0 else min(self.zmin, zlo)
+            self.zmax = max(self.zmax, zhi)
+        self.src_parts.append(zq_src)
+        self.samp_parts.append(zq_src[flag])
 
-    def finalize(self, clustered: bool) -> dict:
+    def finalize(self) -> dict:
         import numpy as np
 
-        zk_all = np.concatenate(self.zk_parts)
         samp = np.concatenate(self.samp_parts)
-        zs = np.sort(samp if len(samp) else zk_all)  # tiny-file fallback
+        zs = np.sort(samp if len(samp) else np.concatenate(self.src_parts))  # tiny-file fallback
         n = len(zs)
         if n > ZQ_GRID - 1:
             zs = zs[[min(n - 1, i * n // ZQ_GRID) for i in range(1, ZQ_GRID)]]
@@ -376,8 +375,8 @@ class FileStatsAcc:
             "max_doc_id": self.max_doc,
             "min_n_tok": self.min_nt,
             "max_n_tok": self.max_nt,
-            "zmin": int(zk_all.min()) if clustered else -1,
-            "zmax": int(zk_all.max()) if clustered else -1,
+            "zmin": self.zmin,
+            "zmax": self.zmax,
             "zq": [int(z) for z in zs],
         }
 
@@ -415,7 +414,7 @@ def _write_task(batches, staging: str, codec: str | None, codec_level: int | Non
     def close():
         flush()
         cur["writer"].close()
-        for k, v in {"pid": pid, **cur["names"], **cur["acc"].finalize(cur["clustered"])}.items():
+        for k, v in {"pid": pid, **cur["names"], **cur["acc"].finalize()}.items():
             out[k].append(v)
 
     for batch in batches:
@@ -429,9 +428,10 @@ def _write_task(batches, staging: str, codec: str | None, codec_level: int | Non
                 "NULL value in partition column 'source': every written row "
                 "must name its partition"
             )
-        clustered = ZKEY_COL in cols
-        zk = batch.column(cols.index(ZKEY_COL if clustered else "_zq_src"))
-        zk = zk.to_numpy(zero_copy_only=False)
+        zk = None
+        if ZKEY_COL in cols:
+            zk = batch.column(cols.index(ZKEY_COL)).to_numpy(zero_copy_only=False)
+        zq_src = batch.column(cols.index("_zq_src")).to_numpy(zero_copy_only=False)
         fl = batch.column(cols.index("_zs_flag")).to_numpy(zero_copy_only=False).astype(bool)
         bk = None
         change = pc.not_equal(src.slice(1), src.slice(0, n - 1)).to_numpy(zero_copy_only=False)
@@ -458,7 +458,6 @@ def _write_task(batches, staging: str, codec: str | None, codec_level: int | Non
                 cur = {
                     "key": key,
                     "names": {"partition": key[0], "dir": d, "file_name": name},
-                    "clustered": clustered,
                     "writer": writer,
                     "buf": [],
                     "buf_bytes": 0,
@@ -466,7 +465,7 @@ def _write_task(batches, staging: str, codec: str | None, codec_level: int | Non
                 }
             cur["buf"].append(data)
             cur["buf_bytes"] += data.nbytes
-            cur["acc"].add(rows, zk[a:b], fl[a:b])
+            cur["acc"].add(rows, zq_src[a:b], fl[a:b], None if zk is None else zk[a:b])
             if cur["buf_bytes"] >= _FLUSH_BYTES_PER_FILE:
                 flush()
     if cur is not None:
@@ -496,12 +495,11 @@ def write_partitioned_with_stats(
     same codec/level as the JVM writer. A NULL ``source`` raises
     ``ValueError`` naming the partition column.
 
-    Stats are bit-identical to :func:`compute_file_stats`: same
-    JVM-computed zq sample flag, ascending sort, grid truncation and
-    tiny-file full-keys fallback; clustered inputs (``_zkey`` column
-    present) sketch the stored key and record real zmin/zmax,
-    unclustered inputs sketch the DERIVED Morton key (computed JVM-side
-    as a helper column, dropped from the file) with zmin = zmax = -1.
+    Stats are bit-identical to :func:`compute_file_stats`: the same
+    JVM-side helper columns (``_zs_flag`` and the packed curve inputs
+    ``_zq_src``, never written), ascending sort, grid truncation and
+    tiny-file all-rows fallback. Clustered inputs (``_zkey`` column
+    present) record real zmin/zmax; unclustered ones record -1.
 
     Returns one dict per written file: ``partition`` (raw value),
     ``dir`` (escaped ``source=...`` dir under staging), ``file_name``,
@@ -511,21 +509,14 @@ def write_partitioned_with_stats(
     from pyspark.sql.pandas.types import from_arrow_schema
 
     has_zkey = ZKEY_COL in df.columns
-    flag = F.pmod(F.xxhash64("doc_id", F.lit(13)), F.lit(ZQ_SAMPLE_MOD)) == 0
     wide = df.sortWithinPartitions("source", *([ZKEY_COL] if has_zkey else []))
-    wide = wide.withColumn("_zs_flag", flag)
-    if not has_zkey:
-        from hoopstat_haus_spark.lakehouse.zorder import zkey_expr_zorder
-
-        wide = wide.withColumn(
-            "_zq_src", zkey_expr_zorder(F.col("n_tok"), F.xxhash64(F.col("doc_id")), 0, 4096)
-        )
+    wide = wide.withColumn("_zs_flag", _zs_flag()).withColumn("_zq_src", _zq_src())
     task = functools.partial(_write_task, staging=staging, codec=codec, codec_level=codec_level)
     return [r.asDict() for r in wide.mapInArrow(task, from_arrow_schema(_STATS_SCHEMA)).collect()]
 
 
 def write_data_files(
-    df: DataFrame, table_path: str, staging: str, prefix: str, curve: str = "zorder"
+    df: DataFrame, table_path: str, staging: str, prefix: str
 ) -> tuple[list[str], list[dict]]:
     """Write ``df`` (with a ``source`` column, in any row order: the
     writer sorts it) through :func:`write_partitioned_with_stats` into
@@ -538,15 +529,12 @@ def write_data_files(
     invisible to readers (they resolve files through a snapshot's
     manifest) until the caller commits the entries. ``staging`` is
     cleared first, so a crashed attempt's partial output is discarded,
-    and removed at the end. ``curve`` names the curve a stored
-    ``_zkey`` was computed with; unclustered input is tagged
-    ``zorder``, the curve of the derived key it sketches."""
+    and removed at the end."""
     if os.path.exists(staging):
         shutil.rmtree(staging)
     os.makedirs(staging, exist_ok=True)
     codec, level = parquet_codec_conf(df.sparkSession)
     rows = write_partitioned_with_stats(df, staging, codec, level)
-    zq_curve = curve if ZKEY_COL in df.columns else "zorder"
     new_rel: list[str] = []
     entries: list[dict] = []
     seq: dict[str, int] = {}
@@ -560,7 +548,7 @@ def write_data_files(
         new_rel.append(rel)
         e = {k: v for k, v in r.items() if k not in ("pid", "dir", "file_name")}
         e["zq"] = [int(z) for z in r["zq"]] or None
-        e.update(file_path=rel, file_bytes=os.path.getsize(dst), zq_curve=zq_curve, **DV_FREE)
+        e.update(file_path=rel, file_bytes=os.path.getsize(dst), **DV_FREE)
         entries.append(e)
     shutil.rmtree(staging, ignore_errors=True)
     return new_rel, entries
@@ -609,15 +597,9 @@ _MANIFEST_FIELDS = [
     ("zmin", pa.int64()),
     ("zmax", pa.int64()),
     ("file_bytes", pa.int64()),
-    # per-file Z-key quantile sketch (metadata-only compaction planning);
-    # null in manifests written before the sketch existed (planner falls
-    # back to a scan) and for files whose sketch a job couldn't compute
+    # sample of the curve inputs (module docstring): compaction's bounds
     ("zq", pa.list_(pa.int64())),
-    # which curve the zq sketch (and stored _zkey) was computed with;
-    # null for pre-tag manifests (planner treats as unsketched)
-    ("zq_curve", pa.string()),
-    # the file's deletion vector (module docstring); absent in shards
-    # written before DVs, which read_shard fills with DV_FREE
+    # the file's deletion vector (module docstring)
     ("dv_path", pa.string()),
     ("dv_rows", pa.int64()),
     ("dv_tokens", pa.int64()),
@@ -677,7 +659,10 @@ def _write_list(table_path: str, records: list[dict]) -> str:
 
     os.makedirs(os.path.join(table_path, "_manifests"), exist_ok=True)
     rel = f"_manifests/list-{uuid.uuid4().hex[:12]}.json"
-    body = {"format_version": 2, "shards": sorted(records, key=lambda r: r["partition"])}
+    body = {
+        "format_version": MANIFEST_FORMAT_VERSION,
+        "shards": sorted(records, key=lambda r: r["partition"]),
+    }
     # a crash mid-write must not leave a truncated JSON a future resume
     # path could try to parse
     snapshots.write_atomic(os.path.join(table_path, rel), json.dumps(body, indent=1))
@@ -686,7 +671,10 @@ def _write_list(table_path: str, records: list[dict]) -> str:
 
 def read_manifest_list(table_path: str, rel_path: str) -> list[dict]:
     """Shard records of a manifest list. Any other manifest rel (e.g. a
-    monolithic ``manifest-*.parquet`` from before sharding) raises."""
+    monolithic ``manifest-*.parquet`` from before sharding), or a list of
+    another ``format_version`` (a v2 list's ``zq`` holds Morton-key
+    quantiles, which the planner would misread as packed inputs),
+    raises."""
     import json
 
     name = os.path.basename(rel_path)
@@ -696,18 +684,19 @@ def read_manifest_list(table_path: str, rel_path: str) -> list[dict]:
             "(_manifests/list-*.json); monolithic manifests are no longer readable"
         )
     with open(os.path.join(table_path, rel_path)) as f:
-        return json.load(f)["shards"]
+        body = json.load(f)
+    version = body.get("format_version")
+    if version != MANIFEST_FORMAT_VERSION:
+        raise ValueError(
+            f"unsupported manifest format: {rel_path!r} is format_version {version!r}, "
+            f"this engine reads {MANIFEST_FORMAT_VERSION}"
+        )
+    return body["shards"]
 
 
 def read_shard(table_path: str, record: dict) -> list[dict]:
-    """Entries of one shard record (a shard written before deletion
-    vectors reads as DV-free)."""
-    tbl = pq.read_table(os.path.join(table_path, record["path"]))
-    rows = tbl.to_pylist()
-    if "dv_rows" not in tbl.column_names:
-        for r in rows:
-            r.update(DV_FREE)
-    return rows
+    """Entries of one shard record."""
+    return pq.read_table(os.path.join(table_path, record["path"])).to_pylist()
 
 
 def diff_partition_entries(table_path: str, old_manifest: str, new_manifest: str):

@@ -22,8 +22,8 @@ existing manifest and call ``SnapshotLog.commit`` directly.
 ``read_touched`` (module level) is THE reader of table data files:
 scan, the DML find passes, MERGE, the change feed, WAP audits and
 compaction all read manifest entries through it, and it applies each
-file's deletion vector (manifest.py). The only other readers are the
-compaction bounds sampler and the ``compute_file_stats`` test oracle.
+file's deletion vector (manifest.py). The only other reader is the
+``compute_file_stats`` test oracle.
 
 Scale bound — scan path list: a full-table ``scan()`` materializes every
 surviving file path driver-side into one ``parquet(*paths)`` call. At the
@@ -72,6 +72,7 @@ from hoopstat_haus_spark.lakehouse.compaction import (
     CompactionPolicy,
     compact_partition,
     output_file_count,
+    partition_has_candidates,
     plan_compaction,
     plan_unit_bounds,
 )
@@ -144,17 +145,12 @@ class TokenLakeTable:
     def data_dir(self) -> str:
         return os.path.join(self.path, "data")
 
-    def _write_files(
-        self, df: DataFrame, prefix: str, repartition_n: int | None, curve: str = "zorder"
-    ) -> list[dict]:
+    def _write_files(self, df: DataFrame, prefix: str, repartition_n: int | None) -> list[dict]:
         """Write ``df`` through the one data writer
         (``manifest.write_data_files``): ONE job writes the
         source-partitioned files AND computes their manifest stats, then
         the files are renamed from staging into the table's data dirs.
-        Returns the new files' manifest entries.
-        ``curve`` names the curve a stored ``_zkey`` was computed with
-        (ignored for unclustered input, which sketches the derived
-        Morton key exactly like ``compute_file_stats``)."""
+        Returns the new files' manifest entries."""
         job = f"{prefix}-{uuid.uuid4().hex[:10]}"
         out = df
         if repartition_n:
@@ -162,7 +158,7 @@ class TokenLakeTable:
         keep = set(self.schema_def().names()) | {mf.ZKEY_COL}
         out = out.select(*[c for c in out.columns if c in keep])
         _paths, entries = mf.write_data_files(
-            out, self.path, os.path.join(self.path, ".staging", job), job, curve=curve
+            out, self.path, os.path.join(self.path, ".staging", job), job
         )
         return entries
 
@@ -280,14 +276,13 @@ class TokenLakeTable:
             "zmin",
             "zmax",
             "file_bytes",
-            "zq_curve",
             "dv_rows",
         )
         return local_frame(
             self.spark,
             "file_path string, partition string, row_count long, token_count long, "
             "min_doc_id string, max_doc_id string, min_n_tok int, max_n_tok int, "
-            "zmin long, zmax long, file_bytes long, zq_curve string, dv_rows long",
+            "zmin long, zmax long, file_bytes long, dv_rows long",
             [[e.get(c) for e in entries] for c in cols],
         )
 
@@ -416,23 +411,13 @@ class TokenLakeTable:
         cb = curve_by_source or {}
         head = self.log.current()
         records = mf.read_manifest_list(self.path, head.manifest)
-        # Exact shard-level prefilter mirroring plan_compaction's
-        # candidate test: a partition can hold a rewrite candidate only
-        # if its smallest file is undersized, its largest oversized, or
-        # it contains unclustered or DV'd files — all exact aggregates in
-        # the manifest list, so a well-compacted partition's shard is
-        # never even opened (O(touched) planning, not O(all files)).
+        # a well-compacted partition's shard is never even opened
+        # (O(touched) planning, not O(all files))
         want = set(sources) if sources is not None else None
         cand_records = [
             r
             for r in records
-            if (want is None or r["partition"] in want)
-            and (
-                r["min_file_bytes"] < policy.min_file_bytes
-                or r["max_file_bytes"] > policy.max_file_bytes
-                or r["n_unclustered"] > 0
-                or r.get("n_dv_files", 0) > 0
-            )
+            if (want is None or r["partition"] in want) and partition_has_candidates(r, policy)
         ]
         shard_entries = {r["partition"]: mf.read_shard(self.path, r) for r in cand_records}
         entries = [e for es in shard_entries.values() for e in es]
@@ -466,8 +451,6 @@ class TokenLakeTable:
         unit_bounds: dict[str, list[int]] = {}
         if pending:
             unit_bounds = plan_unit_bounds(
-                self.spark,
-                self.path,
                 {part: inputs for part, inputs in pending},
                 {
                     part: output_file_count(sum(f["file_bytes"] for f in inputs), policy)

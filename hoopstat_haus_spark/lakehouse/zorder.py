@@ -98,28 +98,47 @@ def _scale_to_bits(v: np.ndarray, lo: float, hi: float, bits: int) -> np.ndarray
     return (frac * float((1 << bits) - 1)).astype(np.uint64)
 
 
-def zkey_udf(curve: str = "zorder", n_tok_lo: int = 0, n_tok_hi: int = 4096):
+CURVES = ("zorder", "hilbert")
+# the n_tok range every curve scales onto its axis (values outside clamp)
+N_TOK_LO, N_TOK_HI = 0, 4096
+
+
+def zkey_np(
+    curve: str, n_tok: np.ndarray, hash_hi31: np.ndarray, lo: int = N_TOK_LO, hi: int = N_TOK_HI
+) -> np.ndarray:
+    """THE cluster-key kernel: int64 keys of ``curve`` over (n_tok, the
+    top 31 bits of xxhash64(doc_id)). The pandas UDF and the compaction
+    planner (which evaluates it on the manifest's per-file samples) both
+    call it. Morton takes the hash's 31 bits; Hilbert takes its top 21
+    (``hash_hi31 >> 10``)."""
+    if curve not in CURVES:
+        raise ValueError(f"unknown curve {curve!r}")
+    bits = 31 if curve == "zorder" else 21
+    a = _scale_to_bits(n_tok, lo, hi, bits)
+    b = hash_hi31.astype(np.uint64) >> np.uint64(31 - bits)
+    if curve == "zorder":
+        key = morton2(a, b)
+    else:
+        key = hilbert_index(np.stack([a, b], axis=1), bits)
+    # shift into signed-positive range for a LongType column
+    return (key >> np.uint64(1)).astype(np.int64)
+
+
+def zkey_udf(curve: str = "zorder", n_tok_lo: int = N_TOK_LO, n_tok_hi: int = N_TOK_HI):
     """Factory: pandas UDF computing the 2D cluster key within a `source`
     partition from (n_tok, xxhash64(doc_id)).
 
     `source` is the leading physical dimension (the Hive partition dir),
     so inside a partition the curve covers (n_tok, doc-hash): queries that
-    range-filter n_tok prune files via manifest zmin/zmax; doc-hash keeps
-    any doc_id's rows in O(1) files for MERGE pruning.
+    range-filter n_tok prune files via manifest zmin/zmax; the doc-hash
+    axis spreads rows evenly over the curve so range cuts balance file
+    sizes (MERGE prunes by the manifest's doc_id range, not the hash).
     """
-    bits = 31 if curve == "zorder" else 21
 
     @pandas_udf(LongType())
     def _zkey(n_tok: pd.Series, doc_hash: pd.Series) -> pd.Series:
-        a = _scale_to_bits(n_tok.to_numpy(), n_tok_lo, n_tok_hi, bits)
         h = doc_hash.to_numpy().astype(np.int64).view(np.uint64)
-        b = h >> np.uint64(64 - bits)
-        if curve == "zorder":
-            key = morton2(a, b)
-        else:
-            key = hilbert_index(np.stack([a, b], axis=1), bits)
-        # shift into signed-positive range for a LongType column
-        return pd.Series((key >> np.uint64(1)).astype(np.int64))
+        return pd.Series(zkey_np(curve, n_tok.to_numpy(), h >> np.uint64(33), n_tok_lo, n_tok_hi))
 
     return _zkey
 
@@ -139,7 +158,9 @@ def _spread2_expr(x: Column) -> Column:
     return x
 
 
-def zkey_expr_zorder(n_tok: Column, doc_hash: Column, n_tok_lo: int = 0, n_tok_hi: int = 4096) -> Column:
+def zkey_expr_zorder(
+    n_tok: Column, doc_hash: Column, n_tok_lo: int = N_TOK_LO, n_tok_hi: int = N_TOK_HI
+) -> Column:
     """Morton Z-key as a native Column expression — bit-exact with the
     Arrow kernel (asserted in tests/test_zorder.py) but with ZERO Python
     in the plan: no Python-worker spawn, no Arrow IPC, and the expression
@@ -163,14 +184,16 @@ def zkey_expr_zorder(n_tok: Column, doc_hash: Column, n_tok_lo: int = 0, n_tok_h
     return F.shiftrightunsigned(key, 1)  # signed-positive, as the kernel
 
 
-def with_zkey(df, curve: str = "zorder", n_tok_lo: int = 0, n_tok_hi: int = 4096) -> Column:
+def with_zkey(
+    df, curve: str = "zorder", n_tok_lo: int = N_TOK_LO, n_tok_hi: int = N_TOK_HI
+) -> Column:
     """Attach the cluster key column ``_zkey``.
 
     The default Morton curve is a pure JVM expression
     (:func:`zkey_expr_zorder`); Hilbert keeps the Arrow kernel (its
     bit×dim iteration doesn't reduce to a fixed expression tree). An
     unknown curve raises here, on the driver, before any plan exists."""
-    if curve not in ("zorder", "hilbert"):
+    if curve not in CURVES:
         raise ValueError(f"unknown curve {curve!r}")
     if curve == "zorder":
         return df.withColumn(

@@ -1,6 +1,8 @@
 """Exact-value planner tests, mirroring the reference's
 ``test_partitioning.py`` coverage of its 5/25/50 MB policy."""
 
+import pytest
+
 from hoopstat_haus_spark.lakehouse.compaction import (
     CompactionPolicy,
     output_file_count,
@@ -136,12 +138,15 @@ class TestSketchBounds:
         for d in stats:
             assert d["zq"] is not None and len(d["zq"]) <= mf.ZQ_GRID - 1
 
-    def test_sketch_bounds_match_scan_bounds(self, spark, tmp_path):
-        """Driver-side merged-sketch boundaries must land close to the
-        scan-derived ones: same input, both estimators, each boundary
-        within a small mass fraction of the exact quantile."""
+    @pytest.mark.parametrize("curve", ["zorder", "hilbert"])
+    def test_sketch_bounds_match_exact_quantiles(self, spark, tmp_path, curve):
+        """Driver-side cuts merged from the per-file samples must land
+        close to the exact quantiles of the curve's keys, under either
+        curve, on unclustered ingest: each boundary within a small mass
+        fraction of its target."""
+        import numpy as np
+
         from hoopstat_haus_spark.lakehouse import compaction as C
-        from hoopstat_haus_spark.lakehouse import manifest as mf
         from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
         from hoopstat_haus_spark.lakehouse.zorder import with_zkey
         from hoopstat_haus_spark.tables import synthetic
@@ -150,42 +155,26 @@ class TestSketchBounds:
         entries = [e for e in t.manifest_entries() if e["partition"] == "web"]
         assert len(entries) >= 4
         n_out = 6
-        sk = C._bounds_from_sketches(entries, n_out)
-        assert sk is not None and len(sk) == n_out - 1
+        sk = C._bounds_from_sketches(entries, n_out, curve)
+        assert len(sk) == n_out - 1
         assert sk == sorted(sk)
-        # exact quantiles of the true zkey distribution for comparison
+        # exact quantiles of the true key distribution for comparison
         df = t.scan().filter("source = 'web'")
-        zk = with_zkey(df.select("source", "doc_id", "n_tok")).select("_zkey")
-        total = zk.count()
+        zk = with_zkey(df.select("source", "doc_id", "n_tok"), curve=curve).select("_zkey")
+        keys = np.array([r[0] for r in zk.collect()])
         for j, b in enumerate(sk, start=1):
-            below = zk.filter(f"_zkey <= {b}").count()
+            below = int((keys <= b).sum())
             # each cut's realized mass within 6% of its target mass
-            assert abs(below / total - j / n_out) < 0.06, (j, below / total)
-
-    def test_pre_sketch_manifest_falls_back_to_scan(self, spark, tmp_path):
-        from hoopstat_haus_spark.lakehouse import compaction as C
-        from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
-        from hoopstat_haus_spark.tables import synthetic
-
-        t = TokenLakeTable.create(spark, str(tmp_path / "t"), synthetic(spark, 4000), repartition_n=6)
-        entries = t.manifest_entries()
-        for e in entries:
-            e["zq"] = None  # simulate an old manifest
-        units = {}
-        for e in entries:
-            units.setdefault(e["partition"], []).append(e)
-        n_out = {p: 4 for p in units}
-        bounds = C.plan_unit_bounds(spark, t.path, units, n_out)
-        assert set(bounds) == set(units)
-        for b in bounds.values():
-            assert len(b) == 3 and b == sorted(b)
+            assert abs(below / len(keys) - j / n_out) < 0.06, (j, below / len(keys))
 
 
 class TestCurveTaggedSketches:
+    """The samples hold the curve INPUTS, so any curve plans from them,
+    whatever curve (if any) clustered the files."""
+
     def test_hilbert_sketches_plan_metadata_only(self, spark, tmp_path):
-        """A Hilbert-compacted table's sketches are tagged 'hilbert' and
-        a subsequent Hilbert compaction plans bounds WITHOUT any Spark
-        job (spark=None proves the scan fallback is never touched)."""
+        """A Hilbert compaction of a Hilbert-compacted table plans its
+        bounds from the manifest alone: no SparkSession is passed in."""
         from hoopstat_haus_spark.lakehouse import compaction as C
         from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
         from hoopstat_haus_spark.tables import synthetic
@@ -195,44 +184,47 @@ class TestCurveTaggedSketches:
         snap, _ = t.compact(pol, curve="hilbert")
         assert snap is not None
         entries = t.manifest_entries()
-        assert entries and all(e["zq_curve"] == "hilbert" for e in entries)
-        assert all(e["zmin"] >= 0 for e in entries)
+        assert entries and all(e["zmin"] >= 0 for e in entries)
 
         units: dict[str, list[dict]] = {}
         for e in entries:
             units.setdefault(e["partition"], []).append(e)
         n_out = {p: 3 for p in units}
-        bounds = C.plan_unit_bounds(None, t.path, units, n_out, curve="hilbert")
+        bounds = C.plan_unit_bounds(units, n_out, curve="hilbert")
         assert set(bounds) == set(units)
         for b in bounds.values():
             assert len(b) == 2 and b == sorted(b)
 
-    def test_curve_mismatch_refuses_metadata_path(self, spark, tmp_path):
-        """Morton-tagged sketches must NOT be read as Hilbert cuts (and
-        vice versa): the mixed-curve case falls back to the scan, which
-        derives the requested curve's keys fresh."""
+    def test_curve_mismatch_plans_from_metadata(self, spark, tmp_path):
+        """Morton-written entries give Hilbert cuts: a Morton-compacted
+        partition's samples, evaluated under Hilbert, yield n_out−1
+        sorted cuts inside the Hilbert key domain (2·21 bits, shifted
+        right once), not Morton keys."""
         from hoopstat_haus_spark.lakehouse import compaction as C
         from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
         from hoopstat_haus_spark.tables import synthetic
 
         t = TokenLakeTable.create(spark, str(tmp_path / "t"), synthetic(spark, 4000), repartition_n=6)
+        pol = C.CompactionPolicy(min_file_bytes=1 << 20, target_file_bytes=2 << 20, max_file_bytes=4 << 20)
+        assert t.compact(pol)[0] is not None
         entries = [e for e in t.manifest_entries() if e["partition"] == "web"]
-        assert all(e["zq_curve"] == "zorder" for e in entries)
-        assert C._bounds_from_sketches(entries, 4, "zorder") is not None
-        assert C._bounds_from_sketches(entries, 4, "hilbert") is None
-        # pre-tag manifests (zq_curve null) also refuse the metadata path
-        for e in entries:
-            e["zq_curve"] = None
-        assert C._bounds_from_sketches(entries, 4, "zorder") is None
+        assert entries and all(e["zmin"] >= 0 for e in entries)
+        morton = C._bounds_from_sketches(entries, 4, "zorder")
+        hilbert = C._bounds_from_sketches(entries, 4, "hilbert")
+        for b in (morton, hilbert):
+            assert len(b) == 3 and b == sorted(b)
+        assert all(0 <= b < 1 << 41 for b in hilbert)
+        assert hilbert != morton
 
-    def test_curve_mismatch_scan_bounds_every_unit(self, spark, tmp_path):
-        """On a curve mismatch the scan answers EVERY unit with n_out−1
-        sorted cuts: a unit wanting more files than a 256-point grid
-        resolves at 4 points per file, and a unit of 1-row files none of
-        whose rows a fixed 1/8 hash sample would keep."""
+    def test_curve_mismatch_bounds_every_unit(self, spark, tmp_path):
+        """Hilbert over Morton-written ingest gives EVERY unit n_out−1
+        sorted cuts, from the driver alone: a unit wanting 100 files, and
+        a unit of 1-row files none of whose rows the 1/16 sample draw
+        keeps (each file's sample is then its one row)."""
         from pyspark.sql import functions as F
 
         from hoopstat_haus_spark.lakehouse import compaction as C
+        from hoopstat_haus_spark.lakehouse import manifest as mf
         from hoopstat_haus_spark.lakehouse.table import TokenLakeTable
         from hoopstat_haus_spark.tables import synthetic
 
@@ -240,7 +232,7 @@ class TestCurveTaggedSketches:
         t = TokenLakeTable.create(spark, str(tmp_path / "t"), docs, repartition_n=6)
         unsampled = (
             docs.filter("source = 'web'")
-            .filter(F.pmod(F.xxhash64("doc_id", F.lit(7)), F.lit(8)) != 0)
+            .filter(F.pmod(F.xxhash64("doc_id", F.lit(13)), F.lit(mf.ZQ_SAMPLE_MOD)) != 0)
             .withColumn("source", F.lit("tiny"))
             .limit(4)
             .collect()
@@ -252,10 +244,11 @@ class TestCurveTaggedSketches:
         units: dict[str, list[dict]] = {}
         for e in t.manifest_entries():
             units.setdefault(e["partition"], []).append(e)
-        assert len(units["tiny"]) == 4 and all(e["row_count"] == 1 for e in units["tiny"])
+        assert len(units["tiny"]) == 4
+        assert all(e["row_count"] == 1 and len(e["zq"]) == 1 for e in units["tiny"])
         n_out = {"web": 100, "tiny": 3}
         units = {p: units[p] for p in n_out}
-        bounds = C.plan_unit_bounds(spark, t.path, units, n_out, curve="hilbert")
+        bounds = C.plan_unit_bounds(units, n_out, curve="hilbert")
         assert set(bounds) == set(units)
         for p, b in bounds.items():
             assert len(b) == n_out[p] - 1 and b == sorted(b), p

@@ -8,6 +8,7 @@ refusal of the removed monolithic-manifest format, and the fused
 writer's stats parity and memory bound.
 """
 
+import json
 import os
 import uuid
 
@@ -182,9 +183,11 @@ def test_gc_opens_each_distinct_shard_once(spark, tmp_table_dir, monkeypatch):
 
 
 def test_non_list_manifest_is_rejected(spark, tmp_table_dir):
-    """Only manifest lists are readable. A snapshot pointing at a
-    monolithic manifest parquet (the pre-sharding format) fails loudly,
-    naming the unsupported format, instead of being read."""
+    """Only manifest lists of the current format version are readable.
+    A snapshot pointing at a monolithic manifest parquet (the
+    pre-sharding format), or at a v2 list (whose ``zq`` held Morton-key
+    quantiles, which the planner would misread as packed curve inputs),
+    fails loudly, naming the unsupported format, instead of being read."""
     t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 500), repartition_n=2)
     entries = t.manifest_entries()
     rel = f"_manifests/manifest-{uuid.uuid4().hex[:12]}.parquet"
@@ -193,10 +196,16 @@ def test_non_list_manifest_is_rejected(spark, tmp_table_dir):
         pa.Table.from_pydict(cols, schema=mf.MANIFEST_ARROW_SCHEMA),
         os.path.join(t.path, rel),
     )
-    t.log.commit(rel, "legacy", {"schema_version": 1})
-    for read in (t.scan, t.manifest_entries, lambda: mf.read_manifest_list(t.path, rel)):
-        with pytest.raises(ValueError, match="unsupported manifest format"):
-            read()
+    with open(os.path.join(t.path, t.log.current().manifest)) as f:
+        body = json.load(f)
+    v2 = f"_manifests/list-{uuid.uuid4().hex[:12]}.json"
+    with open(os.path.join(t.path, v2), "w") as f:
+        json.dump({**body, "format_version": 2}, f)
+    for legacy in (rel, v2):
+        t.log.commit(legacy, "legacy", {"schema_version": 1})
+        for read in (t.scan, t.manifest_entries, lambda: mf.read_manifest_list(t.path, legacy)):
+            with pytest.raises(ValueError, match="unsupported manifest format"):
+                read()
 
 
 def test_scan_prunes_at_shard_level(spark, tmp_table_dir):

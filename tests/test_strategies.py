@@ -29,8 +29,8 @@ def ranges_by_partition(t) -> dict[str, list[tuple[int, int]]]:
 
 @POLICIES
 def test_hilbert_curve_compaction(spark, tmp_table_dir, policy, min_out):
-    """Hilbert over Morton-sketched ingest: a curve mismatch, so bounds
-    come from the scan, and every unit is still range-cut."""
+    """Hilbert over unclustered ingest: bounds come from the manifest
+    samples evaluated under Hilbert, and every unit is still range-cut."""
     t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 6000), repartition_n=8)
     pre = sigs(t)
     snap, m = t.compact(policy, curve="hilbert")
@@ -45,8 +45,8 @@ def test_hilbert_curve_compaction(spark, tmp_table_dir, policy, min_out):
 @POLICIES
 def test_mixed_curve_single_cycle_compaction(spark, tmp_table_dir, policy, min_out):
     """Round-5: curve_by_source compacts a mixed-layout table in ONE
-    cycle — one snapshot commit, per-partition curve tags, token
-    equality, and file-range disjointness under each curve."""
+    cycle — one snapshot commit, token equality, and file-range
+    disjointness under each curve."""
     t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 8000), repartition_n=8)
     pre = sigs(t)
     pre_snap = t.log.current_id()
@@ -58,9 +58,6 @@ def test_mixed_curve_single_cycle_compaction(spark, tmp_table_dir, policy, min_o
     assert snap.snapshot_id == pre_snap + 1
     assert snap.summary["curve_by_source"] == {hil: "hilbert"}
     assert m.files_out >= min_out * m.partitions
-    for e in t.manifest_entries():
-        want = "hilbert" if e["partition"] == hil else "zorder"
-        assert e["zq_curve"] == want, (e["partition"], e["zq_curve"])
     for ranges in ranges_by_partition(t).values():
         assert len(ranges) >= min_out
         for a, b in zip(ranges, ranges[1:]):
