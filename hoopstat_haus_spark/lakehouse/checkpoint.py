@@ -14,12 +14,13 @@ atomically (``snapshots.write_atomic``), written in two phases —
 
 ``output_stats`` holds the manifest entries of ``output_files``, as
 computed by the job that wrote them, so a commit (first or resumed)
-never re-reads outputs for stats. A resumed job (same job_id) reuses a
-``done`` unit's outputs when its ``input_files`` are still the unit's
-planned inputs, and re-runs every other unit from scratch after
-discarding its orphaned staging files. Because the snapshot commit
-happens once, at the end, a crash at ANY point leaves readers on the
-old snapshot.
+never re-reads outputs for stats. ``input_files`` holds each input as
+a ``[file_path, dv_path]`` pair (``table.file_ids``). A resumed job
+(same job_id) reuses a ``done`` unit's outputs when its
+``input_files`` are still the unit's planned inputs, and re-runs every
+other unit from scratch after discarding its orphaned staging files.
+Because the snapshot commit happens once, at the end, a crash at ANY
+point leaves readers on the old snapshot.
 
 Compaction is the only multi-unit job, so it is the only writer of
 checkpoints: merge, delete and update are one rewrite each and keep
@@ -55,7 +56,7 @@ class JobCheckpoint:
         os.makedirs(self.dir, exist_ok=True)
         snapshots.write_atomic(self._path(unit), json.dumps(record, indent=1))
 
-    def intent(self, unit: str, input_files: list[str]) -> None:
+    def intent(self, unit: str, input_files: list[tuple[str, str | None]]) -> None:
         self._write(
             unit,
             {
@@ -70,7 +71,7 @@ class JobCheckpoint:
     def done(
         self,
         unit: str,
-        input_files: list[str],
+        input_files: list[tuple[str, str | None]],
         output_files: list[str],
         rows: int,
         tokens: int,

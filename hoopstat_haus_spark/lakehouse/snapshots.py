@@ -47,7 +47,9 @@ class Snapshot:
 
 
 class ConcurrentCommitError(RuntimeError):
-    """Another writer committed since this job planned — retry from plan."""
+    """Another writer committed since this job planned, and the commit
+    cannot rebase onto the new head (``table.commit_rewrite`` states
+    the rule; a direct ``SnapshotLog.commit`` never rebases)."""
 
 
 def write_atomic(path: str, text: str, exclusive: bool = False) -> None:
@@ -165,7 +167,8 @@ class SnapshotLog:
         expected_parent: int | None = None,
     ) -> Snapshot:
         """Optimistic-concurrency commit: fails if HEAD moved past
-        ``expected_parent`` (pass the id the job planned against).
+        ``expected_parent`` (pass the id the job planned against; 0
+        claims v1 of a new table, None checks nothing).
 
         The head check alone is check-then-act — two writers that both
         read head=N would both pass and a second plain replace would
@@ -177,7 +180,7 @@ class SnapshotLog:
         record is HEAD the moment it exists, so no crash can leave a
         committed version that readers do not see."""
         head = self.current_id()
-        if expected_parent is not None and head != expected_parent:
+        if expected_parent is not None and (head or 0) != expected_parent:
             raise ConcurrentCommitError(f"planned against v{expected_parent}, head is v{head}")
         # clamp to the parent's timestamp: snapshot times are NON-
         # DECREASING by construction (a stepped-back wall clock must not

@@ -15,9 +15,11 @@ silver-ready marker, ``meta/adr/ADR-028:33-38``).
 
 ``commit_rewrite`` (module level) is THE file-set commit: create,
 append, compact, merge, delete, update and WAP publish all drop/add
-manifest entries and commit the next snapshot record through it. Only the
-metadata-only commits (``evolve_schema``, ``rollback``) reuse an
-existing manifest and call ``SnapshotLog.commit`` directly.
+manifest entries and commit the next snapshot record through it, and it
+is the one place a lost race is rebased or raised (its docstring states
+the rule). Only the metadata-only commits (``evolve_schema``,
+``rollback``) reuse an existing manifest and call
+``SnapshotLog.commit`` directly.
 
 ``read_touched`` (module level) is THE reader of table data files:
 scan, the DML find passes, MERGE, the change feed, WAP audits and
@@ -78,7 +80,7 @@ from hoopstat_haus_spark.lakehouse.compaction import (
 )
 from hoopstat_haus_spark.lakehouse.health import JobMetrics, job_record
 from hoopstat_haus_spark.lakehouse.schema import TableSchema, evolved, read_schema, write_schema
-from hoopstat_haus_spark.lakehouse.snapshots import Snapshot, SnapshotLog
+from hoopstat_haus_spark.lakehouse.snapshots import ConcurrentCommitError, Snapshot, SnapshotLog
 
 DATA_COLUMNS = ["doc_id", "tokens", "n_tok", "source"]  # base (schema v1)
 
@@ -93,6 +95,10 @@ SCAN_PATHS_CHUNK = 100_000
 # vs 0.51 s, 2·10^3 0.37 vs 0.47 s, 4·10^3 0.63 vs 0.57 s, 8·10^3 0.79
 # vs 0.53 s.
 DV_PREDICATE_MAX = 2_000
+
+# attempts of one commit_rewrite (the planned commit, then rebases)
+# before its last ConcurrentCommitError is raised
+COMMIT_ATTEMPTS = 5
 
 
 class TokenLakeTable:
@@ -442,7 +448,9 @@ class TokenLakeTable:
             # crash (e.g. a DELETE) changes them, and stale outputs would
             # resurrect the rows it removed. A re-run overwrites the stale
             # outputs under the same deterministic names.
-            if part in done and set(done[part]["input_files"]) == set(_input_files(inputs)):
+            if part in done and {tuple(f) for f in done[part]["input_files"]} == set(
+                file_ids(inputs)
+            ):
                 fresh.extend(done[part]["output_stats"])
             else:
                 pending.append((part, inputs))
@@ -461,7 +469,7 @@ class TokenLakeTable:
             )
 
         def _run_unit(unit_table: TokenLakeTable, part: str, inputs: list[dict]) -> list[dict]:
-            in_paths = _input_files(inputs)
+            in_paths = file_ids(inputs)
             t0 = time.time()
             ckpt.intent(part, in_paths)
             # stats come back from the SAME job that writes the files
@@ -712,10 +720,12 @@ class TokenLakeTable:
         )
 
 
-def _input_files(inputs: list[dict]) -> list[str]:
-    """A compaction unit's input identity for its checkpoint: the data
-    files and the DVs they are read under."""
-    return [f["file_path"] for f in inputs] + [f["dv_path"] for f in inputs if f.get("dv_path")]
+def file_ids(entries: list[dict]) -> list[tuple[str, str | None]]:
+    """The identity of the files a rewrite read: each data file with the
+    deletion vector it was read under. Compaction's resume check and
+    ``commit_rewrite``'s rebase check compare these pairs; the path
+    alone misses a DV that a rival commit gave a file that had none."""
+    return [(e["file_path"], e.get("dv_path")) for e in entries]
 
 
 def commit_rewrite(
@@ -726,18 +736,34 @@ def commit_rewrite(
     added: list[dict],
     summary: dict,
     shards: dict[str, list[dict]] | None = None,
+    stamp_key: str | None = None,
 ) -> Snapshot:
     """THE file-set commit: drop the ``removed`` manifest entries, add
     the ``added`` ones (with their per-file stats), write new shards
     ONLY for the touched partitions (those of removed ∪ added; every
-    other shard is carried by reference), and swap the snapshot pointer
-    if HEAD has not moved past ``head`` (``None``: a new table).
+    other shard is carried by reference), and commit the next snapshot
+    on ``head`` (``None``: a new table, which must claim v1).
 
     A touched partition's base entries come from ``shards`` (the
     partition → entries map a planner already read) when present, else
     from ``head``'s manifest list — so no shard is read twice. The
     summary is the post-commit table aggregates, then the caller's
-    op-specific keys, then the live ``schema_version``."""
+    op-specific keys, then the live ``schema_version``.
+
+    A lost race (``ConcurrentCommitError`` from ``SnapshotLog.commit``)
+    is retried here and nowhere else, up to ``COMMIT_ATTEMPTS`` attempts
+    in all. A commit planned against no head never rebases. Otherwise
+    the touched partitions' shards are re-read from the new head and
+    the commit rebases onto it if (a) every removed entry's ``file_ids``
+    pair is still live there — a rival that rewrote, dropped or gave a
+    new DV to a file this commit read conflicts with it, since each DV
+    holds its file's full deleted set — and (b) for delete, update and
+    merge, no touched partition holds a file missing from the planned
+    base, whose rows the op's predicate or keys never saw. A failed
+    check raises ``ConcurrentCommitError``. With ``stamp_key``, a
+    snapshot committed after the lost attempt's head and stamped with
+    ``summary[stamp_key]`` is this commit made by a rival, and is
+    returned instead (WAP's exactly-once publish)."""
     dropped = {e["file_path"] for e in removed}
     parts = {e["partition"] for e in removed} | {e["partition"] for e in added}
     base = dict(shards or {})
@@ -746,20 +772,50 @@ def commit_rewrite(
         for rec in mf.read_manifest_list(table.path, head.manifest):
             if rec["partition"] in missing:
                 base[rec["partition"]] = mf.read_shard(table.path, rec)
-    changed = {p: [e for e in base.get(p, []) if e["file_path"] not in dropped] for p in parts}
-    for e in added:
-        changed[e["partition"]].append(e)
-    rel, records = mf.update_manifest(table.path, head.manifest if head else None, changed)
-    return table.log.commit(
-        rel,
-        operation,
-        {
-            **mf.summary_from_records(records),
-            **summary,
-            "schema_version": table.schema_def().version,
-        },
-        expected_parent=head.snapshot_id if head else None,
-    )
+    planned = {e["file_path"] for p in parts for e in base.get(p, [])}
+    attempt = 1
+    while True:
+        changed = {p: [e for e in base.get(p, []) if e["file_path"] not in dropped] for p in parts}
+        for e in added:
+            changed[e["partition"]].append(e)
+        rel, records = mf.update_manifest(table.path, head.manifest if head else None, changed)
+        try:
+            return table.log.commit(
+                rel,
+                operation,
+                {
+                    **mf.summary_from_records(records),
+                    **summary,
+                    "schema_version": table.schema_def().version,
+                },
+                expected_parent=head.snapshot_id if head else 0,
+            )
+        except ConcurrentCommitError:
+            if head is None or attempt == COMMIT_ATTEMPTS:
+                raise
+        attempt += 1
+        lost = head.snapshot_id
+        head = table.log.current()
+        if stamp_key is not None:
+            rival = table.log.stamped(stamp_key, summary[stamp_key], after=lost)
+            if rival is not None:
+                return rival
+        base = {
+            rec["partition"]: mf.read_shard(table.path, rec)
+            for rec in mf.read_manifest_list(table.path, head.manifest)
+            if rec["partition"] in parts
+        }
+        live = [e for es in base.values() for e in es]
+        gone = set(file_ids(removed)) - set(file_ids(live))
+        new = set()
+        if operation in ("delete", "update", "merge"):
+            new = {e["file_path"] for e in live} - planned
+        if gone or new:
+            raise ConcurrentCommitError(
+                f"{operation} planned against v{lost} cannot rebase onto v{head.snapshot_id}: "
+                f"{len(gone)} input file(s) rewritten or given a new DV, "
+                f"{len(new)} file(s) added to its partitions"
+            )
 
 
 # position columns of a ``read_touched(..., with_pos=True)`` frame: with

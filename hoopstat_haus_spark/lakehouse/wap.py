@@ -16,16 +16,15 @@ staged batch per ref), and ``<ref>`` must pass ``snapshots.check_name``.
 entries, but commits no snapshot and claims no version. Audits read the
 staged rows through ``scan_staged`` (same explicit-schema/defaults path
 as a committed scan) — e.g. ``quarantine.validate_batch`` over them.
-``publish_staged`` replays an append commit against WHATEVER head
-exists at publish time — appends commute, so rebasing over concurrent
-compact/merge/append commits is safe — under a bounded CAS retry, and
-is exactly-once: the published snapshot's summary carries ``wap_ref``,
-and every attempt looks it up (``SnapshotLog.stamped``) before it
-commits, so a re-publish after a crash between commit and cleanup, or
-a publisher that lost the version slot to a rival publisher of the
-same ref, finds the earlier commit and only completes the cleanup. ``discard_staged``
-drops the record; the now-orphaned data files age out through normal
-GC (which treats LIVE staged records' files as reachable).
+``publish_staged`` commits an append against WHATEVER head exists at
+publish time through ``table.commit_rewrite``, which rebases it over a
+commit that lands meanwhile. It is exactly-once: the published
+snapshot's summary carries ``wap_ref``, so a re-publish after a crash
+between commit and cleanup, or a publisher that lost the race to a
+rival publisher of the same ref, finds that commit and only completes
+the cleanup. ``discard_staged`` drops the record; the now-orphaned data
+files age out through normal GC (which treats LIVE staged records'
+files as reachable).
 
 Scale note: the staged record inlines one ~200-byte entry per data
 file — a staged batch is one ingest's output (10^2-10^3 files), never
@@ -45,12 +44,8 @@ from pyspark.sql import DataFrame
 
 from hoopstat_haus_spark.lakehouse import snapshots
 from hoopstat_haus_spark.lakehouse.schema import read_schema
-from hoopstat_haus_spark.lakehouse.snapshots import ConcurrentCommitError, Snapshot
+from hoopstat_haus_spark.lakehouse.snapshots import Snapshot
 from hoopstat_haus_spark.lakehouse.table import TokenLakeTable, commit_rewrite, read_touched
-
-# commit attempts of one publish before its last ConcurrentCommitError
-# is raised
-PUBLISH_RETRIES = 5
 
 
 def _staged_path(table_path: str, ref: str) -> str:
@@ -134,47 +129,32 @@ def publish_staged(table: TokenLakeTable, ref: str) -> Snapshot:
     """Expose a staged batch: one append commit against the CURRENT
     head (not the stage-time head — appends commute with every commit
     kind, so the batch rebases onto whatever maintenance ran since).
-    Exactly-once via the ``wap_ref`` summary stamp.
-
-    Every attempt reads the head, then looks the stamp up among the
-    snapshots newer than the previous attempt's head (the first attempt
-    walks the whole log: a crash between commit and cleanup leaves the
-    staged record behind, and a re-publish only finishes the cleanup),
-    then commits. A ConcurrentCommitError can mean "another publisher
-    of THIS ref won the slot", so the next attempt's lookup runs before
-    its commit; rebasing without it would append the batch twice."""
-    checked = -1  # the head id up to which the stamp is known absent
-    last_err: ConcurrentCommitError | None = None
-    for _ in range(PUBLISH_RETRIES):
-        head = table.log.current()
-        done = table.log.stamped("wap_ref", ref, after=checked)
-        if done is not None:
-            return _finish_published(table, ref, done)
-        try:
-            rec = _read_staged(table.path, ref)
-        except KeyError:
-            # the staged record vanished after the lookup — a rival
-            # publisher may have committed AND cleaned up in that window;
-            # its stamp decides whether this is success or an error
-            done = table.log.stamped("wap_ref", ref, after=checked)
-            if done is not None:
-                return _finish_published(table, ref, done)
+    Exactly-once via the ``wap_ref`` stamp, looked up after the head is
+    read; a rival publish of this ref landing after that head is
+    returned by ``commit_rewrite`` instead of a second append."""
+    head = table.log.current()
+    done = table.log.stamped("wap_ref", ref)
+    if done is not None:
+        return _finish_published(table, ref, done)
+    try:
+        rec = _read_staged(table.path, ref)
+    except KeyError:
+        # the record vanished after the lookup: a rival publisher may
+        # have committed AND cleaned up; its stamp decides success or error
+        done = table.log.stamped("wap_ref", ref)
+        if done is None:
             raise
-        try:
-            snap = commit_rewrite(
-                table,
-                head,
-                "append",
-                [],
-                rec["entries"],
-                {"wap_ref": ref, "staged_ms": rec["created_ms"]},
-            )
-        except ConcurrentCommitError as exc:
-            last_err = exc  # head moved: re-check and re-plan against the new head
-            checked = head.snapshot_id
-            continue
-        return _finish_published(table, ref, snap)
-    raise last_err if last_err is not None else RuntimeError("publish retries exhausted")
+        return _finish_published(table, ref, done)
+    snap = commit_rewrite(
+        table,
+        head,
+        "append",
+        [],
+        rec["entries"],
+        {"wap_ref": ref, "staged_ms": rec["created_ms"]},
+        stamp_key="wap_ref",
+    )
+    return _finish_published(table, ref, snap)
 
 
 def discard_staged(table: TokenLakeTable, ref: str) -> dict:

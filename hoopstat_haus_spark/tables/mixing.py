@@ -65,19 +65,6 @@ def plan_mixture(tokens_df: DataFrame, budgets: dict[str, int]) -> dict[str, int
     )
 
 
-def plan_mixture_from_table(table, budgets: dict[str, int]) -> dict[str, int]:
-    """:func:`plan_mixture` for a ``TokenLakeTable`` WITHOUT scanning:
-    per-source token totals come straight off the current snapshot's
-    manifest-list records (each carries its partition's token_count
-    rollup), so planning a mixture over a 100 TB table reads
-    O(partitions) metadata and zero data files."""
-    from hoopstat_haus_spark.lakehouse import manifest as mf
-
-    snap = table.log.current()
-    recs = mf.read_manifest_list(table.path, snap.manifest) if snap else []
-    return _thresholds({r["partition"]: r["token_count"] for r in recs}, budgets)
-
-
 def mixed_corpus(
     tokens_df: DataFrame,
     budgets: dict[str, int],

@@ -98,31 +98,6 @@ def test_mixing_gate_is_shuffle_free(spark):
     assert "Exchange (" not in buf.getvalue()
 
 
-def test_mixing_plans_from_manifest_metadata(spark, tmp_table_dir):
-    from hoopstat_haus_spark.lakehouse import TokenLakeTable
-    from hoopstat_haus_spark.tables import synthetic
-    from hoopstat_haus_spark.tables.mixing import plan_mixture_from_table
-
-    t = TokenLakeTable.create(spark, tmp_table_dir, synthetic(spark, 4000), repartition_n=4)
-    totals = {r.source: r.total_tokens for r in source_token_totals(t.scan()).collect()}
-    budgets = {"web": int(totals["web"] * 0.5), "books": totals["books"] * 3}
-
-    # manifest-planned thresholds == scan-planned thresholds (the
-    # manifest token_count rollup IS the per-source total)
-    assert plan_mixture_from_table(t, budgets) == plan_mixture(t.scan(), budgets)
-
-    # the manifest-planned gate over a partition-pruned scan keeps the
-    # same docs as the scan-planned gate over the whole table
-    got = mixed_corpus(
-        t.scan(sources=["web", "books"]), budgets, "s1",
-        thresholds=plan_mixture_from_table(t, budgets),
-    )
-    want = mixed_corpus(t.scan(), budgets, "s1")
-    assert sorted(r.doc_id for r in got.select("doc_id").collect()) == sorted(
-        r.doc_id for r in want.select("doc_id").collect()
-    )
-
-
 class TestSplit:
     def test_disjoint_exhaustive_deterministic(self, spark):
         from hoopstat_haus_spark.tables.mixing import with_split

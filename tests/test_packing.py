@@ -1,7 +1,7 @@
 """Sequence packing vs a DuckDB oracle over the same closed-form token
 table, plus the packing invariants (exact length, order preservation,
 token conservation, single-shuffle plan). The registry is capped at 50
-gates, so packing carries oracle-parity rigor locally like token_stats."""
+gates, so packing carries oracle-parity rigor locally."""
 
 import io
 from contextlib import redirect_stdout

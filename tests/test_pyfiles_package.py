@@ -14,9 +14,14 @@ PKG = REPO / "hoopstat_haus_spark"
 def test_zip_matches_source_tree():
     with zipfile.ZipFile(ZIP) as z:
         entries = {n: z.read(n) for n in z.namelist() if n.endswith(".py")}
+    sources = set()
     for src in sorted(PKG.rglob("*.py")):
         if "__pycache__" in src.parts:
             continue
         name = src.relative_to(REPO).as_posix()
+        sources.add(name)
         assert name in entries, f"{name} missing from dist zip — rebuild jobs/build_pyfiles.py"
         assert entries[name] == src.read_bytes(), f"{name} stale in dist zip — rebuild"
+    # a deleted module must not stay deployed
+    extra = sorted(set(entries) - sources)
+    assert not extra, f"{extra} in dist zip but not in the source tree — rebuild"
